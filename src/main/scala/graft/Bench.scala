@@ -63,24 +63,39 @@ object Bench {
         catch { case _: Throwable => () }
       }
     spark.catalog.clearCache()
-    val results = SparkEntry.queries
+    // A query that throws is FAILED, not fast: its time-to-exception is
+    // no timing, so it goes to the explicit `failed` list and stays out
+    // of the total (and is not re-run by the stability loop).
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      def once(): Double = {
+      .flatMap { case (name, fn) =>
+      def once(): Option[Double] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         // Queries persist() narrow intermediates internally; drop them
         // BETWEEN runs too — Spark's cache manager matches by logical
         // plan, so the second run would otherwise silently reuse the
         // first run's cached stages and time only the tail of the job.
         spark.catalog.clearCache()
-        dt
+        if (ok) Some(dt) else None
       }
-      var times = (1 to math.max(1, runs)).map(_ => once())
-      while (!stable(times) && times.size < maxRuns) times :+= once()
-      name -> times.min
-    }
+      var times = Seq.empty[Double]
+      var ok = true
+      while (ok && (times.size < math.max(1, runs) ||
+          (!stable(times) && times.size < maxRuns)))
+        once() match {
+          case Some(t) => times :+= t
+          case None => ok = false
+        }
+      if (ok) Some(name -> times.min) else { failed += name; None }
+    }.toMap
     // The stdout line must survive the driver's 2,000-char stdout-tail
     // capture AS VALID JSON (round 13's full 275-query blob was ~10 KB,
     // so the tail cut off the front brace and BENCH_r13.json recorded
@@ -91,7 +106,8 @@ object Bench {
     val qs = slowest.map { case (k, v) => f""""$k":$v%.4f""" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$qs,"queries_note":"slowest 25 of ${results.size}; full map in BENCH_FULL.json","sf":"$sfDir","runs":$runs}""")
+    val failedJson = failed.sorted.map(n => s""""$n"""").mkString("[", ",", "]")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries":$qs,"queries_note":"slowest 25 of ${results.size}; full map in BENCH_FULL.json","sf":"$sfDir","runs":$runs}""")
     // Full per-query artifact: the driver's BENCH_rN.json keeps only a
     // 2,000-char tail of stdout, which truncates ~100 of the per-query
     // timings — regressions could hide in the lost prefix. Persist the
@@ -113,7 +129,7 @@ object Bench {
         .map { case (k, v) => f"""    "$k": $v%.3f""" }
         .mkString(",\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        f"""{\n  "total_sec": $total%.3f,\n  "n_queries": ${results.size},\n  "sf": "$sfDir",\n  "runs": $runs,\n  "queries": {\n$body\n  }\n}\n""")
+        f"""{\n  "total_sec": $total%.3f,\n  "n_queries": ${results.size},\n  "failed": $failedJson,\n  "sf": "$sfDir",\n  "runs": $runs,\n  "queries": {\n$body\n  }\n}\n""")
     } else if (only.isEmpty)
       // loud skip: a silently-stale artifact reads as "no regression"
       System.err.println(s"[bench] BENCH_FULL.json not written: sf is " +

@@ -1,14 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver fixture tables (TESTDATA.md / FIXTURES.md §B).
   *
-  * One parquet file per table under `\$dir/<name>.parquet`. All reads go
-  * through `spark.read.parquet` so Catalyst gets scan-level filter
-  * pushdown and column pruning for free (SURVEY §4.2).
+  * One parquet file per table under `\$dir/<name>.parquet`. Each load
+  * reads the table's schema from one Parquet footer on the driver
+  * (`footerSchema`) and hands it to `spark.read.schema(..).parquet`, so
+  * no load starts a job. Nothing is cached: every load reads its footer
+  * again. Catalyst still gets scan-level filter pushdown and column
+  * pruning for free (SURVEY §4.2).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,8 +25,42 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") loadEvents(spark, dir) else read(spark, s"$dir/$name.parquet")
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The data schema `spark.read.parquet(path)` would infer, without
+    * the inference job. It reads the same one footer: a summary file if
+    * the path has one, else its first data file by path name, as
+    * Spark's non-merging inference picks. Spark's own converter turns it
+    * into a schema under the session's SQL conf (`inferTimestampNTZ`,
+    * `nanosAsLong`, the schema Spark writes into its footers), made
+    * nullable as `DataSource` stores an inferred schema. Partition
+    * columns, if the path has any, are still added by the reader from
+    * the directory names. A missing path or one with no file raises the
+    * same `AnalysisException` as `spark.read.parquet`.
+    */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = GraftColumnBridge.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val qualified = fs.makeQualified(root)
+    if (!fs.exists(qualified)) throw GraftColumnBridge.pathNotFound(qualified.toString)
+    // listed as Spark lists it: a file root lists as that one file
+    val files = new InMemoryFileIndex(spark, Seq(qualified), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw GraftColumnBridge.noParquetSchema())
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    GraftColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(GraftColumnBridge.sqlConf(spark))))
+  }
 
   /** events.ts normalization to a microsecond TimestampType column, keyed
     * on the fixture's ACTUAL parquet annotation (the driver has shipped
@@ -33,7 +76,7 @@ object Tables {
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = read(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       // integer division — `/` on Column is double division, which loses
       // precision on epoch-nanos (≈1.7e18 > 2^53) and rounds instead of

@@ -36,21 +36,21 @@ object EventStreams {
   /** ST1: micro-batch file stream over a directory of events parquet.
     *
     * The file stream needs its schema up front, and the fixture's `ts`
-    * annotation has varied across driver editions — probe the actual
-    * files with ONE batch-read schema inference at stream-build time
-    * (driver-side, metadata-only), then apply the same ns→µs / NTZ→UTC
-    * normalization as the batch loader so every downstream transform
-    * sees one TimestampType regardless of edition. An EMPTY monitored
-    * directory (a file stream's normal initial state) has nothing to
-    * probe — fall back to the legacy INT64-nanos schema, the one
-    * edition that predates the probe. Single-edition-per-directory is
-    * assumed: a mixed directory would get one merged probe schema
-    * applied to both file kinds.
+    * annotation has varied across driver editions — probe `ts` at
+    * stream-build time from one file's footer on the driver
+    * (`Tables.footerSchema`: metadata only, no job), then apply the
+    * same ns→µs / NTZ→UTC normalization as the batch loader so every
+    * downstream transform sees one TimestampType regardless of
+    * edition. An EMPTY monitored directory (a file stream's normal
+    * initial state) has nothing to probe — fall back to the legacy
+    * INT64-nanos schema, the one edition that predates the probe.
+    * Single-edition-per-directory is assumed: the probe reads one
+    * file's footer and its schema is applied to every file.
     */
   def readEvents(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType =
-      try spark.read.parquet(dir).schema("ts").dataType
+      try Tables.footerSchema(spark, dir)("ts").dataType
       catch {
         // 'Unable to infer schema' / missing path: no files yet
         case _: org.apache.spark.sql.AnalysisException => LongType

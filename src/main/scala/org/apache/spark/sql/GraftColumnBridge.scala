@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * standard pattern for libraries that ship custom Catalyst expressions
@@ -33,4 +38,25 @@ object GraftColumnBridge {
         org.apache.spark.sql.catalyst.expressions.Expression): Unit =
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** The session's SQL conf and a Hadoop conf carrying its overrides —
+    * the pair `DataSource` hands a file format's schema inference.
+    */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Every field nullable, as `DataSource` stores an inferred schema. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
+  /** The errors `DataSource` raises for a missing path and for a path
+    * with no file to infer a Parquet schema from.
+    */
+  def pathNotFound(path: String): Throwable =
+    QueryCompilationErrors.dataPathNotExistError(path)
+
+  def noParquetSchema(): Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")
 }
