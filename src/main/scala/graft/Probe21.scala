@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 
 /** Round-21 optimization probe: per-query JOB/STAGE/TASK accounting.
   *
@@ -39,6 +39,9 @@ object Probe21 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // the listener (bus thread) and the per-query reset (this thread)
+    // guard the counters with this one lock
+    val lock = new Object
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -55,9 +58,9 @@ object Probe21 {
     val stageTime = scala.collection.mutable.Map.empty[Int, Long]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        synchronized { jobs += 1 }
+        lock.synchronized { jobs += 1 }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        synchronized {
+        lock.synchronized {
           stages += 1
           tasks += s.stageInfo.numTasks
           // label by the first graft frame in the callsite stack — the
@@ -72,7 +75,7 @@ object Probe21 {
           byStage(key) = (pm + ms, pc + 1)
         }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        synchronized {
+        lock.synchronized {
           if (t.taskInfo != null && t.taskInfo.finished) {
             taskMs += t.taskInfo.duration
             stageTime(t.stageId) =
@@ -107,7 +110,7 @@ object Probe21 {
     spark.catalog.clearCache()
 
     targets.foreach { name =>
-      synchronized {
+      lock.synchronized {
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L
         runMs = 0L; deserMs = 0L; gcMs = 0L; resSerMs = 0L
         swMs = 0L; fetchMs = 0L
@@ -118,9 +121,9 @@ object Probe21 {
       catch { case e: Throwable => System.err.println(s"$name: $e") }
       val wall = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      // listener bus is async; give it a beat to drain before reading
-      Thread.sleep(300)
-      val top = byStage.toSeq.sortBy { case (_, (ms, _)) => -ms }.take(8)
+      // listener bus is async: deliver every event before reading
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
+      val top = lock.synchronized(byStage.toSeq).sortBy { case (_, (ms, _)) => -ms }.take(8)
         .map { case (k, (ms, c)) =>
           f""""${k.replace('"', ' ').take(90)}":[${ms / 1e3}%.2f,$c]""" }
         .mkString("{", ",", "}")

@@ -10,14 +10,16 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
+import graft.sources.TableIO
+
 /** Loaders for the driver fixture tables (TESTDATA.md / FIXTURES.md §B).
   *
   * One parquet file per table under `\$dir/<name>.parquet`. Each load
-  * reads the table's schema from one Parquet footer on the driver
-  * (`footerSchema`) and hands it to `spark.read.schema(..).parquet`, so
-  * no load starts a job. Nothing is cached: every load reads its footer
-  * again. Catalyst still gets scan-level filter pushdown and column
-  * pruning for free (SURVEY §4.2).
+  * is a `TableIO.read`: it reads the table's schema from one Parquet
+  * footer on the driver (`footerSchema`) and hands it to
+  * `spark.read.schema(..).parquet`, so no load starts a job. Nothing is
+  * cached: every load reads its footer again. Catalyst still gets
+  * scan-level filter pushdown and column pruning for free (SURVEY §4.2).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,10 +27,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir) else read(spark, s"$dir/$name.parquet")
-
-  private def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name == "events") loadEvents(spark, dir) else TableIO.read(spark, s"$dir/$name.parquet")
 
   /** The data schema `spark.read.parquet(path)` would infer, without
     * the inference job. It reads the same one footer: a summary file if
@@ -76,7 +75,7 @@ object Tables {
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = read(spark, s"$dir/events.parquet")
+    val raw = TableIO.read(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       // integer division — `/` on Column is double division, which loses
       // precision on epoch-nanos (≈1.7e18 > 2^53) and rounds instead of

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Round-17 batch rows:
   *
   *  - ST27 batch twin `st_incremental_ann`: the declared, oracle-checked

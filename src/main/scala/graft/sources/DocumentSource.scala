@@ -29,7 +29,7 @@ trait ColumnarFetch { self: DocumentSource =>
 /** Optional mid-path capability: batched cursor iteration (the pandas
   * `DataFrame(list(cursor))`-in-chunks analogue — run_example.py:57-66).
   * Bounds the RAW-document working set (one batch live at a time) when
-  * the store is large but not columnar-capable; the converted Rows still
+  * the store is large but not columnar-capable; the converted rows still
   * accumulate driver-side — see the cursor rung's note in
   * [[DocumentSource.toDFResilient]].
   */
@@ -165,15 +165,11 @@ object DocumentSource {
           // loop O(n²) per column, and the per-row Map lookups go too.
           val fields = schema.fields.toSeq
           val colArrs = fields.map(f => cols(f.name).toIndexedSeq)
-          val rows = (0 until n).map { i =>
+          val rows = Iterator.range(0, n).map { i =>
             org.apache.spark.sql.Row.fromSeq(
               fields.zip(colArrs).map { case (f, c) => TableIO.coerce(c(i), f.dataType) })
           }
-          return Fetched(
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(rows, math.max(1, n / 100000 + 1)),
-              schema),
-            "columnar", degraded.toSeq)
+          return Fetched(TableIO.fromRows(spark, rows, schema), "columnar", degraded.toSeq)
         } catch { case e: Exception =>
           degraded += s"columnar: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"
         }
@@ -184,33 +180,26 @@ object DocumentSource {
       case b: BatchedFetch =>
         try {
           // First batch drives schema inference (first-document semantics,
-          // run_example.py:78-106); every batch is converted to coerced
-          // Rows as it streams past, so only one batch of RAW documents
-          // is live at a time. The converted Rows still accumulate on
-          // the driver — O(dataset), same as the reference's appended
-          // pandas chunks — so this rung bounds the raw-document working
-          // set, NOT total driver memory; stores that can range-address
-          // (RangedFetch) take the DSv2 rung above instead, which lands
-          // each range on an executor. The fetch limit short-circuits
-          // the cursor: batches past the cap are never pulled.
+          // run_example.py:78-106); every document is converted to a
+          // coerced row as it streams past, so only one batch of RAW
+          // documents is live at a time. The converted rows still
+          // accumulate on the driver — O(dataset), now as compact
+          // UnsafeRows, as the reference appends pandas chunks — so this
+          // rung bounds the raw-document working set, NOT total driver
+          // memory; stores that can range-address (RangedFetch) take the
+          // DSv2 rung above instead, which lands each range on an
+          // executor. A value that does not fit the schema raises while
+          // the rows are built, so it degrades this rung here rather
+          // than failing the caller's write. The fetch limit
+          // short-circuits the cursor: batches past the cap are never
+          // pulled.
           val it = b.fetchBatches(batchSize)
           if (!it.hasNext || limit == 0)
             return Fetched(fromDocs(spark, Seq.empty), "cursor", degraded.toSeq)
           val first = it.next().take(limit).map(renameId)
           val schema = normalizeIdField(SchemaInfer.inferSchema(first))
-          val rows = Vector.newBuilder[org.apache.spark.sql.Row]
-          rows ++= first.map(TableIO.toRow(schema, _))
-          var have = first.size
-          while (it.hasNext && have < limit) {
-            val batch = it.next().take(limit - have)
-            rows ++= batch.map(d => TableIO.toRow(schema, renameId(d)))
-            have += batch.size
-          }
-          val data = rows.result()
-          return Fetched(
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(data, math.max(1, data.size / 100000 + 1)),
-              schema),
+          val docs = (first.iterator ++ it.flatMap(_.iterator.map(renameId))).take(limit)
+          return Fetched(TableIO.fromRows(spark, docs.map(TableIO.toRow(schema, _)), schema),
             "cursor", degraded.toSeq)
         } catch { case e: Exception =>
           degraded += s"cursor: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"
@@ -236,10 +225,7 @@ object DocumentSource {
   private def fromDocs(spark: SparkSession, raw: Seq[Map[String, Any]]): DataFrame = {
     val docs = raw.map(renameId)
     val schema = normalizeIdField(SchemaInfer.inferSchema(docs))
-    val rows = docs.map(TableIO.toRow(schema, _))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000 + 1)),
-      schema)
+    TableIO.fromRows(spark, docs.iterator.map(TableIO.toRow(schema, _)), schema)
   }
 
   /** `id` is always a string after the `_id` rename (run_example.py:72-75),

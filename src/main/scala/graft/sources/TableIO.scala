@@ -1,13 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.types._
+
+import graft.Tables
 
 /** Row-iterable ⇄ Parquet I/O, mirroring the reference's capability
   * envelope (SURVEY §2.1 S1–S5):
   *
   *  - S1 `read`: whole-file Parquet scan (reference: read_table,
-  *    src/parquet_demo/io.py:78-80).
+  *    src/parquet_demo/io.py:78-80). Like the reference, it takes the
+  *    schema from the file's footer, read on the driver
+  *    (`Tables.footerSchema`), so a read starts no job.
   *  - S3/S4 `write`: Parquet write with row-group-ish control — Spark
   *    writes one file per partition, so chunked writing is partitioning
   *    (reference: pq.write_table io.py:75; ParquetWriter loop
@@ -15,11 +21,15 @@ import org.apache.spark.sql.types._
   *  - S5 `writeRows`: Iterable[Map] + explicit schema → table; missing
   *    keys become null (reference: row.get(field.name),
   *    src/parquet_demo/io.py:19) and values are coerced per §1.4.
+  *
+  * Rows held on the driver become a DataFrame only through `fromRows`:
+  * it keeps them as compact `UnsafeRow`s in a local relation, which a
+  * write splits over every core.
   */
 object TableIO {
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Tables.footerSchema(spark, path)).parquet(path)
 
   def write(df: DataFrame, path: String, maxRecordsPerFile: Long = 0L): Unit = {
     val w = df.write.mode("overwrite")
@@ -56,7 +66,7 @@ object TableIO {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes)
-    spark.read.parquet(inPath)
+    read(spark, inPath)
       .repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(outPath)
     nFiles
@@ -100,18 +110,31 @@ object TableIO {
     * src/parquet_demo/io.py:21-66: timestamps accept datetime-likes or
     * already-integer epoch micros; dates accept date-likes or
     * already-integer epoch days; missing keys → null; everything else
-    * passes through to the encoder.
+    * passes through to `fromRows`' converters.
     */
   def writeRows(
       spark: SparkSession,
       path: String,
       schema: StructType,
-      rows: Iterable[Map[String, Any]]): Unit = {
-    val data = rows.map(r => toRow(schema, r)).toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data, math.max(1, data.size / 100000 + 1)),
-      schema)
+      rows: Iterable[Map[String, Any]]): Unit =
+    fromRows(spark, rows.iterator.map(toRow(schema, _)), schema)
       .write.mode("overwrite").parquet(path)
+
+  /** Driver-held rows → DataFrame. Each row is converted once, here, with
+    * the converters `createDataFrame(java.util.List[Row], schema)` uses,
+    * so a value that does not fit the schema raises now, not in a later
+    * job. The rows are kept as `UnsafeRow`s (one byte array each, not a
+    * boxed object per field) in a local relation; executing it splits
+    * them over `defaultParallelism` tasks, which receive the rows' bytes.
+    */
+  def fromRows(spark: SparkSession, rows: IterableOnce[Row],
+      schema: StructType): DataFrame = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toUnsafe = UnsafeProjection.create(schema)
+    val data = rows.iterator
+      .map(r => toUnsafe(toCatalyst(r).asInstanceOf[InternalRow]).copy(): InternalRow)
+      .toVector
+    GraftColumnBridge.localRelation(spark, schema, data)
   }
 
   /** One row map → Row in schema order; absent keys null (io.py:19). */

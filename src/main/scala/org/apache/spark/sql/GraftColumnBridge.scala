@@ -2,14 +2,20 @@ package org.apache.spark.sql
 
 import org.apache.hadoop.conf.Configuration
 
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * standard pattern for libraries that ship custom Catalyst expressions
-  * (Spark's own `functions` object does exactly this internally).
+  * (Spark's own `functions` object does exactly this internally) — and
+  * into the few other `private[sql]`/`private[spark]` pieces graft uses:
+  * session confs, `Dataset.ofRows` and the listener bus.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column =
@@ -59,4 +65,21 @@ object GraftColumnBridge {
 
   def noParquetSchema(): Throwable =
     QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")
+
+  /** A DataFrame over rows already held on the driver in Catalyst form,
+    * as `createDataFrame(java.util.List[Row], schema)` builds one but
+    * without its conversion: a `LocalRelation`, which executes as a
+    * `LocalTableScanExec` split over `defaultParallelism` tasks.
+    */
+  def localRelation(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Blocks until every posted listener event has been delivered:
+    * listener callbacks run on the bus thread, so counts read straight
+    * after an action may still be missing its last events.
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

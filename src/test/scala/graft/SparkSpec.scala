@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession per suite (guide: one per suite, lazy). */
@@ -17,6 +20,26 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result with the jobs and the tasks it started, counted by
+    * a listener on a drained bus.
+    */
+  def jobsAndTasks[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    GraftColumnBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftColumnBridge.drainListenerBus(sc)
+      (out, jobs.get, tasks.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Plan text restricted to the OUTER query: drops the pre-AQE
     * "Initial Plan" echo and every InMemoryRelation's embedded

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -42,21 +38,6 @@ class TablesSchemaSpec extends SparkSpec {
       assert(Tables.load(spark, dir, n).schema == inferred(dir, n).schema,
         s"$path: loaded schema != inferred loader's schema")
     }
-  }
-
-  /** `body`'s result and the jobs it started, counted by a listener on
-    * a drained bus.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftTestBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { val out = body; GraftTestBridge.drainListenerBus(sc); (out, jobs.get) }
-    finally sc.removeSparkListener(listener)
   }
 
   Seq("sf0.001", "sf0.01", "sf0.1").foreach { s =>
@@ -100,7 +81,7 @@ class TablesSchemaSpec extends SparkSpec {
   }
 
   test("loading all ten fixtures starts no Spark job") {
-    val (_, jobs) = jobsDuring(Tables.names.foreach(n => Tables.load(spark, sf(), n)))
+    val (_, jobs, _) = jobsAndTasks(Tables.names.foreach(n => Tables.load(spark, sf(), n)))
     assert(jobs == 0, s"$jobs jobs started by ${Tables.names.size} loads")
   }
 
@@ -108,7 +89,7 @@ class TablesSchemaSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     val d = tmpDir("tables-events-stream")
     Files.copy(Paths.get(s"${sf()}/events.parquet"), Paths.get(d, "events.parquet"))
-    val (df, jobs) = jobsDuring(EventStreams.readEvents(spark, d))
+    val (df, jobs, _) = jobsAndTasks(EventStreams.readEvents(spark, d))
     assert(jobs == 0, s"$jobs jobs started by readEvents")
     assert(df.isStreaming)
     assert(df.schema("ts").dataType == TimestampType)

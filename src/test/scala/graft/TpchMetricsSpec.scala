@@ -2,8 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.GraftTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Runtime-metrics assertions for the TPC-H macro queries (round-6
   * advice item 4): PlanSpec pins plan *shape*; this spec pins what the
@@ -36,7 +36,7 @@ class TpchMetricsSpec extends SparkSpec {
     try {
       val df = SparkEntry.queries(name)(spark, sf("sf0.01"))
       df.collect()
-      GraftTestBridge.drainListenerBus(spark.sparkContext)
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
       (read.get, shuffled.get, df.queryExecution.executedPlan.toString)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
