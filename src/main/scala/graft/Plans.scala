@@ -221,12 +221,7 @@ object Plans {
         // init (the build checkpoints every round; the novel shape is
         // the round body itself)
         case "sim_knn_graph_hier_fine_round" =>
-          import org.apache.spark.sql.functions.col
-          val corpus = graft.Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id"),
-              graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
-            .withColumn("nrm", graft.queries.VectorOps.norm(col("v")))
-            .persist()
+          val corpus = graft.queries.Corpus.nvecs(spark, dir).persist()
           corpus.count()
           val routed = graft.queries.Round20Queries
             .coarseRouted(corpus).persist()

@@ -38,14 +38,8 @@ object Probe20 {
     try SparkEntry.queries("q10_agg_basic")(spark, dir).count()
     catch { case _: Throwable => () }
 
-    import org.apache.spark.sql.functions.col
     // ── the bounded-load chain, stage by stage ──────────────────────
-    // the Round13Queries.vectors shape (normalized corpus), rebuilt
-    // here because that loader is package-private to queries
-    val base = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"),
-        queries.VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", queries.VectorOps.norm(col("v")))
+    val base = queries.Corpus.nvecs(spark, dir)
     val corpus = timed("corpus_prepare") {
       val c = base.repartition(spark.sparkContext.defaultParallelism).persist()
       c.count(); c

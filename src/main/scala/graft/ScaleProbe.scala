@@ -350,13 +350,12 @@ object ScaleProbe {
   private def bm25Probe(spark: SparkSession, m: Int, nqs: Seq[Int], runs: Int): Unit = {
     val dir = s"/tmp/graft_scale_x$m"
     scaleCorpus(spark, "/root/testdata/sf0.1", dir, m)
-    import org.apache.spark.sql.functions.{col, explode, lower, split}
     val results = nqs.map { nq =>
       val q = queries.RetrievalQueries.syntheticBmQueries(spark, dir, nq)
         .localCheckpoint()
       // the one shuffle's payload: corpus postings matching a query term
       val postings = Tables.load(spark, dir, "documents")
-        .select(explode(split(lower(col("text")), " ")).as("tok"))
+        .select(explode(queries.Corpus.tokens(col("text"))).as("tok"))
         .join(q.select("tok").distinct(), "tok").count()
       val timings = (1 to math.max(1, runs)).map { _ =>
         val t0 = System.nanoTime()
@@ -462,15 +461,15 @@ object ScaleProbe {
     // rotate the alphabet, replicas ≥26 suffix every token with a
     // replica tag (see replicateDocs) — no two replicas ever share a
     // word, so the probe never degenerates into a duplicate explosion.
+    val spark = SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     if (mode == "bm25" || mode == "containment") {
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
       if (mode == "bm25") {
         val nqs = if (rest.length > 1) rest.drop(1).toSeq.map(_.toInt)
@@ -486,14 +485,6 @@ object ScaleProbe {
       return
     }
     if (mode == "annrecall") {
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       annRecallProbe(spark, m, Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1))
       spark.stop()
       return
@@ -510,15 +501,6 @@ object ScaleProbe {
           "dedup_embedding_ann_auto_cand")
         case _ => if (m <= 3) scalePath ++ allPairs else scalePath
       }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val dir = mode match {
       case "tpch" => s"/tmp/graft_tpch_x$m"
       case "suite" => s"/tmp/graft_suite_x$m"

@@ -62,8 +62,8 @@ case class QuantileSketchAgg(k: Int)
 
 object QuantileSketchAgg {
   /** (value, tag): tag is the deterministic 60-bit hash that drives the
-    * uniform sample — e.g. `conv(substring(md5(id), 1, 15), 16, 10)`,
-    * the engine-portable h60 recipe the dedup family uses. Ties break
+    * uniform sample — e.g. `graft.queries.Corpus.h60Spark`, the
+    * engine-portable md5 recipe the dedup family uses. Ties break
     * on value so the sketch is well-defined even under tag collisions.
     */
   final case class In(value: Double, tag: Long)

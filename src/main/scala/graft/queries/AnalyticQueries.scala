@@ -600,13 +600,13 @@ object AnalyticQueries {
             // empty array for every 10th doc: the outer explode must
             // keep those rows with a null token
             when(pmod(col("doc_id"), lit(10)) === 0, array().cast("array<string>"))
-              .otherwise(slice(split(lower(col("text")), " "), 1, 3)).as("toks"))
+              .otherwise(slice(Corpus.tokens(col("text")), 1, 3)).as("toks"))
           .select(col("doc_id"), explode_outer(col("toks")).as("tok"))
           .orderBy(col("doc_id"), col("tok")),
-      Some("""WITH prepped AS (
+      Some(s"""WITH prepped AS (
           SELECT doc_id,
             CASE WHEN doc_id % 10 = 0 THEN []
-                 ELSE list_slice(string_split(lower(text), ' '), 1, 3) END AS toks
+                 ELSE list_slice(${Corpus.tokensDuck("text")}, 1, 3) END AS toks
           FROM documents),
         outered AS (
           SELECT doc_id,
@@ -794,9 +794,7 @@ object AnalyticQueries {
     QueryDef(
       "sim_radius_search",
       (s, dir) => {
-        val v = t(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val v = Corpus.nvecs(s, dir)
         val q = v.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qnrm"))
         // broadcast the single query row; the corpus side streams — the
@@ -810,7 +808,7 @@ object AnalyticQueries {
           .orderBy(col("vec_id"))
       },
       Some(s"""WITH v AS (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v FROM embeddings),
         n AS (
           SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM v),
         q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0)
@@ -873,7 +871,7 @@ object AnalyticQueries {
           // into the per-element lambda would re-split the text for every
           // bigram — O(words²) per document (measured ×23 at a ×10
           // corpus before this form).
-          .select(split(lower(col("text")), " ").as("tk"))
+          .select(Corpus.tokens(col("text")).as("tk"))
           .transform(graft.operators.Layouts.spread)
           .select(explode(expr(
             "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i+1]))"))
@@ -882,8 +880,8 @@ object AnalyticQueries {
           .agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("bigram").asc)
           .limit(20),
-      Some("""WITH toks AS (
-          SELECT string_split(lower(text), ' ') AS tk FROM documents),
+      Some(s"""WITH toks AS (
+          SELECT ${Corpus.tokensDuck("text")} AS tk FROM documents),
         bg AS (
           SELECT unnest(list_transform(range(len(tk) - 1),
             i -> tk[i+1] || ' ' || tk[i+2])) AS bigram

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark, idHash60Duck, idHash60Spark}
 
 /** Round-4 training-data curation operators over `documents` — the
   * pipeline stages a 100 TB pretraining corpus build runs between raw
@@ -30,26 +30,6 @@ import graft.Tables
   */
 object CurationQueries {
 
-  /** 60-bit integer from md5 — Spark SQL dialect (same recipe as
-    * DedupQueries.h60Spark).
-    */
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  /** documents → (doc_id, toks) spread over every core (single-file
-    * fixture scans as one partition; a multi-file corpus would already
-    * arrive parallel).
-    */
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)"
-
   // Eval-set membership for decontamination: every 17th doc plays the
   // role of a benchmark/eval document.
   private val EvalMod = 17
@@ -68,7 +48,7 @@ object CurationQueries {
     QueryDef(
       "pipe_decontaminate",
       (s, dir) => {
-        val sh = tokenized(s, dir)
+        val sh = Corpus.toks(s, dir)
           .filter(size(col("toks")) >= 5)
           .select(col("doc_id"), explode(array_distinct(expr(
             "transform(sequence(0, size(toks) - 5), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]))")))
@@ -85,7 +65,7 @@ object CurationQueries {
           SELECT doc_id,
             unnest(list_distinct(list_transform(range(len(toks) - 4),
               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]))) AS shingle
-          FROM $tokenizedDuck WHERE len(toks) >= 5),
+          FROM ${Corpus.toksDuck()} WHERE len(toks) >= 5),
         ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % $EvalMod = 0)
         SELECT doc_id, count(DISTINCT sh.shingle) AS n_eval_hits
         FROM sh JOIN ev USING (shingle)
@@ -102,7 +82,7 @@ object CurationQueries {
     QueryDef(
       "text_repetition",
       (s, dir) => {
-        val grams = tokenized(s, dir)
+        val grams = Corpus.toks(s, dir)
           .filter(size(col("toks")) >= 2)
           .select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i+1]))"))
@@ -121,7 +101,7 @@ object CurationQueries {
           SELECT doc_id,
             unnest(list_transform(range(len(toks) - 1),
               i -> toks[i+1] || ' ' || toks[i+2])) AS gram
-          FROM $tokenizedDuck WHERE len(toks) >= 2),
+          FROM ${Corpus.toksDuck()} WHERE len(toks) >= 2),
         c AS (
           SELECT doc_id, gram, count(*) AS cnt,
             CAST(length(gram) AS BIGINT) AS len
@@ -140,7 +120,7 @@ object CurationQueries {
     QueryDef(
       "text_gopher_quality",
       (s, dir) =>
-        tokenized(s, dir)
+        Corpus.toks(s, dir)
           .withColumn("n_words", size(col("toks")).cast("bigint"))
           .withColumn("sum_len", expr(
             "aggregate(toks, cast(0 as bigint), (acc, t) -> acc + length(t))"))
@@ -172,7 +152,7 @@ object CurationQueries {
             AND list_sum(list_transform(toks, t -> length(t))) <= len(toks) * 10
             AND len(list_filter(toks, t -> regexp_matches(t, '^[a-z]+$$'))) * 5 >= len(toks) * 4
             AND len(list_filter(toks, t -> t IN ${TextQueries.lex("en").map(w => s"'$w'").mkString("(", ", ", ")")})) >= 2) AS keep
-        FROM $tokenizedDuck ORDER BY doc_id"""),
+        FROM ${Corpus.toksDuck()} ORDER BY doc_id"""),
       doc = "Gopher-style rule gate; bounds compared in exact integer arithmetic " +
         "(sum_len >= 3·n_words, not sum_len/n_words >= 3.0 — no float boundary)."),
 
@@ -199,7 +179,7 @@ object CurationQueries {
           .withColumn("thr", least(lit(1000000L), expr("(want * 1000000L) div avail")))
         val kept = docs
           .join(broadcast(plan), "lang")
-          .filter(expr(s"${h60Spark("cast(doc_id as string)")} % 1000000") < col("thr"))
+          .filter(expr(s"${idHash60Spark("doc_id")} % 1000000") < col("thr"))
           .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
         plan.join(kept, Seq("lang"), "left")
           .select(col("lang"), col("avail"), col("want"), col("thr"),
@@ -217,7 +197,7 @@ object CurationQueries {
         kept AS (
           SELECT d.lang, count(*) AS n_kept
           FROM documents d JOIN thr ON d.lang = thr.lang
-          WHERE ${h60Duck("CAST(d.doc_id AS VARCHAR)")} % 1000000 < thr.thr
+          WHERE ${idHash60Duck("d.doc_id")} % 1000000 < thr.thr
           GROUP BY d.lang)
         SELECT t.lang, t.avail, t.want, t.thr,
           COALESCE(k.n_kept, 0) AS n_kept
@@ -239,7 +219,7 @@ object CurationQueries {
     QueryDef(
       "text_perplexity",
       (s, dir) => {
-        val tk = tokenized(s, dir)
+        val tk = Corpus.toks(s, dir)
           .select(col("doc_id"), explode(col("toks")).as("tok"))
         val freq = tk.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         val tot = freq.agg(sum(col("cnt")).as("total"))
@@ -260,7 +240,7 @@ object CurationQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, unnest(toks) AS tok FROM $tokenizedDuck),
+          SELECT doc_id, unnest(toks) AS tok FROM ${Corpus.toksDuck()}),
         f AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
         tot AS (SELECT sum(cnt) AS total FROM f),
         sc AS (
@@ -294,7 +274,7 @@ object CurationQueries {
     QueryDef(
       "text_lm_backoff",
       (s, dir) => {
-        val tk = tokenized(s, dir).filter(size(col("toks")) >= 2)
+        val tk = Corpus.toks(s, dir).filter(size(col("toks")) >= 2)
         val bg = tk.select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 2), " +
               "i -> struct(toks[i] AS w1, toks[i+1] AS w2))")).as("b"))
@@ -349,7 +329,7 @@ object CurationQueries {
     QueryDef(
       "text_lm_backoff_sharded",
       (s, dir) => {
-        val tk = tokenized(s, dir).filter(size(col("toks")) >= 2)
+        val tk = Corpus.toks(s, dir).filter(size(col("toks")) >= 2)
         val bg = tk.select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 2), " +
               "i -> struct(toks[i] AS w1, toks[i+1] AS w2))")).as("b"))
@@ -412,16 +392,15 @@ object CurationQueries {
         // NULL/Inf one — Spark and DuckDB order NULLs oppositely under
         // DESC, so an empty doc in a regenerated fixture would silently
         // break oracle parity (ADVICE r10)
-        Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
+        Corpus.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"),
-            expr(s"round(ln((${h60Spark("cast(doc_id as string)")} + 1) " +
+            expr(s"round(ln((${idHash60Spark("doc_id")} + 1) " +
               "/ 1152921504606846976.0) / greatest(n_chars, 1), 12)").as("skey"))
           .orderBy(col("skey").desc, col("doc_id"))
           .limit(k)
       },
       Some(s"""SELECT doc_id, lang, n_chars,
-          round(ln((${h60Duck("CAST(doc_id AS VARCHAR)")} + 1)
+          round(ln((${idHash60Duck("doc_id")} + 1)
             / 1152921504606846976.0) / greatest(n_chars, 1), 12) AS skey
         FROM documents
         ORDER BY skey DESC, doc_id
@@ -446,10 +425,9 @@ object CurationQueries {
       (s, dir) => {
         val k = 20
         val topk = udaf(graft.operators.TopKAgg(k))
-        Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
+        Corpus.documents(s, dir)
           .select(col("doc_id"), col("lang"),
-            expr(s"round(ln((${h60Spark("cast(doc_id as string)")} + 1) " +
+            expr(s"round(ln((${idHash60Spark("doc_id")} + 1) " +
               "/ 1152921504606846976.0) / greatest(n_chars, 1), 12)").as("skey"))
           .groupBy(col("lang"))
           .agg(topk(col("skey"), col("doc_id")).as("tk"))
@@ -462,7 +440,7 @@ object CurationQueries {
           SELECT lang, doc_id, skey,
             row_number() OVER (PARTITION BY lang ORDER BY skey DESC, doc_id ASC) AS rn
           FROM (SELECT doc_id, lang,
-            round(ln((${h60Duck("CAST(doc_id AS VARCHAR)")} + 1)
+            round(ln((${idHash60Duck("doc_id")} + 1)
               / 1152921504606846976.0) / greatest(n_chars, 1), 12) AS skey
             FROM documents)) WHERE rn <= 20
         ORDER BY lang, rn"""),
@@ -659,7 +637,7 @@ object CurationQueries {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
-            expr(s"pmod(${h60Spark("cast(doc_id as string)")}, $S)").as("shard"),
+            expr(s"pmod(${idHash60Spark("doc_id")}, $S)").as("shard"),
             least(size(split(col("text"), " ")), lit(B)).cast("long").as("n_tok"))
           .withColumn("cum", sum(col("n_tok")).over(w))
           .select(col("doc_id"), col("lang"), col("shard"), col("n_tok"),
@@ -669,7 +647,7 @@ object CurationQueries {
       },
       Some(s"""WITH d AS (
           SELECT doc_id, lang,
-            ${h60Duck("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
+            ${idHash60Duck("doc_id")} % 8 AS shard,
             CAST(least(len(string_split(text, ' ')), 2048) AS BIGINT) AS n_tok
           FROM documents),
         c AS (
@@ -793,7 +771,7 @@ object CurationQueries {
     */
   private def lmBackoffSql: String =
     s"""WITH tk AS (
-          SELECT doc_id, toks FROM $tokenizedDuck WHERE len(toks) >= 2),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck()} WHERE len(toks) >= 2),
         bg AS (
           SELECT doc_id,
             unnest(list_transform(range(len(toks) - 1), i -> toks[i+1])) AS w1,

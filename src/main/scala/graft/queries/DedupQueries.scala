@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Deduplication operators for a training-data pipeline, over
   * `documents(doc_id, text, ...)` and `embeddings(vec_id, embedding)`.
@@ -119,42 +120,34 @@ object DedupQueries {
   /** (bit offset, width) per band: 8 bands of 5 bits + 5 of 4 = 60. */
   val SimhashBandDefs: Seq[(Int, Int)] = simhashBandDefs(SimhashMaxHamming)
 
-  /** 60-bit integer from md5 — Spark SQL dialect. */
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-
-  /** Same, DuckDB dialect. */
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   /** documents → (doc_id, shingles: distinct word 3-grams). The fixture
-    * is one small parquet file (= one scan partition); repartition so the
-    * interpreted shingling transform uses every core, as a multi-file
-    * corpus scan would naturally.
+    * is one small parquet file (= one scan partition); `Corpus.toks`
+    * spreads the raw rows to `Layouts.spread`'s size-derived width (1 for
+    * the fixtures at the default 128 MB `maxPartitionBytes`, up to
+    * defaultParallelism as the corpus grows) before the interpreted
+    * shingling transform runs.
     */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      // repartition the RAW rows first (cheap: doc_id + text), THEN
-      // tokenize+shingle on every core. Tokenizing before the exchange
-      // looks harmless but (a) runs split() on the single scan partition
-      // of a small-file corpus and (b) ships the token arrays through the
-      // shuffle — measured 2× slower at sf0.1. The toks column is written
-      // ONCE here and referenced by name in the lambda (never re-split
-      // per element — that textual-inlining trap is what made
-      // text_ngram_freq O(words²) before round 2).
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
+    // Corpus.toks repartitions the RAW rows first (cheap: doc_id + text),
+    // THEN tokenizes. Tokenizing before the exchange looks harmless but
+    // (a) runs split() on the single scan partition of a small-file
+    // corpus and (b) ships the token arrays through the shuffle —
+    // measured 2× slower at sf0.1. The toks column is written ONCE and
+    // referenced by name in the lambda (never re-split per element —
+    // that textual-inlining trap is what made text_ngram_freq O(words²)
+    // before round 2).
+    Corpus.toks(s, dir)
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles",
         array_distinct(expr(
           "transform(sequence(0, size(toks) - 3), i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))")))
 
   private val shingledDuck =
-    """sh AS (
+    s"""sh AS (
          SELECT doc_id,
            list_distinct(list_transform(range(len(toks) - 2),
              i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shingles
-         FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
+         FROM ${Corpus.toksDuck()}
          WHERE len(toks) >= 3)"""
 
   /** Single-pass codegen'd |A∩B|/|A∪B| (graft.functions.JaccardSim) —
@@ -306,7 +299,7 @@ object DedupQueries {
   private def simhashPairsDuckSqlAt(maxHamming: Int): String =
     s"""WITH hashed AS (
           SELECT doc_id,
-            list_transform(list_distinct(string_split(lower(text), ' ')), t -> ${h60Duck("t")}) AS hs
+            list_transform(list_distinct(${Corpus.tokensDuck("text")}), t -> ${h60Duck("t")}) AS hs
           FROM documents),
         sh AS (
           SELECT doc_id,
@@ -561,7 +554,8 @@ object DedupQueries {
         val docs = simhashSigs(s, dir)
           // a single parquet file scans as ONE partition: persist the
           // (tiny) signature table so the interpreted aggregate runs once,
-          // and spread the all-pairs stream side across all cores.
+          // and spread the all-pairs stream side to the size-derived
+          // width (1 for the fixtures, up to defaultParallelism).
           .transform(graft.operators.Layouts.spread)
           .persist()
         selfContained(
@@ -648,9 +642,7 @@ object DedupQueries {
     QueryDef(
       "dedup_embedding_cosine",
       (s, dir) => {
-        val v = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val v = Corpus.nvecs(s, dir)
           // single-file scan = one partition; spread the O(n²) stream side
           .transform(graft.operators.Layouts.spread)
           .persist()
@@ -665,7 +657,7 @@ object DedupQueries {
           v)
       },
       Some(s"""WITH v AS (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v FROM embeddings),
         n AS (
           SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM v)
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -786,9 +778,7 @@ object DedupQueries {
     // `1L << b`, so an over-wide width must fail here, before any job runs
     require(bits >= 1 && bits <= 62,
       s"signature width $bits outside [1, 62]: Long bucket keys wrap past 62 bits")
-    val v = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
+    val v = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     def sigCol(t: Int): Column = annSigCol(t, bits)
@@ -867,7 +857,7 @@ object DedupQueries {
           JOIN sigs b ON a.s = b.sig_$t AND a.vec_id < b.vec_id"""
     }.mkString("\n        UNION\n        ")
     s"""WITH vecs AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+        SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v FROM embeddings),
       nvecs AS (
         SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM vecs),
       sigs AS (

@@ -366,7 +366,7 @@ object ExtendedQueries {
         val stop = array(Seq("the", "of", "and", "a", "to").map(lit): _*)
         t(s, dir, "documents")
           .select(col("doc_id"),
-            slice(split(lower(col("text")), " "), 1, 5).as("tk5"))
+            slice(Corpus.tokens(col("text")), 1, 5).as("tk5"))
           .select(col("doc_id"),
             array_join(sort_array(array_distinct(array_intersect(col("tk5"), stop))), ",").as("inter_s"),
             array_join(sort_array(array_distinct(array_union(col("tk5"), stop))), ",").as("union_s"),
@@ -374,8 +374,8 @@ object ExtendedQueries {
             arrays_overlap(col("tk5"), stop).as("has_stop"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH d AS (
-          SELECT doc_id, string_split(lower(text), ' ')[1:5] AS tk5,
+      Some(s"""WITH d AS (
+          SELECT doc_id, ${Corpus.tokensDuck("text")}[1:5] AS tk5,
             ['the', 'of', 'and', 'a', 'to'] AS stop
           FROM documents)
         SELECT doc_id,

@@ -173,14 +173,6 @@ object RetrievalQueries {
   private val nodeLabel =
     "IF(node % 2 = 0, concat('c', node div 2), concat('s', node div 2))"
 
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)"
-
   /** BM25 top-k over an ARBITRARY (query_id, tok) query set — the
     * declared row binds the fixed fixture set; the probe harness binds
     * synthetic sets up to |q|=1000 (VERDICT r10 item 4). The query set is
@@ -192,7 +184,7 @@ object RetrievalQueries {
     */
   def bm25TopK(s: SparkSession, dir: String, qterms0: DataFrame): DataFrame = {
     val qterms = broadcast(qterms0)
-    val docs = tokenized(s, dir)
+    val docs = Corpus.toks(s, dir)
     // corpus-wide scalars: doc count and mean doc length, as ONE
     // double division of exact integer sums (shared both engines)
     val stats = docs.agg(
@@ -247,7 +239,7 @@ object RetrievalQueries {
     // sublinear in corpus size), not the corpus; probe-harness only.
     // The only global window in the repo whose input grows at all.
     val w = Window.orderBy(md5(col("tok")), col("tok"))
-    val vocab = tokenized(s, dir)
+    val vocab = Corpus.toks(s, dir)
       .select(explode(col("toks")).as("tok")).distinct()
       .withColumn("rn", row_number().over(w) - 1)
       .localCheckpoint()
@@ -589,7 +581,7 @@ object RetrievalQueries {
         bm25TopK(s, dir, BmQueries.toDF("query_id", "tok"))
       },
       Some(s"""WITH q(query_id, tok) AS (VALUES $bmQueriesDuck),
-        docs AS (SELECT doc_id, toks FROM $tokenizedDuck),
+        docs AS (SELECT doc_id, toks FROM ${Corpus.toksDuck()}),
         stats AS (
           SELECT count(*) AS n_docs,
             CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
@@ -687,7 +679,7 @@ object RetrievalQueries {
     QueryDef(
       "text_pmi_colloc",
       (s, dir) => {
-        val tk = tokenized(s, dir).filter(size(col("toks")) >= 2)
+        val tk = Corpus.toks(s, dir).filter(size(col("toks")) >= 2)
         val bg = tk.select(explode(expr(
             "transform(sequence(0, size(toks) - 2), " +
               "i -> struct(least(toks[i], toks[i+1]) AS w1, " +
@@ -712,7 +704,7 @@ object RetrievalQueries {
           .limit(PmiTopK)
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, toks FROM $tokenizedDuck WHERE len(toks) >= 2),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck()} WHERE len(toks) >= 2),
         bg AS (
           SELECT least(a, b) AS w1, greatest(a, b) AS w2 FROM (
             SELECT

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-10 training-data pipeline operators: the published corpus-hygiene
   * passes a 100 TB pretraining build runs that the round-4..9 surface did
@@ -72,27 +73,6 @@ object Round10Queries {
   /** Hashing-trick dimension for the quality classifier. */
   val ClassifierD = 4096
 
-  /** 60-bit integer from md5 — same recipe as DedupQueries/CurationQueries. */
-  private def h60(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), col("lang"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents)"
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-       nvecs AS (
-         SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ── CCNet/RefinedWeb boilerplate removal at segment granularity ──
@@ -106,7 +86,7 @@ object Round10Queries {
     QueryDef(
       "pipe_segment_dedup",
       (s, dir) => {
-        val segs = tokenized(s, dir)
+        val segs = Corpus.toks(s, dir, "lang")
           .select(col("doc_id"), posexplode(expr(
             s"transform(sequence(0, ((size(toks) + ${SegLen - 1}) div $SegLen) - 1), " +
               s"i -> concat_ws(' ', slice(toks, i * $SegLen + 1, $SegLen)))"))
@@ -132,7 +112,7 @@ object Round10Queries {
       },
       Some(s"""WITH tok AS (
           SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
-          FROM $tokenizedDuck),
+          FROM ${Corpus.toksDuck("lang")}),
         seg AS (
           SELECT doc_id, (ord - 1) // $SegLen AS seg_id,
             string_agg(w, ' ' ORDER BY ord) AS seg_text
@@ -166,7 +146,7 @@ object Round10Queries {
     QueryDef(
       "text_dup_spans",
       (s, dir) => {
-        val toks = tokenized(s, dir)
+        val toks = Corpus.toks(s, dir, "lang")
         val wins = toks.filter(size(col("toks")) >= DupK)
           .select(col("doc_id"), posexplode(expr(
             s"transform(sequence(0, size(toks) - $DupK), " +
@@ -191,7 +171,7 @@ object Round10Queries {
             round(col("covered_toks").cast(DoubleType) / col("n_toks"), 6))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH d AS (SELECT doc_id, toks FROM $tokenizedDuck),
+      Some(s"""WITH d AS (SELECT doc_id, toks FROM ${Corpus.toksDuck("lang")}),
         win AS (
           SELECT doc_id,
             unnest(range(len(toks) - ${DupK - 1})) AS start,
@@ -239,7 +219,7 @@ object Round10Queries {
         .select(col("a"), col("b"), col("c_shared"), col("cont_a"), col("cont_b"))
         .orderBy(col("a"), col("b")),
       Some(s"""WITH d AS (
-          SELECT doc_id, toks FROM $tokenizedDuck WHERE len(toks) >= $DupK),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck("lang")} WHERE len(toks) >= $DupK),
         sh AS (
           SELECT doc_id,
             unnest(list_distinct(list_transform(range(len(toks) - ${DupK - 1}),
@@ -279,9 +259,7 @@ object Round10Queries {
       "pipe_semdedup",
       (s, dir) => {
         import SimilarityQueries.{CentroidCap, CentroidEvery}
-        val all = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val all = Corpus.nvecs(s, dir)
           .transform(graft.operators.Layouts.spread)
         val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
             col("vec_id") < CentroidEvery * CentroidCap)
@@ -296,7 +274,7 @@ object Round10Queries {
           .select(col("vec_id"), col("v"), col("nrm"), col("cent_id").as("cell"))
         semdedupPrune(assign)
       },
-      Some(s"""WITH $vectorsDuck,
+      Some(s"""WITH ${Corpus.nvecsDuck},
           cents AS (
             SELECT vec_id AS cent_id, v AS cv FROM nvecs
             WHERE vec_id % ${SimilarityQueries.CentroidEvery} = 0
@@ -340,9 +318,7 @@ object Round10Queries {
       (s, dir) => {
         import SimilarityQueries.CentroidEvery
         val CoarseEvery = CentroidEvery * CentroidEvery
-        val all = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val all = Corpus.nvecs(s, dir)
           .transform(graft.operators.Layouts.spread)
         val coarse = all.filter(col("vec_id") % CoarseEvery === 0)
           .select(col("vec_id").as("c2"), col("v").as("c2v"))
@@ -376,7 +352,7 @@ object Round10Queries {
       Some {
         import SimilarityQueries.CentroidEvery
         val coarseEvery = CentroidEvery * CentroidEvery
-        s"""WITH $vectorsDuck,
+        s"""WITH ${Corpus.nvecsDuck},
           coarse AS (SELECT vec_id AS c2, v AS c2v FROM nvecs
             WHERE vec_id % $coarseEvery = 0),
           fine AS (SELECT vec_id AS cent_id, v AS cv FROM nvecs
@@ -429,7 +405,7 @@ object Round10Queries {
     QueryDef(
       "pipe_dsir",
       (s, dir) => {
-        val words = tokenized(s, dir)
+        val words = Corpus.toks(s, dir, "lang")
           .select(col("doc_id"), col("lang"), explode(col("toks")).as("w"))
         val counts = words.groupBy(col("w")).agg(
           sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"),
@@ -453,7 +429,7 @@ object Round10Queries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH w AS (
-          SELECT doc_id, lang, unnest(toks) AS w FROM $tokenizedDuck),
+          SELECT doc_id, lang, unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}),
         c AS (
           SELECT w, CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ct,
             count(*) AS cr
@@ -566,7 +542,7 @@ object Round10Queries {
                FROM ${if (k == 1) "s0" else s"s${k - 1}"} CROSS JOIN t$k)"""
         s"""WITH words AS (
             SELECT w, count(*) AS f FROM (
-              SELECT unnest(toks) AS w FROM $tokenizedDuck) GROUP BY w),
+              SELECT unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}) GROUP BY w),
           s0 AS (
             SELECT regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS ws, f
             FROM words),
@@ -605,18 +581,18 @@ object Round10Queries {
     QueryDef(
       "pipe_quality_classifier",
       (s, dir) => {
-        val grams = tokenized(s, dir)
+        val grams = Corpus.toks(s, dir, "lang")
           .filter(size(col("toks")) >= 2)
           .select(col("doc_id"), col("lang"), explode(expr(
             "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i+1]))"))
             .as("g"))
         // h = bucket in [0, D); w = ((h60(bucket-string) % 2049) - 1024) / 1024
         val scored = grams.select(col("doc_id"), col("lang"),
-          expr(s"pmod(${h60("g")}, $ClassifierD)").as("h"))
+          expr(s"pmod(${h60Spark("g")}, $ClassifierD)").as("h"))
           .select(col("doc_id"), col("lang"),
             // CAST(1024 AS DOUBLE): a bare 1024.0 literal is DECIMAL in
             // Spark SQL and the division silently goes decimal-typed
-            expr(s"(pmod(${h60("concat('w', cast(h as string))")}, 2049) - 1024) / cast(1024 as double)")
+            expr(s"(pmod(${h60Spark("concat('w', cast(h as string))")}, 2049) - 1024) / cast(1024 as double)")
               .as("w"))
         scored.groupBy(col("doc_id"), col("lang"))
           .agg(count(lit(1)).as("n_feats"), sum(col("w")).as("sw"))
@@ -629,7 +605,7 @@ object Round10Queries {
           SELECT doc_id, lang,
             unnest(list_transform(range(len(toks) - 1),
               i -> toks[i+1] || ' ' || toks[i+2])) AS g
-          FROM $tokenizedDuck WHERE len(toks) >= 2),
+          FROM ${Corpus.toksDuck("lang")} WHERE len(toks) >= 2),
         h AS (SELECT doc_id, lang, ${h60Duck("g")} % $ClassifierD AS h FROM g),
         w AS (SELECT doc_id, lang,
             (${h60Duck("'w' || CAST(h AS VARCHAR)")} % 2049 - 1024) / CAST(1024 AS DOUBLE) AS w
@@ -660,7 +636,7 @@ object Round10Queries {
         def rep(c: String, p: String): String =
           s"trim(replace(concat(' ', $c, ' '), concat(' ', $p, ' '), " +
             s"concat(' ', replace($p, ' ', ''), ' ')))"
-        val vocab = tokenized(s, dir)
+        val vocab = Corpus.toks(s, dir, "lang")
           .select(explode(col("toks")).as("w")).distinct()
           .withColumn("ws0",
             concat(regexp_replace(col("w"), "(.)", "$1 "), lit("</w>")))
@@ -672,7 +648,7 @@ object Round10Queries {
           .withColumn("ws3", expr(rep("ws2", "p3")))
           .select(col("w"),
             size(split(col("ws3"), " ")).cast("long").as("n_post"))
-        tokenized(s, dir)
+        Corpus.toks(s, dir, "lang")
           .select(col("doc_id"), explode(col("toks")).as("w"))
           .join(vocab, Seq("w"))
           .groupBy(col("doc_id"))
@@ -700,7 +676,7 @@ object Round10Queries {
                FROM $prev CROSS JOIN t$k)"""
         s"""WITH words AS (
             SELECT w, count(*) AS f FROM (
-              SELECT unnest(toks) AS w FROM $tokenizedDuck) GROUP BY w),
+              SELECT unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}) GROUP BY w),
           s0 AS (
             SELECT regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS ws, f
             FROM words),
@@ -709,12 +685,12 @@ object Round10Queries {
           ${stage("s2", 3)},
           a0 AS (
             SELECT w, regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS ws
-            FROM (SELECT DISTINCT w FROM (SELECT unnest(toks) AS w FROM $tokenizedDuck))),
+            FROM (SELECT DISTINCT w FROM (SELECT unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}))),
           ${app("a0", 1)},
           ${app("a1", 2)},
           ${app("a2", 3)},
           vocab AS (SELECT w, CAST(len(string_split(ws, ' ')) AS BIGINT) AS n_post FROM a3),
-          tok AS (SELECT doc_id, unnest(toks) AS w FROM $tokenizedDuck)
+          tok AS (SELECT doc_id, unnest(toks) AS w FROM ${Corpus.toksDuck("lang")})
           SELECT doc_id, count(*) AS n_words,
             CAST(sum(length(w) + 1) AS BIGINT) AS n_syms_pre,
             CAST(sum(n_post) AS BIGINT) AS n_syms_post
@@ -739,8 +715,7 @@ object Round10Queries {
       "st_incremental_minhash",
       (s, dir) => {
         import graft.streaming.DocumentStreams
-        val docs = Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
+        val docs = Corpus.documents(s, dir)
         val b = DocumentStreams.bandedSigs(docs).persist()
         val cand = b.as("a").join(b.as("b"),
             col("a.band_idx") === col("b.band_idx") &&
@@ -771,11 +746,11 @@ object Round10Queries {
             SELECT doc_id,
               list_distinct(list_transform(range(len(toks) - 2),
                 i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shingles
-            FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
+            FROM ${Corpus.toksDuck()}
             WHERE len(toks) >= 3),
           hashed AS (
             SELECT doc_id,
-              list_transform(shingles, s -> CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) % $P) AS hs
+              list_transform(shingles, s -> ${h60Duck("s")} % $P) AS hs
             FROM sh),
           sigs AS (SELECT doc_id, $sigExpr AS sig FROM hashed),
           banded AS (
@@ -848,7 +823,7 @@ object Round10Queries {
     */
   private[graft] def bpeMerges(s: SparkSession, dir: String,
       materialize: Boolean): DataFrame = {
-    val words = tokenized(s, dir)
+    val words = Corpus.toks(s, dir, "lang")
       .select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
     val sym0raw = words.select(
@@ -910,7 +885,7 @@ object Round10Queries {
     * join linear in true-dup multiplicity instead of df².
     */
   def containmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = tokenized(s, dir)
+    val sh = Corpus.toks(s, dir, "lang")
       .filter(size(col("toks")) >= DupK)
       .select(col("doc_id"), explode(array_distinct(expr(
         s"transform(sequence(0, size(toks) - $DupK), " +

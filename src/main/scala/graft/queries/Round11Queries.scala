@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-11 operators: the published pipeline passes still missing from
   * the SURVEY §2.7 families after round 10b —
@@ -83,30 +83,6 @@ object Round11Queries {
   /** Levenshtein accept threshold for a candidate pair. */
   val ErMaxLev = 1
 
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  /** documents → (doc_id, lang, toks), spread over every core. */
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), col("lang"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents)"
-
-  /** embeddings → (vec_id, v: array<double>). */
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
   /** Interpolated-KN probability, shared expression text (runs verbatim
     * in both Spark SQL and DuckDB so the IEEE op order is identical).
     * D = 3/4 is kept as exact integer arithmetic: max(c-D,0)/ctx is
@@ -127,7 +103,7 @@ object Round11Queries {
 
   /** The PQ/ADC oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
   private[queries] lazy val pqTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Corpus.vecsDuck},
           cents AS (
             SELECT CAST(vec_id / $PqCentEvery AS INT) AS code_id, v AS cv FROM vecs
             WHERE vec_id % $PqCentEvery = 0 AND vec_id < ${PqCentEvery * PqK}),
@@ -202,7 +178,7 @@ object Round11Queries {
     QueryDef(
       "text_lm_kneser_ney",
       (s, dir) => {
-        val tk = tokenized(s, dir).filter(size(col("toks")) >= 2)
+        val tk = Corpus.toks(s, dir, "lang").filter(size(col("toks")) >= 2)
         val bg = tk.select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 2), " +
               "i -> struct(toks[i] AS w1, toks[i+1] AS w2))")).as("b"))
@@ -236,7 +212,7 @@ object Round11Queries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, toks FROM $tokenizedDuck WHERE len(toks) >= 2),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck("lang")} WHERE len(toks) >= 2),
         bg AS (
           SELECT doc_id, u.i AS pos, toks[u.i + 1] AS w1, toks[u.i + 2] AS w2
           FROM tk, unnest(range(0, len(toks) - 1)) u(i)),
@@ -282,7 +258,7 @@ object Round11Queries {
     QueryDef(
       "pipe_ccnet_buckets",
       (s, dir) => {
-        val tk = tokenized(s, dir)
+        val tk = Corpus.toks(s, dir, "lang")
           .select(col("doc_id"), col("lang"), explode(col("toks")).as("tok"))
         val freq = tk.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         val tot = freq.agg(sum(col("cnt")).as("total"))
@@ -307,7 +283,7 @@ object Round11Queries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, lang, unnest(toks) AS tok FROM $tokenizedDuck),
+          SELECT doc_id, lang, unnest(toks) AS tok FROM ${Corpus.toksDuck("lang")}),
         f AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
         tot AS (SELECT sum(cnt) AS total FROM f),
         sc AS (
@@ -360,7 +336,7 @@ object Round11Queries {
                 AND l NOT LIKE '%lorem ipsum%'
                 AND l NOT LIKE '%javascript%'
                 AND l NOT LIKE '%{%'"""
-        tokenized(s, dir)
+        Corpus.toks(s, dir, "lang")
           .withColumn("lines", expr(mkLines))
           .withColumn("kept", expr(s"filter(lines, $keepRules)"))
           .select(
@@ -372,7 +348,7 @@ object Round11Queries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH d AS (
-          SELECT doc_id, toks FROM $tokenizedDuck),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck("lang")}),
         ln AS (
           SELECT doc_id,
             list_transform(
@@ -425,7 +401,7 @@ object Round11Queries {
       "sim_pq_topk",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s) // vec_dist2 on the SQL surface
-        val all = vectors(s, dir)
+        val all = Corpus.vecs(s, dir)
         val cents = all
           .filter(col("vec_id") % PqCentEvery === 0 &&
             col("vec_id") < PqCentEvery * PqK)

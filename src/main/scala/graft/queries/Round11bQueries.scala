@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-11 batch 2: the classic distributed-ML primitives a
   * training-data pipeline runs AFTER curation —
@@ -74,21 +74,6 @@ object Round11bQueries {
     * so no irrational constant enters the oracle compare. */
   val RpDim = 16
 
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  /** embeddings → (vec_id, v: array<double>). */
-  private[queries] def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private[queries] val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
   // ════ k-means builder (shared by sim_kmeans and kmeansUntil) ═══════
 
   /** One row holding the K centroid vectors sorted by cluster id, so
@@ -140,7 +125,7 @@ object Round11bQueries {
 
   private[queries] def kmeansInit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
-    val vecs = vectors(s, dir)
+    val vecs = Corpus.vecs(s, dir)
     val c0 = vecs.filter(col("vec_id") < KmK)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
     (vecs, c0)
@@ -198,7 +183,7 @@ object Round11bQueries {
     * cv) rows over `vecs`) — the auto-K consumer passes a
     * count-derived threshold as a scalar subquery. */
   private[queries] def kmDuckPrefixFrom(c0Sql: String, iters: Int): String =
-    s"""$vectorsDuck,
+    s"""${Corpus.vecsDuck},
         c0 AS ($c0Sql),
         ${(1 to iters).map(kmDuckIter).mkString(",\n")}"""
 
@@ -266,8 +251,7 @@ object Round11bQueries {
 
   /** Shared feature extraction (identical expression text in Duck). */
   private def lrFeatures(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
+    Corpus.documents(s, dir)
       .select(
         col("doc_id"),
         expr(s"CASE WHEN length(text) >= $LrThresh THEN 1 ELSE 0 END").as("y"),
@@ -448,9 +432,9 @@ object Round11bQueries {
                 transform(sequence(0, ${Dim - 1}), j ->
                   CASE WHEN ${h60Spark("concat('rp:', cast(kk as string), ':', cast(j as string))")} % 2 = 0
                        THEN cast(1.0 as double) ELSE cast(-1.0 as double) END))"""
-        val sgn = vectors(s, dir).sparkSession.range(1)
+        val sgn = Corpus.vecs(s, dir).sparkSession.range(1)
           .select(expr(sgnExpr).as("sgn"))
-        vectors(s, dir)
+        Corpus.vecs(s, dir)
           .crossJoin(broadcast(sgn))
           .select(col("vec_id"), col("v"), col("sgn"),
             explode(sequence(lit(0), lit(RpDim - 1))).as("k"))
@@ -459,7 +443,7 @@ object Round11bQueries {
               .as("proj"))
           .orderBy(col("vec_id"), col("k"))
       },
-      Some(s"""WITH $vectorsDuck,
+      Some(s"""WITH ${Corpus.vecsDuck},
           sgn AS (
             SELECT list_transform(range(0, $RpDim), kk ->
               list_transform(range(0, $Dim), j ->

@@ -156,7 +156,7 @@ object Round11cQueries {
       "pipe_decontaminate_semantic",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        val vecs = Round11bQueries.vectors(s, dir)
+        val vecs = Corpus.vecs(s, dir)
         val eva = vecs.filter(col("vec_id") < SemEvalN)
           .select(struct(col("vec_id").as("eid"), col("v").as("ev")).as("e"))
           .agg(sort_array(collect_list(col("e"))).as("evals"))
@@ -176,7 +176,7 @@ object Round11cQueries {
       Some {
         val cos = s"round(${VectorOps.duckDot("a.v", "e.ev")}" +
           s" / (sqrt(${VectorOps.duckDot("a.v", "a.v")}) * sqrt(${VectorOps.duckDot("e.ev", "e.ev")})), 6)"
-        s"""WITH ${Round11bQueries.vectorsDuck},
+        s"""WITH ${Corpus.vecsDuck},
           ev AS (SELECT vec_id AS eid, v AS ev FROM vecs WHERE vec_id < $SemEvalN),
           sc AS (
             SELECT a.vec_id, e.eid, $cos AS c
@@ -205,10 +205,7 @@ object Round11cQueries {
     QueryDef(
       "text_tfidf_topterms",
       (s, dir) => {
-        val tk = Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+        val tk = Corpus.tok(s, dir)
         val tf = tk.groupBy(col("doc_id"), col("tok"))
           .agg(count(lit(1)).as("tf"))
         val dfTab = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -225,7 +222,7 @@ object Round11cQueries {
           .orderBy(col("doc_id"), col("rank"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+          SELECT doc_id, unnest(${Corpus.tokensDuck("text")}) AS tok
           FROM documents),
         tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY doc_id, tok),
         dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-11 batch 4: mixture optimization + private statistics —
   *
@@ -44,11 +45,6 @@ object Round11dQueries {
   /** Privacy budget ε; Laplace scale = Δf/ε = 1/ε (Δf = 1: one
     * document changes exactly one disjoint histogram cell). */
   val DpEpsilon = 1.0
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** One EG step: x = round(w_prev · exp(η·excess), 9) as exact
     * DECIMAL, renormalize by the exact sum, round the weight to 6. */
@@ -92,10 +88,7 @@ object Round11dQueries {
     QueryDef(
       "pipe_doremi_mix",
       (s, dir) => {
-        val tk = Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
-          .select(col("doc_id"), col("source"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+        val tk = Corpus.tok(s, dir, "source")
         val freq = tk.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
         val tot = freq.agg(sum(col("cnt")).as("total"))
         val dom = tk.join(broadcast(freq), "tok")
@@ -128,7 +121,7 @@ object Round11dQueries {
           .orderBy(col("source"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, source, unnest(string_split(lower(text), ' ')) AS tok
+          SELECT doc_id, source, unnest(${Corpus.tokensDuck("text")}) AS tok
           FROM documents),
         f AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
         tot AS (SELECT sum(cnt) AS total FROM f),

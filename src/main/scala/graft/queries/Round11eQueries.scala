@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -38,15 +37,6 @@ object Round11eQueries {
   val SbAlpha = "0.4"
   val SbAlpha2 = "0.16"
 
-  /** documents → (doc_id, toks), spread over every core. */
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)"
-
   /** The two-level Stupid-Backoff score, shared expression text.
     *   ct   = c(w1,w2,w3)   trigram count (NULL when unseen)
     *   cb12 = c(w1,w2)      bigram context (NULL when unseen — but
@@ -66,7 +56,7 @@ object Round11eQueries {
     * identical scores by construction, so one SQL serves both. */
   private val trigramOracleSql =
     s"""WITH tk AS (
-          SELECT doc_id, toks FROM $tokenizedDuck WHERE len(toks) >= 3),
+          SELECT doc_id, toks FROM ${Corpus.toksDuck()} WHERE len(toks) >= 3),
         tg AS (
           SELECT doc_id, toks[u.i + 1] AS w1, toks[u.i + 2] AS w2,
             toks[u.i + 3] AS w3
@@ -75,7 +65,7 @@ object Round11eQueries {
           SELECT w1, w2, w3, count(*) AS ct FROM tg
           WHERE doc_id % 2 = 0 GROUP BY w1, w2, w3),
         tk2 AS (
-          SELECT doc_id, toks FROM $tokenizedDuck
+          SELECT doc_id, toks FROM ${Corpus.toksDuck()}
           WHERE len(toks) >= 2 AND doc_id % 2 = 0),
         bg AS (
           SELECT toks[u.i + 1] AS wa, toks[u.i + 2] AS wb
@@ -117,7 +107,7 @@ object Round11eQueries {
     QueryDef(
       "text_lm_trigram_backoff",
       (s, dir) => {
-        val tk3 = tokenized(s, dir).filter(size(col("toks")) >= 3)
+        val tk3 = Corpus.toks(s, dir).filter(size(col("toks")) >= 3)
         val tg = tk3.select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 3), " +
               "i -> struct(toks[i] AS w1, toks[i+1] AS w2, toks[i+2] AS w3))")).as("t"))
@@ -127,7 +117,7 @@ object Round11eQueries {
         val triCnt = train3.groupBy(col("w1"), col("w2"), col("w3"))
           .agg(count(lit(1)).as("ct"))
         // lower orders from their own train explode (paper semantics)
-        val tk2 = tokenized(s, dir)
+        val tk2 = Corpus.toks(s, dir)
           .filter(expr("doc_id % 2 = 0") && size(col("toks")) >= 2)
         val bg = tk2.select(explode(expr(
             "transform(sequence(0, size(toks) - 2), " +
@@ -179,7 +169,7 @@ object Round11eQueries {
     QueryDef(
       "text_lm_trigram_backoff_sharded",
       (s, dir) => {
-        val tk3 = tokenized(s, dir).filter(size(col("toks")) >= 3)
+        val tk3 = Corpus.toks(s, dir).filter(size(col("toks")) >= 3)
         val tgRaw = tk3.select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(toks) - 3), " +
               "i -> struct(toks[i] AS w1, toks[i+1] AS w2, toks[i+2] AS w3))")).as("t"))
@@ -216,7 +206,7 @@ object Round11eQueries {
           .groupBy(col("w1"), col("w2"))
           .agg(map_from_entries(collect_list(struct(col("w3"), col("ct"))))
             .as("w3map"))
-        val tk2 = tokenized(s, dir)
+        val tk2 = Corpus.toks(s, dir)
           .filter(expr("doc_id % 2 = 0") && size(col("toks")) >= 2)
         val bg = tk2.select(explode(expr(
             "transform(sequence(0, size(toks) - 2), " +

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.h60Spark
 
 /** Round-12 batch: curation-at-scale twins + schedule math —
   *
@@ -61,29 +62,13 @@ object Round12Queries {
 
   private val EvalMod = 17
 
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-
-  private val tokenizedDuck =
-    "(SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)"
-
   /** Per-doc LM-surprisal scores (doc_id, lang, avg_surprisal) — the
     * CCNet scoring pass shared by pipe_ccnet_buckets_cutoff and the
     * sketch twin (Round15Queries): one token-count shuffle, broadcast
     * freq/total, one doc rollup over exact-DECIMAL surprisal terms.
     */
   private[graft] def ccnetScored(s: SparkSession, dir: String): DataFrame = {
-    val tk = Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), col("lang"),
-        explode(split(lower(col("text")), " ")).as("tok"))
+    val tk = Corpus.tok(s, dir, "lang")
     val freq = tk.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val tot = freq.agg(sum(col("cnt")).as("total"))
     tk.join(broadcast(freq), "tok")
@@ -97,9 +82,9 @@ object Round12Queries {
 
   /** The matching DuckDB CTE chain, ending in `scored`. */
   private[queries] val ccnetScoredDuck: String =
-    """tk AS (
+    s"""tk AS (
           SELECT doc_id, lang, unnest(toks) AS tok
-          FROM (SELECT d.doc_id, d.lang, string_split(lower(d.text), ' ') AS toks
+          FROM (SELECT d.doc_id, d.lang, ${Corpus.tokensDuck("d.text")} AS toks
                 FROM documents d)),
         f AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
         tot AS (SELECT sum(cnt) AS total FROM f),
@@ -117,7 +102,7 @@ object Round12Queries {
     * shingle space to share its oracle.
     */
   private def shingles5(s: SparkSession, dir: String): DataFrame =
-    tokenized(s, dir)
+    Corpus.toks(s, dir)
       .filter(size(col("toks")) >= 5)
       .select(col("doc_id"), explode(array_distinct(expr(
         "transform(sequence(0, size(toks) - 5), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]))")))
@@ -207,7 +192,7 @@ object Round12Queries {
           SELECT doc_id,
             unnest(list_distinct(list_transform(range(len(toks) - 4),
               i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]))) AS shingle
-          FROM $tokenizedDuck WHERE len(toks) >= 5),
+          FROM ${Corpus.toksDuck()} WHERE len(toks) >= 5),
         ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % $EvalMod = 0)
         SELECT doc_id, count(DISTINCT sh.shingle) AS n_eval_hits
         FROM sh JOIN ev USING (shingle)
@@ -525,10 +510,9 @@ object Round12Queries {
     QueryDef(
       "pipe_corpus_drift",
       (s, dir) => {
-        val tk = Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
+        val tk = Corpus.documents(s, dir)
           .select(col("lang"), (col("doc_id") % 2 === 0).as("is_a"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+            explode(Corpus.tokens(col("text"))).as("tok"))
         val cnt = tk.groupBy(col("lang"), col("tok")).agg(
           sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("is_a"), 1L).otherwise(0L)).as("cb"))
@@ -558,7 +542,7 @@ object Round12Queries {
       },
       Some(s"""WITH tk AS (
           SELECT lang, doc_id % 2 = 0 AS is_a,
-            unnest(string_split(lower(text), ' ')) AS tok
+            unnest(${Corpus.tokensDuck("text")}) AS tok
           FROM documents),
         cnt AS (
           SELECT lang, tok,

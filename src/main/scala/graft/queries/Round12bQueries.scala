@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -50,20 +50,6 @@ object Round12bQueries {
       }
     }
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-
   /** Standalone so pipe_quality_ensemble can reference it without a
     * self-referential `defs` initialization (the ensemble's oracle is
     * built eagerly while `defs` is still being constructed). */
@@ -71,7 +57,7 @@ object Round12bQueries {
     QueryDef(
         "text_token_entropy",
         (s, dir) => {
-          val cnt = tokenized(s, dir)
+          val cnt = Corpus.tok(s, dir)
             .groupBy(col("doc_id"), col("tok"))
             .agg(count(lit(1)).as("c"))
           val w = Window.partitionBy(col("doc_id"))
@@ -90,8 +76,8 @@ object Round12bQueries {
               "CASE WHEN n_types > 1 THEN round(entropy / ln(n_types), 6) ELSE 0.0 END"))
             .orderBy(col("doc_id"))
         },
-        Some("""WITH tk AS (
-            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+        Some(s"""WITH tk AS (
+            SELECT doc_id, unnest(${Corpus.tokensDuck("text")}) AS tok
             FROM documents),
           cnt AS (
             SELECT doc_id, tok, count(*) AS c FROM tk GROUP BY doc_id, tok),
@@ -115,7 +101,7 @@ object Round12bQueries {
 
   /** The exact-MIPS oracle as a named val — it is BOTH a declared row and the round-18 contract recall row's inner-product truth (one definition, no drift). */
   private[queries] lazy val mipsTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Corpus.vecsDuck},
           q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
                 WHERE vec_id < $NQueries),
           ips AS (
@@ -145,7 +131,7 @@ object Round12bQueries {
         val qBucketSql = (0 until NBits).map { b =>
           s"(CASE WHEN ${headSql(b)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
         }.mkString(" + ")
-        s"""WITH $vectorsDuck,
+        s"""WITH ${Corpus.vecsDuck},
           nv AS (SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM vecs),
           mx AS (SELECT max(nrm) AS mm FROM nv),
           bucketed AS (
@@ -181,7 +167,7 @@ object Round12bQueries {
     QueryDef(
       "sim_mips_topk",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Corpus.vecs(s, dir)
         val q = all.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("query_id"), col("v").as("qv"))
         val w = Window.partitionBy(col("query_id"))
@@ -212,7 +198,7 @@ object Round12bQueries {
     QueryDef(
       "sim_mips_lsh_topk",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Corpus.vecs(s, dir)
           .withColumn("nrm", VectorOps.norm(col("v")))
         val mx = all.agg(max(col("nrm")).as("mm"))
         // corpus bucket: sign bits of dot([v/M; ext], h) =
@@ -239,7 +225,7 @@ object Round12bQueries {
         val probeCol = array(
           (col("qb") +: (0 until NBits).map(b =>
             col("qb").bitwiseXOR(lit(1 << b)))): _*)
-        val q = vectors(s, dir).filter(col("vec_id") < NQueries)
+        val q = Corpus.vecs(s, dir).filter(col("vec_id") < NQueries)
           .withColumn("qb", qBucketCol)
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
             explode(probeCol).as("bucket"))
@@ -289,7 +275,7 @@ object Round12bQueries {
         def rep(c: String, p: String): String =
           s"trim(replace(concat(' ', $c, ' '), concat(' ', $p, ' '), " +
             s"concat(' ', replace($p, ' ', ''), ' ')))"
-        val words = tokenized(s, dir).select(col("tok").as("w"))
+        val words = Corpus.tok(s, dir).select(col("tok").as("w"))
         val vocab = words.distinct()
           .withColumn("ws0",
             concat(regexp_replace(col("w"), "(.)", "$1 "), lit("</w>")))
@@ -300,9 +286,8 @@ object Round12bQueries {
           .withColumn("ws2", expr(rep("ws1", "p2")))
           .withColumn("ws3", expr(rep("ws2", "p3")))
           .select(col("w"), size(split(col("ws3"), " ")).cast("long").as("n_post"))
-        Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
-          .select(col("lang"), explode(split(lower(col("text")), " ")).as("w"))
+        Corpus.documents(s, dir)
+          .select(col("lang"), explode(Corpus.tokens(col("text"))).as("w"))
           .join(vocab, Seq("w"))
           .groupBy(col("lang"))
           .agg(
@@ -316,8 +301,6 @@ object Round12bQueries {
           .orderBy(col("lang"))
       },
       Some {
-        val tokenizedDuck =
-          "(SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents)"
         def stage(prev: String, k: Int): String =
           s"""p$k AS (
                SELECT pair, CAST(sum(f) AS BIGINT) AS cnt FROM (
@@ -336,7 +319,7 @@ object Round12bQueries {
                FROM $prev CROSS JOIN t$k)"""
         s"""WITH words AS (
             SELECT w, count(*) AS f FROM (
-              SELECT unnest(toks) AS w FROM $tokenizedDuck) GROUP BY w),
+              SELECT unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}) GROUP BY w),
           s0 AS (
             SELECT regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS ws, f
             FROM words),
@@ -345,12 +328,12 @@ object Round12bQueries {
           ${stage("s2", 3)},
           a0 AS (
             SELECT w, regexp_replace(w, '(.)', '\\1 ', 'g') || '</w>' AS ws
-            FROM (SELECT DISTINCT w FROM (SELECT unnest(toks) AS w FROM $tokenizedDuck))),
+            FROM (SELECT DISTINCT w FROM (SELECT unnest(toks) AS w FROM ${Corpus.toksDuck("lang")}))),
           ${app("a0", 1)},
           ${app("a1", 2)},
           ${app("a2", 3)},
           vocab AS (SELECT w, CAST(len(string_split(ws, ' ')) AS BIGINT) AS n_post FROM a3),
-          tok AS (SELECT lang, unnest(toks) AS w FROM $tokenizedDuck)
+          tok AS (SELECT lang, unnest(toks) AS w FROM ${Corpus.toksDuck("lang")})
           SELECT lang, count(*) AS n_words,
             CAST(sum(n_post) AS BIGINT) AS n_tokens,
             CAST(sum(length(w)) AS BIGINT) AS n_chars,
@@ -382,9 +365,9 @@ object Round12bQueries {
           count_distinct(col("lang")).as("n_langs"),
           count_distinct(col("source")).as("n_sources"),
           sum(col("n_chars")).as("total_chars"),
-          sum(size(split(lower(col("text")), " "))).cast("long").as("total_tokens"),
+          sum(size(Corpus.tokens(col("text")))).cast("long").as("total_tokens"),
           count_distinct(md5(col("text"))).as("n_unique_texts"))
-        val voc = tokenized(s, dir)
+        val voc = Corpus.tok(s, dir)
           .agg(count_distinct(col("tok")).as("vocab_size"))
         base.crossJoin(broadcast(voc)).select(explode(map_from_arrays(
             array(lit("n_docs"), lit("n_langs"), lit("n_sources"),
@@ -402,17 +385,17 @@ object Round12bQueries {
           .as(Seq("metric", "value")))
           .orderBy(col("metric"))
       },
-      Some("""WITH base AS (
+      Some(s"""WITH base AS (
           SELECT count(*) AS n_docs,
             count(DISTINCT lang) AS n_langs,
             count(DISTINCT source) AS n_sources,
             CAST(sum(n_chars) AS BIGINT) AS total_chars,
-            CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS total_tokens,
+            CAST(sum(len(${Corpus.tokensDuck("text")})) AS BIGINT) AS total_tokens,
             count(DISTINCT md5(text)) AS n_unique_texts
           FROM documents),
         voc AS (
           SELECT count(DISTINCT tok) AS vocab_size FROM (
-            SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents)),
+            SELECT unnest(${Corpus.tokensDuck("text")}) AS tok FROM documents)),
         long AS (
           SELECT unnest(['n_docs', 'n_langs', 'n_sources', 'total_chars',
               'total_tokens', 'vocab_size', 'exact_dup_excess',
@@ -524,9 +507,7 @@ object Round12bQueries {
       "text_ngram_novelty",
       (s, dir) => {
         val k = 8
-        val sh = Tables.load(s, dir, "documents")
-          .transform(graft.operators.Layouts.spread)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
+        val sh = Corpus.toks(s, dir)
           .filter(size(col("toks")) >= k)
           .select(col("doc_id"), explode(array_distinct(expr(
             s"transform(sequence(0, size(toks) - $k), " +
@@ -548,11 +529,11 @@ object Round12bQueries {
             round(col("n_novel").cast(DoubleType) / col("n_shingles"), 6))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH sh AS (
+      Some(s"""WITH sh AS (
           SELECT doc_id,
             unnest(list_distinct(list_transform(range(len(toks) - 7),
               i -> array_to_string(toks[i+1:i+8], ' ')))) AS g
-          FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
+          FROM (SELECT doc_id, ${Corpus.tokensDuck("text")} AS toks
                 FROM documents)
           WHERE len(toks) >= 8),
         per_doc AS (

@@ -92,28 +92,6 @@ object Round13Queries {
   private val lblStr =
     "IF(lbl % 2 = 0, concat('c', lbl div 2), concat('s', lbl div 2))"
 
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .transform(graft.operators.Layouts.spread)
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(split(lower(col("text")), " ")).as("tok"))
-
-  private val tokenizedDuck =
-    """(SELECT doc_id, lang, source, unnest(string_split(lower(text), ' ')) AS tok
-       FROM documents)"""
-
-  private[queries] def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-
-  private[queries] val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-       nvecs AS (
-         SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
-
   /** Shared hourly (event_type, ws, n) rollup — the ev_rate_anomaly
     * series (one map-side-combinable shuffle collapses the corpus;
     * everything downstream is |types|·|hours|-sized).
@@ -367,7 +345,7 @@ object Round13Queries {
     */
   private[graft] def knnGraphPlan(s: SparkSession, dir: String,
       bits: Int = NBits): (DataFrame, DataFrame) =
-    knnGraphPlanFrom(vectors(s, dir), bits)
+    knnGraphPlanFrom(Corpus.nvecs(s, dir), bits)
 
   /** The same pipeline over a caller-prepared (vec_id, v, nrm) corpus —
     * the round-20 shared-prepared-corpus seam: the declared rows pass
@@ -377,7 +355,6 @@ object Round13Queries {
     */
   private[graft] def knnGraphPlanFrom(base: DataFrame,
       bits: Int = NBits): (DataFrame, DataFrame) = {
-    val s = base.sparkSession
     val tables = knnTables(bits)
     def bucketCol(t: Int) = (0 until bits).map { b =>
       when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
@@ -446,7 +423,7 @@ object Round13Queries {
       .filter(col("cosine") >= SemClusterTau)
       .select(col("vec_id"), col("neighbor_id"))
     val labels = graft.operators.ConnectedComponents.run(knn)
-    val all = vectors(s, dir).select(col("vec_id"))
+    val all = Corpus.nvecs(s, dir).select(col("vec_id"))
     val wc = Window.partitionBy(col("cluster_id"))
     all
       .join(labels.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
@@ -507,7 +484,7 @@ object Round13Queries {
   /** The kNN-graph oracle CTE chain, ending in `ranked` (query_id,
     * neighbor_id, cosine, rank) — shared by both consumers.
     */
-  private def knnDuckCtes(bits: Int = NBits): String = {
+  private def knnDuckCtes(bits: Int): String = {
     val tables = knnTables(bits)
     def bucketSql(t: Int) = (0 until bits).map { b =>
       val lits = tables(t)(b).mkString("[", ", ", "]")
@@ -517,7 +494,7 @@ object Round13Queries {
       case 0 => s"b$t + ${t << bits}"
       case b => s"xor(b$t, ${1 << (b - 1)}) + ${t << bits}"
     }.mkString("[", ", ", "]")
-    s"""$vectorsDuck,
+    s"""${Corpus.nvecsDuck},
       bucketed AS (
         SELECT vec_id, v, nrm, ${bucketSql(0)} AS b0, ${bucketSql(1)} AS b1
         FROM nvecs),
@@ -716,7 +693,7 @@ object Round13Queries {
       (s, dir) => {
         val wRank = Window.partitionBy(col("lang"))
           .orderBy(col("cnt").desc, col("tok").asc)
-        val terms = tokenized(s, dir)
+        val terms = Corpus.tok(s, dir, "lang", "source")
           .groupBy(col("lang"), col("tok"))
           .agg(count(lit(1)).as("cnt"))
           .withColumn("rnk", row_number().over(wRank))
@@ -746,7 +723,7 @@ object Round13Queries {
           .orderBy(col("lang"))
       },
       Some(s"""WITH cnts AS (
-          SELECT lang, tok, count(*) AS cnt FROM $tokenizedDuck
+          SELECT lang, tok, count(*) AS cnt FROM ${Corpus.tokDuck("lang", "source")}
           GROUP BY lang, tok),
         ranked AS (
           SELECT lang, cnt,
@@ -797,7 +774,7 @@ object Round13Queries {
     QueryDef(
       "text_odds_ratio",
       (s, dir) => {
-        val tk = tokenized(s, dir)
+        val tk = Corpus.tok(s, dir, "lang", "source")
         val aSrc = broadcast(tk.agg(min(col("source")).as("a_src")))
         val cnts = tk.crossJoin(aSrc)
           .groupBy(col("tok"))
@@ -824,7 +801,7 @@ object Round13Queries {
           .orderBy(abs(col("z")).desc, col("tok").asc)
           .limit(OddsTopK)
       },
-      Some(s"""WITH tk AS (SELECT * FROM $tokenizedDuck),
+      Some(s"""WITH tk AS (SELECT * FROM ${Corpus.tokDuck("lang", "source")}),
           asrc AS (SELECT min(source) AS a_src FROM tk),
           cnts AS (
             SELECT tok,
@@ -1006,8 +983,8 @@ object Round13Queries {
       (s, dir) => {
         val tk = Tables.load(s, dir, "documents")
           .select(col("doc_id"),
-            size(split(lower(col("text")), " ")).as("ntok"))
-        val firstOcc = tokenized(s, dir)
+            size(Corpus.tokens(col("text"))).as("ntok"))
+        val firstOcc = Corpus.tok(s, dir, "lang", "source")
           .groupBy(col("tok")).agg(min(col("doc_id")).as("first_doc"))
         val mx = Tables.load(s, dir, "documents")
           .agg(max(col("doc_id")).as("max_id"))
@@ -1041,10 +1018,10 @@ object Round13Queries {
                  / n_points"""), 6).as("ln_k"))
       },
       Some(s"""WITH tk AS (
-          SELECT doc_id, len(string_split(lower(text), ' ')) AS ntok
+          SELECT doc_id, len(${Corpus.tokensDuck("text")}) AS ntok
           FROM documents),
         first_occ AS (
-          SELECT tok, min(doc_id) AS first_doc FROM $tokenizedDuck GROUP BY tok),
+          SELECT tok, min(doc_id) AS first_doc FROM ${Corpus.tokDuck("lang", "source")} GROUP BY tok),
         mx AS (SELECT max(doc_id) AS max_id FROM documents),
         cuts AS (
           SELECT i AS cut_i, (max_id * i) // $HeapsCuts AS cut

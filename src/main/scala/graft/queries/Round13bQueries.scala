@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-13 batch 2: the IVFPQ serving composition, k-core graph
   * pruning, event-transition statistics, and a DP quantile —
@@ -44,20 +44,6 @@ object Round13bQueries {
   /** Bootstrap replicate count. */
   val BootB = 100
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   private[queries] val nodeStr =
     "IF(node % 2 = 0, concat('c', node div 2), concat('s', node div 2))"
 
@@ -95,7 +81,7 @@ object Round13bQueries {
 
   /** The IVFPQ oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
   private[queries] lazy val ivfpqTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Corpus.vecsDuck},
           cents AS (
             SELECT vec_id AS cent_id, v AS cv FROM vecs
             WHERE vec_id % $CentroidEvery = 0
@@ -190,7 +176,7 @@ object Round13bQueries {
       "sim_ivfpq_topk",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        val all = vectors(s, dir)
+        val all = Corpus.vecs(s, dir)
         // coarse cells (sim_ivf_topk recipe, assignment only)
         val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
             col("vec_id") < CentroidEvery * CentroidCap)

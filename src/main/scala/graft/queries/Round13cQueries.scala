@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,15 +29,11 @@ object Round13cQueries {
   /** Queries = the first HnQueries vec_ids (the sim-family stance). */
   val HnQueries = 5
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"),
-        col("label"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
+  /** `Corpus.nvecsDuck` keeping `label` — sim_hard_negatives' oracle
+    * only, so it stays here (the Spark side is `Corpus.nvecs(…, "label")`). */
+  private val labelledVecsDuck =
+    s"""vecs AS (
+         SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v,
            label
          FROM embeddings),
        nvecs AS (
@@ -167,7 +162,7 @@ object Round13cQueries {
     QueryDef(
       "sim_hard_negatives",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Corpus.nvecs(s, dir, "label")
         val q = all.filter(col("vec_id") < HnQueries)
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
             col("nrm").as("qn"), col("label").as("qlabel"))
@@ -186,7 +181,7 @@ object Round13cQueries {
             col("qlabel"), col("neg_label"), col("cosine"))
           .orderBy(col("query_id"), col("rank"))
       },
-      Some(s"""WITH $vectorsDuck,
+      Some(s"""WITH $labelledVecsDuck,
           q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn,
                   label AS qlabel
                 FROM nvecs WHERE vec_id < $HnQueries),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 import graft.operators.QuantileSketchAgg
 
 /** Round-15 batch: the promised production twins —
@@ -54,11 +55,6 @@ object Round15Queries {
     * correctness gate checks.
     */
   val SketchK = 64
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** DISTINCT (customer, supplier) bipartite edge set — the
     * graph_butterflies input (Round13cQueries.scala:122).

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
+import graft.queries.Corpus.{h60Duck, h60Spark}
 import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
 
 /** Round-15b batch: batch operators a corpus-scale pipeline leans on
@@ -122,11 +123,6 @@ object Round15bQueries {
     * the exact path, which the spec pins separately.)
     */
   val KmvK = 64
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** Shared oracle for graph_triangles and its partitioned twin — the
     * orientation is a pure per-edge function, so both join strategies
@@ -622,7 +618,7 @@ object Round15bQueries {
           .mkString(" + ")
         val toks = Tables.load(s, dir, "documents")
           .select(col("lang"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+            explode(Corpus.tokens(col("text"))).as("tok"))
           .withColumn("packed", expr(packed))
         val sketch = toks.groupBy(col("lang"))
           .agg(cm(col("packed")).as("cells"))
@@ -645,7 +641,7 @@ object Round15bQueries {
           s"CAST(('0x' || substring(md5('cm:' || tok), ${1 + 8 * j}, 8)) " +
             s"AS BIGINT) % $CmW"
         s"""WITH toks AS (
-          SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
+          SELECT lang, unnest(${Corpus.tokensDuck("text")}) AS tok
           FROM documents),
         cnt AS (
           SELECT lang, tok, CAST(count(*) AS BIGINT) AS n
@@ -750,7 +746,7 @@ object Round15bQueries {
         val ams = udaf(AmsSketchAgg(AmsK), ExpressionEncoder[Long]())
         val toks = Tables.load(s, dir, "documents")
           .select(col("lang"),
-            explode(split(lower(col("text")), " ")).as("tok"))
+            explode(Corpus.tokens(col("text"))).as("tok"))
           .withColumn("tag", expr(h60Spark("concat('f2:', tok)")))
         val sketch = toks.groupBy(col("lang"))
           .agg(ams(col("tag")).as("counters"))
@@ -782,7 +778,7 @@ object Round15bQueries {
           .orderBy(col("lang"))
       },
       Some(s"""WITH toks AS (
-          SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
+          SELECT lang, unnest(${Corpus.tokensDuck("text")}) AS tok
           FROM documents),
         cnt AS (
           SELECT lang, tok, CAST(count(*) AS BIGINT) AS f,

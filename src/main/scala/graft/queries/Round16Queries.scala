@@ -169,7 +169,7 @@ object Round16Queries {
   private[graft] def knnGraphAutoPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    knnGraphAutoPlanFrom(Round13Queries.vectors(s, dir))
+    knnGraphAutoPlanFrom(Corpus.nvecs(s, dir))
 
   /** The same pipeline over a caller-prepared (vec_id, v, nrm) corpus —
     * the round-20 shared-prepared-corpus seam (see
@@ -177,7 +177,6 @@ object Round16Queries {
     */
   private[graft] def knnGraphAutoPlanFrom(base: DataFrame)
       : (DataFrame, DataFrame) = {
-    val s = base.sparkSession
     val tables = Round13Queries.knnTables(KnnAutoMaxBits)
     def sigCol(t: Int) = (0 until KnnAutoMaxBits).map { b =>
       when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
@@ -279,9 +278,7 @@ object Round16Queries {
         gridHotLoad == graft.operators.Salting.DeriveHotLoad,
       s"gridHotLoad must be 0 (guard off), a positive threshold, or " +
         s"Salting.DeriveHotLoad, got $gridHotLoad")
-    val base = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
+    val base = Corpus.nvecs(s, dir)
     val width = base.agg(count(lit(1)).as("n"))
       .select(
         greatest(lit(KnnAutoMinBits), least(lit(AnnAutoMaxBits),
@@ -411,7 +408,7 @@ object Round16Queries {
       s"""list_transform(range(0, bits + 1), i ->
           (CASE WHEN i = 0 THEN ($st & mask)
            ELSE xor(($st & mask), (1 << (i - 1))) END) + $t * (mask + 1))"""
-    s"""${Round13Queries.vectorsDuck},
+    s"""${Corpus.nvecsDuck},
       width AS (
         SELECT $bitsSql AS bits, (1 << $bitsSql) - 1 AS mask FROM vecs),
       bucketed AS (
@@ -460,7 +457,6 @@ object Round16Queries {
     */
   private[graft] val annAutoDuckSql: String = {
 
-        val radius = DedupQueries.AnnProbeRadius
         val tables = DedupQueries.AnnTables
         def sigSql(t: Int) = (0 until AnnAutoMaxBits).map { b =>
           val lits = SimilarityQueries.hyperplaneSet(t, AnnAutoMaxBits)(b)
@@ -485,7 +481,7 @@ object Round16Queries {
               JOIN sigs b ON a.s = b.sig_$t AND a.vec_id < b.vec_id"""
         }.mkString("\n        UNION\n        ")
         s"""WITH vecs AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+            SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v
             FROM embeddings),
           nvecs AS (
             SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM vecs),

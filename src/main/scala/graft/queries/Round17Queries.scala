@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.Corpus.{idHash60Duck, idHash60Spark}
+
 /** Round-17 batch rows:
   *
   *  - ST27 batch twin `st_incremental_ann`: the declared, oracle-checked
@@ -96,15 +98,6 @@ object Round17Queries {
             CAST(ceil(sqrt(count(*))) AS BIGINT))) AS INT) AS kk
         FROM $src)"""
 
-  /** Engine-portable 60-bit id hash (md5 of the decimal string, first
-    * 15 hex chars) — the Round15b h60 recipe over a BIGINT id; shared
-    * by the hash-residue centroid sample and its DuckDB replay.
-    */
-  private[graft] def idHash60Spark(idCol: String): String =
-    s"cast(conv(substring(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)"
-  private[graft] def idHash60Duck(idCol: String): String =
-    s"CAST(('0x' || substring(md5(CAST($idCol AS VARCHAR)), 1, 15)) AS BIGINT)"
-
   /** Count-derived IVF serving over a caller-prepared (and persisted)
     * (vec_id, v, nrm) corpus — the recall audit threads ONE shared
     * persisted corpus through every index builder (round-17 advice);
@@ -146,7 +139,7 @@ object Round17Queries {
   private[graft] def ivfTopkAutoPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val corpus = SimilarityQueries.vectors(s, dir)
+    val corpus = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     (ivfTopkAutoServe(corpus), corpus)
@@ -157,7 +150,7 @@ object Round17Queries {
     */
   private[queries] val ivfTopkAutoDuckSql: String =
     SimilarityQueries.ivfServeDuckSql(
-      s"""${SimilarityQueries.vectorsDuck},
+      s"""${Corpus.nvecsDuck},
         width AS (${ivfAutoWidthSql("nvecs", IvfAutoMaxK)}),
         cents AS (
           SELECT vec_id AS cent_id, v AS cv
@@ -228,13 +221,13 @@ object Round17Queries {
       (s, dir) => {
         import Round11cQueries.{IvfNQueries, IvfTopK}
         graft.functions.GraftFunctions.register(s)
-        val width = ivfAutoWidth(Round11bQueries.vectors(s, dir),
+        val width = ivfAutoWidth(Corpus.vecs(s, dir),
           IvfKmeansAutoMaxK)
         // persisted: the width crossJoin feeds c0, every Lloyd round's
         // assignment, the cell-posting pass AND the query probes — each
         // would otherwise re-run the corpus count (review finding; the
         // plan/stages pattern of ivfTopkAutoPlan)
-        val vecs = Round11bQueries.vectors(s, dir)
+        val vecs = Corpus.vecs(s, dir)
           .crossJoin(broadcast(width))
           .persist()
         try {

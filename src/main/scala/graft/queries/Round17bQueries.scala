@@ -60,7 +60,7 @@ object Round17bQueries {
       s: org.apache.spark.sql.SparkSession, dir: String,
       eagerTruth: Boolean = true): (DataFrame, Seq[DataFrame]) = {
     import SimilarityQueries._
-    val all = vectors(s, dir)
+    val all = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     val truthRaw = bruteTopk(all, IvfTopK)

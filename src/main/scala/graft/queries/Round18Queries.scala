@@ -115,7 +115,7 @@ object Round18Queries {
   private[graft] def lshTopkAutoPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
-    val corpus = SimilarityQueries.vectors(s, dir)
+    val corpus = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     (lshTopkAutoServe(corpus), Seq(corpus))
@@ -147,7 +147,7 @@ object Round18Queries {
             unnest(${probesSql(t)}) AS bucket
           FROM sigs WHERE vec_id < $NQueries""")
       .mkString("\n        UNION ALL\n        ")
-    s"""WITH ${SimilarityQueries.vectorsDuck},
+    s"""WITH ${Corpus.nvecsDuck},
       width AS (
         SELECT $bitsSql AS bits,
           (CAST(1 AS BIGINT) << $bitsSql) - 1 AS mask FROM vecs),
@@ -186,7 +186,7 @@ object Round18Queries {
       dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import Round11Queries.{PqNQueries, PqTopK}
-    val all = SimilarityQueries.vectors(s, dir)
+    val all = Corpus.nvecs(s, dir)
     val q = all.filter(col("vec_id") < PqNQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val w = Window.partitionBy(col("query_id"))
@@ -204,7 +204,7 @@ object Round18Queries {
     */
   private def bruteL2DuckSql: String = {
     import Round11Queries.{PqNQueries, PqTopK}
-    s"""WITH ${SimilarityQueries.vectorsDuck},
+    s"""WITH ${Corpus.nvecsDuck},
       q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
             WHERE vec_id < $PqNQueries),
       d AS (

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -87,7 +87,7 @@ object Round19Queries {
       s: org.apache.spark.sql.SparkSession, dir: String,
       nprobe: Int = KnnIvfNprobe)
       : (DataFrame, DataFrame) =
-    knnGraphIvfPlanFrom(Round13Queries.vectors(s, dir), nprobe)
+    knnGraphIvfPlanFrom(Corpus.nvecs(s, dir), nprobe)
 
   /** The same pipeline over a caller-prepared (vec_id, v, nrm) corpus —
     * the round-20 shared-prepared-corpus seam (see
@@ -107,7 +107,7 @@ object Round19Queries {
     // numbered by vec_id rank inside the broadcast array, so the
     // (d2, pos) tiebreak is monotone in cent id, exactly the oracle's
     val cents = all
-      .filter(expr(Round17Queries.idHash60Spark("vec_id")) %
+      .filter(expr(Corpus.idHash60Spark("vec_id")) %
         col("stride") === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     // one narrow pass: the KnnIvfNprobe nearest cells per vector, cell
@@ -179,7 +179,7 @@ object Round19Queries {
     */
   private[graft] def trainedCentArray(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    trainedCentArrayFrom(Round13Queries.vectors(s, dir))
+    trainedCentArrayFrom(Corpus.nvecs(s, dir))
 
   /** The same trained quantizer over a caller-prepared corpus — the
     * round-20 shared-prepared-corpus seam.
@@ -196,7 +196,7 @@ object Round19Queries {
     try {
       vecs.count()
       val c0 = vecs
-        .filter(expr(Round17Queries.idHash60Spark("vec_id")) %
+        .filter(expr(Corpus.idHash60Spark("vec_id")) %
           col("stride") === 0)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val cents = Round11bQueries.kmeansTrainFrom(
@@ -211,12 +211,11 @@ object Round19Queries {
   private[graft] def trainedCells(
       s: org.apache.spark.sql.SparkSession, dir: String,
       nprobe: Int = KnnIvfNprobe): DataFrame =
-    trainedCellsFrom(Round13Queries.vectors(s, dir), nprobe)
+    trainedCellsFrom(Corpus.nvecs(s, dir), nprobe)
 
   private[graft] def trainedCellsFrom(base: DataFrame,
       nprobe: Int = KnnIvfNprobe,
       ca0: Option[DataFrame] = None): DataFrame = {
-    val s = base.sparkSession
     // ca0: caller-precomputed trained quantizer over the same corpus
     // (the recall audit trains once and threads it; None = self-train)
     val ca = ca0.getOrElse(trainedCentArrayFrom(base))
@@ -329,7 +328,7 @@ object Round19Queries {
   private[graft] def annIvfTrainedPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) =
-    annIvfTrainedPlanFrom(Round13Queries.vectors(s, dir))
+    annIvfTrainedPlanFrom(Corpus.nvecs(s, dir))
 
   /** The same twin over a caller-prepared corpus — the round-20
     * re-index contract spec builds the GENERATION-A twin from the
@@ -370,13 +369,13 @@ object Round19Queries {
   private[graft] lazy val knnGraphIvfDuckSql: String = {
     import Round13Queries.KnnK
     val ad = VectorOps.duckDist2("a.v", "c.cv")
-    s"""WITH ${Round13Queries.vectorsDuck},
+    s"""WITH ${Corpus.nvecsDuck},
       width AS (${Round17Queries.ivfAutoWidthSql("nvecs",
         Round17Queries.IvfAutoMaxK)}),
       cents AS (
         SELECT vec_id AS pos, v AS cv
         FROM nvecs CROSS JOIN width
-        WHERE ${Round17Queries.idHash60Duck("vec_id")} % stride = 0),
+        WHERE ${Corpus.idHash60Duck("vec_id")} % stride = 0),
       cellranks AS (
         SELECT a.vec_id, a.v, a.nrm, c.pos,
           row_number() OVER (PARTITION BY a.vec_id
@@ -437,7 +436,7 @@ object Round19Queries {
     */
   private def bruteKnnPanelDuckSql: String = {
     import Round13Queries.KnnK
-    s"""WITH ${Round13Queries.vectorsDuck},
+    s"""WITH ${Corpus.nvecsDuck},
       qsel AS (SELECT vec_id FROM nvecs
                ORDER BY vec_id LIMIT $KnnRecallPanel),
       q AS (SELECT n.vec_id AS query_id, n.v AS qv, n.nrm AS qn
@@ -471,7 +470,7 @@ object Round19Queries {
   private[graft] def graphRecallOver(
       s: org.apache.spark.sql.SparkSession, dir: String,
       builds: Seq[(String, DataFrame => DataFrame)]): DataFrame = {
-    val base = Round13Queries.vectors(s, dir).persist()
+    val base = Corpus.nvecs(s, dir).persist()
     try {
       base.count()
       // The panel truth is ≤ KnnRecallPanel·KnnK rows BY CONSTRUCTION —
@@ -532,7 +531,7 @@ object Round19Queries {
   private[graft] def ivfOldCellsRecall(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import SimilarityQueries.IvfTopK
-    val corpus = SimilarityQueries.vectors(s, dir)
+    val corpus = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     try {
@@ -788,7 +787,7 @@ object Round19Queries {
           // blocks, and ScaleProbe invokes this audit repeatedly)
           case stages: Seq[_] => stages.asInstanceOf[Seq[DataFrame]]
             .foreach(_.unpersist(false))
-          case df: DataFrame => graft.operators.Layouts.releaseCheckpoint(df)
+          case df: Dataset[_] => graft.operators.Layouts.releaseCheckpoint(df.toDF())
           case _ => ()
         }
       },

@@ -168,7 +168,7 @@ object Round20Queries {
     // nothing). None = self-train, the declared rows' standalone path.
     val ca = ca0.getOrElse(Round19Queries.trainedCentArrayFrom(corpus))
     val width = cellLoadWidth(corpus)
-    val h60 = Round17Queries.idHash60Spark("vec_id")
+    val h60 = Corpus.idHash60Spark("vec_id")
     val fine = corpus.crossJoin(broadcast(width))
       .filter(expr(h60) % col("fstride") === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
@@ -231,7 +231,7 @@ object Round20Queries {
     corpus.count()
     val width = cellLoadWidth(corpus)
     val all = corpus.crossJoin(broadcast(width))
-    val h60 = Round17Queries.idHash60Spark("vec_id")
+    val h60 = Corpus.idHash60Spark("vec_id")
     val coarse = all.filter(expr(h60) % col("cstride") === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     val fine = all.filter(expr(h60) % col("fstride") === 0)
@@ -265,7 +265,7 @@ object Round20Queries {
       s: org.apache.spark.sql.SparkSession, dir: String,
       nprobe: Int = Round19Queries.KnnIvfNprobe)
       : (DataFrame, Seq[DataFrame]) =
-    knnGraphIvfScaledPlanFrom(Round13Queries.vectors(s, dir), nprobe)
+    knnGraphIvfScaledPlanFrom(Corpus.nvecs(s, dir), nprobe)
 
   /** The declared row's fn as a named val — the V21 recall audit
     * invokes the same [[knnGraphIvfScaledPlanFrom]] body (one
@@ -298,7 +298,7 @@ object Round20Queries {
     */
   private[graft] def knnGraphIvfScaledDuckCtes: String = {
     val it = Round11bQueries.KmIters
-    val h60 = Round17Queries.idHash60Duck("vec_id")
+    val h60 = Corpus.idHash60Duck("vec_id")
     val cd = VectorOps.duckDist2("a.v", "c.cv")
     val fcd = VectorOps.duckDist2("f.cv", "c.cv")
     val fd = VectorOps.duckDist2("p.v", "f.cv")
@@ -497,7 +497,7 @@ object Round20Queries {
   private[graft] def knnGraphNndPlan(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rounds: Int = KnnNndRounds): (DataFrame, Seq[DataFrame]) =
-    knnGraphNndPlanFrom(Round13Queries.vectors(s, dir), rounds)
+    knnGraphNndPlanFrom(Corpus.nvecs(s, dir), rounds)
 
   /** The declared row's fn as a named val (audit-shared). */
   private[graft] val knnGraphNndFn
@@ -557,7 +557,7 @@ object Round20Queries {
                 ORDER BY cosine DESC, neighbor_id ASC) AS rank
             FROM scored$r) WHERE rank <= $KnnNndWidth)"""
     }.mkString(",\n        ")
-    s"""${Round13Queries.vectorsDuck},
+    s"""${Corpus.nvecsDuck},
       e0 AS (
         SELECT vec_id AS query_id, neighbor_id, cosine
         FROM ($seedSql) seed),
@@ -652,7 +652,7 @@ object Round20Queries {
     */
   private[graft] def fineInit(routed: DataFrame, corpus: DataFrame)
       : DataFrame = {
-    val h60 = Round17Queries.idHash60Spark("vec_id")
+    val h60 = Corpus.idHash60Spark("vec_id")
     val wInit = Window.partitionBy(col("c2")).orderBy(col("cid"))
     routed.crossJoin(broadcast(cellLoadWidth(corpus)))
       .filter(expr(h60) % col("fstride") === 0)
@@ -762,7 +762,7 @@ object Round20Queries {
   private[graft] def knnGraphIvfHierPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) =
-    knnGraphIvfHierPlanFrom(Round13Queries.vectors(s, dir))
+    knnGraphIvfHierPlanFrom(Corpus.nvecs(s, dir))
 
   /** The declared row's fn as a named val (audit-shared). */
   private[graft] val knnGraphIvfHierFn
@@ -793,7 +793,7 @@ object Round20Queries {
   private[graft] def knnGraphIvfHierDuckCtes(
       fineIters: Int = KnnFineIters): String = {
     val it = Round11bQueries.KmIters
-    val h60 = Round17Queries.idHash60Duck("vec_id")
+    val h60 = Corpus.idHash60Duck("vec_id")
     val cd = VectorOps.duckDist2("a.v", "c.cv")
     val scd = VectorOps.duckDist2("f.cv", "c.cv")
     val fad = VectorOps.duckDist2("a.v", "c.cv")
@@ -904,7 +904,7 @@ object Round20Queries {
   private[graft] def knnGraphNndHierPlan(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rounds: Int = KnnNndRounds): (DataFrame, Seq[DataFrame]) =
-    knnGraphNndHierPlanFrom(Round13Queries.vectors(s, dir), rounds)
+    knnGraphNndHierPlanFrom(Corpus.nvecs(s, dir), rounds)
 
   /** The declared row's fn as a named val (audit-shared). */
   private[graft] val knnGraphNndHierFn

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
-
 /** Similarity search over `embeddings(vec_id, embedding array<float>)`.
   *
   * Two declared paths:
@@ -89,18 +87,6 @@ object SimilarityQueries {
   def hyperplaneSet(t: Int): Seq[Seq[Double]] = hyperplaneSet(t, NBits)
 
   val Hyperplanes: Seq[Seq[Double]] = hyperplaneSet(0)
-
-  private[queries] def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-
-  private[queries] val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-       nvecs AS (
-         SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
 
   /** Shared IVF serving pipeline (one definition for the fixed-knob
     * sim_ivf_topk and the round-17 count-derived sim_ivf_topk_auto —
@@ -240,7 +226,7 @@ object SimilarityQueries {
 
   private[queries] def lshTopkPlan(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val corpus = vectors(s, dir)
+    val corpus = Corpus.nvecs(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     (lshServe(corpus), corpus)
@@ -252,7 +238,7 @@ object SimilarityQueries {
       val lits = Hyperplanes(b).mkString("[", ", ", "]")
       s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
     }.mkString(" + ")
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Corpus.nvecsDuck},
       bucketed AS (
         SELECT vec_id, v, nrm, $bucketSql AS bucket FROM nvecs),
       q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn,
@@ -277,7 +263,7 @@ object SimilarityQueries {
     * nests the IDENTICAL statement (anti-drift: one definition).
     */
   private[queries] val ivfTopkDuckSql: String = ivfServeDuckSql(
-    s"""$vectorsDuck,
+    s"""${Corpus.nvecsDuck},
       cents AS (
         SELECT vec_id AS cent_id, v AS cv FROM nvecs
         WHERE vec_id % $CentroidEvery = 0
@@ -308,7 +294,7 @@ object SimilarityQueries {
 
   /** The matching parameterized oracle (same single definition rule). */
   private[queries] def bruteTopkDuckSql(k: Int): String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Corpus.nvecsDuck},
         q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nvecs WHERE vec_id < $NQueries),
         sims AS (
           SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -326,7 +312,7 @@ object SimilarityQueries {
     // ── exact brute-force cosine top-k ───────────────────────────────
     QueryDef(
       "sim_brute_topk",
-      (s, dir) => bruteTopk(vectors(s, dir), TopK),
+      (s, dir) => bruteTopk(Corpus.nvecs(s, dir), TopK),
       Some(bruteTopkDuckSql(TopK))),
 
     // ── LSH-bucketed approximate top-k (random hyperplane signs) ─────
@@ -341,7 +327,7 @@ object SimilarityQueries {
     QueryDef(
       "sim_ivf_topk",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Corpus.nvecs(s, dir)
         // inverted file over sampled-point centroids (fixed stride/cap);
         // serving runs through the shared ivfServe builder — the
         // round-17 auto-width twin is the identical pipeline with
@@ -363,9 +349,7 @@ object SimilarityQueries {
     QueryDef(
       "sim_quantize",
       (s, dir) =>
-        graft.Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        Corpus.nvecs(s, dir)
           .filter(col("nrm") > 0)
           .select(col("vec_id"),
             expr("array_join(transform(v, x -> cast(cast(round(x / nrm * 127.0, 0) as bigint) as string)), ',')")
@@ -373,7 +357,7 @@ object SimilarityQueries {
             size(col("v")).cast("bigint").as("dim"))
           .orderBy(col("vec_id")),
       Some(s"""WITH v AS (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v FROM embeddings),
         n AS (
           SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM v)
         SELECT vec_id,

@@ -57,13 +57,13 @@ object TextQueries {
         Tables.load(s, dir, "documents")
           .select(
             col("doc_id"),
-            size(split(lower(col("text")), " ")).as("n_ws_tokens"),
+            size(Corpus.tokens(col("text"))).as("n_ws_tokens"),
             size(expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)"))
               .as("n_re_tokens"),
             length(col("text")).as("len_chars"))
           .orderBy(col("doc_id")),
-      Some("""SELECT doc_id,
-          len(string_split(lower(text), ' ')) AS n_ws_tokens,
+      Some(s"""SELECT doc_id,
+          len(${Corpus.tokensDuck("text")}) AS n_ws_tokens,
           len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_re_tokens,
           length(text) AS len_chars
         FROM documents ORDER BY doc_id""")),
@@ -73,7 +73,7 @@ object TextQueries {
       "text_quality",
       (s, dir) => {
         val docs = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", Corpus.tokens(col("text")))
         docs.select(
             col("doc_id"),
             length(col("text")).as("len_chars"),
@@ -92,7 +92,7 @@ object TextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH q AS (
-          SELECT doc_id, text, string_split(lower(text), ' ') AS toks FROM documents),
+          SELECT doc_id, text, ${Corpus.tokensDuck("text")} AS toks FROM documents),
         m AS (
           SELECT doc_id,
             length(text) AS len_chars,
@@ -113,7 +113,7 @@ object TextQueries {
       "text_langid",
       (s, dir) => {
         val scored = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", Corpus.tokens(col("text")))
           .withColumn("s_de", expr(hitsExpr(lex("de"))))
           .withColumn("s_en", expr(hitsExpr(lex("en"))))
           .withColumn("s_es", expr(hitsExpr(lex("es"))))
@@ -125,7 +125,7 @@ object TextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH q AS (
-          SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents),
+          SELECT doc_id, lang, ${Corpus.tokensDuck("text")} AS toks FROM documents),
         sc AS (
           SELECT doc_id, lang,
             ${hitsDuck(lex("de"))} AS s_de, ${hitsDuck(lex("en"))} AS s_en,
@@ -191,7 +191,7 @@ object TextQueries {
       "pipe_curate",
       (s, dir) => {
         val scored = Tables.load(s, dir, "documents")
-          .withColumn("toks", split(lower(col("text")), " "))
+          .withColumn("toks", Corpus.tokens(col("text")))
           .withColumn("uniq_ratio",
             size(array_distinct(col("toks"))).cast("double") / size(col("toks")))
           .filter(col("uniq_ratio") >= 0.5 && size(col("toks")) >= 10)
@@ -203,10 +203,10 @@ object TextQueries {
           .agg(count(lit(1)).as("n_docs"))
           .orderBy(col("lang"))
       },
-      Some("""WITH scored AS (
+      Some(s"""WITH scored AS (
           SELECT doc_id, lang, md5(text) AS h
           FROM (SELECT doc_id, lang, text,
-                  string_split(lower(text), ' ') AS toks FROM documents)
+                  ${Corpus.tokensDuck("text")} AS toks FROM documents)
           WHERE CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) >= 0.5
             AND len(toks) >= 10),
         deduped AS (
@@ -308,11 +308,11 @@ object TextQueries {
         Tables.load(s, dir, "documents")
           .select(
             col("doc_id"),
-            expr("cast(conv(substring(md5(trim(regexp_replace(lower(text), '\\\\s+', ' '))), 1, 15), 16, 10) as bigint)")
+            expr(Corpus.h60Spark("trim(regexp_replace(lower(text), '\\\\s+', ' '))"))
               .as("fingerprint"))
           .orderBy(col("doc_id")),
-      Some("""SELECT doc_id,
-          CAST(('0x' || substring(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15)) AS BIGINT) AS fingerprint
+      Some(s"""SELECT doc_id,
+          ${Corpus.h60Duck("trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")} AS fingerprint
         FROM documents ORDER BY doc_id"""),
       doc = "60-bit md5 prefix = cross-engine-stable content fingerprint.")
   )

@@ -43,6 +43,10 @@ object VectorOps {
   // ── DuckDB dialect fragments for the oracle SQL ────────────────────
   // list_reduce has no init arg in the target DuckDB → prepend 0.0.
 
+  /** `toDouble`, DuckDB dialect. */
+  def duckToDouble(listExpr: String): String =
+    s"list_transform($listExpr, x -> CAST(x AS DOUBLE))"
+
   def duckFoldSum(listExpr: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $listExpr), (acc, x) -> acc + x)"
 

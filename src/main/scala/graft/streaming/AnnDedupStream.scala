@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
-import graft.queries.DedupQueries
+import graft.queries.{Corpus, DedupQueries}
 
 /** One emitted per-bucket candidate: arriving `vecId` matched the
   * earlier-arrived resident `dupOf` (exact cosine ≥ τ, `cosine` is the
@@ -100,7 +100,6 @@ object AnnDedupStream {
     */
   def probeRows(vecs: DataFrame, sigBits: Int = Bits, bits: Int = Bits,
       tables: Int = Tables, radius: Int = Radius): DataFrame = {
-    import graft.queries.VectorOps
     require(bits <= sigBits,
       s"mask width $bits exceeds computed signature width $sigBits")
     val masks = DedupQueries.probeMasks(bits, radius)
@@ -110,9 +109,7 @@ object AnnDedupStream {
     // referencing the sig EXPRESSION per mask would inline the 12-term
     // 64-dim dot chain 211× per table into one giant non-codegen tree
     // (measured: the first draft ran minutes per micro-batch)
-    val base = (0 until tables).foldLeft(
-      vecs.select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.norm(col("v")))) { (df, t) =>
+    val base = (0 until tables).foldLeft(Corpus.nvecsOf(vecs)) { (df, t) =>
       df.withColumn(s"sig_$t",
         DedupQueries.annSigCol(t, sigBits).bitwiseAND(lit(mask)))
     }

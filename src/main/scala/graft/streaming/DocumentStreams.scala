@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.queries.DedupQueries
+import graft.queries.{Corpus, DedupQueries}
 
 /** One emitted per-band duplicate candidate: `docId` matched an
   * earlier-arrived `dupOf` in a shared LSH band bucket with `nMatch` of
@@ -85,12 +85,12 @@ object DocumentStreams {
   def bandedSigs(docs: DataFrame): DataFrame = {
     import DedupQueries.{A, B, BANDS, P, ROWS}
     val sh = docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Corpus.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles", array_distinct(expr(
         "transform(sequence(0, size(toks) - 3), i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))")))
       .withColumn("hs", expr(
-        s"transform(shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % ${P}L)"))
+        s"transform(shingles, s -> ${Corpus.h60Spark("s")} % ${P}L)"))
     val sigCol = org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.MinHashSig(
         org.apache.spark.sql.GraftColumnBridge.expression(col("hs")), A, B, P))

@@ -59,10 +59,7 @@ object IvfDedupStream {
     */
   def probeRows(vecs: DataFrame, centArray: DataFrame, nprobe: Int)
       : DataFrame = {
-    import graft.queries.VectorOps
-    vecs
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
+    graft.queries.Corpus.nvecsOf(vecs)
       .crossJoin(broadcast(centArray))
       .withColumn("cells", expr(s"pq_argmin_k(v, cents, $nprobe)"))
       .withColumn("p", explode(expr(

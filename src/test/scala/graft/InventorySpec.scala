@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** The inventory IS the contract: every query `SparkEntry` declares must be
   * documented in SURVEY.md §2 (as a backticked name), and every oracle key

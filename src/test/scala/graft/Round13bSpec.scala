@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round13bQueries, Round13Queries, SimilarityQueries}
+import graft.queries.{QueryDef, Round13bQueries, SimilarityQueries}
 
 /** Round-13b operator invariants:
   *
@@ -172,10 +172,7 @@ class Round13bSpec extends SparkSpec {
     assert(trueMed == expTrue, s"true median: got $trueMed want $expTrue")
 
     def u(c: Long): Double = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"dpq:$c".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(md.substring(0, 15), 16)
+      val h = H60(s"dpq:$c")
       ((h % 1000000L) + 0.5) / 1000000.0
     }
     val scored = hist.map(_._1).zip(cums).map { case (c, cum) =>
@@ -228,10 +225,7 @@ class Round13bSpec extends SparkSpec {
     assert(meanHat == r6(docs.map(_._2).sum.toDouble / docs.length))
 
     def u(doc: Long, b: Int): Double = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"boot:$doc:$b".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(md.substring(0, 15), 16)
+      val h = H60(s"boot:$doc:$b")
       ((h % 1000000L) + 0.5) / 1000000.0
     }
     val fact = (0 to 7).map(k => (1 to k).foldLeft(1.0)(_ * _))

@@ -26,12 +26,6 @@ class Round15Spec extends SparkSpec {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf())
 
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   private def edgeSet(): Array[(Long, Long)] =
     Tables.load(spark, sf(), "lineitem")
       .join(Tables.load(spark, sf(), "orders"),
@@ -127,7 +121,7 @@ class Round15Spec extends SparkSpec {
     assert(byLang.values.exists(_.length > Round15Queries.SketchK),
       "no language exceeds k — the sketch path is untested")
     val cuts = byLang.map { case (lang, ds) =>
-      val samp = ds.map(d => (h60(s"qsk:${d._1}"), d._3)).sorted
+      val samp = ds.map(d => (H60(s"qsk:${d._1}"), d._3)).sorted
         .take(Round15Queries.SketchK).map(_._2).toIndexedSeq.sorted
       lang -> (QuantileSketchAgg.quantile(samp, 1.0 / 3),
         QuantileSketchAgg.quantile(samp, 2.0 / 3))

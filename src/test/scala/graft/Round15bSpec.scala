@@ -38,12 +38,6 @@ class Round15bSpec extends SparkSpec {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf())
 
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   test("pipe_priority_sample: priority/threshold/estimate replay, threshold binds") {
     val out = run("pipe_priority_sample").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
@@ -60,7 +54,7 @@ class Round15bSpec extends SparkSpec {
 
     byLang.foreach { case (lang, ds) =>
       val pri = ds.map { case (id, _, w) =>
-        val u = ((h60(s"ps:$id") % 1000000) + 0.5) / 1000000.0
+        val u = ((H60(s"ps:$id") % 1000000) + 0.5) / 1000000.0
         (id, w, w.toDouble / u)
       }.sortBy { case (id, _, q) => (-q, id) }
       val tau = pri(k)._3
@@ -153,7 +147,7 @@ class Round15bSpec extends SparkSpec {
         (if (wantEstimator) "the estimator" else "the exact small-group path"))
 
     byType.foreach { case (et, us) =>
-      val distinctTags = us.map(u => h60(s"kmv:${u._2}")).distinct.sorted
+      val distinctTags = us.map(u => H60(s"kmv:${u._2}")).distinct.sorted
       val sketch = distinctTags.take(k)
       val est =
         if (sketch.length < k) sketch.length.toDouble
@@ -195,7 +189,7 @@ class Round15bSpec extends SparkSpec {
     // per-year sketches must oversubscribe k, or the estimator is idle
     assert(byYr.values.forall(_.size > k), "estimator path must bind")
     val sketches: Map[Int, Seq[Long]] = byYr.view.mapValues(us =>
-      us.toSeq.map(u => h60(s"ov:$u")).sorted.take(k)).toMap
+      us.toSeq.map(u => H60(s"ov:$u")).sorted.take(k)).toMap
     val tagSets: Map[Int, Set[Long]] =
       sketches.view.mapValues(_.toSet).toMap
 
@@ -315,7 +309,7 @@ class Round15bSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)))
     toks.groupBy(_._1).foreach { case (lang, ts) =>
       val agg = AmsSketchAgg(k)
-      val counters = ts.map(t => h60(s"f2:${t._2}"))
+      val counters = ts.map(t => H60(s"f2:${t._2}"))
         .foldLeft(agg.zero)(agg.reduce)
       val est = BigDecimal(AmsSketchAgg.estimate(counters, k))
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-17b operator invariants:
   *
   *  - sim_index_recall replays exactly from the declared rows it

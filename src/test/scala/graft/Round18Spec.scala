@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-18 operator invariants:
   *
   *  - sim_index_recall_contract replays exactly from the declared rows

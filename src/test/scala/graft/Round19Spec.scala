@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-19 rows: the IVF-cell kNN graph (V22) and the kNN-graph recall
   * audit (V21).
@@ -40,17 +39,6 @@ class Round19Spec extends SparkSpec {
     a.indices.foldLeft(0.0)((s, i) =>
       s + (a(i) - b(i)) * (a(i) - b(i)))
 
-  /** The engine-portable h60 id hash (md5 of the decimal string, first
-    * 15 hex chars) — independent Scala replay of
-    * Round17Queries.idHash60Spark.
-    */
-  private def h60(id: Long): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    val hex = d.digest(id.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-
   /** Scala replay of the IVF-cell kNN build's semantics. */
   private lazy val ivfReplay: Map[Long, Seq[(Int, Long, Double)]] = {
     val n = vecs.length.toLong
@@ -62,7 +50,7 @@ class Round19Spec extends SparkSpec {
     // layout (the sampled-point rule's dense-contiguous-id assumption
     // was the measured ×10 cell collapse)
     val cents = vecs
-      .filter { case (id, _) => h60(id) % stride == 0 }
+      .filter { case (id, _) => H60.id(id) % stride == 0 }
       .sortBy(_._1).map(_._2).toSeq
     // per vector: cells ranked by (d2 asc, pos asc)
     def ranked(v: Array[Double]): Seq[Int] =

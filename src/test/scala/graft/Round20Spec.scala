@@ -71,7 +71,7 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_nnd: each round only improves the k-NN lists") {
-    import graft.queries.{Round13Queries, Round20Queries}
+    import graft.queries.Round13Queries
     // NN-Descent's defining invariant: round r's candidate set is a
     // SUPERSET of round r-1's edges, so after re-ranking, every
     // query's list is pointwise at-least-as-good (cosine at each rank

@@ -95,7 +95,6 @@ class ScaleProbeSpec extends SparkSpec {
 
   test("rotate corpus: signed permutation preserves within-replica dot products exactly") {
     import org.apache.spark.sql.functions._
-    import graft.queries.VectorOps
     val out = tmpDir("rot-scale")
     ScaleProbe.scaleRotate(spark, sf(), out, 3)
     val vecs = spark.read.parquet(s"$out/embeddings.parquet")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{H60, SparkSpec}
 
 /** AmsSketchAgg invariants:
   *
@@ -22,12 +22,6 @@ class AmsSketchSpec extends SparkSpec {
 
   private val K = 60
 
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   private def direct(xs: Seq[Long], k: Int = K): Array[Long] = {
     val agg = AmsSketchAgg(k)
     xs.foldLeft(agg.zero)(agg.reduce)
@@ -43,7 +37,7 @@ class AmsSketchSpec extends SparkSpec {
 
   private def stream(profile: Map[String, Long]): Seq[Long] = rnd.shuffle(
     profile.toSeq.flatMap { case (t, f) =>
-      Seq.fill(f.toInt)(h60(s"f2:$t")) }.toList)
+      Seq.fill(f.toInt)(H60(s"f2:$t")) }.toList)
 
   test("merge law over arbitrary splits; commutative; order-independent") {
     val agg = AmsSketchAgg(K)

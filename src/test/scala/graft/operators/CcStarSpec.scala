@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Alternating large-star/small-star CC (Kiveris SoCC'14) vs min-label

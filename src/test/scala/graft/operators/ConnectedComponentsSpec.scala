@@ -2,8 +2,6 @@ package graft.operators
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Property tests for min-label-propagation connected components against a
@@ -75,7 +73,6 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("self-loops alone still label each node with itself") {
-    import spark.implicits._
     val out = ccOf(Seq((5L, 5L), (9L, 9L)))
     assert(out == Map(5L -> 5L, 9L -> 9L))
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{H60, SparkSpec}
 
 /** KmvDistinctAgg invariants:
   *
@@ -21,19 +21,13 @@ import graft.SparkSpec
   */
 class KmvDistinctSpec extends SparkSpec {
 
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   private def direct(xs: Seq[Long], k: Int): Seq[Long] = {
     val agg = KmvDistinctAgg(k)
     agg.finish(xs.foldLeft(agg.zero)(agg.reduce))
   }
 
   private val rnd = new scala.util.Random(11)
-  private val baseTags: Seq[Long] = (0 until 400).map(i => h60(s"v:$i"))
+  private val baseTags: Seq[Long] = (0 until 400).map(i => H60(s"v:$i"))
   // duplicates: every tag appears 1–3 times, shuffled
   private val data: Seq[Long] =
     rnd.shuffle(baseTags.flatMap(t => Seq.fill(1 + (t % 3).toInt)(t)).toList)
@@ -89,7 +83,7 @@ class KmvDistinctSpec extends SparkSpec {
     // deterministic tags ⇒ a fixed, replayable error — this asserts the
     // MEASURED error of the shipped recipe, not a probabilistic claim
     Seq(2000, 20000).foreach { n =>
-      val ts = (0 until n).map(i => h60(s"acc:$i"))
+      val ts = (0 until n).map(i => H60(s"acc:$i"))
       Seq(64, 256).foreach { k =>
         val est = KmvDistinctAgg.estimate(direct(ts, k), k)
         val rel = math.abs(est - n) / n

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{H60, SparkSpec}
 
 /** QuantileSketchAgg invariants:
   *
@@ -28,13 +28,7 @@ class QuantileSketchSpec extends SparkSpec {
 
   private val rnd = new scala.util.Random(7)
   private val data: Seq[In] =
-    (0 until 500).map(i => In(rnd.nextDouble() * 100, h60(s"t:$i")))
-
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
+    (0 until 500).map(i => In(rnd.nextDouble() * 100, H60(s"t:$i")))
 
   test("merge law over arbitrary splits; commutative; order-independent") {
     val agg = QuantileSketchAgg(32)
@@ -83,7 +77,7 @@ class QuantileSketchSpec extends SparkSpec {
     // error — this asserts the MEASURED error of the shipped recipe,
     // not a probabilistic claim
     val n = 5000
-    val xs = (0 until n).map(i => In(i.toDouble, h60(s"acc:$i")))
+    val xs = (0 until n).map(i => In(i.toDouble, H60(s"acc:$i")))
     Seq(64, 256).foreach { k =>
       val sk = direct(rnd.shuffle(xs.toList), k)
       Seq(1.0 / 3, 2.0 / 3).foreach { p =>

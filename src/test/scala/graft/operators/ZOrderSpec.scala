@@ -49,7 +49,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered layout bounds per-file ranges in both dimensions; x-sort does not") {
-    import spark.implicits._
     val n = 1 << 14
     val side = 128 // x,y uniform on [0,128)
     val df = spark.range(n.toLong).select(
@@ -75,7 +74,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("rescale=true keeps both-dimension locality on wide-domain columns") {
-    import spark.implicits._
     val n = 1 << 14
     val side = 128
     // same uniform grid, but each coordinate scaled by 2^20: without
