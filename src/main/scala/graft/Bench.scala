@@ -1,26 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // the f-interpolators below format via the JVM default locale; a
-    // comma-decimal locale (de_DE …) would turn both the stdout metric
-    // line and BENCH_FULL.json into invalid JSON ("1,2345")
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // size scan splits to the benchmark SF: the fixtures are single
-      // ~1-40 MB parquet files, which at the default 128 MB split arrive
-      // as ONE partition and serialize the scan; 4 MB splits restore scan
-      // parallelism (the knob a 100 TB deployment would tune the other
-      // way, toward fewer+larger splits)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionProfile.session()
     val only = args.toSet // optional query-name filter (dev loop)
     // Two timed runs per query, report the MIN: the suite's figure of
     // merit is the ENGINE's cost, and on a shared box a single run folds

@@ -198,16 +198,7 @@ object Demo {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions track the master's parallelism (as Bench and
-      // Verify do) so demo timings are comparable with the bench surface
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionProfile.session()
     try run(spark, args).toSeq.sortBy(_._1)
       .foreach { case (k, v) => println(s"$k: $v") }
     finally spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Regenerates PLANS.md content: prints the AQE-final physical plan of
   * each named query (args, or the default flagship set) at sf0.001.
@@ -98,13 +97,7 @@ object Plans {
       case other => (None, other)
     }
     outDir.foreach(d => new java.io.File(d).mkdirs())
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionProfile.session(cores = 8, logLevel = "ERROR")
     val names = if (rest.nonEmpty) rest else flagships
     val dir = "/root/testdata/sf0.001"
     names.foreach { name =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Round-21 optimization probe: per-query JOB/STAGE/TASK accounting.
   *
@@ -17,27 +17,18 @@ import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.Probe21 q1 q2 ..."
   * (no args = the round-21 target list). Prints one JSON line per
-  * query.
+  * query; a query that throws prints `{"failed":"<name>"}` instead,
+  * with no timing.
   */
 object Probe21 {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // AQE is ON by default, as in Bench. SPARK_GRAFT_PROBE_AQE=false
-      // is the opt-in attribution mode: AQE off gives classic multi-stage
-      // jobs whose stages carry the real submitting callsite — per-operator
-      // attribution the AQE stage-materialization jobs hide (diagnostic only)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE is ON by default, as in Bench. SPARK_GRAFT_PROBE_AQE=false
+    // is the opt-in attribution mode: AQE off gives classic multi-stage
+    // jobs whose stages carry the real submitting callsite — per-operator
+    // attribution the AQE stage-materialization jobs hide (diagnostic only)
+    val spark = SessionProfile.session(conf = Map("spark.sql.adaptive.enabled" ->
+      sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true")))
 
     // the listener (bus thread) and the per-query reset (this thread)
     // guard the counters with this one lock
@@ -117,17 +108,26 @@ object Probe21 {
         byStage.clear(); stageTime.clear()
       }
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir).count()
-      catch { case e: Throwable => System.err.println(s"$name: $e") }
+      val ok =
+        try { SparkEntry.queries(name)(spark, dir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[probe21] $name failed: $e")
+          false
+        }
       val wall = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      // listener bus is async: deliver every event before reading
+      // listener bus is async: deliver every event before reading (and,
+      // after a failure, before the next query resets the counters)
       GraftColumnBridge.drainListenerBus(spark.sparkContext)
-      val top = lock.synchronized(byStage.toSeq).sortBy { case (_, (ms, _)) => -ms }.take(8)
-        .map { case (k, (ms, c)) =>
-          f""""${k.replace('"', ' ').take(90)}":[${ms / 1e3}%.2f,$c]""" }
-        .mkString("{", ",", "}")
-      println(f"""{"query":"$name","wall":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_sec":${taskMs / 1e3}%.3f,"run_sec":${runMs / 1e3}%.3f,"deser_sec":${deserMs / 1e3}%.3f,"gc_sec":${gcMs / 1e3}%.3f,"res_ser_sec":${resSerMs / 1e3}%.3f,"shuf_write_sec":${swMs / 1e3}%.3f,"fetch_wait_sec":${fetchMs / 1e3}%.3f,"top_stages":$top}""")
+      // a query that throws is FAILED, not fast: named, never timed
+      if (!ok) println(s"""{"failed":"$name"}""")
+      else {
+        val top = lock.synchronized(byStage.toSeq).sortBy { case (_, (ms, _)) => -ms }.take(8)
+          .map { case (k, (ms, c)) =>
+            f""""${k.replace('"', ' ').take(90)}":[${ms / 1e3}%.2f,$c]""" }
+          .mkString("{", ",", "}")
+        println(f"""{"query":"$name","wall":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_sec":${taskMs / 1e3}%.3f,"run_sec":${runMs / 1e3}%.3f,"deser_sec":${deserMs / 1e3}%.3f,"gc_sec":${gcMs / 1e3}%.3f,"res_ser_sec":${resSerMs / 1e3}%.3f,"shuf_write_sec":${swMs / 1e3}%.3f,"fetch_wait_sec":${fetchMs / 1e3}%.3f,"top_stages":$top}""")
+      }
     }
     spark.stop()
   }

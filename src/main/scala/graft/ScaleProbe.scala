@@ -461,14 +461,7 @@ object ScaleProbe {
     // rotate the alphabet, replicas ≥26 suffix every token with a
     // replica tag (see replicateDocs) — no two replicas ever share a
     // word, so the probe never degenerates into a duplicate explosion.
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionProfile.session()
     if (mode == "bm25" || mode == "containment") {
       val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
       if (mode == "bm25") {
@@ -925,25 +918,32 @@ object ScaleProbe {
       case _ => SparkEntry.queries(name)(spark, dir)
     }
     // min-of-N like Bench (shared-box contention only ever ADDS time);
-    // defaults to 1 because probe corpora are long sweeps
+    // defaults to 1 because probe corpora are long sweeps. A query that
+    // throws is FAILED, not fast: it goes to the `failed` list with no
+    // timing and is not re-run.
     val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
-    val results = names.map { name =>
-      val timings = (1 to math.max(1, runs)).map { _ =>
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = names.flatMap { name =>
+      def once(): Option[(Double, Long)] = {
         val t0 = System.nanoTime()
-        val n = try runQuery(name).count()
-          catch { case e: Throwable =>
-            System.err.println(s"[scale_probe] $name failed: ${e.getMessage}")
-            -1L
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (dt, n)
+        try {
+          val n = runQuery(name).count()
+          Some(((System.nanoTime() - t0) / 1e9, n))
+        } catch { case e: Throwable =>
+          System.err.println(s"[scale_probe] $name failed: ${e.getMessage}")
+          None
+        } finally spark.catalog.clearCache()
       }
-      (name, timings.map(_._1).min, timings.last._2)
+      val timings = Iterator.continually(once()).take(math.max(1, runs))
+        .takeWhile(_.isDefined).flatten.toSeq
+      if (timings.size == math.max(1, runs))
+        Some((name, timings.map(_._1).min, timings.last._2))
+      else { failed += name; None }
     }
     val qs = results.map { case (k, v, n) =>
       s""""$k":{"sec":$v,"rows":$n}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_probe","mode":"$mode","multiplier":$m,"queries":$qs}""")
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    println(s"""{"metric":"scale_probe","mode":"$mode","multiplier":$m,"failed":$failedJson,"queries":$qs}""")
     spark.stop()
   }
 }

@@ -9,7 +9,7 @@ import graft.queries.DedupQueries
 /** SQL-surface registration for the engine's native expressions.
   *
   * Two entry points:
-  *  - `SparkSession.builder().withExtensions(new GraftExtensions)` (or
+  *  - `.withExtensions(new GraftExtensions)` on a session builder (or
   *    `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`)
   *    for new sessions — the standard extension hook;
   *  - `GraftFunctions.register(spark)` for an existing session.

@@ -22,6 +22,9 @@
   *
   * Runtime mains: [[graft.Verify]] (correctness dump for the oracle gate),
   * [[graft.Bench]] (one-line JSON benchmark), [[graft.Plans]] (plan dump
-  * for PLANS.md), [[graft.ScaleProbe]] (×m corpus scaling measurements).
+  * for PLANS.md), [[graft.ScaleProbe]] (×m corpus scaling measurements),
+  * [[graft.Probe21]] (per-query job/stage/task attribution) and
+  * [[graft.Demo]] (the reference's ETL modes). Each builds its session
+  * from [[graft.SessionProfile]], as the specs' `SparkSpec` does.
   */
 package object graft

@@ -91,18 +91,34 @@ object Round11bQueries {
     vecs.crossJoin(broadcast(centArray(cents)))
       .withColumn("cluster", expr("pq_argmin(v, cents)"))
 
-  /** Lloyd update: element-wise mean per cluster, as ONE aggregation —
-    * Dim decimal sum columns plus a count, grouped by cluster (round
-    * 21, guide §2.4: the previous posexplode form fanned every vector
-    * to Dim (cluster, idx, val) rows and paid TWO exchanges — the
-    * (cluster, idx) partial-mean rollup and the per-cluster
-    * collect_list — where one hash aggregate with a Dim-wide buffer
-    * ships the identical partial sums through ONE exchange and
-    * rebuilds the centroid array with a no-shuffle projection).
-    * Means stay exact and order-free: round(val,9) → DECIMAL(28,9)
-    * sums per element, ONE double division at the end — the same
-    * values, element order = array position by construction. */
-  private[queries] def update(assigned: DataFrame): DataFrame = {
+  /** Lloyd update: element-wise mean per cluster (`lloydMeans` grouped
+    * by cluster), as (cid, cv). */
+  private[queries] def update(assigned: DataFrame): DataFrame =
+    lloydMeans(assigned, col("cluster"))
+      .select(col("cluster").as("cid"), col("cv"))
+
+  /** The Lloyd mean update shared by the flat and the grouped-fine
+    * rounds: element-wise mean of `v` per `keys` group, as ONE
+    * aggregation — Dim decimal sum columns plus a count (round 21,
+    * guide §2.4: the previous posexplode form fanned every vector to
+    * Dim (group, idx, val) rows and paid TWO exchanges — the
+    * (group, idx) partial-mean rollup and the per-group collect_list —
+    * where one hash aggregate with a Dim-wide buffer ships the
+    * identical partial sums through ONE exchange and rebuilds the
+    * centroid array with a no-shuffle projection). Means stay exact
+    * and order-free: round(val,9) → DECIMAL(28,9) sums per element,
+    * ONE double division at the end — element order = array position
+    * by construction. Output: keys…, cv.
+    *
+    * Input invariant: every `v` holds exactly Dim non-null elements. A
+    * short vector or a null element would drop out of an element's sum
+    * while still counting in `cnt`, a silently wrong mean; the input
+    * projection raises instead (in the plan, so no extra job runs).
+    */
+  private[graft] def lloydMeans(assigned: DataFrame, keys: Column*): DataFrame = {
+    val checked = when(size(col("v")) === Dim && forall(col("v"), _.isNotNull), col("v"))
+      .otherwise(raise_error(
+        lit(s"Lloyd input: every vector needs exactly $Dim non-null elements")))
     val sums = (0 until Dim).map { i =>
       sum(expr(s"cast(round(v[$i], 9) as decimal(28,9))")).as(s"s$i")
     } :+ count(lit(1)).as("cnt")
@@ -110,9 +126,10 @@ object Round11bQueries {
       round(col(s"s$i").cast(DoubleType) / col("cnt"), 9)
     }
     assigned
-      .groupBy(col("cluster"))
+      .select(keys :+ checked.as("v"): _*)
+      .groupBy(keys: _*)
       .agg(sums.head, sums.tail: _*)
-      .select(col("cluster").as("cid"), array(means: _*).as("cv"))
+      .select(keys :+ array(means: _*).as("cv"): _*)
   }
 
   /** Final labeled output: (vec_id, cluster, d2). */

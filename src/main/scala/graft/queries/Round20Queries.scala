@@ -608,36 +608,19 @@ object Round20Queries {
     * assignment = every vector to the nearest fine centroid OF ITS
     * HOME COARSE CELL (one broadcast join + compiled pq_argmin pass —
     * O(n·fines-per-coarse·dim), the flops of one V24 fine-assignment
-    * pass), update = the shared exact-mean recipe (round-9 decimal
-    * sums, ONE double division — the Round11bQueries.update shape,
-    * grouped by (c2, f) instead of cluster), positions re-indexed
-    * dense per coarse so empty fine cells compact identically on both
-    * engines. The update's ONE shuffle carries n·dim slim (c2, f, idx,
-    * decimal) rows with map-side partial aggregation — linear in n.
+    * pass), update = `Round11bQueries.lloydMeans` grouped by (c2, f)
+    * instead of cluster (one hash aggregate, ONE shuffle of partial
+    * sums — linear in n), positions re-indexed dense per coarse so
+    * empty fine cells compact identically on both engines.
     */
   private[graft] def fineLloydRound(routed: DataFrame, fc: DataFrame)
       : DataFrame = {
-    val dim = Round11bQueries.Dim
     val assigned = routed
       .select(col("cc").getItem(0).as("c2"), col("v"))
       .join(broadcast(fineArr(fc)), Seq("c2"))
       .withColumn("f", expr("pq_argmin(v, fcvs)"))
-      .select(col("c2"), col("f"), col("v"))
     val wRe = Window.partitionBy(col("c2")).orderBy(col("f"))
-    // one hash aggregate with a Dim-wide decimal buffer instead of the
-    // posexplode + two-exchange rollup (round 21 — the same reshape as
-    // Round11bQueries.update: identical order-free decimal sums, one
-    // double division, element order = array position)
-    val sums = (0 until dim).map { i =>
-      sum(expr(s"cast(round(v[$i], 9) as decimal(28,9))")).as(s"s$i")
-    } :+ count(lit(1)).as("cnt")
-    val means = (0 until dim).map { i =>
-      round(col(s"s$i").cast("double") / col("cnt"), 9)
-    }
-    assigned
-      .groupBy(col("c2"), col("f"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("c2"), col("f"), array(means: _*).as("cv"))
+    Round11bQueries.lloydMeans(assigned, col("c2"), col("f"))
       .select(col("c2"),
         ((row_number().over(wRe)) - 1).cast("int").as("fnew"),
         col("cv"))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Layouts
+
 /** Partitioning-invariance: the float-bearing queries must return
   * IDENTICAL rows whatever the shuffle partition count, or the driver's
   * hash gate (and any 1000-executor deployment) would see different
@@ -42,23 +44,51 @@ class DeterminismSpec extends SparkSpec {
     "text_lm_trigram_backoff_sharded", "pipe_corpus_drift",
     "text_token_entropy", "pipe_doremi_mix", "dedup_cluster_cc_star")
 
-  private def rowsAt(name: String, partitions: Int): Seq[String] = {
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    try SparkEntry.queries(name)(spark, sf()).collect().map(_.toString).toSeq
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", 4)
-      spark.catalog.clearCache()
+  private def rowsAt(name: String, conf: (String, String)*): Seq[String] =
+    withConf(conf: _*) {
+      try SparkEntry.queries(name)(spark, sf()).collect().map(_.toString).toSeq
+      finally spark.catalog.clearCache()
+    }
+
+  private def assertSameRows(a: Seq[String], b: Seq[String], la: String, lb: String): Unit = {
+    assert(a.length == b.length, s"row counts ${a.length} vs ${b.length}")
+    a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
+      assert(x == y, s"row $i differs:\n  $la: $x\n  $lb: $y")
     }
   }
 
   floatHeavy.foreach { name =>
     test(s"$name returns identical rows at 3 and 23 shuffle partitions") {
-      val a = rowsAt(name, 3)
-      val b = rowsAt(name, 23)
-      assert(a.length == b.length, s"row counts ${a.length} vs ${b.length}")
-      a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
-        assert(x == y, s"row $i differs:\n  p3:  $x\n  p23: $y")
+      val a = rowsAt(name, "spark.sql.shuffle.partitions" -> "3")
+      val b = rowsAt(name, "spark.sql.shuffle.partitions" -> "23")
+      assertSameRows(a, b, "p3", "p23")
+    }
+  }
+
+  /** The width axis: rows whose corpus input goes through
+    * `Layouts.spread`, whose width is `ceil(size / maxPartitionBytes)`
+    * clamped to `[1, defaultParallelism]`. At the profile's 4 MB split
+    * every sf0.001 input spreads to width 1; at `narrowSplit` the same
+    * inputs spread wider, so these rows run their round-robin fan-out
+    * and every exchange after it at a different map width. */
+  private val narrowSplit = "16k"
+  private val spreadRows = Seq(
+    "dedup_simhash_banded" -> "documents", "dedup_ngram_jaccard" -> "documents",
+    "sim_knn_graph" -> "embeddings", "sim_semantic_clusters" -> "embeddings",
+    "pipe_semdedup" -> "embeddings", "dedup_embedding_ann" -> "embeddings")
+
+  spreadRows.foreach { case (name, table) =>
+    test(s"$name returns identical rows at 4 MB and $narrowSplit splits") {
+      val split = "spark.sql.files.maxPartitionBytes"
+      val width = withConf(split -> narrowSplit) {
+        Layouts.scaledParallelism(Tables.load(spark, sf(), table))
       }
+      assert(width > 1, s"$table spreads to width $width at $narrowSplit")
+      // sorted: dedup_simhash_banded declares a pair SET (no global
+      // orderBy; the oracle compare row-sorts both sides)
+      val a = rowsAt(name).sorted
+      val b = rowsAt(name, split -> narrowSplit).sorted
+      assertSameRows(a, b, "4m", narrowSplit)
     }
   }
 }

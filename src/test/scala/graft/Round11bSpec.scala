@@ -57,6 +57,29 @@ class Round11bSpec extends SparkSpec {
     assert(few < 10, s"eps=1e3 should converge early, ran $few rounds")
   }
 
+  test("sim_kmeans: the Lloyd mean update rejects a short vector and a null element") {
+    val dim = Round11bQueries.Dim
+    def means(bad: String) = Round11bQueries.lloydMeans(
+      spark.range(3).selectExpr("cast(id % 2 as int) AS cluster",
+        s"if(id = 2, $bad, array_repeat(1d, $dim)) AS v"),
+      col("cluster")).orderBy(col("cluster"))
+    // well-formed input: cluster 0 holds ids 0 and 2, cluster 1 holds id 1
+    val ok = means(s"array_repeat(3d, $dim)").collect()
+    assert(ok.map(_.getSeq[Double](1)).toSeq ==
+      Seq(Seq.fill(dim)(2.0), Seq.fill(dim)(1.0)))
+    Seq(
+      "a short vector" -> s"array_repeat(1d, ${dim - 1})",
+      "a null element" ->
+        s"concat(array_repeat(1d, ${dim - 1}), array(cast(null AS double)))",
+      "a null vector" -> "cast(null AS array<double>)").foreach { case (what, bad) =>
+      val e = intercept[Exception](means(bad).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains(s"exactly $dim non-null elements")),
+        s"$what: ${e.getMessage}")
+    }
+  }
+
   test("sim_kmeans: assignment plan never hash-shuffles the corpus") {
     val p = Round11bQueries.kmeans(spark, sf(), Round11bQueries.KmIters)
       .queryExecution.executedPlan.toString

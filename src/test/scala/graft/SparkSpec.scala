@@ -6,15 +6,33 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession per suite (guide: one per suite, lazy). */
+/** One shared local SparkSession per suite (guide: one per suite, lazy),
+  * from the session profile every runtime main uses: the specs check
+  * the plans Bench times, on 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SessionProfile.session(cores = 4,
+    conf = Map("spark.app.name" -> getClass.getSimpleName))
+
+  /** `body`'s result with each `key -> value` set on the session conf;
+    * every key gets its previous value back after, or is unset if it
+    * had none. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The RocksDB state store: bounded heap, state on local disk, and
+    * the store whose state survives a checkpoint restart. */
+  val rocksDbState: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  def withRocksDb[T](body: => T): T = withConf(rocksDbState)(body)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

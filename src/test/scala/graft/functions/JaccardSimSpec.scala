@@ -59,10 +59,9 @@ class JaccardSimSpec extends SparkSpec {
   test("interpreted eval matches codegen (whole-stage off)") {
     import spark.implicits._
     val rows = Seq((Seq("p", "q", "r"), Seq("q", "r", "s")))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withConf("spark.sql.codegen.wholeStage" -> "false") {
       val off = rows.toDF("a", "b").select(jac(col("a"), col("b"))).collect()(0).getDouble(0)
       assert(off == 0.5)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
   }
 }

@@ -13,19 +13,12 @@ import graft.SparkSpec
 class AqeSkewJoinSpec extends SparkSpec {
 
   test("AQE splits the hot partition of a skewed sort-merge join") {
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    withConf(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
 
       // hot key 0 carries 200k rows; 2k other keys carry one row each
       val big = spark.range(0, 202000)
@@ -40,9 +33,6 @@ class AqeSkewJoinSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         "AQE did not mark the skewed join:\n" + plan.take(3000))
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 }

@@ -24,8 +24,6 @@ object DedupRecoverySpec {
 
 class DedupRecoverySpec extends SparkSpec {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-
   private def runOnce(inDir: String, ckpt: String): Unit = {
     val q = DocumentStreams.incrementalDedup(
       DocumentStreams.readDocuments(spark, inDir, maxFilesPerTrigger = 1))
@@ -46,10 +44,7 @@ class DedupRecoverySpec extends SparkSpec {
   }
 
   test("ST15 dedup index survives restart: recovered state serves later arrivals") {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val docs = graft.Tables.load(spark, sf(), "documents")
       val inDir = tmpDir("dedup-ckpt-in")
       val ckpt = tmpDir("dedup-ckpt-state")
@@ -103,9 +98,6 @@ class DedupRecoverySpec extends SparkSpec {
       // phase-1 doc (dup_of < 170 with doc_id >= 170) through state alone
       assert(got.filter(col("doc_id") >= 170 && col("dup_of") < 170).count() > 0,
         "no phase-2 doc matched a phase-1 resident — state recovery untested")
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 }

@@ -18,20 +18,6 @@ class StreamingAmsSketchSpec extends SparkSpec {
 
   private val K = 60
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The tagged stream source: one row per token OCCURRENCE over the
     * documents fixture, tag = the batch `pipe_f2_ams` h60 recipe.
     */

@@ -31,10 +31,6 @@ class StreamingAnnDedupSpec extends SparkSpec {
     */
   private val fixture = sf("sf0.01")
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Per-vector verdict from per-bucket emissions: min(struct(dupOf,
     * cosine)) — dupOf is the semantic key; cosine is a function of the
     * pair, so the struct min is deterministic.
@@ -56,16 +52,6 @@ class StreamingAnnDedupSpec extends SparkSpec {
     val bs = b.select(cols.toIndexedSeq: _*).collect().map(_.toString).sorted
     assert(as.length == bs.length, s"row count ${as.length} != ${bs.length}")
     assert(as.sameElements(bs))
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
   /** Write a vec_id range of the fixture as one parquet chunk with a

@@ -16,20 +16,6 @@ import graft.queries.Round15Queries
   */
 class StreamingButterflySpec extends SparkSpec {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The bipartite edge stream source: one row per (supplier, customer)
     * ORDER LINE (duplicates included deliberately — the stream must
     * dedup through its contains() check), seq = the batch twin's

@@ -18,20 +18,6 @@ class StreamingCmSketchSpec extends SparkSpec {
   private val D = 4
   private val W = 32
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The packed stream source: one row per token OCCURRENCE over the
     * documents fixture, positions packed with the exact recipe the
     * batch `pipe_count_min` query uses in codegen'd built-ins.

@@ -108,12 +108,7 @@ class StreamingConvergenceSpec extends SparkSpec {
   }
 
   test("transformWithState (Spark 4 API, RocksDB store) converges to the batch answer") {
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    try {
-      conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb {
       val d = tmpDir("events-tws")
       graft.Tables.load(spark, sf(), "events")
         .repartition(4).write.mode("overwrite").parquet(d)
@@ -132,9 +127,6 @@ class StreamingConvergenceSpec extends SparkSpec {
         .drop("rn")
       assertSameRows(finalState,
         EventStreams.batchUserAgg(graft.Tables.load(spark, sf(), "events")))
-    } finally saved match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
     }
   }
 
@@ -184,12 +176,7 @@ class StreamingConvergenceSpec extends SparkSpec {
 
   test("transformWithState MapState: per-user per-type counts converge to batch") {
     import org.apache.spark.sql.functions._
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    try {
-      conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb {
       val d = tmpDir("events-tws-map")
       graft.Tables.load(spark, sf(), "events")
         .repartition(4).write.mode("overwrite").parquet(d)
@@ -207,9 +194,6 @@ class StreamingConvergenceSpec extends SparkSpec {
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
       assertSameRows(finalCounts, batch)
-    } finally saved match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
     }
   }
 

@@ -12,10 +12,6 @@ import graft.SparkSpec
   */
 class StreamingDedupConvergenceSpec extends SparkSpec {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Per-doc verdict from the stream's per-band emissions: min over
     * bands of (dupOf, nMatch) — the reduction a production pipeline runs
     * as a second (tiny) stateful stage.
@@ -37,16 +33,6 @@ class StreamingDedupConvergenceSpec extends SparkSpec {
     val bs = b.select(cols.toIndexedSeq: _*).collect().map(_.toString).sorted
     assert(as.length == bs.length, s"row count ${as.length} != ${bs.length}")
     assert(as.sameElements(bs))
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
   test("ST15 single-batch replay converges to the batch twin") {

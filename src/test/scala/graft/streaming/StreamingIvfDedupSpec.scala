@@ -24,10 +24,6 @@ class StreamingIvfDedupSpec extends SparkSpec {
     */
   private val fixture = sf("sf0.01")
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   private def reduceVerdict(perBucket: DataFrame): DataFrame =
     perBucket.groupBy(col("vecId"))
       .agg(min(struct(col("dupOf"), col("cosine"))).as("m"))
@@ -45,16 +41,6 @@ class StreamingIvfDedupSpec extends SparkSpec {
     val bs = b.select(cols.toIndexedSeq: _*).collect().map(_.toString).sorted
     assert(as.length == bs.length, s"row count ${as.length} != ${bs.length}")
     assert(as.sameElements(bs))
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
   private def stage(inDir: String, lo: Long, hi: Long, i: Int): Unit = {

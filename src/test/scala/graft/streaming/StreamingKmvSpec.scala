@@ -23,20 +23,6 @@ class StreamingKmvSpec extends SparkSpec {
     * (15 distinct users per event type — every group oversubscribes 8). */
   private val K = 8
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The tagged stream source: one row per EVENT (so each user's tag
     * arrives many times — the distinct-skip fixture), tag = the same
     * h60 recipe the batch `pipe_distinct_kmv` query uses.

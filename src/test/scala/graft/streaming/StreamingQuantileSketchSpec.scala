@@ -21,20 +21,6 @@ class StreamingQuantileSketchSpec extends SparkSpec {
     * (64–193 docs per language — every stratum oversubscribes 16). */
   private val K = 16
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The scored stream source: one row per document, value = n_chars,
     * tag = the same h60 recipe the batch sketch queries use.
     */

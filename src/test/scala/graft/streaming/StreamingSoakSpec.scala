@@ -81,21 +81,15 @@ class StreamingSoakSpec extends SparkSpec {
     // state on local disk) and the source of the per-store metrics
     // recorded below. Confs are captured at query start, so scoping them
     // around each start() is enough; both are restored after.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     def runSoak(rocksdb: Boolean, qname: String) = {
-      val prevProvider = spark.conf.getOption(providerKey)
-      val prevChangelog = spark.conf.getOption(changelogKey)
-      if (rocksdb) {
-        spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // full per-commit snapshots dominate small triggers; changelog
-        // checkpointing is the production commit path (write the delta,
-        // snapshot in the background)
-        spark.conf.set(changelogKey, "true")
-      }
-      try {
+      val stateConf =
+        if (!rocksdb) Nil
+        else Seq(rocksDbState,
+          // full per-commit snapshots dominate small triggers; changelog
+          // checkpointing is the production commit path (write the delta,
+          // snapshot in the background)
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+      withConf(stateConf: _*) {
         val t0 = System.nanoTime()
         val q = EventStreams.dedupThenTumbling(streamed)
           .writeStream.format("memory").queryName(qname)
@@ -105,13 +99,6 @@ class StreamingSoakSpec extends SparkSpec {
         val p = q.recentProgress.toSeq.filter(_.numInputRows > 0)
         q.stop()
         (w, p)
-      } finally {
-        def restore(k: String, prev: Option[String]): Unit = prev match {
-          case Some(v) => spark.conf.set(k, v)
-          case None => spark.conf.unset(k)
-        }
-        restore(providerKey, prevProvider)
-        restore(changelogKey, prevChangelog)
       }
     }
     val (wallSec, progresses) = runSoak(rocksdb = false, "soak_chained")

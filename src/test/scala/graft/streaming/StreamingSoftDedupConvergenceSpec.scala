@@ -21,20 +21,6 @@ import graft.queries.{QueryDef, Round11eQueries}
   */
 class StreamingSoftDedupConvergenceSpec extends SparkSpec {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** Planted corpus: a 4-cluster, a 2-cluster (identical text within a
     * cluster ⇒ members co-reside in ALL 8 band buckets, so bucket-local
     * root resolution is exact), and 3 singletons.

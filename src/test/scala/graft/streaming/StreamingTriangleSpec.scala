@@ -17,20 +17,6 @@ import graft.queries.Round16Queries
   */
 class StreamingTriangleSpec extends SparkSpec {
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksDb)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The id-oriented part co-order edge stream: one row per in-order
     * part PAIR occurrence (duplicates across orders deliberate — the
     * stream must dedup through its contains() check), seq = the order

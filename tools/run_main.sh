@@ -12,6 +12,6 @@ OPENS=(java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflec
   java.base/sun.util.calendar)
 JOPTS=()
 for p in "${OPENS[@]}"; do JOPTS+=(--add-opens "$p=ALL-UNNAMED"); done
+# (UI off and the UTC time zone come from graft.SessionProfile.)
 exec java "${JOPTS[@]}" "-Xmx${SPARK_DRIVER_MEM:-24g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
