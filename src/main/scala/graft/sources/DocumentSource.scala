@@ -11,6 +11,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * store is behind a trait (no Mongo in this environment); the Spark
   * side — schema inference, row coercion, DataFrame construction — is
   * the real path a connector would feed.
+  *
+  * Documents written by `Ingest` are [[RowDoc]]s: the export looks up
+  * each field with one index probe, and the inferred columns follow the
+  * first document's field order, as the reference's dict order does.
   */
 trait DocumentSource extends Serializable {
   def fetch(): Seq[Map[String, Any]]

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** DataSource V2 batch WRITE into a [[StagedDocumentWrite]] document
   * store — the write half of the `graft-docs` connector, completing the
@@ -92,21 +92,14 @@ private[sources] object DocumentWriteV2 {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
       new DataWriter[InternalRow] {
         private val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-        private val names = schema.fieldNames
+        private val toDoc = docWriter(schema)
         // opened lazily INSIDE the task from the shipped descriptor —
         // the cluster-real contract shared with DocsRange reads
         private lazy val staged = writable(descriptor)
           .openStagedBatch(writeId, f"p$partitionId%05d-t$taskId")
         private var rows = 0L
         override def write(record: InternalRow): Unit = {
-          val row = toScala(record).asInstanceOf[Row]
-          var i = 0
-          val b = Map.newBuilder[String, Any]
-          while (i < names.length) {
-            b += names(i) -> docValue(row.get(i))
-            i += 1
-          }
-          staged.add(b.result())
+          staged.add(toDoc(toScala(record)).asInstanceOf[RowDoc])
           rows += 1L
         }
         override def commit(): WriterCommitMessage =
@@ -116,8 +109,37 @@ private[sources] object DocumentWriteV2 {
       }
   }
 
-  /** Spark value → JSONL document value (see class doc for the map). */
-  private[sources] def docValue(v: Any): Any = v match {
+  /** Converter from a Scala value of type `dt` to its JSONL document
+    * value (see class doc for the map). It is built once per writer: each
+    * struct in the schema gets one [[Fields]] index, and its rows become
+    * [[RowDoc]]s in the schema's field order.
+    */
+  private[sources] def docWriter(dt: DataType): Any => Any = dt match {
+    case s: StructType =>
+      val fields = new Fields(s.fieldNames)
+      val conv = s.fields.map(f => docWriter(f.dataType))
+      (v: Any) => v match {
+        case null => null
+        case r: Row =>
+          val values = new Array[Any](conv.length)
+          var i = 0
+          while (i < values.length) { values(i) = conv(i)(r.get(i)); i += 1 }
+          new RowDoc(fields, values)
+      }
+    case ArrayType(et, _) =>
+      val conv = docWriter(et)
+      (v: Any) => v match { case null => null; case s: Seq[_] => s.map(conv) }
+    case MapType(_, vt, _) =>
+      val conv = docWriter(vt)
+      (v: Any) => v match {
+        case null => null
+        case m: Map[_, _] => m.map { case (k, x) => String.valueOf(k) -> conv(x) }
+      }
+    case _ => docValue
+  }
+
+  /** Spark leaf value → JSONL document value. */
+  private def docValue(v: Any): Any = v match {
     case null => null
     case b: Boolean => b
     case b: Byte => b.toLong
@@ -132,12 +154,6 @@ private[sources] object DocumentWriteV2 {
     case bd: java.math.BigDecimal => bd.toPlainString
     case bd: BigDecimal => bd.bigDecimal.toPlainString
     case bytes: Array[Byte] => java.util.Base64.getEncoder.encodeToString(bytes)
-    case r: Row =>
-      r.schema.fieldNames.iterator.zip(r.toSeq.iterator)
-        .map { case (k, x) => k -> docValue(x) }.toMap
-    case s: Seq[_] => s.map(docValue)
-    case m: Map[_, _] =>
-      m.map { case (k, x) => String.valueOf(k) -> docValue(x) }
     case other => String.valueOf(other)
   }
 }

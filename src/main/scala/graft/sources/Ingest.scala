@@ -17,6 +17,12 @@ import org.apache.spark.util.AccumulatorV2
   * ingest_parquet_to_mongo_bulk.py:197-209) comes from a bounded
   * reservoir accumulator, so memory stays fixed no matter how many
   * batches a 100 TB run produces.
+  *
+  * Each row reaches the sink as a [[RowDoc]]: its values array over one
+  * [[Fields]] index per partition, built from the field names captured
+  * on the driver — the reference zips the names into each batch once
+  * (ingest_parquet_to_mongo_bulk.py:70-96) instead of building a map
+  * per row.
   */
 object Ingest {
 
@@ -144,9 +150,6 @@ object Ingest {
     }
   }
 
-  private def rowToMap(r: Row): Map[String, Any] =
-    r.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap
-
   /** S6: batched insert. `dryRun` mirrors the reference's preview mode
     * (prints ≤5 docs, no writes — ingest_parquet_to_mongo.py:83-89).
     */
@@ -162,11 +165,13 @@ object Ingest {
     val msAcc = sc.longAccumulator("ingest.writeMs")
     val statsAcc = new BatchStatsAcc()
     sc.register(statsAcc, "ingest.batchStats")
+    val names = df.schema.fieldNames
     df.foreachPartition { it: Iterator[Row] =>
       val sink = InMemorySink(sinkName)
+      val fields = new Fields(names)
       it.grouped(batchSize).foreach { batch =>
         val t0 = System.nanoTime()
-        val n = sink.insertMany(batch.map(rowToMap))
+        val n = sink.insertMany(batch.map(RowDoc.fromRow(fields, _)))
         val ms = (System.nanoTime() - t0) / 1000000L
         msAcc.add(ms)
         rowsAcc.add(n.toLong)
@@ -189,11 +194,13 @@ object Ingest {
     val msAcc = sc.longAccumulator("upsert.writeMs")
     val statsAcc = new BatchStatsAcc()
     sc.register(statsAcc, "upsert.batchStats")
+    val names = df.schema.fieldNames
     df.foreachPartition { it: Iterator[Row] =>
       val sink = InMemorySink(sinkName)
+      val fields = new Fields(names)
       it.grouped(batchSize).foreach { batch =>
         val t0 = System.nanoTime()
-        val (ins, repl) = sink.bulkUpsert(pk, batch.map(rowToMap))
+        val (ins, repl) = sink.bulkUpsert(pk, batch.map(RowDoc.fromRow(fields, _)))
         val ms = (System.nanoTime() - t0) / 1000000L
         msAcc.add(ms)
         rowsAcc.add((ins + repl).toLong)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
   *
   *  - inspects ONLY the first document (by design — Spark's own sampling
   *    inference is richer, but first-doc-only is the declared behavior);
+  *  - columns come in the first document's iteration order (a dict's
+  *    insertion order in the reference; a [[RowDoc]]'s field order here);
   *  - int → int64, float → float64, datetime → timestamp[us],
   *    date → date32, anything else → string;
   *  - the datetime check precedes the date check (datetime ⊂ date in

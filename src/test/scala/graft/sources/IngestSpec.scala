@@ -87,4 +87,25 @@ class IngestSpec extends SparkSpec {
     assert(m.rows == 50)
     assert(InMemorySink("t_dry").count() == 0)
   }
+
+  test("bulk upsert stores each row as one RowDoc over its partition's shared Fields") {
+    InMemorySink.clear("t_rowdoc")
+    val df = Generators.big50(spark, 2000, numPartitions = 4)
+    Ingest.bulkUpsert(df, "t_rowdoc", pk = Seq("i_0"), batchSize = 300)
+    val docs = InMemorySink("t_rowdoc").drain()
+    // the same entries a per-row map of (name -> value) would hold
+    val names = df.schema.fieldNames
+    val expected = df.collect().map(r => names.indices.map(i => names(i) -> r.get(i)).toMap)
+    def byKey(ds: Seq[Map[String, Any]]) = ds.sortBy(_("i_0").asInstanceOf[Long])
+    assert(docs.size == expected.length)
+    assert(byKey(docs) == byKey(expected.toSeq))
+    // one Fields instance per partition, never one per row
+    val shared = docs.map(_.asInstanceOf[RowDoc].fields)
+      .foldLeft(List.empty[Fields])((seen, f) => if (seen.exists(_ eq f)) seen else f :: seen)
+    assert(shared.size == df.rdd.getNumPartitions, s"${shared.size} Fields for ${docs.size} docs")
+    // the export's columns follow the documents' field order
+    val back = DocumentSource.toDFResilient(spark, DocumentSource.inMemory("t_rowdoc"))
+    assert(back.df.columns.toSeq == names.toSeq)
+    InMemorySink.clear("t_rowdoc")
+  }
 }
