@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.{Corpus, KnnGraphQueries}
 
 /** Regenerates PLANS.md content: prints the AQE-final physical plan of
   * each named query (args, or the default flagship set) at sf0.001.
@@ -101,12 +102,16 @@ object Plans {
     val names = if (rest.nonEmpty) rest else flagships
     val dir = "/root/testdata/sf0.001"
     names.foreach { name =>
-      // sim_knn_graph materializes via localCheckpoint (its executed
-      // plan is a bare RDD scan) — dump the un-materialized pipeline
       val (df, pinned) = name match {
-        case "sim_knn_graph" =>
-          val (res, buckets) = graft.queries.Round13Queries.knnGraphPlan(spark, dir)
-          (res, Some(Seq(buckets)))
+        // the kNN-graph rows materialize via localCheckpoint (their
+        // executed plan is a bare RDD scan) — dump the registry build's
+        // un-materialized pipeline
+        case "sim_knn_graph" | "sim_knn_graph_auto" | "sim_knn_graph_ivf" |
+            "sim_knn_graph_ivf_kmeans" | "sim_knn_graph_ivf_scaled" |
+            "sim_knn_graph_ivf_hier" =>
+          val (res, stages) = KnnGraphQueries.Builds.find(_.name == name).get
+            .build(Corpus.nvecs(spark, dir))
+          (res, Some(stages))
         // the declared row checkpoints; dump the un-materialized pipeline
         case "graph_butterflies_capped" =>
           val (res, capped, cs) =
@@ -150,10 +155,6 @@ object Plans {
           val (res, e, capped) =
             graft.queries.Round16Queries.cappedTrianglesPlan(spark, dir)
           (res, Some(Seq(e, capped)))
-        case "sim_knn_graph_auto" =>
-          val (res, all) =
-            graft.queries.Round16Queries.knnGraphAutoPlan(spark, dir)
-          (res, Some(Seq(all)))
         case "st_incremental_ann" =>
           val (res, stages) =
             graft.queries.Round17Queries.annIncrementalPlan(spark, dir)
@@ -178,50 +179,31 @@ object Plans {
           val (res, stages) =
             graft.queries.Round18Queries.lshTopkAutoPlan(spark, dir)
           (res, Some(stages))
-        case "sim_knn_graph_ivf" =>
-          val (res, cells) =
-            graft.queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-          (res, Some(Seq(cells)))
-        case "sim_knn_graph_ivf_kmeans" =>
-          val (res, stages) =
-            graft.queries.Round19Queries.knnGraphIvfKmeansPlan(spark, dir)
-          (res, Some(stages))
         // the declared row checkpoints; dump the un-materialized twin
         case "st_incremental_ann_ivf" =>
           val (res, stages) =
-            graft.queries.Round19Queries.annIvfTrainedPlan(spark, dir)
-          (res, Some(stages))
-        case "sim_knn_graph_ivf_scaled" =>
-          val (res, stages) =
-            graft.queries.Round20Queries.knnGraphIvfScaledPlan(spark, dir)
+            KnnGraphQueries.annIvfTrained(Corpus.nvecs(spark, dir))
           (res, Some(stages))
         // ONE un-materialized NN-Descent round over the checkpointed
         // seed (the declared row checkpoints every round; the novel
         // shape is the round body itself)
         case "sim_knn_graph_nnd_round" =>
           val (seed, stages) =
-            graft.queries.Round20Queries.knnGraphIvfScaledPlan(spark, dir)
+            KnnGraphQueries.scaledGraph(Corpus.nvecs(spark, dir))
           val g0 = seed.localCheckpoint(true)
-          val (round1, av) =
-            graft.queries.Round20Queries.nndRoundStaged(stages.last, g0)
+          val (round1, av) = KnnGraphQueries.nndRoundStaged(stages.last, g0)
           (round1, Some(stages :+ av))
-        case "sim_knn_graph_ivf_hier" =>
-          val (res, stages) =
-            graft.queries.Round20Queries.knnGraphIvfHierPlan(spark, dir)
-          (res, Some(stages))
         // ONE un-materialized grouped fine-Lloyd round over the
         // persisted coarse-routed corpus and the checkpointed fine
         // init (the build checkpoints every round; the novel shape is
         // the round body itself)
         case "sim_knn_graph_hier_fine_round" =>
-          val corpus = graft.queries.Corpus.nvecs(spark, dir).persist()
+          val corpus = Corpus.nvecs(spark, dir).persist()
           corpus.count()
-          val routed = graft.queries.Round20Queries
-            .coarseRouted(corpus).persist()
+          val routed = KnnGraphQueries.coarseRouted(corpus).persist()
           routed.count()
-          val init = graft.queries.Round20Queries
-            .fineInit(routed, corpus).localCheckpoint()
-          (graft.queries.Round20Queries.fineLloydRound(routed, init),
+          val init = KnnGraphQueries.fineInit(routed, corpus).localCheckpoint()
+          (KnnGraphQueries.fineLloydRound(routed, init),
             Some(Seq(routed, corpus)))
         case _ => (SparkEntry.queries(name)(spark, dir), None)
       }

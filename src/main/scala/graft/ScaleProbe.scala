@@ -17,10 +17,17 @@ import org.apache.spark.sql.functions._
   *        sbt "runMain graft.ScaleProbe tpch <m> [query...]"   — TPC-H mode
   *        sbt "runMain graft.ScaleProbe suite <m> [query...]"  — full suite
   *        sbt "runMain graft.ScaleProbe cooccur <m> [query...]" — disjoint co-order graphs
-  * (tpch mode replicates customer/orders/lineitem ×m with shifted key
-  * spaces — m=10 on sf0.1 ≈ TPC-H sf1 — and times the q_tpch macros;
-  * suite mode builds ALL ten tables at ×m and defaults to every declared
-  * query — the whole-inventory scaling sweep.)
+  *        sbt "runMain graft.ScaleProbe rotate <m> [query...]" — signed-permutation vectors
+  *        sbt "runMain graft.ScaleProbe annrecall <m>"         — planted-pair ANN recall
+  *        sbt "runMain graft.ScaleProbe bm25 <m> [nq...]"      — BM25 query-set sizes
+  *        sbt "runMain graft.ScaleProbe containment [n...]"    — planted boilerplate docs
+  * Every `query` is a declared `SparkEntry.queries` name; one that throws
+  * is named in the JSON line's `failed` list, never timed. (tpch mode
+  * replicates customer/orders/lineitem ×m with shifted key spaces —
+  * m=10 on sf0.1 ≈ TPC-H sf1 — and times the q_tpch macros; suite mode
+  * builds ALL ten tables at ×m and defaults to every declared query —
+  * the whole-inventory scaling sweep; rotate defaults to the in-plan
+  * width rule's dedup_embedding_ann_auto and sim_knn_graph_auto.)
   */
 object ScaleProbe {
 
@@ -489,9 +496,9 @@ object ScaleProbe {
         // whole-inventory scaling sweep (VERDICT r7 item 4)
         case "suite" => SparkEntry.queries.keys.toSeq.sorted
         case "cooccur" => Seq("graph_triangles")
-        // rotate: the ANN width-rule probes on the artifact-free corpus
-        case "rotate" => Seq("dedup_embedding_ann_auto_prod",
-          "dedup_embedding_ann_auto_cand")
+        // rotate: the in-plan width rule's ANN dedup and kNN graph on
+        // the artifact-free corpus
+        case "rotate" => Seq("dedup_embedding_ann_auto", "sim_knn_graph_auto")
         case _ => if (m <= 3) scalePath ++ allPairs else scalePath
       }
     val dir = mode match {
@@ -509,414 +516,19 @@ object ScaleProbe {
       case _ => scaleCorpus(spark, "/root/testdata/sf0.1", dir, m)
     }
 
-    // warm up codegen/scan paths
-    try SparkEntry.queries(mode match {
+    // warm up codegen/scan paths; a failure here is reported, and the
+    // same query fails again (and is named in `failed`) if it is timed
+    val warmup = mode match {
       case "tpch" => "q_tpch03"
       case "cooccur" => "graph_triangles"
       case "rotate" => "sim_brute_topk"
       case _ => "dedup_exact"
-    })(spark, dir).count()
-    catch { case _: Throwable => () }
-
-    // Pseudo-name dedup_embedding_ann_w<bits>: the width-scaled ANN dedup
-    // (radius 1, 8 tables, τ=0.9 — the production near-dup configuration;
-    // see DedupQueries.embeddingAnnScaled). bits ~ log2(corpus) holds the
-    // bucket load constant, which is what keeps the candidate join linear.
-    val Wide = raw"dedup_embedding_ann_w(\d+)".r
-    def runQuery(name: String): org.apache.spark.sql.DataFrame = name match {
-      case Wide(bits) => queries.DedupQueries.embeddingAnnScaled(spark, dir, bits.toInt)
-      // pseudo-name: dedup_cluster_cc with per-round RELIABLE checkpoints
-      // (the executor-loss-safe mode) — the localCheckpoint delta is the
-      // cluster-durability tax (VERDICT r8 item 7)
-      case "dedup_cluster_cc_ckpt" =>
-        queries.DedupQueries.clusterCc(spark, dir,
-          Some(s"/tmp/graft_cc_reliable_x$m"))
-      // pseudo-name: the auto-width ANN dedup at the PRODUCTION near-dup
-      // config (radius 1, 8 tables, τ=0.9) — the declared row's τ=0.45
-      // admits a quadratically-growing cross-replica pair set on probe
-      // corpora (the same fixture artifact the w<bits> pseudo-names
-      // exist for), so the width rule's trajectory is measured here
-      case "dedup_embedding_ann_auto_prod" =>
-        val (p, v, g) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
-      // the prod config through the round-17b hot-bucket grid guard —
-      // same pair set; measures the guard's wall-time effect where the
-      // load profile says the skew lives
-      case "dedup_embedding_ann_auto_prod_grd" =>
-        val (p, v, g) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9,
-            gridHotLoad = operators.Salting.DeriveHotLoad)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
-      // pseudo-name: home-bucket load profile of the auto-width ANN
-      // index (table 0, the production config's widths) — the DIRECT
-      // witness for the candidate-volume model: candidates per table
-      // ≈ Σ_b load_b² (probe side ~ (1+bits)·home side), so the ratio
-      // Σ load² / (n²/2^bits) IS the skew factor by which the measured
-      // candidate volume overshoots the uniform-load model. Prints a
-      // JSON line; the returned 1-row frame is just the count anchor.
-      case "dedup_embedding_ann_auto_load" =>
-        val (_, v, sigs) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try {
-          val bits = sigs.select(col("bits")).head.getInt(0)
-          val st = sigs.groupBy(col("sig_0"))
-            .agg(count(lit(1)).as("load"))
-            .agg(
-              count(lit(1)).as("buckets"),
-              sum(col("load")).as("n"),
-              max(col("load")).as("max_load"),
-              expr("CAST(percentile(load, 0.99) AS DOUBLE)").as("p99_load"),
-              expr("CAST(sum(CAST(load AS DECIMAL(38,0)) * " +
-                "CAST(load AS DECIMAL(38,0))) AS DOUBLE)").as("s2"))
-            .head
-          val n = st.getLong(1)
-          val uniform = n.toDouble * n.toDouble / math.pow(2.0, bits.toDouble)
-          println(s"""{"metric":"ann_bucket_load","multiplier":$m,""" +
-            s""""bits":$bits,"buckets":${st.getLong(0)},"n":$n,""" +
-            s""""max_load":${st.getLong(2)},"p99_load":${st.getDouble(3)},""" +
-            s""""sum_load2":${st.getDouble(4)},"uniform_load2":$uniform,""" +
-            s""""skew_ratio":${st.getDouble(4) / uniform}}""")
-          spark.range(1).toDF("ok")
-        } finally { sigs.unpersist(false); v.unpersist(false) }
-      // pseudo-name: per-bucket COMPOSITION of the hottest sign-LSH
-      // home buckets (round-18 attribution probe for the open
-      // round-17b diagnostic: why does max bucket load grow ∝ m even
-      // under signed-permutation rotation?). For the top-8 buckets of
-      // table 0 it emits (load, n_replicas, max per-replica count,
-      // whether the bucket is the all-ones degenerate key) plus the
-      // corpus-wide count of near-zero-norm vectors — the two
-      // candidate explanations: (a) cross-replica collisions of
-      // genuinely-clustered masses, visible as n_replicas ~ m with
-      // per-replica counts ~ load/m; (b) a sign-degenerate family
-      // (e.g. all-zero vectors: every dot is 0, every sign bit fires,
-      // EVERY replica of them lands in bucket=mask in EVERY table —
-      // permutation-invariant by construction), visible as the top
-      // bucket == mask with per-replica count = the per-replica
-      // degenerate population. The collect is a bounded top-8 scalar
-      // read (the documented probe pattern).
-      case "dedup_embedding_ann_auto_loadmix" =>
-        val (_, v, sigs) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try {
-          val mask = sigs.select(col("mask")).head.getLong(0)
-          val top = sigs.groupBy(col("sig_0"))
-            .agg(count(lit(1)).as("load"))
-            .orderBy(col("load").desc, col("sig_0").asc)
-            .limit(8).collect()
-          val hotKeys = top.map(_.getLong(0))
-          val mix = sigs.filter(col("sig_0").isin(hotKeys: _*))
-            .join(v.select(col("vec_id"), col("nrm")), "vec_id")
-            .withColumn("replica", (col("vec_id") / 10000000L).cast("long"))
-            .groupBy(col("sig_0"))
-            .agg(count(lit(1)).as("load"),
-              countDistinct(col("replica")).as("n_replicas"),
-              max(col("nrm")).as("max_nrm"),
-              min(col("nrm")).as("min_nrm"))
-            .collect().map(r => r.getLong(0) -> r).toMap
-          val perRep = sigs.filter(col("sig_0").isin(hotKeys: _*))
-            .withColumn("replica", (col("vec_id") / 10000000L).cast("long"))
-            .groupBy(col("sig_0"), col("replica"))
-            .agg(count(lit(1)).as("c"))
-            .groupBy(col("sig_0")).agg(max(col("c")).as("max_per_rep"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val nearZero = v.filter(col("nrm") < 1e-9).count()
-          val rows = top.map { r =>
-            val b = r.getLong(0)
-            val m0 = mix(b) // (sig_0, load, n_replicas, max_nrm, min_nrm)
-            s"""{"bucket":$b,"is_all_ones":${b == mask},"load":${m0.getLong(1)},""" +
-              s""""n_replicas":${m0.getLong(2)},"max_per_rep":${perRep(b)},""" +
-              s""""min_nrm":${m0.getDouble(4)},"max_nrm":${m0.getDouble(3)}}"""
-          }.mkString(",")
-          println(s"""{"metric":"ann_bucket_mix","multiplier":$m,""" +
-            s""""mask":$mask,"near_zero_norm_vecs":$nearZero,"top":[$rows]}""")
-          spark.range(1).toDF("ok")
-        } finally { sigs.unpersist(false); v.unpersist(false) }
-      // pseudo-name: the ST27 arrival-order verdict reduction over the
-      // PRODUCTION auto-width pair pipeline (radius 1, 8 tables, τ=0.9,
-      // bits derived) — separates the verdict shape's own scale cost
-      // from the declared twin's fixture substrate (fixed 12 bits,
-      // whose n²/2¹² candidate wall the auto rule exists to remove)
-      case "st_incremental_ann_auto_prod" =>
-        val (p, v, g) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try queries.Round17Queries.annVerdict(p, v).localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
-      // diagnostic twin: τ = -2 disables the verify filter, so `rows`
-      // IS the candidate-pair volume — the number the width rule is
-      // supposed to hold linear (candidates ≈ (1+bits)·n²/2^bits per
-      // table under uniform load)
-      case "dedup_embedding_ann_auto_cand" =>
-        val (p, v, g) = queries.Round16Queries
-          .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = -2.0)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
-      // pseudo-name: convergence-driven co-partitioned PageRank
-      // (eps = 1e8 picounits = 1e-4 rank). Emits a per-round JSON trace —
-      // round seconds must stay FLAT as rounds accumulate (checkpoint
-      // lineage truncation) and deltas contract at the damping factor.
-      // Forced-compute twins for the ZERO-SHUFFLE narrow passes: the
-      // probe's .count() lets Catalyst prune the projected columns (a
-      // count over scan→explode→project never evaluates the math), so
-      // the plain names under-measure. These wrap the query in a sum
-      // over its computed column — same scan, math forced.
-      // pseudo-name: the declared recall audit plus a printed JSON line
-      // of its VALUES (mean recall@5 / total hits per index) — the
-      // quality counterpart of the timing probes: how each index's
-      // recall holds as the corpus grows m× in distractors. The means
-      // agg runs over the 15-row checkpointed audit output; the collect
-      // is a bounded panel×index read (the documented scalar pattern).
-      case "sim_index_recall_means" =>
-        val df = SparkEntry.queries("sim_index_recall")(spark, dir)
-        val parts = df.groupBy(col("idx"))
-          .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h"))
-          .orderBy(col("idx"))
-          .collect().map { r =>
-            s""""${r.getString(0)}":{"mean_recall":${r.getDouble(1)},"hits":${r.getLong(2)}}"""
-          }.mkString(",")
-        println(s"""{"metric":"index_recall_means","multiplier":$m,$parts}""")
-        df
-      // same quality probe for the round-18 contract audit (Lloyd-IVF /
-      // PQ / IVFPQ / MIPS-LSH, each at its own metric and k)
-      case "sim_index_recall_contract_means" =>
-        val df = SparkEntry.queries("sim_index_recall_contract")(spark, dir)
-        val parts = df.groupBy(col("idx"))
-          .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h"))
-          .orderBy(col("idx"))
-          .collect().map { r =>
-            s""""${r.getString(0)}":{"mean_recall":${r.getDouble(1)},"hits":${r.getLong(2)}}"""
-          }.mkString(",")
-        println(s"""{"metric":"index_recall_contract_means","multiplier":$m,$parts}""")
-        df
-      // same quality probe for the round-19 kNN-graph recall audit
-      // (edge recall per build vs the brute panel truth) — how each
-      // GRAPH build's candidate generation holds as the corpus grows
-      // m× in distractors
-      // disposition twins for the simhash guard's threshold form:
-      // the SAME banded pipeline with the retired constant 256 vs the
-      // round-19 derived p999 — separates the quantile stage's cost
-      // from routing-volume cost (the pair set is identical in both)
-      case "dedup_simhash_banded_grd_c256" =>
-        val (p, d) = queries.DedupQueries
-          .simhashBandedPairsGuarded(spark, dir, hotLoad = 256L)
-        try p.localCheckpoint(true) finally d.unpersist(false)
-      case "dedup_simhash_banded_grd_drv" =>
-        val (p, d) = queries.DedupQueries.simhashBandedPairsGuarded(spark, dir)
-        try p.localCheckpoint(true) finally d.unpersist(false)
-      // stage decomposition of the IVF-cell kNN build: cells = the
-      // argmin/probe pass alone; cand = + candidate join and exact
-      // cosine (count forces the math via an agg over the column);
-      // the declared row adds only the top-k window beyond this
-      // attribution twin: the RETIRED dense-id sampled-point cents on
-      // TODAY'S corpus — separates the honest-cells fix's recall
-      // effect from a driver fixture redraw
-      case "sim_ivf_topk_auto_oldcells_means" =>
-        val df = queries.Round19Queries.ivfOldCellsRecall(spark, dir)
-        val r = df.agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-        println(s"""{"metric":"ivf_oldcells_recall","multiplier":$m,""" +
-          s""""mean_recall":${r.getDouble(0)},"hits":${r.getLong(1)}}""")
-        df
-      // nprobe sensitivity of the IVF-cell graph build: recall + wall
-      // at nprobe = 1/2/4 through the SAME shared recall arithmetic —
-      // the measured price curve behind the declared KnnIvfNprobe
-      case "sim_knn_graph_ivf_npr_sweep" =>
-        Seq(1, 2, 4).foreach { npr =>
-          val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, cells) =
-                queries.Round19Queries.knnGraphIvfPlanFrom(base, npr)
-              try res.localCheckpoint(true) finally cells.unpersist(false)
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"ivf_npr$npr" -> fn))
-            .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"knn_graph_ivf_npr","multiplier":$m,""" +
-            s""""nprobe":$npr,"mean_recall":${rec.getDouble(0)},""" +
-            s""""hits":${rec.getLong(1)},"sec":$dt}""")
-          spark.catalog.clearCache()
-        }
-        spark.range(1).toDF("ok")
-      // rounds sensitivity of the NN-Descent refinement: recall + wall
-      // at rounds = 1/2/3 through the SAME shared recall arithmetic —
-      // the measured price curve behind the declared KnnNndRounds
-      case "sim_knn_graph_nnd_rounds_sweep" =>
-        Seq(1, 2, 3).foreach { r =>
-          val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) =
-                queries.Round20Queries.knnGraphNndPlanFrom(base, r)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_r$r" -> fn))
-            .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"knn_graph_nnd_rounds","multiplier":$m,""" +
-            s""""rounds":$r,"mean_recall":${rec.getDouble(0)},""" +
-            s""""hits":${rec.getLong(1)},"sec":$dt}""")
-          spark.catalog.clearCache()
-        }
-        spark.range(1).toDF("ok")
-      // attribution twins for the NND convergence question: does the
-      // refinement stall because the SEED has no signal (bounded-load
-      // cells at ×m probe ~nprobe·load of n) or because mid-cosine
-      // neighborhoods aren't transitive (then no seed converges)?
-      // kmseed = the trained-cell stage served at K' feeding the same
-      // rounds; w20 = the bounded-load seed at twice the width
-      case "sim_knn_graph_nnd_kmseed_sweep" =>
-        Seq(0, 1, 2, 3).foreach { r =>
-          val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val cells = queries.Round19Queries.trainedCellsFrom(base)
-              try {
-                var g = queries.Round19Queries
-                  .cellGraphServe(cells, queries.Round20Queries.KnnNndWidth)
-                  .localCheckpoint(true)
-                val corpus = base.persist()
-                for (_ <- 1 to r)
-                  g = queries.Round20Queries.nndRound(corpus, g)
-                try g.filter(col("rank") <= queries.Round13Queries.KnnK)
-                  .localCheckpoint(true)
-                finally corpus.unpersist(false)
-              } finally cells.unpersist(false)
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_km_r$r" -> fn))
-            .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"knn_graph_nnd_kmseed","multiplier":$m,""" +
-            s""""rounds":$r,"mean_recall":${rec.getDouble(0)},""" +
-            s""""hits":${rec.getLong(1)},"sec":$dt}""")
-          spark.catalog.clearCache()
-        }
-        spark.range(1).toDF("ok")
-      // attribution twin: the SAMPLED-coarse two-level build (the
-      // retired V24 first draft — identical shape/cost, coarse level a
-      // hash residue instead of the Lloyd quantizer) priced by the
-      // same recall arithmetic — the sampled-vs-trained-coarse table
-      // fine-iters sensitivity of the hierarchical (trained-fine)
-      // build: recall + wall at fineIters = 0/1/2/3 through the SAME
-      // shared recall arithmetic — the measured price curve behind the
-      // declared KnnFineIters (0 = V24's sampled fine tiling, the
-      // attribution anchor: everything above it is what TRAINING the
-      // fine level buys)
-      case "sim_knn_graph_hier_fiters_sweep" =>
-        Seq(0, 1, 2, 3).foreach { fi =>
-          val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) = queries.Round20Queries
-                .knnGraphIvfHierPlanFrom(base, fineIters = fi)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"hier_fi$fi" -> fn))
-            .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"knn_graph_hier_fiters","multiplier":$m,""" +
-            s""""fine_iters":$fi,"mean_recall":${rec.getDouble(0)},""" +
-            s""""hits":${rec.getLong(1)},"sec":$dt}""")
-          spark.catalog.clearCache()
-        }
-        spark.range(1).toDF("ok")
-      // NND-over-hier rounds curve — the V27 counterpart of the V25
-      // rounds sweep (same shared recall arithmetic)
-      case "sim_knn_graph_nnd_hier_rounds_sweep" =>
-        Seq(1, 2, 3).foreach { r =>
-          val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) = queries.Round20Queries
-                .knnGraphNndHierPlanFrom(base, r)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_hier_r$r" -> fn))
-            .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"knn_graph_nnd_hier_rounds","multiplier":$m,""" +
-            s""""rounds":$r,"mean_recall":${rec.getDouble(0)},""" +
-            s""""hits":${rec.getLong(1)},"sec":$dt}""")
-          spark.catalog.clearCache()
-        }
-        spark.range(1).toDF("ok")
-      case "sim_knn_graph_scaled_sampled_recall" =>
-        val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          base => {
-            val stages = queries.Round20Queries.sampledCellsFrom(base)
-            try queries.Round19Queries.cellGraphServe(stages.head)
-              .localCheckpoint(true)
-            finally stages.foreach(_.unpersist(false))
-          }
-        val rec = queries.Round19Queries
-          .graphRecallOver(spark, dir, Seq("sampled_coarse" -> fn))
-          .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
-        println(s"""{"metric":"knn_graph_scaled_sampled","multiplier":$m,""" +
-          s""""mean_recall":${rec.getDouble(0)},"hits":${rec.getLong(1)}}""")
-        spark.range(1).toDF("ok")
-      case "sim_knn_graph_ivf_cells" =>
-        val (_, cells) = queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-        try cells.agg(sum(expr("cells[0]"))).localCheckpoint(true)
-        finally cells.unpersist(false)
-      case "sim_knn_graph_ivf_cand" =>
-        val (_, cells) = queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-        try {
-          val homes = cells.select(col("vec_id"), col("v"), col("nrm"),
-            col("cells").getItem(0).as("cell"))
-          val probes = cells.select(col("vec_id").as("query_id"),
-            col("v").as("qv"), col("nrm").as("qn"),
-            explode(col("cells")).as("cell"))
-          functions.GraftFunctions.register(spark)
-          homes.join(probes.hint("shuffle_hash"), Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .select(expr("round(vec_dot(v, qv) / (nrm * qn), 6)").as("cosine"))
-            .agg(sum(col("cosine")))
-            .localCheckpoint(true)
-        } finally cells.unpersist(false)
-      case "sim_knn_graph_recall_means" | "sim_knn_graph_recall_scale_means" =>
-        // the full declared row runs ALL FOUR builds — including the
-        // fixture 8-bit teaching config, quadratic past ×10; the
-        // _scale_ variant prices the two scale-path builds only
-        // (auto-width LSH vs IVF-cell) through the SAME shared
-        // recall arithmetic
-        val df =
-          if (name == "sim_knn_graph_recall_means")
-            SparkEntry.queries("sim_knn_graph_recall")(spark, dir)
-          else queries.Round19Queries.graphRecallOver(spark, dir,
-            queries.Round19Queries.scalePathBuilds)
-        val parts = df.groupBy(col("build"))
-          .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h"))
-          .orderBy(col("build"))
-          .collect().map { r =>
-            s""""${r.getString(0)}":{"mean_recall":${r.getDouble(1)},"hits":${r.getLong(2)}}"""
-          }.mkString(",")
-        println(s"""{"metric":"knn_graph_recall_means","multiplier":$m,$parts}""")
-        df
-      case "sim_rp_project_sum" =>
-        SparkEntry.queries("sim_rp_project")(spark, dir)
-          .agg(sum(abs(col("proj"))))
-      case "pipe_decontaminate_semantic_sum" =>
-        SparkEntry.queries("pipe_decontaminate_semantic")(spark, dir)
-          .agg(sum(col("max_cosine")))
-      case "graph_pagerank_eps" =>
-        val rounds = scala.collection.mutable.ArrayBuffer.empty[String]
-        val (df, iters, _) = queries.RetrievalQueries.pagerankUntil(
-          spark, dir, epsPico = 100000000L, maxIter = 60,
-          onRound = (i, d, sec) => rounds += s"""{"round":$i,"delta":$d,"sec":$sec}""")
-        println(s"""{"metric":"pagerank_eps_rounds","multiplier":$m,""" +
-          s""""iters":$iters,"rounds":[${rounds.mkString(",")}]}""")
-        df
-      case _ => SparkEntry.queries(name)(spark, dir)
     }
+    try SparkEntry.queries(warmup)(spark, dir).count()
+    catch { case e: Throwable =>
+      System.err.println(s"[scale_probe] warm-up $warmup failed: $e")
+    }
+
     // min-of-N like Bench (shared-box contention only ever ADDS time);
     // defaults to 1 because probe corpora are long sweeps. A query that
     // throws is FAILED, not fast: it goes to the `failed` list with no
@@ -927,7 +539,7 @@ object ScaleProbe {
       def once(): Option[(Double, Long)] = {
         val t0 = System.nanoTime()
         try {
-          val n = runQuery(name).count()
+          val n = SparkEntry.queries(name)(spark, dir).count()
           Some(((System.nanoTime() - t0) / 1e9, n))
         } catch { case e: Throwable =>
           System.err.println(s"[scale_probe] $name failed: ${e.getMessage}")

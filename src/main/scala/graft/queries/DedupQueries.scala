@@ -326,18 +326,13 @@ object DedupQueries {
     * unordered — shared by `dedup_minhash_lsh` (pair listing) and
     * `dedup_cluster_cc` (component resolution over the pair graph).
     */
-  /** dedup_cluster_cc's pipeline with the durability knob exposed:
-    * LSH pair graph → connected components → per-cluster sizes. The
-    * declared query runs localCheckpoint (single box); ScaleProbe's
-    * `dedup_cluster_cc_ckpt` pseudo-name runs the same pipeline with
-    * per-round RELIABLE checkpoints to measure the cluster-durability
-    * tax (BASELINE.md).
+  /** dedup_cluster_cc's pipeline: LSH pair graph → connected
+    * components (per-round localCheckpoint — single box) → per-cluster
+    * sizes.
     */
-  def clusterCc(s: SparkSession, dir: String,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def clusterCc(s: SparkSession, dir: String): DataFrame = {
     val edges = minhashPairs(s, dir).select(col("doc_a"), col("doc_b"))
-    val labels = graft.operators.ConnectedComponents.run(
-      edges, checkpointDir = checkpointDir)
+    val labels = graft.operators.ConnectedComponents.run(edges)
     val w = Window.partitionBy(col("cluster_id"))
     labels
       .select(col("cluster_id"), col("node").as("doc_id"))

@@ -390,12 +390,11 @@ object RetrievalQueries {
     *         damping factor, spec-pinned monotone).
     */
   def pagerankUntil(s: SparkSession, dir: String, epsPico: Long,
-      maxIter: Int = 50, bcast: Boolean = false,
-      onRound: (Int, Long, Double) => Unit = (_, _, _) => ())
+      maxIter: Int = 50, bcast: Boolean = false)
       : (DataFrame, Int, Seq[Long]) = {
     val (edges, nTab, r0) = pagerankSetup(s, dir, bcast)
     val res = iterateUntil(r0, pagerankStep(edges, nTab, bcast),
-      rankProject, epsPico, maxIter, onRound)
+      rankProject, epsPico, maxIter)
     if (!bcast) graft.operators.Layouts.releaseCheckpoint(edges)
     res
   }
@@ -406,8 +405,7 @@ object RetrievalQueries {
     * frontier as a full-rank change.
     */
   def trustrankUntil(s: SparkSession, dir: String, epsPico: Long,
-      maxIter: Int = 50, bcast: Boolean = false,
-      onRound: (Int, Long, Double) => Unit = (_, _, _) => ())
+      maxIter: Int = 50, bcast: Boolean = false)
       : (DataFrame, Int, Seq[Long]) = {
     val edges = transactionEdges(s, dir, partitioned = !bcast)
     val seeds = edges.select(col("src")).distinct()
@@ -422,7 +420,7 @@ object RetrievalQueries {
         expr("node % 2 = 1 AND (node div 2) % 3 = 0").as("is_seed"))
         .orderBy(col("trust").desc, col("node"))
     val res = iterateUntil(t0, trustrankStep(edges, seeds, nSeedTab, bcast),
-      project, epsPico, maxIter, onRound)
+      project, epsPico, maxIter)
     if (!bcast) graft.operators.Layouts.releaseCheckpoint(edges)
     res
   }
@@ -434,15 +432,13 @@ object RetrievalQueries {
     * both pagerankUntil and trustrankUntil.
     */
   private def iterateUntil(r0: DataFrame, step: DataFrame => DataFrame,
-      project: DataFrame => DataFrame, epsPico: Long, maxIter: Int,
-      onRound: (Int, Long, Double) => Unit)
+      project: DataFrame => DataFrame, epsPico: Long, maxIter: Int)
       : (DataFrame, Int, Seq[Long]) = {
     var r = r0.localCheckpoint()
     val deltas = scala.collection.mutable.ArrayBuffer.empty[Long]
     var iter = 0
     var done = false
     while (!done && iter < maxIter) {
-      val t0 = System.nanoTime()
       val next = step(r).localCheckpoint()
       // left join from the NEW table: TrustRank's frontier only grows
       // (seed base rows never leave), so a node absent from the previous
@@ -460,10 +456,6 @@ object RetrievalQueries {
       r = next
       iter += 1
       done = d <= epsPico
-      // probe hook: (round, max delta, seconds) — the flat-per-round-cost
-      // evidence that the checkpoint discipline keeps analysis+exec cost
-      // independent of the iteration count
-      onRound(iter, d, (System.nanoTime() - t0) / 1e9)
     }
     (project(r), iter, deltas.toSeq)
   }

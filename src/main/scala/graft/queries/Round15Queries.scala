@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.queries.Corpus.{h60Duck, h60Spark}
 import graft.operators.QuantileSketchAgg
+import KnnGraphQueries.{KnnScaledBits, declared, lshGraph}
 
 /** Round-15 batch: the promised production twins —
   *
@@ -205,11 +206,10 @@ object Round15Queries {
     // fill) is identical; only the index width changes.
     QueryDef(
       "sim_semantic_clusters_scaled",
-      (s, dir) => Round13Queries.semanticClusters(
-        s, dir, Round13Queries.KnnScaledBits),
+      (s, dir) => Round13Queries.semanticClusters(s, dir, KnnScaledBits),
       None,
       doc = s"Semantic clusters over the width-scaled kNN graph " +
-        s"(bits=${Round13Queries.KnnScaledBits} ~ log2 n): candidate " +
+        s"(bits=$KnnScaledBits ~ log2 n): candidate " +
         "volume stays ~n·k as the corpus grows; same τ-edge + shared-CC " +
         "cluster stage as sim_semantic_clusters. Oracle split (SURVEY " +
         "§5 note 14): rows-only here; sim_semantic_edges_scaled is the " +
@@ -224,10 +224,10 @@ object Round15Queries {
     QueryDef(
       "sim_semantic_edges_scaled",
       (s, dir) => Round13Queries.tauEdges(
-        Round13Queries.knnGraph(s, dir, Round13Queries.KnnScaledBits)),
-      Some(Round13Queries.tauEdgesSql(Round13Queries.KnnScaledBits)),
+        declared(lshGraph(KnnScaledBits)(_))(s, dir)),
+      Some(Round13Queries.tauEdgesSql(KnnScaledBits)),
       doc = s"Canonical undirected tau-edges of the width-scaled " +
-        s"(bits=${Round13Queries.KnnScaledBits}) kNN graph — the exact " +
+        s"(bits=$KnnScaledBits) kNN graph — the exact " +
         "CC input of sim_semantic_clusters_scaled; hash-green " +
         "replacement for the retired recursive-closure oracle."),
 

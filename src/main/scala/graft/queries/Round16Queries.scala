@@ -15,12 +15,13 @@ import Round13bQueries.{KcoreK, KcorePeels, kcoreSql, nodeStr}
   *  - graph_triangles_capped: the ONLINE-computable triangle form (ID
   *    orientation + cap rule — no degree table needed), the batch twin
   *    of the ST26 streaming adjacency (streaming/TriangleStream.scala);
-  *  - sim_knn_graph_auto / dedup_embedding_ann_auto: the bits ~ log2 n
-  *    ANN width rule derived IN-PLAN from a 1-row broadcast count
-  *    scalar (mask a MaxBits signature to the low clamp(bitlen(n−1),
-  *    min, max) bits; runtime-length multiprobe) instead of a
-  *    declaration-time constant — the same declared query holds
-  *    per-bucket load ~1 at any corpus size.
+  *  - dedup_embedding_ann_auto: the bits ~ log2 n ANN width rule
+  *    derived IN-PLAN from a 1-row broadcast count scalar (mask a
+  *    MaxBits signature to the low clamp(bitlen(n−1), min, max) bits;
+  *    runtime-length multiprobe) instead of a declaration-time
+  *    constant — the same declared query holds per-bucket load ~1 at
+  *    any corpus size (KnnGraphQueries' sim_knn_graph_auto applies the
+  *    same rule, with these bounds, to the kNN graph).
   *
   * The k-core twin in detail — the co-partitioned discipline the rest
   * of the family already follows (R10b/R14b):
@@ -160,77 +161,6 @@ object Round16Queries {
     (res, e, capped)
   }
 
-  /** Un-materialized auto-width kNN pipeline plus its persisted
-    * signature stage — (result, persisted corpus). The declared row
-    * checkpoints the result and releases the stage; Plans dumps this
-    * form (the checkpointed row's own executed plan is a bare RDD
-    * scan).
-    */
-  private[graft] def knnGraphAutoPlan(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    knnGraphAutoPlanFrom(Corpus.nvecs(s, dir))
-
-  /** The same pipeline over a caller-prepared (vec_id, v, nrm) corpus —
-    * the round-20 shared-prepared-corpus seam (see
-    * Round13Queries.knnGraphPlanFrom).
-    */
-  private[graft] def knnGraphAutoPlanFrom(base: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val tables = Round13Queries.knnTables(KnnAutoMaxBits)
-    def sigCol(t: Int) = (0 until KnnAutoMaxBits).map { b =>
-      when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
-        lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-    val width = base.agg(count(lit(1)).as("n"))
-      .select(
-        greatest(lit(KnnAutoMinBits), least(lit(KnnAutoMaxBits),
-          length(bin(col("n") - 1)))).cast("int").as("bits"))
-      .withColumn("mask", expr("shiftleft(1, bits) - 1"))
-    val all = base
-      .crossJoin(broadcast(width))
-      .withColumn("s0", sigCol(0))
-      .withColumn("s1", sigCol(1))
-      .transform(graft.operators.Layouts.spread)
-      .persist()
-    all.count()
-    // per table: masked own bucket + the `bits` Hamming-1 flips of
-    // ACTIVE bits only (runtime-length sequence); the table index
-    // folds into the key as t·(mask+1) so tables never cross-match
-    def cand(t: Int) = {
-      val st = s"s$t"
-      val corpus = all.select(col("vec_id"), col("v"), col("nrm"),
-        (col(st).bitwiseAND(col("mask")) +
-          lit(t) * (col("mask") + lit(1))).as("bucket"))
-      val probes = expr(
-        s"""transform(sequence(0, bits), i ->
-           (CASE WHEN i = 0 THEN ($st & mask)
-            ELSE ($st & mask) ^ shiftleft(1, i - 1) END)
-           + $t * (mask + 1))""")
-      val q = all.select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qn"),
-        explode(probes).as("bucket"))
-      // score in-bucket BEFORE the pair dedup (the knnGraphPlan
-      // shuffle-payload lesson: 8 bytes of cosine, never vectors)
-      corpus.join(q.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(VectorOps.cosine(col("v"), col("qv"),
-            col("nrm"), col("qn")), 6).as("cosine"))
-    }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = cand(0).unionByName(cand(1))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cosine")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Round13Queries.KnnK)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
-      .orderBy(col("vec_id"), col("rank"))
-    (res, all)
-  }
-
   /** Auto-width ANN-dedup signature ceiling: Long bucket keys, so the
     * rule runs far past the kNN row's Int range — 20 keeps the
     * radius-2 probe ball at 1 + 20 + C(20,2) = 211 masks and covers
@@ -259,9 +189,6 @@ object Round16Queries {
     */
   private[graft] def annAutoPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
-      radius: Int = DedupQueries.AnnProbeRadius,
-      tables: Int = DedupQueries.AnnTables,
-      tau: Double = DedupQueries.CosineTau,
       // non-zero routes each table's candidate join through the
       // two-sided hot-bucket grid guard (Salting.gridJoinPairs,
       // hotLoad = this — Salting.DeriveHotLoad derives the threshold
@@ -271,6 +198,7 @@ object Round16Queries {
       // near-neighbor clusters no width can split)
       gridHotLoad: Long = 0L)
       : (DataFrame, DataFrame, DataFrame) = {
+    import DedupQueries.{AnnProbeRadius, AnnTables, CosineTau}
     // mirror gridJoinPairs' contract (plus 0 = guard off): any OTHER
     // negative value would otherwise route as "hot" through the
     // != 0L check below instead of failing loudly
@@ -298,26 +226,23 @@ object Round16Queries {
     // candidate join reads it twice (probe + build side)
     val sigs = v.select(
       Seq(col("vec_id"), col("bits"), col("mask")) ++
-        (0 until tables).map(t =>
+        (0 until AnnTables).map(t =>
           sigCol(t).bitwiseAND(col("mask")).as(s"sig_$t")): _*)
       .persist()
-    // per-table probes: own masked bucket + the radius-1 flips (+ the
-    // radius-2 double flips), all over ACTIVE bits only (runtime-length
+    // per-table probes: own masked bucket + the radius-1 flips + the
+    // radius-2 double flips, all over ACTIVE bits only (runtime-length
     // sequences — the masked domain)
-    require(radius >= 0 && radius <= 2, s"probe radius $radius outside [0, 2]")
     def probesCol(t: Int) = expr(Seq(
-      Some(s"array(sig_$t)"),
-      if (radius >= 1) Some(
-        s"""transform(sequence(0, bits - 1),
-            i -> sig_$t ^ shiftleft(CAST(1 AS BIGINT), i))""") else None,
-      if (radius >= 2) Some(
-        s"""flatten(transform(sequence(0, bits - 2),
+      s"array(sig_$t)",
+      s"""transform(sequence(0, bits - 1),
+            i -> sig_$t ^ shiftleft(CAST(1 AS BIGINT), i))""",
+      s"""flatten(transform(sequence(0, bits - 2),
             i -> transform(sequence(i + 1, bits - 1),
               j -> sig_$t ^ shiftleft(CAST(1 AS BIGINT), i)
-                         ^ shiftleft(CAST(1 AS BIGINT), j))))""") else None)
-      .flatten.mkString("concat(", ",\n", ")"))
-    val aCols = (0 until tables).map(t => col(s"sig_$t").as(s"a_sig_$t"))
-    val bCols = (0 until tables).map(t => col(s"sig_$t").as(s"b_sig_$t"))
+                         ^ shiftleft(CAST(1 AS BIGINT), j))))""")
+      .mkString("concat(", ",\n", ")"))
+    val aCols = (0 until AnnTables).map(t => col(s"sig_$t").as(s"a_sig_$t"))
+    val bCols = (0 until AnnTables).map(t => col(s"sig_$t").as(s"b_sig_$t"))
     // guard hot sets: ALL tables' home-bucket load rollups in ONE job
     // (union keyed by table, one shuffle, one per-table threshold agg),
     // then the bounded tail COLLECTED (≤ GuardMaxHotKeys per table —
@@ -331,7 +256,7 @@ object Round16Queries {
     val hotByTable: Map[Int, Seq[Long]] =
       if (gridHotLoad == 0L) Map.empty.withDefaultValue(Seq.empty)
       else {
-        val allLoads = (0 until tables).map(t =>
+        val allLoads = (0 until AnnTables).map(t =>
           sigs.select(lit(t).as("t"), col(s"sig_$t").as("s")))
           .reduce(_ unionByName _)
           .groupBy(col("t"), col("s")).agg(count(lit(1)).as("__load"))
@@ -355,13 +280,13 @@ object Round16Queries {
           .mapValues(_.map(_.getLong(1)).toSeq).toMap
         collected.withDefaultValue(Seq.empty)
       }
-    val cand = (0 until tables).map { t =>
+    val cand = (0 until AnnTables).map { t =>
       // first-matching-table dedup over the MASKED signatures — a pair
       // emits here iff every earlier table missed it (bit_count of the
-      // masked XOR > radius), so the union is duplicate-free without a
+      // masked XOR > the probe radius), so the union is duplicate-free without a
       // distinct() shuffle (the embeddingAnnPairs trick)
       val firstMatchHere = (0 until t)
-        .map(p => bit_count(col(s"a_sig_$p").bitwiseXOR(col(s"b_sig_$p"))) > radius)
+        .map(p => bit_count(col(s"a_sig_$p").bitwiseXOR(col(s"b_sig_$p"))) > AnnProbeRadius)
         .foldLeft(lit(true))(_ && _)
       val probesDf = sigs.select(Seq(col("vec_id").as("vec_a"),
           probesCol(t).as("probes")) ++ aCols: _*)
@@ -386,70 +311,10 @@ object Round16Queries {
       .select(col("vec_a"), col("vec_b"),
         round(VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("cosine"))
-      .filter(col("cosine") >= tau)
+      .filter(col("cosine") >= CosineTau)
       .orderBy(col("vec_a"), col("vec_b"))
     (pairs, v, sigs)
   }
-
-  /** The auto-width kNN oracle CTE chain, ending in `ranked` (query_id,
-    * neighbor_id, cosine, rank) with `nvecs` in scope — shared by
-    * sim_knn_graph_auto and sim_semantic_clusters_auto (the
-    * Round13Queries.knnDuckCtes convention at the derived width).
-    */
-  private[graft] lazy val knnAutoDuckCtes: String = {
-    val tables = Round13Queries.knnTables(KnnAutoMaxBits)
-    def sigSql(t: Int) = (0 until KnnAutoMaxBits).map { b =>
-      val lits = tables(t)(b).mkString("[", ", ", "]")
-      s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
-    }.mkString(" + ")
-    val bitsSql =
-      s"greatest($KnnAutoMinBits, least($KnnAutoMaxBits, length(bin(count(*) - 1))))"
-    def probesSql(st: String, t: Int) =
-      s"""list_transform(range(0, bits + 1), i ->
-          (CASE WHEN i = 0 THEN ($st & mask)
-           ELSE xor(($st & mask), (1 << (i - 1))) END) + $t * (mask + 1))"""
-    s"""${Corpus.nvecsDuck},
-      width AS (
-        SELECT $bitsSql AS bits, (1 << $bitsSql) - 1 AS mask FROM vecs),
-      bucketed AS (
-        SELECT vec_id, v, nrm, bits, mask,
-          ${sigSql(0)} AS s0, ${sigSql(1)} AS s1
-        FROM nvecs CROSS JOIN width),
-      corpus AS (
-        SELECT vec_id, (s0 & mask) AS bucket FROM bucketed
-        UNION ALL
-        SELECT vec_id, (s1 & mask) + (mask + 1) AS bucket FROM bucketed),
-      q AS (
-        SELECT vec_id AS query_id, unnest(${probesSql("s0", 0)}) AS bucket
-        FROM bucketed
-        UNION ALL
-        SELECT vec_id AS query_id, unnest(${probesSql("s1", 1)}) AS bucket
-        FROM bucketed),
-      cand AS (
-        SELECT DISTINCT q.query_id, a.vec_id AS neighbor_id
-        FROM corpus a JOIN q ON a.bucket = q.bucket
-          AND a.vec_id <> q.query_id),
-      sims AS (
-        SELECT c.query_id, c.neighbor_id,
-          round(${VectorOps.duckDot("a.v", "b.v")} / (a.nrm * b.nrm), 6) AS cosine
-        FROM cand c
-        JOIN nvecs b ON b.vec_id = c.query_id
-        JOIN nvecs a ON a.vec_id = c.neighbor_id),
-      ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-          row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        FROM sims)"""
-  }
-
-  /** The full auto-width kNN-graph oracle statement as a named val —
-    * the declared row and the round-19 recall audit nest this
-    * IDENTICAL statement (one definition, no drift).
-    */
-  private[graft] lazy val knnGraphAutoDuckSql: String =
-    s"""WITH $knnAutoDuckCtes
-      SELECT query_id AS vec_id, rank, neighbor_id, cosine FROM ranked
-      WHERE rank <= ${Round13Queries.KnnK} ORDER BY vec_id, rank"""
 
   /** The auto-width ANN oracle as a named val - shared VERBATIM by
     * the declared row and its round-17b hot-bucket-guarded twin (the
@@ -592,39 +457,6 @@ object Round16Queries {
         "bound of graph_triangles; the ST26 streaming state reconstructs " +
         "exactly this capped adjacency."),
 
-    // ── data-driven ANN width: bits = ⌈log2 n⌉ derived IN-PLAN ───────
-    // V11/V14 apply the bits ~ log2 n rule at DECLARATION time (8-bit
-    // fixture form, 12-bit probe form) — but at 100 TB the corpus size
-    // is a runtime fact, not a constant a human re-tunes per dataset.
-    // This form derives the signature width from the data: all
-    // KnnAutoMaxBits hyperplane signs are computed once per vector (a
-    // few extra codegen'd dot products — cheap next to the probe join),
-    // a 1-row broadcast scalar (the sim_mips_lsh_topk M pattern)
-    // carries bits = clamp(bitlen(n−1), min, max) and its low-bit mask,
-    // and the bucket is the signature's low `bits` bits — masking a
-    // MaxBits signature to width w IS the w-wide index (the first w
-    // hyperplanes), so the same declared query holds per-bucket load
-    // n/2^bits ~ 1 at ANY corpus size, and the oracle replays the
-    // count-derived width from the same parquet. bitlen via
-    // length(bin(n−1)) — bit-exact ⌈log2 n⌉ in BOTH engines where
-    // ln-based log2 sits on float edges (the graph_degree_hist lesson).
-    // Multiprobe flips are generated from a RUNTIME-length sequence
-    // (0..bits), so only active bits ever flip.
-    QueryDef(
-      "sim_knn_graph_auto",
-      (s, dir) => {
-        val (res, all) = knnGraphAutoPlan(s, dir)
-        try res.localCheckpoint(true) finally all.unpersist(false)
-      },
-      Some(knnGraphAutoDuckSql),
-      doc = s"Auto-width kNN graph (k=${Round13Queries.KnnK}): bits = " +
-        s"clamp(ceil(log2 n), $KnnAutoMinBits, $KnnAutoMaxBits) derived " +
-        "IN-PLAN from a 1-row broadcast count scalar via length(bin(n-1)) " +
-        "(bit-exact in both engines); the bucket is a MaxBits signature " +
-        "masked to its low `bits` bits, multiprobe flips generated from a " +
-        "runtime-length sequence — per-bucket load stays ~1 at any corpus " +
-        "size with no per-dataset retuning."),
-
     // ── auto-width ANN dedup (the D5c rule derived in-plan) ──────────
     // dedup_embedding_ann_scaled fixes bits=12 at declaration time;
     // this twin derives it from the corpus count — the same masking
@@ -660,13 +492,8 @@ object Round16Queries {
     // with no per-dataset width retune.
     QueryDef(
       "sim_semantic_clusters_auto",
-      (s, dir) => {
-        val knn = {
-          val (res, all) = knnGraphAutoPlan(s, dir)
-          try res.localCheckpoint(true) finally all.unpersist(false)
-        }
-        Round13Queries.clusterStage(s, dir, knn)
-      },
+      (s, dir) => Round13Queries.clusterStage(s, dir,
+        KnnGraphQueries.declared(KnnGraphQueries.autoGraph)(s, dir)),
       None,
       doc = "Semantic clusters over the auto-width kNN graph: the V12 " +
         "composition with the in-plan bits = clamp(ceil(log2 n), 8, 18) " +
@@ -684,11 +511,9 @@ object Round16Queries {
     // the spec union-find.
     QueryDef(
       "sim_semantic_edges_auto",
-      (s, dir) => Round13Queries.tauEdges {
-        val (res, all) = knnGraphAutoPlan(s, dir)
-        try res.localCheckpoint(true) finally all.unpersist(false)
-      },
-      Some(Round13Queries.tauEdgesSqlOver(knnAutoDuckCtes)),
+      (s, dir) => Round13Queries.tauEdges(
+        KnnGraphQueries.declared(KnnGraphQueries.autoGraph)(s, dir)),
+      Some(Round13Queries.tauEdgesSqlOver(KnnGraphQueries.knnAutoDuckCtes)),
       doc = "Canonical undirected tau-edges of the auto-width kNN graph " +
         "(bits = clamp(ceil(log2 n), 8, 18) derived in-plan) — the " +
         "exact CC input of sim_semantic_clusters_auto; hash-green " +

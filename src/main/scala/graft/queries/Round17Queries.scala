@@ -58,8 +58,8 @@ object Round17Queries {
 
   /** Arrival-order verdict reduction over a canonical pair set — the
     * ST27 semantics (dup_of = min earlier τ-passing ball-mate) as a
-    * pure function of (pairs, corpus): one definition for the declared
-    * batch twin and the ScaleProbe production-config pseudo-name.
+    * pure function of (pairs, corpus): one definition for every declared
+    * batch twin (the fixed-width, auto-width and trained-IVF pair rules).
     */
   private[graft] def annVerdict(pairs: DataFrame, v: DataFrame): DataFrame = {
     val verdict = pairs

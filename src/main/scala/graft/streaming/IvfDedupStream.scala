@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * the round-19 measured serving conclusion ("sampling doesn't preserve
   * mid-cosine recall, TRAINING does") applied to the online dedup
   * service. The quantizer is trained OFFLINE (a batch Lloyd job —
-  * `Round19Queries.trainedCentArray` — refreshed by a re-index event as
+  * `KnnGraphQueries.trainedCentArray` — refreshed by a re-index event as
   * the accepted corpus grows, the same posture as the auto-width
   * re-index note on ST27b) and rides into the stream as a STATIC 1-row
   * broadcast centroid array; an arriving vector computes its
@@ -75,7 +75,7 @@ object IvfDedupStream {
     * (the AnnDedupStream reduction).
     */
   def incrementalIvfDedup(vecs: DataFrame, centArray: DataFrame,
-      nprobe: Int = graft.queries.Round19Queries.KnnIvfNprobe,
+      nprobe: Int = graft.queries.KnnGraphQueries.KnnIvfNprobe,
       tau: Double = graft.queries.DedupQueries.CosineTau)
       : Dataset[AnnMatch] = {
     val spark = vecs.sparkSession

@@ -462,7 +462,8 @@ class PlanSpec extends SparkSpec {
   test("sim_knn_graph_ivf: compiled cell pass, keyed candidate join, pruned top-k") {
     // inspect the un-materialized pipeline (the declared row
     // localCheckpoints); the persisted cell stage is released after
-    val (res, cells) = graft.queries.Round19Queries.knnGraphIvfPlan(spark, sf())
+    val (res, cells) = graft.queries.KnnGraphQueries
+      .ivfGraph(graft.queries.Corpus.nvecs(spark, sf()))
     try {
       res.collect() // finalize AQE so the executed plan is the real one
       // full plan text (not outerPlan): the compiled cell pass lives
@@ -495,7 +496,7 @@ class PlanSpec extends SparkSpec {
           p.take(3000))
       assert(p.contains("vec_dot"),
         "cosine must run as the native codegen'd vec_dot:\n" + p.take(3000))
-    } finally cells.unpersist(false)
+    } finally cells.foreach(_.unpersist(false))
   }
 }
 

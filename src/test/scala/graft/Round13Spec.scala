@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round13Queries}
+import graft.queries.{KnnGraphQueries, QueryDef, Round13Queries}
 
 /** Round-13 operator invariants:
   *
@@ -29,7 +29,7 @@ import graft.queries.{QueryDef, Round13Queries}
 class Round13Spec extends SparkSpec {
 
   private def q(name: String) =
-    QueryDef.toQueriesMap(Round13Queries.defs)(name)
+    QueryDef.toQueriesMap(Round13Queries.defs ++ KnnGraphQueries.defs)(name)
 
   // ── label propagation ──────────────────────────────────────────────
 
@@ -256,7 +256,7 @@ class Round13Spec extends SparkSpec {
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       d / math.sqrt(na * nb)
     }
-    val k = Round13Queries.KnnK
+    val k = KnnGraphQueries.KnnK
     var hit = 0; var tot = 0
     vecs.foreach { case (v, av) =>
       val brute = vecs.filter(_._1 != v)

@@ -119,7 +119,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_auto: in-plan width rule + full combinatorial replay") {
-    import graft.queries.Round13Queries
+    import graft.queries.KnnGraphQueries
     val out = run("sim_knn_graph_auto").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
@@ -135,7 +135,7 @@ class Round16Spec extends SparkSpec {
       "fixture too small — the derived width never leaves the floor")
     val mask = (1 << bits) - 1
     // sequential-fold dot (the DotProduct expression's order), exactly
-    val tables = Round13Queries.knnTables(Round16Queries.KnnAutoMaxBits)
+    val tables = KnnGraphQueries.knnTables(Round16Queries.KnnAutoMaxBits)
     def dot(a: Array[Double], b: Seq[Double]): Double = {
       var acc = 0.0; var k = 0
       while (k < a.length) { acc += a(k) * b(k); k += 1 }
@@ -168,7 +168,7 @@ class Round16Spec extends SparkSpec {
           (qid, nid, r6(dot(nv, qv) / (nn * qn)))
         }
         .sortBy { case (_, nid, cos) => (-cos, nid) }
-        .take(Round13Queries.KnnK)
+        .take(KnnGraphQueries.KnnK)
         .zipWithIndex
         .map { case ((q, nid, cos), i) => (q, i + 1, nid, cos) }
     }.sortBy(x => (x._1, x._2)).toSeq

@@ -59,7 +59,7 @@ class Round19Spec extends SparkSpec {
         .sortBy(identity).map(_._2)
     val home = vecs.map { case (id, v) => id -> ranked(v).head }.toMap
     val probes = vecs.map { case (id, v) =>
-      id -> ranked(v).take(graft.queries.Round19Queries.KnnIvfNprobe).toSet
+      id -> ranked(v).take(graft.queries.KnnGraphQueries.KnnIvfNprobe).toSet
     }.toMap
     vecs.map { case (qid, qv) =>
       val cand = vecs.filter { case (nid, _) =>
@@ -67,7 +67,7 @@ class Round19Spec extends SparkSpec {
       val top = cand
         .map { case (nid, nv) => (nid, cosine6(qv, nv)) }
         .sortBy { case (nid, c) => (-c, nid) }
-        .take(graft.queries.Round13Queries.KnnK)
+        .take(graft.queries.KnnGraphQueries.KnnK)
         .zipWithIndex
         .map { case ((nid, c), i) => (i + 1, nid, c) }
       qid -> top.toSeq
@@ -91,8 +91,7 @@ class Round19Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_recall: arithmetic replays from an independent truth and the declared builds") {
-    import graft.queries.Round19Queries.KnnRecallPanel
-    import graft.queries.Round13Queries.KnnK
+    import graft.queries.KnnGraphQueries.{KnnK, KnnRecallPanel}
     // independent truth: brute top-k per panel query
     val truth: Map[Long, Set[Long]] = vecs.take(KnnRecallPanel).map {
       case (qid, qv) =>

@@ -57,7 +57,8 @@ class StreamingIvfDedupSpec extends SparkSpec {
 
   test("ST28 single-batch replay converges to the batch twin") {
     withRocksDb {
-      val ca = graft.queries.Round19Queries.trainedCentArray(spark, fixture)
+      val ca = graft.queries.KnnGraphQueries.trainedCentArray(
+        graft.queries.Corpus.nvecs(spark, fixture))
       val d = tmpDir("ivf-stream-one")
       graft.Tables.load(spark, fixture, "embeddings")
         .coalesce(1).write.mode("overwrite").parquet(d)
@@ -73,7 +74,8 @@ class StreamingIvfDedupSpec extends SparkSpec {
 
   test("ST28 multi-batch ordered replay converges (earlier vectors only in state)") {
     withRocksDb {
-      val ca = graft.queries.Round19Queries.trainedCentArray(spark, fixture)
+      val ca = graft.queries.KnnGraphQueries.trainedCentArray(
+        graft.queries.Corpus.nvecs(spark, fixture))
       val d = tmpDir("ivf-stream-multi")
       val ranges = Seq((Long.MinValue, 170L), (170L, 340L), (340L, Long.MaxValue))
       ranges.zipWithIndex.foreach { case ((lo, hi), i) => stage(d, lo, hi, i) }
@@ -105,7 +107,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
     //    ≡ the DECLARED full-corpus batch twin — zero generation-A
     //    leakage, exact landing on the oracle-checked semantics.
     withRocksDb {
-      import graft.queries.{Round19Queries, VectorOps}
+      import graft.queries.{Corpus, KnnGraphQueries, VectorOps}
       def vecsOf(df: DataFrame): DataFrame = df
         .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", VectorOps.norm(col("v")))
@@ -113,7 +115,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
       val prefixEmb = allEmb.filter(col("vec_id") < 340L)
 
       // generation A: prefix-trained quantizer, prefix stream
-      val caA = Round19Queries.trainedCentArrayFrom(vecsOf(prefixEmb))
+      val caA = KnnGraphQueries.trainedCentArray(vecsOf(prefixEmb))
       val dA = tmpDir("ivf-reindex-genA")
       prefixEmb.coalesce(1).write.mode("overwrite").parquet(dA)
       val gotA = EventStreams.runToMemoryAvailableNow(
@@ -121,7 +123,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
           AnnDedupStream.readEmbeddings(spark, dA), caA).toDF(),
         "conv_ivfdedup_genA", "append")
       val (twinA, stagesA) =
-        Round19Queries.annIvfTrainedPlanFrom(vecsOf(prefixEmb))
+        KnnGraphQueries.annIvfTrained(vecsOf(prefixEmb))
       val dupsA =
         try twinA.filter(col("status") === "dup")
           .select(col("vec_id"), col("dup_of"), col("cosine"))
@@ -133,7 +135,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
       // the refresh is REAL: the retrained quantizer must re-assign at
       // least one prefix vector (otherwise the arm could pass with
       // identical generations and prove nothing)
-      val caB = Round19Queries.trainedCentArray(spark, fixture)
+      val caB = KnnGraphQueries.trainedCentArray(Corpus.nvecs(spark, fixture))
       graft.functions.GraftFunctions.register(spark)
       def homes(ca: DataFrame): DataFrame = vecsOf(prefixEmb)
         .crossJoin(broadcast(ca))

@@ -13,5 +13,8 @@ OPENS=(java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflec
 JOPTS=()
 for p in "${OPENS[@]}"; do JOPTS+=(--add-opens "$p=ALL-UNNAMED"); done
 # (UI off and the UTC time zone come from graft.SessionProfile.)
+# ExitOnOutOfMemoryError: a main that exhausts its heap exits at once
+# (code 3) instead of lingering after Spark stops its context.
 exec java "${JOPTS[@]}" "-Xmx${SPARK_DRIVER_MEM:-24g}" \
+  -XX:+ExitOnOutOfMemoryError \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
