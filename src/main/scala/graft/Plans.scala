@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Corpus, KnnGraphQueries}
+import graft.queries.{Corpus, GraphQueries, KnnGraphQueries}
 
 /** Regenerates PLANS.md content: prints the AQE-final physical plan of
   * each named query (args, or the default flagship set) at sf0.001.
@@ -109,81 +109,42 @@ object Plans {
         case "sim_knn_graph" | "sim_knn_graph_auto" | "sim_knn_graph_ivf" |
             "sim_knn_graph_ivf_kmeans" | "sim_knn_graph_ivf_scaled" |
             "sim_knn_graph_ivf_hier" =>
-          val (res, stages) = KnnGraphQueries.Builds.find(_.name == name).get
+          KnnGraphQueries.Builds.find(_.name == name).get
             .build(Corpus.nvecs(spark, dir))
-          (res, Some(stages))
-        // the declared row checkpoints; dump the un-materialized pipeline
+        // the declared rows checkpoint; dump the un-materialized pipelines
         case "graph_butterflies_capped" =>
-          val (res, capped, cs) =
-            graft.queries.Round15Queries.cappedButterflies(spark, dir)
-          (res, Some(Seq(capped, cs)))
-        // the declared row's final plan is a projection over the last
-        // round's blocks; the novel shape is ONE bcast=false round over
-        // the persisted src-partitioned edge layout
-        case "graph_label_prop_partitioned_round" =>
-          val edges = graft.queries.RetrievalQueries
-            .transactionEdges(spark, dir, partitioned = true)
-          val l0 = edges.select(org.apache.spark.sql.functions.col("src").as("node"))
-            .distinct()
-            .withColumn("lbl", org.apache.spark.sql.functions.col("node"))
-          (graft.queries.Round13Queries.lpaRound(edges, l0, bcast = false),
-            Some(Seq(edges)))
-        // the declared rows checkpoint; dump the un-materialized pipelines
-        case "graph_triangles" =>
-          val (res, o) = graft.queries.Round15bQueries.trianglesPlan(spark, dir)
-          (res, Some(Seq(o)))
+          GraphQueries.cappedButterflies(spark, dir)
+        case "graph_triangles" => GraphQueries.triangles(spark, dir, bcast = true)
         case "graph_triangles_partitioned" =>
-          val (res, o) = graft.queries.Round15bQueries
-            .trianglesPlan(spark, dir, bcast = false)
-          (res, Some(Seq(o)))
-        case "graph_clustering_coeff" =>
-          val (res, stages) = graft.queries.Round15bQueries.lccPlan(spark, dir)
-          (res, Some(stages))
-        // the declared row's final plan is a projection over the last
-        // peel's blocks; the novel shape is ONE co-partitioned peel over
-        // the checkpointed src-partitioned edge layout
-        case "graph_kcore_partitioned_peel" =>
-          val edges = graft.queries.RetrievalQueries
-            .transactionEdges(spark, dir, partitioned = true)
-          val e0 = edges.select(
-            org.apache.spark.sql.functions.col("src"),
-            org.apache.spark.sql.functions.col("dst"))
-          val k1 = graft.queries.Round16Queries.firstSurvivors(e0)
-          (graft.queries.Round16Queries.peelRound(e0, k1), Some(Seq(edges)))
-        // the declared rows checkpoint; dump the un-materialized pipelines
-        case "graph_triangles_capped" =>
-          val (res, e, capped) =
-            graft.queries.Round16Queries.cappedTrianglesPlan(spark, dir)
-          (res, Some(Seq(e, capped)))
+          GraphQueries.triangles(spark, dir, bcast = false)
+        case "graph_clustering_coeff" => GraphQueries.clustering(spark, dir)
+        case "graph_triangles_capped" => GraphQueries.cappedTriangles(spark, dir)
+        // the partitioned rows' final plan is a projection over the last
+        // round's blocks; the novel shape is ONE co-partitioned round
+        // over the checkpointed src-partitioned edge layout
+        case "graph_label_prop_partitioned_round" =>
+          GraphQueries.lpaOneRound(spark, dir)
+        case "graph_kcore_partitioned_peel" => GraphQueries.kcoreOnePeel(spark, dir)
         case "st_incremental_ann" =>
-          val (res, stages) =
-            graft.queries.Round17Queries.annIncrementalPlan(spark, dir)
-          (res, Some(stages))
+          graft.queries.Round17Queries.annIncrementalPlan(spark, dir)
         case "sim_ivf_topk_auto" =>
           val (res, all) =
             graft.queries.Round17Queries.ivfTopkAutoPlan(spark, dir)
-          (res, Some(Seq(all)))
+          (res, Seq(all))
         // the declared row checkpoints; dump with the truth pipeline
         // left un-materialized so the whole shape prints
         case "sim_index_recall" =>
-          val (res, stages) = graft.queries.Round17bQueries
-            .indexRecallPlan(spark, dir, eagerTruth = false)
-          (res, Some(stages))
+          graft.queries.Round17bQueries.indexRecallPlan(spark, dir, eagerTruth = false)
         // the declared rows checkpoint; dump the un-materialized forms
         case "st_incremental_ann_auto" =>
           val (pairs, v, sigs) =
             graft.queries.Round16Queries.annAutoPairs(spark, dir)
-          (graft.queries.Round17Queries.annVerdict(pairs, v),
-            Some(Seq(v, sigs)))
+          (graft.queries.Round17Queries.annVerdict(pairs, v), Seq(v, sigs))
         case "sim_lsh_topk_auto" =>
-          val (res, stages) =
-            graft.queries.Round18Queries.lshTopkAutoPlan(spark, dir)
-          (res, Some(stages))
+          graft.queries.Round18Queries.lshTopkAutoPlan(spark, dir)
         // the declared row checkpoints; dump the un-materialized twin
         case "st_incremental_ann_ivf" =>
-          val (res, stages) =
-            KnnGraphQueries.annIvfTrained(Corpus.nvecs(spark, dir))
-          (res, Some(stages))
+          KnnGraphQueries.annIvfTrained(Corpus.nvecs(spark, dir))
         // ONE un-materialized NN-Descent round over the checkpointed
         // seed (the declared row checkpoints every round; the novel
         // shape is the round body itself)
@@ -192,7 +153,7 @@ object Plans {
             KnnGraphQueries.scaledGraph(Corpus.nvecs(spark, dir))
           val g0 = seed.localCheckpoint(true)
           val (round1, av) = KnnGraphQueries.nndRoundStaged(stages.last, g0)
-          (round1, Some(stages :+ av))
+          (round1, stages :+ av)
         // ONE un-materialized grouped fine-Lloyd round over the
         // persisted coarse-routed corpus and the checkpointed fine
         // init (the build checkpoints every round; the novel shape is
@@ -203,9 +164,8 @@ object Plans {
           val routed = KnnGraphQueries.coarseRouted(corpus).persist()
           routed.count()
           val init = KnnGraphQueries.fineInit(routed, corpus).localCheckpoint()
-          (KnnGraphQueries.fineLloydRound(routed, init),
-            Some(Seq(routed, corpus)))
-        case _ => (SparkEntry.queries(name)(spark, dir), None)
+          (KnnGraphQueries.fineLloydRound(routed, init), Seq(routed, corpus))
+        case _ => (SparkEntry.queries(name)(spark, dir), Nil)
       }
       df.collect() // finalize AQE so the printed plan is the executed one
       println(s"\n===== $name =====")
@@ -220,7 +180,7 @@ object Plans {
       // builders leave them cached for the caller to scope);
       // releaseCheckpoint dispatches on the materialization, so it
       // frees persisted AND checkpointed layouts alike
-      pinned.foreach(_.foreach(graft.operators.Layouts.releaseCheckpoint))
+      pinned.foreach(graft.operators.Layouts.releaseCheckpoint)
       spark.catalog.clearCache()
     }
     spark.stop()

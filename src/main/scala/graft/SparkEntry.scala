@@ -23,7 +23,8 @@ object SparkEntry {
       Round12Queries.defs ++ Round12bQueries.defs ++ Round13Queries.defs ++
       Round13bQueries.defs ++ Round13cQueries.defs ++ Round15Queries.defs ++
       Round15bQueries.defs ++ Round16Queries.defs ++ Round17Queries.defs ++
-      Round17bQueries.defs ++ Round18Queries.defs ++ KnnGraphQueries.defs
+      Round17bQueries.defs ++ Round18Queries.defs ++ KnnGraphQueries.defs ++
+      GraphQueries.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * TPC-H Q1 shape: scan → filter → project → hash agg → sort.

@@ -156,6 +156,16 @@ object Layouts {
   def spread(df: DataFrame): DataFrame =
     df.repartition(scaledParallelism(df))
 
+  /** A `(result, stages)` pipeline's result checkpointed (composing
+    * consumers read blocks, not lineage), then its stages released —
+    * through `releaseCheckpoint`, so persisted stages and checkpointed
+    * layouts alike are freed.
+    */
+  def materialize(built: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val (res, stages) = built
+    try res.localCheckpoint(true) finally stages.foreach(releaseCheckpoint)
+  }
+
   /** Free a materialized round's blocks, whatever materialized it:
     * localCheckpoint → unpersist the checkpointed RDD directly (see
     * class scaladoc — `Dataset.unpersist` never finds those blocks);

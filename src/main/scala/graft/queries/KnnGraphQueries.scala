@@ -20,10 +20,11 @@ import graft.operators.Layouts
   *    bounded-load, hierarchical (trained fine level) — served by ONE
   *    candidate join + exact cosine + top-k tail (`cellGraphServe`);
   *  - NN-Descent refinement over either bounded-load cell stage.
-  * `materialize` checkpoints a build and releases its stages, `declared`
-  * applies it to the parquet corpus, and ONE registry (`Builds`) drives
-  * the nine declared rows, the recall audit's panel and the audit's
-  * DuckDB arms — so the audit cannot measure a drifted copy of a row.
+  * `Layouts.materialize` checkpoints a build and releases its stages,
+  * `declared` applies it to the parquet corpus, and ONE registry
+  * (`Builds`) drives the nine declared rows, the recall audit's panel
+  * and the audit's DuckDB arms — so the audit cannot measure a drifted
+  * copy of a row.
   *
   * Reference scope note: alxmancilla/parquet-demo has no similarity
   * machinery (its compute surface is schema-driven Parquet I/O,
@@ -145,18 +146,10 @@ object KnnGraphQueries {
     */
   type Build = DataFrame => (DataFrame, Seq[DataFrame])
 
-  /** A build's graph checkpointed (composing consumers read blocks, not
-    * lineage), its stages released.
-    */
-  private[graft] def materialize(build: Build)(base: DataFrame): DataFrame = {
-    val (res, stages) = build(base)
-    try res.localCheckpoint(true) finally stages.foreach(_.unpersist(false))
-  }
-
   /** A build as a declared row: materialized over the parquet corpus. */
   private[graft] def declared(build: Build)
       : (SparkSession, String) => DataFrame =
-    (s, dir) => materialize(build)(Corpus.nvecs(s, dir))
+    (s, dir) => Layouts.materialize(build(Corpus.nvecs(s, dir)))
 
   /** The two-table multiprobe sign-LSH kNN graph at signature width
     * `bits`. Stage: the persisted bucketed corpus.
@@ -833,14 +826,14 @@ object KnnGraphQueries {
       require(corpus eq base, "audit memo is corpus-scoped")
       b.label match {
         case "ivf_kmeans_cell" =>
-          materialize(c => served(Seq(trainedCells(c, Some(ca)))))(corpus)
+          Layouts.materialize(served(Seq(trainedCells(corpus, Some(ca)))))
         case "ivf_scaled_cell" => topK(coarseSeed)
         case "nnd" =>
           nndChainOverSeed(coarse.last, coarseSeed).localCheckpoint(true)
         case "ivf_hier_cell" => topK(hierSeed)
         case "nnd_hier" =>
           nndChainOverSeed(hier.last, hierSeed).localCheckpoint(true)
-        case _ => materialize(b.build)(corpus)
+        case _ => Layouts.materialize(b.build(corpus))
       }
     }
 

@@ -7,12 +7,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
 
-/** Round-13 batch: graph communities, sequential monitoring, corpus
-  * statistics, privacy, and semantic clusters —
+/** Round-13 batch: sequential monitoring, corpus statistics, privacy,
+  * and semantic clusters —
   *
-  *  - LABEL PROPAGATION communities (Raghavan et al. 2007): synchronous
-  *    most-frequent-neighbor-label rounds over the transaction graph —
-  *    the density-community lens next to the connectivity-only CC;
   *  - CUSUM change-point detection (Page 1954), global- and
   *    trailing-baseline forms. The recursion S_t = max(0, S_{t-1}+y_t)
   *    is evaluated CLOSED-FORM via the Lindley/reflection identity
@@ -38,13 +35,6 @@ object Round13Queries {
   import SimilarityQueries.NBits
   import KnnGraphQueries.{KnnK, declared, knnDuckCtes, lshGraph}
 
-  /** Synchronous label-propagation rounds (fixed — both engines replay
-    * the identical unrolled recursion; bipartite graphs can oscillate,
-    * so a fixed round count IS the declared semantics, not a
-    * convergence claim).
-    */
-  val LpaIters = 4
-
   /** CUSUM reference value k (in σ units) and decision threshold h. */
   val CusumK = 0.5
   val CusumH = 4.0
@@ -65,11 +55,6 @@ object Round13Queries {
 
   /** Heaps-law prefix snapshot count. */
   val HeapsCuts = 10
-
-  private val nodeStr =
-    "IF(node % 2 = 0, concat('c', node div 2), concat('s', node div 2))"
-  private val lblStr =
-    "IF(lbl % 2 = 0, concat('c', lbl div 2), concat('s', lbl div 2))"
 
   /** Shared hourly (event_type, ws, n) rollup — the ev_rate_anomaly
     * series (one map-side-combinable shuffle collapses the corpus;
@@ -109,190 +94,6 @@ object Round13Queries {
       .withColumn("cusum", round((col("cs").cast(DecimalType(30, 9))
         - col("mn").cast(DecimalType(30, 9))).cast(DoubleType), 6))
       .withColumn("is_alarm", col("cusum") > CusumH)
-  }
-
-  /** Final LPA label table (node, lbl) after LpaIters synchronous
-    * rounds — shared by graph_label_prop(+_partitioned) and
-    * graph_modularity(+_partitioned).
-    *
-    * @param bcast join strategy for the per-round edges ⋈ labels join:
-    *   `true` broadcasts the node-sized label table (fixture-fast,
-    *   assumes nodes ≪ broadcast budget); `false` is the R6
-    *   co-partitioned layout — edges checkpointed hash-partitioned on
-    *   `src`, each round shuffle-hash-joins the label table into that
-    *   fixed layout (the edge side never re-exchanges) and
-    *   localCheckpoints the round result (the pagerank_partitioned
-    *   discipline: at scale, materialized rounds beat one deep nested
-    *   plan — ×50 probe measured 127.7 s nested vs ~38 s
-    *   checkpoint-at-a-time). Bit-identical label tables either way
-    *   (exact integer counts, deterministic min-label argmax).
-    */
-  private[graft] def lpaFinal(s: SparkSession, dir: String,
-      bcast: Boolean = true): (DataFrame, DataFrame) = {
-    val edges = RetrievalQueries.transactionEdges(s, dir, partitioned = !bcast)
-    val l0 = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    val fin = (1 to LpaIters).foldLeft(l0) { (l, i) =>
-      val next = lpaRound(edges, l, bcast)
-      if (bcast) next
-      else {
-        // localCheckpoint is EAGER: once round i's blocks exist, round
-        // i−1's node-sized blocks are dead weight for the rest of the
-        // job (round i's plan scans its OWN rdd, no lineage back), and
-        // neither clearCache() nor Dataset.unpersist releases them —
-        // the blocks belong to the checkpointed RDD, which the cache
-        // manager never sees. Free that RDD directly. Round 0 (l0) is
-        // plain lineage: skip.
-        val cp = next.localCheckpoint()
-        if (i > 1) graft.operators.Layouts.releaseCheckpoint(l)
-        cp
-      }
-    }
-    (edges, fin)
-  }
-
-  /** One synchronous LPA round: edges ⋈ labels (broadcast or
-    * co-partitioned shuffle-hash into the edges' checkpointed layout —
-    * the edge side never re-exchanges), one (node, lbl) count shuffle,
-    * node-partitioned argmax window. Exposed so the spec can pin the
-    * bcast=false round plan (exactly 3 exchanges: label side, count
-    * rollup, argmax window — none above the edge scan).
-    */
-  private[graft] def lpaRound(edges: DataFrame, l: DataFrame,
-      bcast: Boolean): DataFrame = {
-    val wArg = Window.partitionBy(col("node"))
-      .orderBy(col("c").desc, col("lbl").asc)
-    val lbls = l.withColumnRenamed("node", "src")
-    val joined =
-      if (bcast) edges.join(broadcast(lbls), "src")
-      else edges.join(lbls.hint("shuffle_hash"), "src")
-    joined
-      .select(col("dst").as("node"), col("lbl"))
-      .groupBy(col("node"), col("lbl"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("rn", row_number().over(wArg))
-      .filter(col("rn") === 1)
-      .select(col("node"), col("lbl"))
-  }
-
-  /** The (node, community, community_size) projection over a final LPA
-    * label table — shared by both graph_label_prop forms.
-    */
-  private[queries] def lpaProject(fin: DataFrame): DataFrame = {
-    val wc = Window.partitionBy(col("lbl"))
-    fin
-      .withColumn("community_size", count(lit(1)).over(wc))
-      .select(expr(nodeStr).as("node"), expr(lblStr).as("community"),
-        col("community_size"))
-      .orderBy(col("node"))
-  }
-
-  /** Newman-Girvan modularity of the LPA partition — shared plan for
-    * graph_modularity (broadcast label joins) and
-    * graph_modularity_partitioned (shuffle-hash label joins over the
-    * src-partitioned edge layout; no node-sized broadcast anywhere).
-    * Exact integer counting in both forms ⇒ bit-identical output.
-    */
-  private[graft] def modularityPlan(s: SparkSession, dir: String,
-      bcast: Boolean): DataFrame = {
-    val (edges, fin0) = lpaFinal(s, dir, bcast)
-    // four consumers below (e_in twice, K_c, node count) — cut the
-    // 4-round LPA lineage once; the label table is node-sized. The
-    // bcast=false path already returns a checkpointed final round —
-    // don't copy its blocks a second time.
-    val fin = if (bcast) fin0.localCheckpoint() else fin0
-    def lblJoin(df: DataFrame, lbls: DataFrame, key: String): DataFrame =
-      if (bcast) df.join(broadcast(lbls), key)
-      else df.join(lbls.hint("shuffle_hash"), key)
-    val deg = edges.select(col("src").as("node"), col("deg")).distinct()
-    val eIn = lblJoin(
-      lblJoin(edges, fin.select(col("node").as("src"), col("lbl").as("la")), "src"),
-      fin.select(col("node").as("dst"), col("lbl").as("lb")), "dst")
-      .filter(col("la") === col("lb"))
-      .agg(count(lit(1)).as("e_in"))
-    val kc = lblJoin(deg, fin, "node")
-      .groupBy(col("lbl")).agg(sum(col("deg")).as("kc"))
-    val sk = kc.agg(
-      count(lit(1)).as("n_communities"),
-      sum((col("kc") * col("kc")).cast(DecimalType(38, 0))).as("sk2"))
-    val nn = fin.agg(count(lit(1)).as("n_nodes"))
-    val ee = edges.agg(count(lit(1)).as("e"))
-    val out = nn.crossJoin(broadcast(sk)).crossJoin(broadcast(eIn))
-      .crossJoin(broadcast(ee))
-      .select(col("n_nodes"), col("n_communities"),
-        expr("e div 2").as("m_edges"),
-        round(expr(
-          "CAST(e_in AS DOUBLE) / e - CAST(sk2 AS DOUBLE) / (CAST(e AS DOUBLE) * e)"), 6)
-          .as("modularity"))
-    if (bcast) out
-    else {
-      // materialize the 1-row result, then release the persisted edge
-      // layout the rollups above consumed (CacheHygieneSpec policy)
-      val mat = out.localCheckpoint()
-      graft.operators.Layouts.releaseCheckpoint(edges)
-      mat
-    }
-  }
-
-  /** Shared oracle for graph_label_prop and graph_label_prop_partitioned
-    * (bit-identical label tables by construction).
-    */
-  private[queries] def lpaSql: String =
-    s"""WITH $lpaDuckCtes
-        SELECT
-          CASE WHEN node % 2 = 0 THEN 'c' || (node // 2)
-               ELSE 's' || (node // 2) END AS node,
-          CASE WHEN lbl % 2 = 0 THEN 'c' || (lbl // 2)
-               ELSE 's' || (lbl // 2) END AS community,
-          count(*) OVER (PARTITION BY lbl) AS community_size
-        FROM l$LpaIters
-        ORDER BY node"""
-
-  /** Shared oracle for graph_modularity and graph_modularity_partitioned. */
-  private[queries] def modularitySql: String =
-    s"""WITH $lpaDuckCtes,
-        deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY src),
-        e_in_t AS (
-          SELECT count(*) AS e_in
-          FROM edges e
-          JOIN l$LpaIters a ON e.src = a.node
-          JOIN l$LpaIters b ON e.dst = b.node
-          WHERE a.lbl = b.lbl),
-        kc AS (
-          SELECT l.lbl, sum(deg) AS kc
-          FROM deg d JOIN l$LpaIters l ON d.node = l.node
-          GROUP BY l.lbl),
-        sk AS (
-          SELECT count(*) AS n_communities, sum(kc * kc) AS sk2 FROM kc),
-        nn AS (SELECT count(*) AS n_nodes FROM l$LpaIters),
-        ee AS (SELECT count(*) AS e FROM edges)
-      SELECT n_nodes, n_communities, e // 2 AS m_edges,
-        round(CAST(e_in AS DOUBLE) / e - CAST(sk2 AS DOUBLE) / (CAST(e AS DOUBLE) * e), 6)
-          AS modularity
-      FROM nn CROSS JOIN sk CROSS JOIN e_in_t CROSS JOIN ee"""
-
-  /** The LPA rounds + edge CTEs shared by both graph oracles. */
-  private def lpaDuckCtes: String = {
-    val rounds = (1 to LpaIters).map { i =>
-      s"""l$i AS (
-         SELECT node, lbl FROM (
-           SELECT e.dst AS node, l.lbl, count(*) AS c,
-             row_number() OVER (PARTITION BY e.dst
-               ORDER BY count(*) DESC, l.lbl ASC) AS rn
-           FROM edges e JOIN l${i - 1} l ON e.src = l.node
-           GROUP BY e.dst, l.lbl) WHERE rn = 1)"""
-    }.mkString(",\n")
-    s"""pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      edges AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL
-        SELECT b AS src, a AS dst FROM pairs),
-      l0 AS (
-        SELECT node, node AS lbl
-        FROM (SELECT DISTINCT src AS node FROM edges)),
-      $rounds"""
   }
 
   /** kNN graph → τ-edges → connected components, width-parameterized —
@@ -367,27 +168,6 @@ object Round13Queries {
     tauEdgesSqlOver(knnDuckCtes(bits))
 
   val defs: Seq[QueryDef] = Seq(
-
-    // ── label-propagation communities (Raghavan et al. 2007) ─────────
-    // The density lens on the transaction graph: CC answers "connected
-    // at all?", LPA answers "which tightly-co-ordering block?". Each
-    // synchronous round: every node adopts its neighbors' most frequent
-    // label (tie → smallest label id). Per round: edges ⋈ broadcast
-    // labels (the graph_pagerank shape — the label table is node-sized)
-    // + ONE groupBy(node, lbl) shuffle + a node-partitioned argmax
-    // window on the label-bounded aggregate. The checkpointed edge list
-    // is shared with every other graph op; the co-partitioned rankJoin
-    // form applies verbatim when the node table outgrows broadcast.
-    QueryDef(
-      "graph_label_prop",
-      (s, dir) => lpaProject(lpaFinal(s, dir)._2),
-      Some(lpaSql),
-      doc = s"Label propagation ($LpaIters synchronous rounds, " +
-        "most-frequent-neighbor label, min-label ties): per round one " +
-        "edges x broadcast-labels join + one (node, lbl) count shuffle " +
-        "+ a node-partitioned argmax window; shared checkpointed edge " +
-        "list; the co-partitioned rank-join form applies when the node " +
-        "table outgrows broadcast."),
 
     // ── CUSUM change-point, global baseline (Page 1954) ──────────────
     // Standardize each type's hourly counts against the type's WHOLE
@@ -714,23 +494,6 @@ object Round13Queries {
       doc = s"l-diversity audit (l=$LDiversity) over (event_type, day) " +
         "QI cells with user_id as the sensitive attribute, plus the " +
         "dominant-user share; two stacked rollups, output QI-bounded."),
-
-    // ── modularity of the LPA partition (Newman & Girvan 2004) ───────
-    // The quality score of a community partition: Q = Σ_c [e_c/E −
-    // (K_c/E)²] with E the directed (symmetric-list) edge count, e_c
-    // the within-community directed edges, K_c the community degree
-    // sum. Everything is exact integer counting — two broadcast label
-    // joins + community-bounded rollups; the one double expression is
-    // the final display. The number a curation pipeline actually reads
-    // before trusting the communities ("is Q ≫ 0?").
-    QueryDef(
-      "graph_modularity",
-      (s, dir) => modularityPlan(s, dir, bcast = true),
-      Some(modularitySql),
-      doc = "Newman-Girvan modularity of the LPA partition: Q = e_in/E - " +
-        "sum_c (K_c/E)^2, all exact integer counting (two broadcast " +
-        "label joins, community-bounded rollups), one final double; the " +
-        "partition-quality number read before trusting communities."),
 
     // ── semantic clusters: kNN graph → τ-edges → connected components ─
     // The SemDeDup/embedding-clustering composition: keep kNN edges at

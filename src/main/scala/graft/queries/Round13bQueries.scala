@@ -7,16 +7,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.Tables
 import graft.queries.Corpus.{h60Duck, h60Spark}
 
-/** Round-13 batch 2: the IVFPQ serving composition, k-core graph
-  * pruning, event-transition statistics, and a DP quantile —
+/** Round-13 batch 2: the IVFPQ serving composition, event-transition
+  * statistics, and a DP quantile —
   *
   *  - sim_ivfpq_topk: FAISS `IndexIVFPQ`'s shape (Jégou et al. 2011
   *    §III — coarse inverted-file restriction × PQ/ADC scoring × exact
   *    re-rank), composed from the declared V2 cell assignment and the
   *    P-family PQ codebook; the no-residual variant (codes quantize raw
   *    vectors, not cell residuals) — stated, not hidden;
-  *  - graph_kcore: bounded-round k-core peeling (Seidman 1983) — the
-  *    spam/quality graph prune that drops weakly-attached nodes;
   *  - ev_transition_matrix: per-user event-type Markov transition
   *    counts/probabilities (the session-model statistic);
   *  - pipe_dp_quantile: ε-DP median via the exponential mechanism
@@ -31,53 +29,11 @@ object Round13bQueries {
   import SimilarityQueries.{CentroidEvery, CentroidCap, NProbe}
   import Round11Queries.{PqM, PqSubDim, PqK, PqCentEvery, PqShortlist, PqTopK, PqNQueries}
 
-  /** k-core degree threshold and bounded peel rounds (a fixed unrolled
-    * recursion both engines replay; the spec checks the fixture reaches
-    * the true fixed point inside the bound).
-    */
-  val KcoreK = 10
-  val KcorePeels = 4
-
   /** Exponential-mechanism privacy budget. */
   val DpqEpsilon = 1.0
 
   /** Bootstrap replicate count. */
   val BootB = 100
-
-  private[queries] val nodeStr =
-    "IF(node % 2 = 0, concat('c', node div 2), concat('s', node div 2))"
-
-  /** The unrolled k-core peel oracle — SHARED by graph_kcore and its
-    * co-partitioned twin (`graph_kcore_partitioned`, Round16Queries):
-    * the join strategy cannot change exact integer peeling, so both
-    * replay the same SQL.
-    */
-  private[queries] def kcoreSql: String = {
-    val rounds = (1 to KcorePeels).map { i =>
-      s"""k$i AS (
-          SELECT src FROM (
-            SELECT src, count(*) AS deg FROM e${i - 1} GROUP BY src)
-          WHERE deg >= $KcoreK),
-        e$i AS (
-          SELECT e.src, e.dst FROM e${i - 1} e
-          JOIN k$i a ON e.src = a.src
-          JOIN k$i b ON e.dst = b.src)"""
-    }.mkString(",\n")
-    s"""WITH pairs AS (
-        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      e0 AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL
-        SELECT b AS src, a AS dst FROM pairs),
-      $rounds
-      SELECT
-        CASE WHEN node % 2 = 0 THEN 'c' || (node // 2)
-             ELSE 's' || (node // 2) END AS node,
-        deg
-      FROM (SELECT src AS node, count(*) AS deg FROM e$KcorePeels GROUP BY src)
-      ORDER BY node"""
-  }
 
   /** The IVFPQ oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
   private[queries] lazy val ivfpqTopkDuckSql: String =
@@ -260,40 +216,6 @@ object Round13bQueries {
         "the corpus, PQ codes keep the scanned payload at 8 B/vector, " +
         "exact re-rank touches full vectors only for the shortlist; ONE " +
         "rollup shuffle in the serving path."),
-
-    // ── k-core peeling (Seidman 1983) ────────────────────────────────
-    // The graph prune a link-spam/quality pass runs: nodes with degree
-    // < k are peeled, which lowers neighbors' degrees, so peel again —
-    // KcorePeels bounded rounds, unrolled identically in both engines.
-    // Each round: ONE degree rollup over the current edge list + two
-    // broadcast semi-joins (the surviving-node set is node-sized).
-    // The spec checks the fixture reaches the true fixed point inside
-    // the bound, so the bound is an engine guardrail, not a semantic
-    // approximation there.
-    QueryDef(
-      "graph_kcore",
-      (s, dir) => {
-        val e0 = RetrievalQueries.transactionEdges(s, dir)
-          .select(col("src"), col("dst"))
-        val eN = (1 to KcorePeels).foldLeft(e0) { (e, _) =>
-          val kept = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= KcoreK)
-            .select(col("src"))
-          e.join(broadcast(kept), Seq("src"))
-            .join(broadcast(kept.withColumnRenamed("src", "dst")), Seq("dst"))
-            .select(col("src"), col("dst"))
-        }
-        eN.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-          .select(expr(nodeStr).as("node"), col("deg"))
-          .orderBy(col("node"))
-      },
-      Some(kcoreSql),
-      doc = s"k-core peeling (k=$KcoreK, $KcorePeels unrolled rounds): " +
-        "per round one degree rollup + two broadcast semi-joins; the " +
-        "spam/quality prune that drops weakly-attached nodes; spec " +
-        "verifies the fixture reaches the true fixed point in-bound. " +
-        "Assumes a broadcastable surviving-node set — past that, use " +
-        "graph_kcore_partitioned (the declared co-partitioned twin)."),
 
     // ── per-user event-type transition matrix ────────────────────────
     // The Markov session model: P(next event type | current), counted

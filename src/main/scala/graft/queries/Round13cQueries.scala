@@ -5,16 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Round-13 batch 3: readability scoring, bipartite motif counting,
-  * and hard-negative mining —
+/** Round-13 batch 3: readability scoring and hard-negative mining —
   *
   *  - text_readability: Flesch reading-ease + Flesch-Kincaid grade
   *    (Kincaid et al. 1975) from deterministic sentence/word/syllable
   *    counts — the classic quality signal next to the Gopher rules;
-  *  - graph_butterflies: butterfly (2×2 biclique) counting (Sanei-Mehri
-  *    et al. 2018) — the bipartite graph's clustering primitive
-  *    (triangles cannot exist in a bipartite graph, butterflies are the
-  *    smallest cohesion motif);
   *  - sim_hard_negatives: DPR-style hard-negative mining (Karpukhin
   *    et al. 2020) — per query, the top-k most similar vectors with a
   *    DIFFERENT label: similar enough to be hard, wrong by label.
@@ -95,61 +90,6 @@ object Round13cQueries {
       doc = "Flesch reading-ease + Flesch-Kincaid grade (Kincaid 1975) " +
         "from deterministic sentence/word/vowel-group counts; " +
         "zero-shuffle narrow pass, plain double ratios of exact ints."),
-
-    // ── butterfly counting on the bipartite transaction graph ────────
-    // Triangles cannot exist in a bipartite graph; the smallest
-    // cohesion motif is the BUTTERFLY (2 customers × 2 suppliers, all
-    // four edges). Count per the wedge recipe (Sanei-Mehri 2018 §3):
-    // per customer pair, w = |shared suppliers| ⇒ butterflies =
-    // Σ_pairs C(w, 2). The pair stream comes from a per-supplier
-    // self-join — Σ deg² wedges, the documented cost center (at scale:
-    // hub-cap/sampling variants per the paper; the transaction graph's
-    // supplier degrees are order-bounded). Output: total butterflies +
-    // wedge count + the per-customer-pair max (all exact integers).
-    QueryDef(
-      "graph_butterflies",
-      (s, dir) => {
-        val orders = Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"))
-        val line = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"))
-        val cs = line.join(orders, line("l_orderkey") === orders("o_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-          .distinct()
-        val wedges = cs.as("a").join(cs.as("b"),
-            col("a.sp") === col("b.sp") && col("a.c") < col("b.c"))
-          .select(col("a.c").as("c1"), col("b.c").as("c2"))
-        val pairs = wedges.groupBy(col("c1"), col("c2"))
-          .agg(count(lit(1)).as("w"))
-        pairs.agg(
-            sum(expr("w * (w - 1) div 2")).as("butterflies"),
-            sum(col("w")).as("wedges"),
-            count(lit(1)).as("n_pairs"),
-            max(col("w")).as("max_shared"))
-          .select(col("butterflies"), col("wedges"), col("n_pairs"),
-            col("max_shared"))
-      },
-      Some("""WITH cs AS (
-          SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        wedges AS (
-          SELECT a.c AS c1, b.c AS c2
-          FROM cs a JOIN cs b ON a.sp = b.sp AND a.c < b.c),
-        pairs AS (
-          SELECT c1, c2, count(*) AS w FROM wedges GROUP BY c1, c2)
-        SELECT CAST(sum(w * (w - 1) // 2) AS BIGINT) AS butterflies,
-          CAST(sum(w) AS BIGINT) AS wedges,
-          count(*) AS n_pairs,
-          max(w) AS max_shared
-        FROM pairs"""),
-      doc = "Butterfly (2x2 biclique) counting (Sanei-Mehri 2018): " +
-        "per-supplier wedge self-join, customer-pair shared-supplier " +
-        "rollup, butterflies = sum C(w,2); all exact integers; the " +
-        "bipartite cohesion motif (triangles cannot exist here). " +
-        "TEACHING/verify form — the wedge fan-out is sum deg^2, " +
-        "quadratic in hub degree; past fixture scale use " +
-        "graph_butterflies_capped (the declared node-linear twin, " +
-        "the D4->D4b pattern)."),
 
     // ── DPR-style hard-negative mining (Karpukhin et al. 2020) ───────
     // The contrastive-training data op: for each query vector, the

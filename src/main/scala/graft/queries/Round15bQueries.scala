@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,20 +23,6 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   *    unlike ln/exp, which are not correctly-rounded and would make the
   *    classic exponential-jump reservoir engine-dependent), so the
   *    sample AND the estimates replay exactly in DuckDB: hash-green.
-  *  - graph_triangles: DEGREE-ORDERED triangle counting (Schank &
-  *    Wagner 2005; the MapReduce form in Suri & Vassilvitskii, WWW
-  *    2011) over the part co-order graph. Orienting every edge from
-  *    its lower-(degree, id) endpoint bounds out-degree by O(√m), so
-  *    the wedge self-join does Σ outdeg² ≤ O(m^1.5) work TOTAL and a
-  *    hub's wedge block never lands on one task — the unipartite
-  *    sibling of graph_butterflies_capped's hub discipline, achieved by
-  *    orientation instead of capping (and exact, not a lower bound).
-  *    The PART graph (not supplier) is the honest fixture: part count
-  *    grows with the corpus so average degree stays ~120 at every SF
-  *    (8.9 k edges / 200 nodes at sf0.001 → 1.196 M / 20 k at sf0.1 —
-  *    the constant-degree growth a real co-occurrence graph shows),
-  *    whereas the supplier co-order graph SATURATES (complete K₁₀₀ at
-  *    sf0.01, 91 % dense at sf0.1 — ~10⁸ wedges, a fixture artifact).
   *  - pipe_distinct_kmv: distinct-user cardinality per event type
   *    through the KMV sketch (operators/KmvDistinctAgg) — the
   *    deterministic, hash-green counterpart of q15_approx_distinct's
@@ -73,18 +58,6 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   *    h60 tag (one hash per occurrence); deterministic integer sums ⇒
   *    hash-green replay; exact F₂ reported alongside so the error is
   *    auditable.
-  *  - graph_degree_hist: log2-binned degree-distribution profile of
-  *    the part co-order graph — the diagnostic that decides WHEN the
-  *    hub disciplines (degree caps, grid salting, orientation) are
-  *    needed: a heavy top bucket means Σ deg² work concentrates.
-  *    Bucket = bit-length of the degree (length(bin(d)) − 1), integer-
-  *    exact in both engines where floor(log2(d)) sits on float edges.
-  *  - graph_clustering_coeff: Watts-Strogatz local clustering
-  *    coefficient + global transitivity over the part co-order graph,
-  *    from the SAME degree-ordered wedge join as graph_triangles —
-  *    per-node triangle attribution keeps the Σ outdeg² ≤ O(m^1.5)
-  *    bound, and the summary follows the exact-math recipe (integer
-  *    counts, one IEEE division per node, DECIMAL(28,9) sum).
   *
   * Reference scope note: alxmancilla/parquet-demo has no analytics
   * surface (src/parquet_demo/io.py:21-66 is type coercion + ETL
@@ -123,230 +96,6 @@ object Round15bQueries {
     * the exact path, which the spec pins separately.)
     */
   val KmvK = 64
-
-  /** Shared oracle for graph_triangles and its partitioned twin — the
-    * orientation is a pure per-edge function, so both join strategies
-    * produce the identical oriented edge set and counts.
-    */
-  private val trianglesSql: String = """WITH sos AS (
-          SELECT DISTINCT l_orderkey AS ord, l_partkey AS sp FROM lineitem),
-        e AS (
-          SELECT DISTINCT x.sp AS a, y.sp AS b
-          FROM sos x JOIN sos y ON x.ord = y.ord AND x.sp < y.sp),
-        deg AS (
-          SELECT n, count(*) AS d FROM (
-            SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY n),
-        o AS (
-          SELECT CASE WHEN da.d <= db.d THEN e.a ELSE e.b END AS src,
-                 CASE WHEN da.d <= db.d THEN e.b ELSE e.a END AS dst,
-                 CASE WHEN da.d <= db.d THEN db.d ELSE da.d END AS dd
-          FROM e JOIN deg da ON e.a = da.n JOIN deg db ON e.b = db.n),
-        wedges AS (
-          SELECT p.dst AS v, q.dst AS t
-          FROM o p JOIN o q ON p.src = q.src
-            AND (p.dd < q.dd OR (p.dd = q.dd AND p.dst < q.dst))),
-        closed AS (
-          SELECT count(*) AS n_wedges, count(o.src) AS n_triangles
-          FROM wedges LEFT JOIN o
-            ON wedges.v = o.src AND wedges.t = o.dst)
-        SELECT
-          (SELECT count(*) FROM deg) AS n_nodes,
-          (SELECT count(*) FROM e) AS n_edges,
-          n_wedges, n_triangles,
-          (SELECT max(c) FROM
-            (SELECT count(*) AS c FROM o GROUP BY src)) AS max_outdeg
-        FROM closed"""
-
-  /** Part co-order edges, degrees, and the degree-ordered
-    * orientation — exposed for the spec's combinatorial replay and the
-    * plan pin. Returns (oriented edges persisted, undirected edge DF,
-    * degree DF); the caller releases the persisted stage.
-    *
-    * @param bcast join strategy for the two edge ⋈ degree joins:
-    *   `true` broadcasts the node-sized degree table (fixture-fast,
-    *   assumes parts ≪ broadcast budget); `false` shuffle-hash-joins
-    *   it — the R10b/R11b discipline for node tables beyond the
-    *   broadcast budget. The orientation is a pure per-edge function
-    *   of (deg_a, deg_b, a, b), so the oriented edge set — and every
-    *   count downstream — is bit-identical either way (shared oracle).
-    */
-  private[graft] def orientedCoOrderEdges(s: SparkSession, dir: String,
-      bcast: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    val sos = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ord"), col("l_partkey").as("sp"))
-      .distinct()
-    // per-order part lists are lineitem-bounded (~7), so pair
-    // generation is ≤ C(7,2) per order — never a hub blow-up here.
-    // PERSIST the edge set eagerly: the degree rollup AND both sides
-    // of the orientation join (plus lccPlan's node join) consume it —
-    // in the broadcast form each BroadcastExchange otherwise re-derives
-    // the whole distinct self-join (measured ×10: 99.2 s vs the
-    // shuffle-hash twin's 29.3 s, whose exchanges Spark reuses).
-    // Callers release it with the oriented stage.
-    val e = sos.as("x").join(sos.as("y"),
-        col("x.ord") === col("y.ord") && col("x.sp") < col("y.sp"))
-      .select(col("x.sp").as("a"), col("y.sp").as("b"))
-      .distinct()
-      .persist()
-    e.count()
-    val (orientedPlan, deg) = orientedFrom(e, bcast)
-    // materialize HASH-PARTITIONED on src (Layouts.partitioned — the
-    // AQE-off checkpoint that keeps HashPartitioning): the wedge
-    // self-join p⋈q on src then consumes BOTH sides from the
-    // checkpointed layout with ZERO exchanges, and the out-degree
-    // rollup is map-side — one layout shuffle of |o| replaces two
-    // self-join exchanges of |o| (measured ×10: 82.9 s → see BASELINE
-    // round-15b table)
-    val oriented = graft.operators.Layouts.partitioned(
-      orientedPlan, Seq(col("src")))
-    (oriented, e, deg)
-  }
-
-  /** Degree rollup + degree-ordered orientation over an (a, b) pair
-    * set — the shared build both `orientedCoOrderEdges` (which
-    * checkpoints it) and the spec's join-strategy pin (which needs the
-    * UN-materialized plan: a checkpointed layout is a LogicalRDD leaf,
-    * so the degree joins are only visible on the build plan) consume.
-    * Returns (oriented plan, degree table).
-    */
-  private[graft] def orientedFrom(e: DataFrame, bcast: Boolean)
-      : (DataFrame, DataFrame) = {
-    val deg = e.select(col("a").as("n"))
-      .unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    // part-count-sized (node table) — broadcast at declared scope;
-    // the bcast=false twin shuffle-hashes the two joins on a/b
-    // exactly like the LPA partitioned twins
-    val lower = col("da") <= col("db") // tie ⇒ a (a < b by construction)
-    val dega = deg.select(col("n").as("a"), col("d").as("da"))
-    val degb = deg.select(col("n").as("b"), col("d").as("db"))
-    val joined =
-      if (bcast) e.join(broadcast(dega), "a").join(broadcast(degb), "b")
-      else e.join(dega.hint("shuffle_hash"), "a")
-        .join(degb.hint("shuffle_hash"), "b")
-    (joined.select(
-      when(lower, col("a")).otherwise(col("b")).as("src"),
-      when(lower, col("b")).otherwise(col("a")).as("dst"),
-      when(lower, col("db")).otherwise(col("da")).as("dd")), deg)
-  }
-
-  /** Local-clustering-coefficient pipeline, un-materialized — (result,
-    * persisted oriented-edge stage); the caller materializes and then
-    * releases the stage. Same oriented wedge join as trianglesPlan (the
-    * Σ outdeg² ≤ O(m^1.5) discipline), but each CLOSED wedge is kept as
-    * a (s, v, t) row and attributed to all three member nodes, giving
-    * per-node triangle counts t_v; LCC_v = t_v / C(deg_v, 2) and the
-    * summary aggregates follow the exact-math recipe (integer counts,
-    * ONE IEEE division per node, DECIMAL(28,9) for the order-
-    * independent sum — a raw double sum would be partition-order
-    * dependent and could differ between engines at the last bit).
-    */
-  private[graft] def lccPlan(s: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (o, e, deg0) = orientedCoOrderEdges(s, dir)
-    // the summary consumes deg downstream of the oriented stage — pin
-    // the node-sized rollup and release the edge set now (the oriented
-    // stage is already materialized)
-    val deg = deg0.persist()
-    deg.count()
-    e.unpersist(false)
-    val wedges = o.as("p").join(o.as("q"),
-        col("p.src") === col("q.src") &&
-          (col("p.dd") < col("q.dd") ||
-            (col("p.dd") === col("q.dd") &&
-              col("p.dst") < col("q.dst"))))
-      .select(col("p.src").as("s"), col("p.dst").as("v"),
-        col("q.dst").as("t"))
-    // closure via shuffle-hash inner join (the triangles-plan shape —
-    // measured faster than a broadcast probe inside the wedge stage,
-    // and the only shape beyond the edge-broadcast budget); only the
-    // matched (s, v, t) triangle rows — 3·T after the explode — reach
-    // the nodeTri exchange
-    val tri = wedges.join(
-        o.select(col("src").as("v"), col("dst").as("t"))
-          .hint("shuffle_hash"),
-        Seq("v", "t"))
-    val nodeTri = tri
-      .select(explode(array(col("s"), col("v"), col("t"))).as("n"))
-      .groupBy(col("n")).agg(count(lit(1)).as("tv"))
-    val base = deg.filter(col("d") >= 2)
-      .join(nodeTri, Seq("n"), "left")
-      .withColumn("tv", coalesce(col("tv"), lit(0L)))
-      .withColumn("pairs", expr("d * (d - 1) div 2"))
-      .withColumn("lcc",
-        col("tv").cast(DoubleType) / col("pairs").cast(DoubleType))
-    val res = base.agg(
-        count(lit(1)).as("n_nodes"),
-        expr("sum(tv) div 3").as("n_triangles"),
-        expr("sum(pairs)").as("n_open_wedges"),
-        expr("CAST(sum(CAST(round(lcc, 9) AS DECIMAL(28,9))) AS DOUBLE)")
-          .as("lcc_sum"),
-        expr("sum(CASE WHEN tv = 0 THEN 1 ELSE 0 END)").as("n_zero"),
-        max(col("lcc")).as("max_lcc_raw"))
-      .select(col("n_nodes"), col("n_triangles"),
-        round(col("lcc_sum") / col("n_nodes").cast(DoubleType), 6)
-          .as("avg_lcc"),
-        round(lit(3.0) * col("n_triangles").cast(DoubleType) /
-          col("n_open_wedges").cast(DoubleType), 6).as("transitivity"),
-        round(col("n_zero").cast(DoubleType) /
-          col("n_nodes").cast(DoubleType), 6).as("share_zero"),
-        round(col("max_lcc_raw"), 6).as("max_lcc"))
-    (res, Seq(o, deg))
-  }
-
-  /** Full triangle pipeline, un-materialized — (result, persisted
-    * oriented-edge stage); the caller materializes and then releases the
-    * stage. Exposed separately so Plans can dump the executed plan (the
-    * declared query localCheckpoints, which would print a bare RDD scan).
-    *
-    * ONE wedge pass: generate oriented wedges and close them in the same
-    * flow (left join against the oriented edge set — (src,dst) pairs are
-    * distinct, so no multiplicity inflation), counting wedges and
-    * triangles in a single aggregate. The node/edge/out-degree stats all
-    * derive from the PERSISTED oriented edges — nothing upstream of the
-    * oriented stage recomputes.
-    */
-  private[graft] def trianglesPlan(s: SparkSession, dir: String,
-      bcast: Boolean = true): (DataFrame, DataFrame) = {
-    val (o, e, _) = orientedCoOrderEdges(s, dir, bcast)
-    // everything downstream reads the materialized oriented stage only
-    e.unpersist(false)
-    // Oriented wedge generation: BOTH sides read the cached
-    // HashPartitioning(src) layout — zero exchanges. Closure is a
-    // shuffle-hash inner join against the edge set: measured FASTER at
-    // sf0.1 than broadcasting the 1.2 M-edge build side into the wedge
-    // stage (4.9 s vs 9.2 s warm min-of-3 — the broadcast probe
-    // serializes into the same whole-stage pipeline that generates the
-    // 41 M wedges, while the exchange overlaps it), and it is the only
-    // closure shape that survives when the edge set outgrows the
-    // broadcast budget. n_wedges is NOT counted off the 41 M-row
-    // stream at all: it equals Σ C(outdeg,2) exactly (the dd/dst
-    // ordering admits exactly one of each dst pair per src), read with
-    // max_outdeg off ONE map-side rollup of the cached layout.
-    val wedges = o.as("p").join(o.as("q"),
-        col("p.src") === col("q.src") &&
-          (col("p.dd") < col("q.dd") ||
-            (col("p.dd") === col("q.dd") &&
-              col("p.dst") < col("q.dst"))))
-      .select(col("p.dst").as("v"), col("q.dst").as("t"))
-    val oVT = o.select(col("src").as("v"), col("dst").as("t"))
-    val nTri = wedges.join(oVT.hint("shuffle_hash"), Seq("v", "t"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val degStats = o.groupBy(col("src"))
-      .agg(count(lit(1)).as("c"))
-      .agg(sum(expr("c * (c - 1) div 2")).as("n_wedges"),
-        max(col("c")).as("max_outdeg"))
-    val nNodes = o.select(col("src").as("n"))
-      .unionByName(o.select(col("dst").as("n"))).distinct()
-      .agg(count(lit(1)).as("n_nodes"))
-    val res = nTri
-      .crossJoin(broadcast(nNodes))
-      .crossJoin(broadcast(o.agg(count(lit(1)).as("n_edges"))))
-      .crossJoin(broadcast(degStats))
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-        col("n_triangles"), col("max_outdeg"))
-    (res, o)
-  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -403,47 +152,6 @@ object Round15bQueries {
         "ln-based schemes are not), WindowGroupLimit-bounded rank, " +
         "HT-style estimates max(w, tau); Round15bSpec replays the " +
         "sample and pins the subset-sum estimator against true totals."),
-
-    // ── degree-ordered triangle counting ─────────────────────────────
-    // Output in exact integers: node/edge/oriented-wedge/triangle
-    // counts plus max out-degree under the orientation — the witness
-    // that no task ever holds more than max_outdeg² wedge pairs (the
-    // O(√m) bound that makes this THE scalable triangle recipe).
-    QueryDef(
-      "graph_triangles",
-      (s, dir) => {
-        val (res, o) = trianglesPlan(s, dir)
-        try res.localCheckpoint(true)
-        finally graft.operators.Layouts.releaseCheckpoint(o)
-      },
-      Some(trianglesSql),
-      doc = "Degree-ordered triangle counting (Schank-Wagner / " +
-        "Suri-Vassilvitskii) on the part co-order graph (constant " +
-        "~120 average degree at every SF — the supplier graph " +
-        "saturates to complete at sf0.01): every edge oriented from " +
-        "its lower-(degree,id) endpoint, so out-degree — and with it " +
-        "any single task's wedge block — is O(sqrt(m))-bounded; exact " +
-        "integer counts; max_outdeg reported as the skew witness."),
-
-    // ── partitioned twin: no node-sized broadcast ────────────────────
-    // Same pipeline with the two edge ⋈ degree joins shuffle-hash
-    // instead of broadcast — the R10b/R11b discipline for node tables
-    // beyond the broadcast budget. Orientation is a pure per-edge
-    // function of (deg_a, deg_b, a, b) ⇒ identical oriented edges and
-    // counts, shared oracle; Round15bSpec pins the plan (no broadcast
-    // of the degree side) and bit-equality with the broadcast form.
-    QueryDef(
-      "graph_triangles_partitioned",
-      (s, dir) => {
-        val (res, o) = trianglesPlan(s, dir, bcast = false)
-        try res.localCheckpoint(true)
-        finally graft.operators.Layouts.releaseCheckpoint(o)
-      },
-      Some(trianglesSql),
-      doc = "graph_triangles for part catalogues beyond the broadcast " +
-        "budget: degree joins shuffle-hash on the edge endpoints " +
-        "(hint-pinned), everything downstream unchanged — " +
-        "bit-identical counts by construction, shared oracle."),
 
     // ── KMV distinct-count sketch ────────────────────────────────────
     // Distinct-user cardinality per event type without a user-space-
@@ -676,64 +384,6 @@ object Round15bQueries {
         "Round15bSpec replays sketch+estimates and pins est >= exact " +
         "with real collisions at w=32."),
 
-    // ── log2-binned degree histogram: the hub diagnostic ─────────────
-    // One degree rollup + a ≤64-bucket aggregate: node-linear whatever
-    // the graph. The bucket key is the degree's BIT LENGTH − 1 —
-    // bit-exact floor(log2(d)) without the float-edge hazard (Spark's
-    // log2(8) is ln-based and may land a hair under 3.0; DuckDB's may
-    // not — floor would then disagree). This is the profiler a
-    // pipeline runs BEFORE picking cap/salt parameters for the wedge
-    // and rank operators.
-    QueryDef(
-      "graph_degree_hist",
-      (s, dir) => {
-        val sos = Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey").as("ord"), col("l_partkey").as("sp"))
-          .distinct()
-        val e = sos.as("x").join(sos.as("y"),
-            col("x.ord") === col("y.ord") && col("x.sp") < col("y.sp"))
-          .select(col("x.sp").as("a"), col("y.sp").as("b"))
-          .distinct()
-        val deg = e.select(col("a").as("n"))
-          .unionByName(e.select(col("b").as("n")))
-          .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        val h = deg
-          .withColumn("bucket", (length(bin(col("d"))) - 1).cast("int"))
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n_nodes"),
-            min(col("d")).as("min_deg"), max(col("d")).as("max_deg"))
-        h.crossJoin(broadcast(deg.agg(count(lit(1)).as("total"))))
-          .select(col("bucket"), col("n_nodes"), col("min_deg"),
-            col("max_deg"),
-            round(col("n_nodes").cast(DoubleType) /
-              col("total").cast(DoubleType), 6).as("share"))
-          .orderBy(col("bucket"))
-      },
-      Some("""WITH sos AS (
-          SELECT DISTINCT l_orderkey AS ord, l_partkey AS sp FROM lineitem),
-        e AS (
-          SELECT DISTINCT x.sp AS a, y.sp AS b
-          FROM sos x JOIN sos y ON x.ord = y.ord AND x.sp < y.sp),
-        deg AS (
-          SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-            SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY n),
-        h AS (
-          SELECT CAST(length(bin(d)) - 1 AS INT) AS bucket,
-            CAST(count(*) AS BIGINT) AS n_nodes,
-            min(d) AS min_deg, max(d) AS max_deg
-          FROM deg GROUP BY 1),
-        t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM deg)
-        SELECT bucket, n_nodes, min_deg, max_deg,
-          round(CAST(n_nodes AS DOUBLE) / CAST(total AS DOUBLE), 6)
-            AS share
-        FROM h CROSS JOIN t ORDER BY bucket"""),
-      doc = "Log2-binned degree histogram of the part co-order graph " +
-        "(bucket = bit-length of the degree — integer-exact where " +
-        "floor(log2) sits on float edges): per-bucket node counts, " +
-        "min/max degree, and share — the hub diagnostic run before " +
-        "choosing cap/salt parameters; node-linear, ≤64 buckets; " +
-        "Round15bSpec replays the binning and pins share mass = 1."),
-
     // ── AMS F₂ sketch: self-join size from k signed counters ─────────
     // The shuffle-volume predictor: F₂ of a key stream IS the
     // candidate count of its self-equi-join (LSH buckets, groupBy
@@ -806,80 +456,6 @@ object Round15bQueries {
         "per-language self-join size estimate next to the exact " +
         "vocabulary rollup — deterministic integer counters replay " +
         "hash-green in DuckDB; AmsSketchSpec pins the merge law, " +
-        "Round15bSpec replays counters+estimate and pins accuracy.",
-    ),
-
-    // ── local clustering coefficient / transitivity ──────────────────
-    // The classic graph-cohesion quality signal over the part co-order
-    // graph: per-node LCC_v = t_v / C(deg_v, 2) from the SAME oriented
-    // wedge join as graph_triangles (each closed wedge attributed to
-    // its three member nodes), summarized to a 1-row corpus metric.
-    // Exact-math recipe throughout: integer triangle/pair counts, ONE
-    // IEEE division per node, DECIMAL(28,9) for the order-independent
-    // sum (a raw double sum would be partition-order dependent).
-    QueryDef(
-      "graph_clustering_coeff",
-      (s, dir) => {
-        val (res, stages) = lccPlan(s, dir)
-        try res.localCheckpoint(true)
-        finally stages.foreach(graft.operators.Layouts.releaseCheckpoint)
-      },
-      Some("""WITH sos AS (
-          SELECT DISTINCT l_orderkey AS ord, l_partkey AS sp FROM lineitem),
-        e AS (
-          SELECT DISTINCT x.sp AS a, y.sp AS b
-          FROM sos x JOIN sos y ON x.ord = y.ord AND x.sp < y.sp),
-        deg AS (
-          SELECT n, count(*) AS d FROM (
-            SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY n),
-        o AS (
-          SELECT CASE WHEN da.d <= db.d THEN e.a ELSE e.b END AS src,
-                 CASE WHEN da.d <= db.d THEN e.b ELSE e.a END AS dst,
-                 CASE WHEN da.d <= db.d THEN db.d ELSE da.d END AS dd
-          FROM e JOIN deg da ON e.a = da.n JOIN deg db ON e.b = db.n),
-        wedges AS (
-          SELECT p.src AS s, p.dst AS v, q.dst AS t
-          FROM o p JOIN o q ON p.src = q.src
-            AND (p.dd < q.dd OR (p.dd = q.dd AND p.dst < q.dst))),
-        tri AS (
-          SELECT w.s, w.v, w.t
-          FROM wedges w JOIN o ON w.v = o.src AND w.t = o.dst),
-        nodetri AS (
-          SELECT n, count(*) AS tv FROM (
-            SELECT s AS n FROM tri UNION ALL SELECT v FROM tri
-            UNION ALL SELECT t FROM tri) GROUP BY n),
-        base AS (
-          SELECT deg.n, COALESCE(nt.tv, 0) AS tv,
-            deg.d * (deg.d - 1) // 2 AS pairs,
-            CAST(COALESCE(nt.tv, 0) AS DOUBLE)
-              / CAST(deg.d * (deg.d - 1) // 2 AS DOUBLE) AS lcc
-          FROM deg LEFT JOIN nodetri nt ON deg.n = nt.n
-          WHERE deg.d >= 2),
-        agg AS (
-          SELECT count(*) AS n_nodes,
-            CAST(sum(tv) AS BIGINT) // 3 AS n_triangles,
-            CAST(sum(pairs) AS BIGINT) AS n_open_wedges,
-            CAST(sum(CAST(round(lcc, 9) AS DECIMAL(28,9))) AS DOUBLE)
-              AS lcc_sum,
-            CAST(sum(CASE WHEN tv = 0 THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_zero,
-            max(lcc) AS max_lcc_raw
-          FROM base)
-        SELECT n_nodes, n_triangles,
-          round(lcc_sum / CAST(n_nodes AS DOUBLE), 6) AS avg_lcc,
-          round(CAST(3 AS DOUBLE) * CAST(n_triangles AS DOUBLE)
-            / CAST(n_open_wedges AS DOUBLE), 6) AS transitivity,
-          round(CAST(n_zero AS DOUBLE) / CAST(n_nodes AS DOUBLE), 6)
-            AS share_zero,
-          round(max_lcc_raw, 6) AS max_lcc
-        FROM agg"""),
-      doc = "Local clustering coefficient + transitivity (Watts-" +
-        "Strogatz avg-LCC and the global 3T/wedges ratio) over the " +
-        "part co-order graph: per-node triangle counts from the " +
-        "degree-ordered wedge join (each closed wedge attributed to " +
-        "its 3 nodes — the Σ outdeg² bound carries over), LCC summary " +
-        "in exact integers + one IEEE division per node + " +
-        "DECIMAL(28,9) order-independent sum; Round15bSpec replays " +
-        "per-node LCC combinatorially.")
+        "Round15bSpec replays counters+estimate and pins accuracy.")
   )
 }

@@ -1,20 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.Tables
-import graft.operators.Layouts
-import Round13bQueries.{KcoreK, KcorePeels, kcoreSql, nodeStr}
 
 /** Round-16 batch — the r15 verdict's remaining scale assumptions,
   * closed:
   *
-  *  - graph_kcore_partitioned (below): the last graph operator whose
-  *    per-round pruning assumed a broadcastable node set;
-  *  - graph_triangles_capped: the ONLINE-computable triangle form (ID
-  *    orientation + cap rule — no degree table needed), the batch twin
-  *    of the ST26 streaming adjacency (streaming/TriangleStream.scala);
   *  - dedup_embedding_ann_auto: the bits ~ log2 n ANN width rule
   *    derived IN-PLAN from a 1-row broadcast count scalar (mask a
   *    MaxBits signature to the low clamp(bitlen(n−1), min, max) bits;
@@ -22,53 +12,10 @@ import Round13bQueries.{KcoreK, KcorePeels, kcoreSql, nodeStr}
   *    constant — the same declared query holds per-bucket load ~1 at
   *    any corpus size (KnnGraphQueries' sim_knn_graph_auto applies the
   *    same rule, with these bounds, to the kNN graph).
-  *
-  * The k-core twin in detail — the co-partitioned discipline the rest
-  * of the family already follows (R10b/R14b):
-  *
-  *  - graph_kcore_partitioned: k-core peeling with ZERO edge-side
-  *    re-exchanges. The broadcast form's peel round is a degree rollup
-  *    plus TWO node-sized broadcast semi-joins (one per endpoint);
-  *    co-partitioning can kill the src-side one, but a dst-keyed
-  *    semi-join would still re-shuffle the edge list every round. The
-  *    twin avoids dst joins entirely by exploiting the edge list's
-  *    SYMMETRY (both orientations are present): a node's degree inside
-  *    the surviving subgraph equals the number of SURVIVING SOURCES
-  *    pointing at it —
-  *
-  *      deg_i(v) = #{u ∈ K_{i−1} : (u,v) ∈ E} = #{u ∈ K_{i−1} : (v,u) ∈ E}
-  *
-  *    so each round is: survivors shuffle-hash-joined into the
-  *    persisted HashPartitioning(src) edge layout (node-sized exchange,
-  *    edge side reads its cached blocks in place), then ONE
-  *    map-side-combined groupBy(dst) rollup (shuffle volume bounded by
-  *    distinct-dst-per-partition, i.e. node-sized — never the edge
-  *    list). Peeling is monotone (survivor sets only shrink, so a
-  *    peeled node's surviving-neighbor count can never climb back over
-  *    k), which is why the filter needs no membership check against the
-  *    previous round. Exact integer counting makes the twin
-  *    bit-identical to graph_kcore — the oracle is shared verbatim.
-  *
-  * Scale shape vs graph_kcore: per peel the broadcast form ships the
-  * full surviving-node set to every executor twice; the twin's network
-  * cost per peel is two node-sized hash shuffles and the edge list
-  * never moves after the one up-front layout shuffle. At 100 TB (edge
-  * lists of 10¹¹+ rows, node sets past the broadcast budget) the twin
-  * is the only viable plan; on the fixture both agree to the row.
   */
 object Round16Queries {
 
   import org.apache.spark.sql.DataFrame
-
-  /** Per-node out-neighbor cap for graph_triangles_capped / ST26: the
-    * id-oriented out-degree is NOT √m-bounded (a low-id hub keeps its
-    * whole neighborhood — id orientation is what an online stream can
-    * compute BEFORE degrees are known), so the cap is the bound:
-    * wedge work ≤ C(cap,2) per node, node-linear at any hub degree. 32
-    * binds on every fixture (id-oriented out-degrees reach 44+ at
-    * sf0.001), so the cap path is genuinely exercised.
-    */
-  val TriCap = 32
 
   /** Auto-width ANN signature bounds: bits = clamp(⌈log2 n⌉, min, max).
     * Max 18 keeps the per-vector sign pass at 2×18 codegen'd dot
@@ -84,82 +31,6 @@ object Round16Queries {
     */
   val KnnAutoMaxBits = 18
   val KnnAutoMinBits = 8
-
-  /** One co-partitioned peel: survivors `kPrev` (a `src` column)
-    * shuffle-hash into the persisted edge layout, surviving-source
-    * counts roll up per dst, threshold filter. Exposed so Round16Spec
-    * can pin the round plan (ShuffledHashJoin, edge side reads its
-    * cached blocks with zero re-exchange).
-    */
-  private[graft] def peelRound(e0: DataFrame, kPrev: DataFrame): DataFrame =
-    e0.join(kPrev.hint("shuffle_hash"), "src")
-      .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= KcoreK)
-      .select(col("dst").as("src"))
-
-  /** Round-1 survivor set (full-graph degree >= k) over the
-    * co-partitioned layout: the grouping key IS the persisted
-    * partitioning key, so this rollup aggregates in place with no
-    * exchange. One definition shared by the declared query, Plans'
-    * single-peel dump, and Round16Spec's replay (they drifted as three
-    * inline copies before round 17).
-    */
-  private[graft] def firstSurvivors(e0: DataFrame): DataFrame =
-    e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= KcoreK)
-      .select(col("src"))
-
-  /** Un-materialized capped-triangle pipeline plus its two pinned
-    * stages — (result, persisted pair set, checkpointed capped layout).
-    * The declared row checkpoints the result and releases both; Plans
-    * dumps this form (the checkpointed row's own executed plan is a
-    * bare RDD scan).
-    */
-  private[graft] def cappedTrianglesPlan(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val sos = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ord"), col("l_partkey").as("sp"))
-      .distinct()
-    // persisted: the capped rank, total-edge count, and max_out
-    // diagnostic all consume the pair set (the orientedCoOrderEdges
-    // discipline)
-    val e = sos.as("x").join(sos.as("y"),
-        col("x.ord") === col("y.ord") && col("x.sp") < col("y.sp"))
-      .select(col("x.sp").as("src"), col("y.sp").as("dst"))
-      .distinct()
-      .persist()
-    e.count()
-    val w = Window.partitionBy(col("src")).orderBy(col("dst").asc)
-    // WindowGroupLimit bounds the rank map-side; the capped set is
-    // materialized hash-partitioned on src so the wedge self-join
-    // reads both sides from the layout with zero exchanges
-    val capped = Layouts.partitioned(
-      e.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= TriCap)
-        .select(col("src"), col("dst")),
-      Seq(col("src")))
-    val wedges = capped.as("p").join(capped.as("q"),
-        col("p.src") === col("q.src") && col("p.dst") < col("q.dst"))
-      .select(col("p.dst").as("v"), col("q.dst").as("t"))
-    val nTri = wedges
-      .join(capped.select(col("src").as("v"), col("dst").as("t"))
-        .hint("shuffle_hash"), Seq("v", "t"))
-      .agg(count(lit(1)).as("triangles"))
-    val nWedges = capped.groupBy(col("src"))
-      .agg(count(lit(1)).as("c"))
-      .agg(sum(expr("c * (c - 1) div 2")).as("n_wedges"))
-    val maxOut = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("max_out"))
-    val res = nTri
-      .crossJoin(broadcast(nWedges))
-      .crossJoin(broadcast(capped.agg(count(lit(1)).as("n_edges_kept"))))
-      .crossJoin(broadcast(e.agg(count(lit(1)).as("n_edges_total"))))
-      .crossJoin(broadcast(maxOut))
-      .select(col("triangles"), col("n_wedges"),
-        col("n_edges_kept"), col("n_edges_total"), col("max_out"))
-    (res, e, capped)
-  }
 
   /** Auto-width ANN-dedup signature ceiling: Long bucket keys, so the
     * rule runs far past the kNN row's Int range — 20 keeps the
@@ -370,92 +241,6 @@ object Round16Queries {
   }
 
   val defs: Seq[QueryDef] = Seq(
-
-    // ── co-partitioned k-core peeling ────────────────────────────────
-    QueryDef(
-      "graph_kcore_partitioned",
-      (s, dir) => {
-        val ePart = RetrievalQueries.transactionEdges(s, dir, partitioned = true)
-        val e0 = ePart.select(col("src"), col("dst")) // narrow: keeps the layout
-        try {
-          // round 1: the full-graph degree rollup — aggregates in place
-          // (no exchange at all; see firstSurvivors)
-          val k1 = firstSurvivors(e0)
-          // rounds 2..KcorePeels: count surviving SOURCES per dst
-          val kN = (2 to KcorePeels).foldLeft(k1) { (kPrev, _) =>
-            peelRound(e0, kPrev)
-          }
-          // final projection: degrees inside the surviving subgraph,
-          // restricted to survivors (a peeled node can retain surviving
-          // neighbors; it must not appear in the output)
-          e0.join(kN.hint("shuffle_hash"), "src")
-            .groupBy(col("dst").as("node")).agg(count(lit(1)).as("deg"))
-            .join(kN.withColumnRenamed("src", "node").hint("shuffle_hash"),
-              Seq("node"), "semi")
-            .select(expr(nodeStr).as("node"), col("deg"))
-            .orderBy(col("node"))
-            .localCheckpoint(true)
-        } finally Layouts.releaseCheckpoint(ePart)
-      },
-      Some(kcoreSql),
-      doc = s"k-core peeling (k=$KcoreK, $KcorePeels rounds), " +
-        "co-partitioned form: survivors shuffle-hash into the persisted " +
-        "HashPartitioning(src) edge layout and degrees come off ONE " +
-        "map-side-combined groupBy(dst) per round (edge symmetry: " +
-        "surviving-source count = surviving-neighbor count) — zero " +
-        "edge-side re-exchanges, no node-sized broadcast; bit-identical " +
-        "to graph_kcore (shared oracle)."),
-
-    // ── degree-capped triangle counting (the ST26 batch twin) ────────
-    // graph_triangles bounds hub work by DEGREE orientation — which
-    // needs the full degree table up front, something an online stream
-    // never has. The capped form uses ID orientation (src < dst, a pure
-    // per-edge function computable at arrival time) and bounds hub work
-    // with the R13b cap rule instead: per node keep the TriCap smallest
-    // out-neighbors. Deterministic ⇒ DuckDB replays the cap and the row
-    // is hash-green; the count is exact ON THE CAPPED GRAPH (a lower
-    // bound of graph_triangles — capped edges ⊆ edges). n_wedges comes
-    // off the out-degree rollup as Σ C(k,2), never the wedge stream
-    // (the 9b75d41 lesson); max_out reports the UNCAPPED id-oriented
-    // hub as the skew witness the cap defuses.
-    QueryDef(
-      "graph_triangles_capped",
-      (s, dir) => {
-        val (res, e, capped) = cappedTrianglesPlan(s, dir)
-        try res.localCheckpoint(true)
-        finally { Layouts.releaseCheckpoint(capped); e.unpersist(false) }
-      },
-      Some(s"""WITH sos AS (
-          SELECT DISTINCT l_orderkey AS ord, l_partkey AS sp FROM lineitem),
-        e AS (
-          SELECT DISTINCT x.sp AS src, y.sp AS dst
-          FROM sos x JOIN sos y ON x.ord = y.ord AND x.sp < y.sp),
-        capped AS (
-          SELECT src, dst FROM (
-            SELECT src, dst,
-              row_number() OVER (PARTITION BY src ORDER BY dst ASC) AS rn
-            FROM e) WHERE rn <= $TriCap),
-        wedges AS (
-          SELECT p.dst AS v, q.dst AS t
-          FROM capped p JOIN capped q ON p.src = q.src AND p.dst < q.dst),
-        closed AS (
-          SELECT CAST(count(c.src) AS BIGINT) AS triangles
-          FROM wedges LEFT JOIN capped c ON wedges.v = c.src AND wedges.t = c.dst)
-        SELECT triangles,
-          (SELECT CAST(sum(k * (k - 1) // 2) AS BIGINT) FROM
-            (SELECT count(*) AS k FROM capped GROUP BY src)) AS n_wedges,
-          (SELECT count(*) FROM capped) AS n_edges_kept,
-          (SELECT count(*) FROM e) AS n_edges_total,
-          (SELECT CAST(max(c) AS BIGINT) FROM
-            (SELECT count(*) AS c FROM e GROUP BY src)) AS max_out
-        FROM closed"""),
-      doc = s"Degree-capped triangles (cap=$TriCap smallest out-neighbors " +
-        "per node under ID orientation — the orientation a stream can " +
-        "compute at arrival, no degree table needed): wedge work bounded " +
-        "at C(cap,2) per node (node-linear) where id orientation alone " +
-        "is hub-quadratic; exact integers on the capped graph, a lower " +
-        "bound of graph_triangles; the ST26 streaming state reconstructs " +
-        "exactly this capped adjacency."),
 
     // ── auto-width ANN dedup (the D5c rule derived in-plan) ──────────
     // dedup_embedding_ann_scaled fixes bits=12 at declaration time;

@@ -42,7 +42,11 @@ class DeterminismSpec extends SparkSpec {
     // labels are pure integers but the fixed-point detection must not
     // depend on partitioning)
     "text_lm_trigram_backoff_sharded", "pipe_corpus_drift",
-    "text_token_entropy", "pipe_doremi_mix", "dedup_cluster_cc_star")
+    "text_token_entropy", "pipe_doremi_mix", "dedup_cluster_cc_star",
+    // the degree-ordered wedge rows: their oriented layout is
+    // Layouts.partitioned at full conf width, so the shuffle-partition
+    // count changes the layout itself (integer counts, one DECIMAL sum)
+    "graph_triangles", "graph_triangles_partitioned", "graph_clustering_coeff")
 
   private def rowsAt(name: String, conf: (String, String)*): Seq[String] =
     withConf(conf: _*) {

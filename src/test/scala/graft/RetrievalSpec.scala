@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.RetrievalQueries
+import graft.queries.{GraphQueries, RetrievalQueries}
 
 /** Invariant pins for the round-10 retrieval / link-graph operators
   * (RetrievalQueries.scala): properties the oracle hash alone would not
@@ -140,7 +140,7 @@ class RetrievalSpec extends SparkSpec {
     // the declared row checkpoints every round (its final plan is a
     // projection over blocks), so the join strategy is pinned on a
     // single iteration's plan
-    val df = RetrievalQueries.pagerankOneStep(spark, sf(), bcast = false)
+    val df = GraphQueries.pagerankOneStep(spark, sf(), bcast = false)
     df.collect()
     // outer plan only: the persisted edge layout's EMBEDDED build plan
     // contains broadcast joins + parquet scans that are not this step's
@@ -170,7 +170,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("pagerankUntil at 3 capped rounds equals the unrolled graph_pagerank") {
-    val (df, iters, deltas) = graft.queries.RetrievalQueries
+    val (df, iters, deltas) = GraphQueries
       .pagerankUntil(spark, sf(), epsPico = 0L, maxIter = 3)
     assert(iters == 3 && deltas.length == 3)
     assert(df.collect().toSeq == run("graph_pagerank").toSeq,
@@ -181,7 +181,7 @@ class RetrievalSpec extends SparkSpec {
     // deltas contract by exactly the damping factor per round (measured:
     // 0.85× each step), so eps = 1e8 picounits = 1e-4 rank — the same
     // tolerance the mass-conservation pins use — lands around round 42
-    val (df, iters, deltas) = graft.queries.RetrievalQueries
+    val (df, iters, deltas) = GraphQueries
       .pagerankUntil(spark, sf(), epsPico = 100000000L, maxIter = 60)
     assert(iters < 60, s"did not converge: deltas=${deltas.mkString(",")}")
     assert(deltas.last <= 100000000L)
@@ -234,7 +234,7 @@ class RetrievalSpec extends SparkSpec {
     val maxPlain = sym.groupBy(col("src")).count()
       .agg(max(col("count"))).collect().head.getLong(0)
     val maxSalted = sym
-      .groupBy(col("src"), pmod(hash(col("dst")), lit(RetrievalQueries.RankSalt)))
+      .groupBy(col("src"), pmod(hash(col("dst")), lit(GraphQueries.RankSalt)))
       .count().agg(max(col("count"))).collect().head.getLong(0)
     // a perfectly uniform salt gives maxPlain/RankSalt; allow slack for
     // hash imbalance but demand a real spread of the hot key
@@ -249,13 +249,13 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("trustrankUntil at 3 capped rounds equals the unrolled graph_trustrank") {
-    val (df, iters, deltas) = graft.queries.RetrievalQueries
+    val (df, iters, deltas) = GraphQueries
       .trustrankUntil(spark, sf(), epsPico = 0L, maxIter = 3)
     assert(iters == 3 && deltas.length == 3)
     assert(df.collect().toSeq == run("graph_trustrank").toSeq,
       "trust convergence loop at 3 rounds must reproduce the unrolled form")
     // and it converges on the fixture with non-increasing deltas
-    val (_, it2, d2) = graft.queries.RetrievalQueries
+    val (_, it2, d2) = GraphQueries
       .trustrankUntil(spark, sf(), epsPico = 100000000L, maxIter = 60)
     assert(it2 < 60, s"did not converge: ${d2.mkString(",")}")
     assert(d2.zip(d2.tail).forall { case (a, b) => b <= a },

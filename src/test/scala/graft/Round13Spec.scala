@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{KnnGraphQueries, QueryDef, Round13Queries}
+import graft.queries.{GraphQueries, KnnGraphQueries, QueryDef, Round13Queries}
 
 /** Round-13 operator invariants:
   *
@@ -29,7 +29,8 @@ import graft.queries.{KnnGraphQueries, QueryDef, Round13Queries}
 class Round13Spec extends SparkSpec {
 
   private def q(name: String) =
-    QueryDef.toQueriesMap(Round13Queries.defs ++ KnnGraphQueries.defs)(name)
+    QueryDef.toQueriesMap(
+      Round13Queries.defs ++ KnnGraphQueries.defs ++ GraphQueries.defs)(name)
 
   // ── label propagation ──────────────────────────────────────────────
 
@@ -49,7 +50,7 @@ class Round13Spec extends SparkSpec {
     val nbrs = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
 
     var lbl: Map[Long, Long] = nbrs.keys.map(n => n -> n).toMap
-    (1 to Round13Queries.LpaIters).foreach { _ =>
+    (1 to GraphQueries.LpaIters).foreach { _ =>
       lbl = nbrs.map { case (n, ns) =>
         val counts = ns.groupBy(lbl).view.mapValues(_.size).toMap
         n -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
@@ -320,7 +321,7 @@ class Round13Spec extends SparkSpec {
     val edges = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val nbrs = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     var lbl: Map[Long, Long] = nbrs.keys.map(n => n -> n).toMap
-    (1 to Round13Queries.LpaIters).foreach { _ =>
+    (1 to GraphQueries.LpaIters).foreach { _ =>
       lbl = nbrs.map { case (n, ns) =>
         val counts = ns.groupBy(lbl).view.mapValues(_.size).toMap
         n -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1

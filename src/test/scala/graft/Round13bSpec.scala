@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round13bQueries, SimilarityQueries}
+import graft.queries.{GraphQueries, QueryDef, Round13bQueries, SimilarityQueries}
 
 /** Round-13b operator invariants:
   *
@@ -21,7 +21,7 @@ import graft.queries.{QueryDef, Round13bQueries, SimilarityQueries}
 class Round13bSpec extends SparkSpec {
 
   private def q(name: String) =
-    QueryDef.toQueriesMap(Round13bQueries.defs)(name)
+    QueryDef.toQueriesMap(Round13bQueries.defs ++ GraphQueries.defs)(name)
 
   private def r6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
@@ -106,17 +106,17 @@ class Round13bSpec extends SparkSpec {
 
     def peel(e: Set[(Long, Long)]): Set[(Long, Long)] = {
       val deg = e.groupBy(_._1).view.mapValues(_.size).toMap
-      val kept = deg.filter(_._2 >= Round13bQueries.KcoreK).keySet
+      val kept = deg.filter(_._2 >= GraphQueries.KcoreK).keySet
       e.filter { case (u, v) => kept(u) && kept(v) }
     }
-    (1 to Round13bQueries.KcorePeels).foreach(_ => edges = peel(edges))
+    (1 to GraphQueries.KcorePeels).foreach(_ => edges = peel(edges))
     assert(peel(edges) == edges,
       "fixture must reach the k-core fixed point inside the round bound")
     val deg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     def str(x: Long) = if (x % 2 == 0) s"c${x / 2}" else s"s${x / 2}"
     assert(rows == deg.map { case (n, d) => str(n) -> d },
       "k-core node/degree set mismatch")
-    assert(rows.values.forall(_ >= Round13bQueries.KcoreK))
+    assert(rows.values.forall(_ >= GraphQueries.KcoreK))
     // the peel genuinely removed something on the fixture
     val allNodes = pairs.flatMap(p => Seq(p._1, p._2)).toSet
     assert(rows.size < allNodes.size)

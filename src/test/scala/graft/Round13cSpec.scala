@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round13cQueries}
+import graft.queries.{GraphQueries, QueryDef, Round13cQueries}
 
 /** Round-13c operator invariants:
   *
@@ -18,7 +18,7 @@ import graft.queries.{QueryDef, Round13cQueries}
 class Round13cSpec extends SparkSpec {
 
   private def q(name: String) =
-    QueryDef.toQueriesMap(Round13cQueries.defs)(name)
+    QueryDef.toQueriesMap(Round13cQueries.defs ++ GraphQueries.defs)(name)
 
   private def r6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.QuantileSketchAgg
-import graft.queries.{RetrievalQueries, Round12Queries, Round13Queries, Round15Queries}
+import graft.queries.{GraphQueries, Round12Queries, Round15Queries}
 
 /** Round-15 operator invariants:
   *
@@ -41,7 +41,7 @@ class Round15Spec extends SparkSpec {
 
     val cs = edgeSet()
     val bySupp = cs.groupBy(_._2).view
-      .mapValues(_.map(_._1).sorted.take(Round15Queries.ButterflyCap)).toMap
+      .mapValues(_.map(_._1).sorted.take(GraphQueries.ButterflyCap)).toMap
     val pairCnt = scala.collection.mutable.Map[(Long, Long), Long]()
     bySupp.values.foreach { custs =>
       for (i <- custs.indices; j <- (i + 1) until custs.length)
@@ -64,14 +64,14 @@ class Round15Spec extends SparkSpec {
   }
 
   test("capped rank prunes map-side: WindowGroupLimit in the plan") {
-    val (res, capped, cs) = Round15Queries.cappedButterflies(spark, sf())
+    val (res, stages) = GraphQueries.cappedButterflies(spark, sf())
     try {
       res.collect()
       val p = res.queryExecution.executedPlan.toString
       assert(p.contains("WindowGroupLimit"),
         "rn <= cap must compile to WindowGroupLimit (each map task " +
           "forwards at most cap rows per supplier):\n" + p.take(3000))
-    } finally { capped.unpersist(false); cs.unpersist(false) }
+    } finally stages.foreach(_.unpersist(false))
   }
 
   test("co-partitioned LPA twins are bit-identical to the broadcast forms") {
@@ -83,10 +83,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("bcast=false LPA round: shuffled-hash label join, edge side never re-exchanges") {
-    val edges = RetrievalQueries.transactionEdges(spark, sf(), partitioned = true)
-    val l0 = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    val df = Round13Queries.lpaRound(edges, l0, bcast = false)
+    val (df, stages) = GraphQueries.lpaOneRound(spark, sf())
     df.collect()
     // outer final plan only: the "Initial Plan" echo would double every
     // count, and the edge cache's EMBEDDED build plan contains broadcast
@@ -105,7 +102,7 @@ class Round15Spec extends SparkSpec {
     assert(!p.linesIterator.exists(l =>
         l.contains("Exchange hashpartitioning(src") && l.contains("ENSURE_REQUIREMENTS")),
       "edge side re-exchanged into the label join:\n" + p.take(3000))
-    graft.operators.Layouts.releaseCheckpoint(edges)
+    stages.foreach(graft.operators.Layouts.releaseCheckpoint)
   }
 
   test("pipe_ccnet_buckets_sketch: full bottom-k sample + cutoff + bucket replay") {

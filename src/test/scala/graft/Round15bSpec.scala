@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.Round15bQueries
+import graft.queries.{GraphQueries, Round15bQueries}
 
 /** Round-15b operator invariants:
   *
@@ -339,7 +339,7 @@ class Round15bSpec extends SparkSpec {
         col("x.ord") === col("y.ord") && col("x.sp") < col("y.sp"))
       .select(col("x.sp").as("a"), col("y.sp").as("b"))
       .distinct()
-    val (o, _) = Round15bQueries.orientedFrom(pairs, bcast = false)
+    val (o, _) = GraphQueries.orientedFrom(pairs, bcast = false)
     o.count()
     val p = o.queryExecution.executedPlan.toString
     // both hinted degree joins must be shuffle-hash (the upstream

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{RetrievalQueries, Round13bQueries, Round16Queries}
+import graft.queries.{GraphQueries, Round16Queries}
 
 /** Round-16 operator invariants:
   *
@@ -30,16 +30,16 @@ class Round16Spec extends SparkSpec {
   }
 
   test("symmetry peel replay: surviving-source counts reproduce the declared row set") {
-    val edges = RetrievalQueries.transactionEdges(spark, sf())
+    val edges = GraphQueries.transactionEdges(spark, sf())
       .select(col("src"), col("dst"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val k = Round13bQueries.KcoreK
+    val k = GraphQueries.KcoreK
 
     // round 1: full degrees
     var surv = edges.groupBy(_._1).view.mapValues(_.length).toMap
       .filter(_._2 >= k).keySet
     // rounds 2..KcorePeels: deg_i(v) = #{u in K : (u,v) in E}
-    (2 to Round13bQueries.KcorePeels).foreach { _ =>
+    (2 to GraphQueries.KcorePeels).foreach { _ =>
       surv = edges.filter(e => surv(e._1)).groupBy(_._2).view
         .mapValues(_.length).toMap.filter(_._2 >= k).keySet
     }
@@ -56,10 +56,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("co-partitioned peel round: shuffled-hash survivor join, edge side never re-exchanges") {
-    val edges = RetrievalQueries.transactionEdges(spark, sf(), partitioned = true)
-    val e0 = edges.select(col("src"), col("dst"))
-    val k1 = Round16Queries.firstSurvivors(e0)
-    val df = Round16Queries.peelRound(e0, k1)
+    val (df, stages) = GraphQueries.kcoreOnePeel(spark, sf())
     df.collect()
     val p = outerPlan(df)
     assert(p.contains("ShuffledHashJoin"), p.take(3000))
@@ -74,7 +71,7 @@ class Round16Spec extends SparkSpec {
         l.contains("Exchange hashpartitioning(src") &&
           l.contains("ENSURE_REQUIREMENTS")),
       "edge side re-exchanged into the survivor join:\n" + p.take(3000))
-    graft.operators.Layouts.releaseCheckpoint(edges)
+    stages.foreach(graft.operators.Layouts.releaseCheckpoint)
   }
 
   /** The id-oriented part co-order pair set (src < dst), collected. */
@@ -95,7 +92,7 @@ class Round16Spec extends SparkSpec {
         row.getLong(4))
 
     val bysrc = pairSet.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val capped = bysrc.view.mapValues(_.take(Round16Queries.TriCap)).toMap
+    val capped = bysrc.view.mapValues(_.take(GraphQueries.TriCap)).toMap
     val cappedSets = capped.view.mapValues(_.toSet).toMap
     var triExp = 0L
     var wedgeExp = 0L
@@ -112,7 +109,7 @@ class Round16Spec extends SparkSpec {
     assert(maxOut == bysrc.values.map(_.length).max.toLong, "max_out")
     // the cap must bind, and the capped count must lower-bound the
     // exact degree-ordered count (capped edges are a subset)
-    assert(maxOut > Round16Queries.TriCap, "cap never binds — weak fixture")
+    assert(maxOut > GraphQueries.TriCap, "cap never binds — weak fixture")
     val exact = run("graph_triangles").collect().head.getLong(3)
     assert(tri <= exact, s"capped $tri must lower-bound exact $exact")
     assert(tri > 0, "no capped triangles on the fixture")
@@ -262,7 +259,7 @@ class Round16Spec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst").asc)
     val capped = e.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Round16Queries.TriCap)
+      .filter(col("rn") <= GraphQueries.TriCap)
       .select(col("src"), col("dst"))
     capped.collect()
     val p = capped.queryExecution.executedPlan.toString

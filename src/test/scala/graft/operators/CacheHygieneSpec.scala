@@ -16,7 +16,11 @@ class CacheHygieneSpec extends SparkSpec {
 
   private val persistingQueries = Seq(
     "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_embedding_cosine", "dedup_cluster_cc", "dedup_simhash_banded", "dedup_embedding_ann")
+    "dedup_embedding_cosine", "dedup_cluster_cc", "dedup_simhash_banded", "dedup_embedding_ann",
+    // graph rows that persist internal stages and release them through
+    // Layouts.materialize
+    "graph_triangles", "graph_triangles_partitioned", "graph_clustering_coeff",
+    "graph_triangles_capped", "graph_butterflies_capped")
 
   persistingQueries.foreach { name =>
     test(s"$name leaves no cached plans behind") {

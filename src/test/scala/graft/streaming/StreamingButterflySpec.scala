@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.Round15Queries
+import graft.queries.GraphQueries
 
 /** ST21 — the streaming capped-set state must converge to the batch cap
   * rule: "last emission per supplier" reconstructs exactly the capped
@@ -42,7 +42,7 @@ class StreamingButterflySpec extends SparkSpec {
       .select(col("suppkey"), col("custkey")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).view
-      .mapValues(_.map(_._2).toSeq.sorted.take(Round15Queries.ButterflyCap))
+      .mapValues(_.map(_._2).toSeq.sorted.take(GraphQueries.ButterflyCap))
       .toMap
 
   private def streamFinalSets(srcDir: String, name: String): Map[Long, Seq[Long]] = {
@@ -51,7 +51,7 @@ class StreamingButterflySpec extends SparkSpec {
         spark.readStream
           .schema(spark.read.parquet(srcDir).schema)
           .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir), Round15Queries.ButterflyCap).toDF(),
+          .parquet(srcDir), GraphQueries.ButterflyCap).toDF(),
       name, "append")
     // last emission per supplier = the live capped set at the cut; the
     // memory sink preserves emission order, so "last" = max row index
@@ -71,7 +71,7 @@ class StreamingButterflySpec extends SparkSpec {
       s"diff: ${(singleBatch.toSet diff cappedTruth.toSet).take(2)} / ${
         (cappedTruth.toSet diff singleBatch.toSet).take(2)}")
     // the cap must actually bind somewhere, or this tests nothing
-    assert(cappedTruth.values.exists(_.size == Round15Queries.ButterflyCap))
+    assert(cappedTruth.values.exists(_.size == GraphQueries.ButterflyCap))
   }
 
   test("C(w,2) rollup over the reconstructed state equals graph_butterflies_capped") {
@@ -123,7 +123,7 @@ class StreamingButterflySpec extends SparkSpec {
         .select(col("suppkey"), col("custkey")).distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view
-        .mapValues(_.map(_._2).toSeq.sorted.take(Round15Queries.ButterflyCap))
+        .mapValues(_.map(_._2).toSeq.sorted.take(GraphQueries.ButterflyCap))
         .toMap
       assert(firstChunk.exists { case (sp, cs) =>
         cs.exists(c => !singleBatch(sp).contains(c))

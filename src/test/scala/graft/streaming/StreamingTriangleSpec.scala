@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.Round16Queries
+import graft.queries.GraphQueries
 
 /** ST26 — the streaming capped-adjacency state must converge to the
   * batch cap rule: "last emission per src" reconstructs exactly the
@@ -46,7 +46,7 @@ class StreamingTriangleSpec extends SparkSpec {
       .select(col("src"), col("dst")).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).view
-      .mapValues(_.map(_._2).toSeq.sorted.take(Round16Queries.TriCap))
+      .mapValues(_.map(_._2).toSeq.sorted.take(GraphQueries.TriCap))
       .toMap
 
   private def streamFinalAdj(srcDir: String, name: String): Map[Long, Seq[Long]] = {
@@ -55,7 +55,7 @@ class StreamingTriangleSpec extends SparkSpec {
         spark.readStream
           .schema(spark.read.parquet(srcDir).schema)
           .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir), Round16Queries.TriCap).toDF(),
+          .parquet(srcDir), GraphQueries.TriCap).toDF(),
       name, "append")
     // last emission per src = the live capped set at the cut; the
     // memory sink preserves emission order, so "last" = max row index
@@ -75,7 +75,7 @@ class StreamingTriangleSpec extends SparkSpec {
       s"diff: ${(singleBatch.toSet diff cappedTruth.toSet).take(2)} / ${
         (cappedTruth.toSet diff singleBatch.toSet).take(2)}")
     // the cap must actually bind somewhere, or this tests nothing
-    assert(cappedTruth.values.exists(_.size == Round16Queries.TriCap))
+    assert(cappedTruth.values.exists(_.size == GraphQueries.TriCap))
   }
 
   test("closed-wedge rollup over the reconstructed state equals graph_triangles_capped") {
@@ -126,7 +126,7 @@ class StreamingTriangleSpec extends SparkSpec {
         .select(col("src"), col("dst")).distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view
-        .mapValues(_.map(_._2).toSeq.sorted.take(Round16Queries.TriCap))
+        .mapValues(_.map(_._2).toSeq.sorted.take(GraphQueries.TriCap))
         .toMap
       assert(firstChunk.exists { case (n, ds) =>
         ds.exists(dd => !singleBatch(n).contains(dd))
