@@ -153,7 +153,7 @@ object Plans {
             KnnGraphQueries.scaledGraph(Corpus.nvecs(spark, dir))
           val g0 = seed.localCheckpoint(true)
           val (round1, av) = KnnGraphQueries.nndRoundStaged(stages.last, g0)
-          (round1, stages :+ av)
+          (round1, stages ++ av)
         // ONE un-materialized grouped fine-Lloyd round over the
         // persisted coarse-routed corpus and the checkpointed fine
         // init (the build checkpoints every round; the novel shape is

@@ -464,13 +464,15 @@ object ScaleProbe {
     }
     val rest = if (mode == "corpus") args else args.drop(1)
     val m = rest.headOption.map(_.toInt).getOrElse(10)
+    // min-of-N like Bench (shared-box contention only ever ADDS time);
+    // defaults to 1 because probe corpora are long sweeps
+    val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
     // document replication stays collision-free at ANY m: replicas 1–25
     // rotate the alphabet, replicas ≥26 suffix every token with a
     // replica tag (see replicateDocs) — no two replicas ever share a
     // word, so the probe never degenerates into a duplicate explosion.
     val spark = SessionProfile.session()
     if (mode == "bm25" || mode == "containment") {
-      val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
       if (mode == "bm25") {
         val nqs = if (rest.length > 1) rest.drop(1).toSeq.map(_.toInt)
           else Seq(5, 50, 1000)
@@ -485,7 +487,7 @@ object ScaleProbe {
       return
     }
     if (mode == "annrecall") {
-      annRecallProbe(spark, m, Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1))
+      annRecallProbe(spark, m, runs)
       spark.stop()
       return
     }
@@ -516,9 +518,11 @@ object ScaleProbe {
       case _ => scaleCorpus(spark, "/root/testdata/sf0.1", dir, m)
     }
 
-    // warm up codegen/scan paths; a failure here is reported, and the
-    // same query fails again (and is named in `failed`) if it is timed
-    val warmup = mode match {
+    // warm up codegen/scan paths with the first named row, so the
+    // first row timed does not carry its family's JIT warm-up; a failure
+    // here is reported, and the same query fails again (and is named in
+    // `failed`) if it is timed
+    val warmup = if (rest.length > 1) names.head else mode match {
       case "tpch" => "q_tpch03"
       case "cooccur" => "graph_triangles"
       case "rotate" => "sim_brute_topk"
@@ -529,11 +533,8 @@ object ScaleProbe {
       System.err.println(s"[scale_probe] warm-up $warmup failed: $e")
     }
 
-    // min-of-N like Bench (shared-box contention only ever ADDS time);
-    // defaults to 1 because probe corpora are long sweeps. A query that
-    // throws is FAILED, not fast: it goes to the `failed` list with no
-    // timing and is not re-run.
-    val runs = Env.intVar("SPARK_GRAFT_PROBE_RUNS", 1)
+    // A query that throws is FAILED, not fast: it goes to the `failed`
+    // list with no timing and is not re-run.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = names.flatMap { name =>
       def once(): Option[(Double, Long)] = {

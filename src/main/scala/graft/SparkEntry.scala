@@ -22,7 +22,7 @@ object SparkEntry {
       Round11cQueries.defs ++ Round11dQueries.defs ++ Round11eQueries.defs ++
       Round12Queries.defs ++ Round12bQueries.defs ++ Round13Queries.defs ++
       Round13bQueries.defs ++ Round13cQueries.defs ++ Round15Queries.defs ++
-      Round15bQueries.defs ++ Round16Queries.defs ++ Round17Queries.defs ++
+      SketchQueries.defs ++ Round16Queries.defs ++ Round17Queries.defs ++
       Round17bQueries.defs ++ Round18Queries.defs ++ KnnGraphQueries.defs ++
       GraphQueries.defs
 

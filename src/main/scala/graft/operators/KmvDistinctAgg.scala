@@ -2,58 +2,60 @@ package graft.operators
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
 
-/** Mergeable distinct-count sketch as a typed `Aggregator` (SURVEY
-  * §2.5): KMV — K MINIMUM VALUES (Bar-Yossef et al. 2002; the unbiased
-  * estimator form in Beyer et al., SIGMOD 2007). The summary is the k
-  * smallest DISTINCT hash tags of the input; with tags uniform on
-  * [0, 2⁶⁰), the k-th smallest tag t_k estimates the distinct count as
+/** Mergeable distinct-count sketch (SURVEY §2.5): KMV — K MINIMUM
+  * VALUES (Bar-Yossef et al. 2002; the unbiased estimator form in Beyer
+  * et al., SIGMOD 2007). The state is the k smallest DISTINCT hash tags
+  * of the input, sorted ascending; with tags uniform on [0, 2⁶⁰), the
+  * k-th smallest tag t_k estimates the distinct count as
   * (k−1)·2⁶⁰ / t_k (relative error ~1/√(k−2)). Groups with fewer than
   * k distinct tags are counted EXACTLY (the sketch holds them all).
   *
-  * This is the deterministic, oracle-replayable counterpart of
-  * `q15_approx_distinct`'s HLL++ row (rows-only by design — Spark's
-  * sketch bytes are impl-specific): like `QuantileSketchAgg`, the
-  * result is "the k smallest distinct tags of the input" — a pure
-  * function of the data, bit-identical across partitionings, merge
-  * orders, retries, and engines, so the declared query is hash-green
-  * against a DuckDB window-rank replay, and the long→double / division
-  * steps of the estimator are single exactly-rounded IEEE operations
-  * (the `pipe_priority_sample` portability argument).
-  *
-  * Scale shape: map-side combine caps each partition's contribution
-  * at k tags per group, so a trillion-row group costs the same shuffle
-  * bytes as a k-row one, and NO (group, value)-distinct shuffle of the
-  * full cardinality ever happens — the whole point at 100 TB, where
-  * exact `count(DISTINCT tok)` per language is a vocabulary-sized
-  * exchange. Merge law: bottomKDistinct(A ∪ B) =
-  * bottomKDistinct(bottomKDistinct(A) ∪ bottomKDistinct(B)) —
-  * spec-pinned (KmvDistinctSpec).
+  * The deterministic, oracle-replayable counterpart of
+  * `q15_approx_distinct`'s HLL++ row (rows-only — Spark's sketch bytes
+  * are impl-specific): the state is a pure function of the input SET,
+  * so the declared rows are hash-green against a DuckDB window-rank
+  * replay. Map-side combine caps each partition's contribution at k
+  * tags per group, so NO (group, value)-distinct shuffle of the full
+  * cardinality ever happens. Merge law:
+  * bottomKDistinct(A ∪ B) = bottomKDistinct(bottomKDistinct(A) ∪
+  * bottomKDistinct(B)) — spec-pinned (KmvDistinctSpec).
   */
-case class KmvDistinctAgg(k: Int) extends Aggregator[Long, Seq[Long], Seq[Long]] {
-
-  require(k > 0, "k must be positive")
+final case class Kmv(k: Int) extends MergeableSketch[Long, Seq[Long]] {
+  require(k > 0, s"k must be positive, got $k")
 
   override def zero: Seq[Long] = Nil
 
-  /** Insert one tag, keeping the k smallest DISTINCT tags (buffer stays
-    * sorted ascending; a tag already present contributes nothing — the
-    * distinct-ness that makes this count values, not rows).
+  /** A tag already present contributes nothing — the distinct-ness that
+    * makes this count values, not rows (the state is ≤ k longs, so the
+    * linear `contains` scan is O(k)).
     */
-  override def reduce(buf: Seq[Long], tag: Long): Seq[Long] =
-    if (buf.contains(tag)) buf
-    else if (buf.size < k) (buf :+ tag).sorted
-    else if (tag < buf.last) (buf.init :+ tag).sorted
-    else buf
+  override def insert(s: Seq[Long], tag: Long): (Seq[Long], Boolean) =
+    if (s.contains(tag)) (s, false)
+    else if (s.size < k) ((s :+ tag).sorted, true)
+    else if (tag < s.last) ((s.init :+ tag).sorted, true)
+    else (s, false)
 
   override def merge(a: Seq[Long], b: Seq[Long]): Seq[Long] =
     (a ++ b).distinct.sorted.take(k)
 
-  /** The retained distinct tags, sorted ascending. */
-  override def finish(buf: Seq[Long]): Seq[Long] = buf
+  override def encoder: Encoder[Seq[Long]] = ExpressionEncoder()
 
-  override def bufferEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
+  /** Distinct-count estimate: exact when the group had fewer than k
+    * distinct tags; otherwise the Beyer et al. unbiased estimator
+    * (k−1)·2⁶⁰ / t_k. Both branches are single exactly-rounded IEEE
+    * double ops, so the declared rows and their DuckDB oracles produce
+    * identical bits.
+    */
+  def estimate(s: Seq[Long]): Double =
+    if (s.size < k) s.size.toDouble
+    else (k - 1).toDouble * KmvDistinctAgg.TagSpace / s.last.toDouble
+}
+
+/** KMV as a typed `Aggregator`: the retained distinct tags, sorted. */
+case class KmvDistinctAgg(k: Int)
+    extends SketchAggregator[Long, Seq[Long], Seq[Long]](Kmv(k)) {
+  override def finish(buf: Seq[Long]): Seq[Long] = buf
   override def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
 }
 
@@ -61,13 +63,5 @@ object KmvDistinctAgg {
   /** Tag domain: the h60 hash is uniform on [0, 2⁶⁰). */
   val TagSpace: Double = 1152921504606846976.0 // 2^60, exact in a double
 
-  /** Distinct-count estimate from a finished sketch: exact when the
-    * group had fewer than k distinct tags (the sketch holds them all);
-    * otherwise the Beyer et al. unbiased estimator (k−1)·2⁶⁰ / t_k.
-    * Both branches are single exactly-rounded IEEE double ops, so the
-    * declared query and its DuckDB oracle produce identical bits.
-    */
-  def estimate(sketch: Seq[Long], k: Int): Double =
-    if (sketch.size < k) sketch.size.toDouble
-    else (k - 1).toDouble * TagSpace / sketch.last.toDouble
+  def estimate(sketch: Seq[Long], k: Int): Double = Kmv(k).estimate(sketch)
 }

@@ -159,7 +159,19 @@ object Layouts {
   /** A `(result, stages)` pipeline's result checkpointed (composing
     * consumers read blocks, not lineage), then its stages released —
     * through `releaseCheckpoint`, so persisted stages and checkpointed
-    * layouts alike are freed.
+    * layouts alike are freed. The one checkpoint-and-release wrapper:
+    * an embedder gets a self-contained DataFrame, and no stage cache
+    * outlives the row, even when the job fails (`finally`).
+    *
+    * Deliberate trade-offs:
+    *  - EAGER: building the DataFrame runs the whole job, even if the
+    *    caller never consumes it — the price of releasing the
+    *    corpus-sized stages before returning.
+    *  - LOCAL checkpoint: the result lives in executor block storage,
+    *    so after executor loss the truncated lineage cannot recompute
+    *    it; on clusters with dynamic allocation use `spark.checkpoint`
+    *    + `Dataset.checkpoint()` instead (same shape, reliable storage).
+    *    Results are pair/cluster-sized, so either checkpoint is cheap.
     */
   def materialize(built: (DataFrame, Seq[DataFrame])): DataFrame = {
     val (res, stages) = built

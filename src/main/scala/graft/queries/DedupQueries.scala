@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Layouts
 import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Deduplication operators for a training-data pipeline, over
@@ -155,33 +156,6 @@ object DedupQueries {
     * cardinalities, one double division; pinned by JaccardSimSpec) but
     * allocates no intermediate arrays in the verify-join inner loop.
     */
-  /** Materialize `result` (lineage-truncating localCheckpoint) and THEN
-    * release the operator's persisted stages, so a library embedder gets a
-    * self-contained DataFrame and no stage cache outlives the operator
-    * (round-4 advice: callers must not depend on Verify's clearCache).
-    * The checkpoint blocks belong to the returned DataFrame and are freed
-    * by the ContextCleaner once it is unreferenced. The output side of
-    * every dedup operator is pair/cluster-sized — orders of magnitude
-    * below the corpus — so storing it locally is safe at scale.
-    *
-    * API contract (deliberate tradeoffs, pinned here so embedders are not
-    * surprised):
-    *  - EAGER: constructing the DataFrame executes the full dedup job,
-    *    even if the caller never consumes it. That is the price of
-    *    releasing the corpus-sized cached stages before returning.
-    *  - LOCAL checkpoint: the result lives in executor block storage, not
-    *    a reliable FS — after executor loss the truncated lineage cannot
-    *    recompute it, so on clusters with dynamic allocation / spot
-    *    executors use `spark.checkpoint(dir)` + `Dataset.checkpoint()`
-    *    instead (same shape, reliable storage). The pair/cluster-sized
-    *    output makes either checkpoint cheap.
-    * Stages are unpersisted in `finally` so a mid-job failure cannot leak
-    * corpus-sized cached blocks into the caller's session.
-    */
-  private def selfContained(result: DataFrame, stages: Dataset[_]*): DataFrame =
-    try result.localCheckpoint(true)
-    finally stages.foreach(_.unpersist(false))
-
   /** documents → (doc_id, 60-bit word-level simhash). Shared by the
     * all-pairs reference form and the banded scale form — the signature
     * computation is ONE narrow pass either way.
@@ -197,7 +171,7 @@ object DedupQueries {
       .select(col("doc_id"), col("simhash"))
 
   /** The banded pair pipeline, pre-checkpoint — returned with its
-    * persisted signature stage so the QueryDef can selfContained() it;
+    * persisted signature stage so the QueryDef can materialize it;
     * exposed package-private so PlanSpec can assert the bucket-join shape
     * (the checkpointed result's plan is just a scan).
     */
@@ -206,7 +180,7 @@ object DedupQueries {
       maxHamming: Int = SimhashMaxHamming): (DataFrame, DataFrame) = {
     val bandDefs = simhashBandDefs(maxHamming)
     val docs = simhashSigs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     val bandVals = array(bandDefs.map { case (off, w) =>
       expr(s"shiftright(simhash, $off) & ${(1L << w) - 1}L")
@@ -267,7 +241,7 @@ object DedupQueries {
       : (DataFrame, DataFrame) = {
     val bandDefs = simhashBandDefs(maxHamming)
     val docs = simhashSigs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     val bandVals = array(bandDefs.map { case (off, w) =>
       expr(s"shiftright(simhash, $off) & ${(1L << w) - 1}L")
@@ -379,14 +353,14 @@ object DedupQueries {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    selfContained(
+    Layouts.materialize((
       cand
         .join(sh.toDF("doc_a", "sa"), "doc_a")
         .join(sh.toDF("doc_b", "sb"), "doc_b")
         .withColumn("jaccard", round(jaccard(col("sa"), col("sb")), 6))
         .filter(col("jaccard") >= JaccardTau)
         .select(col("doc_a"), col("doc_b"), col("jaccard")),
-      sh, buckets)
+      Seq(sh, buckets)))
   }
 
   /** DuckDB CTE chain ending in `pairs(doc_a, doc_b, jaccard)` — the
@@ -489,7 +463,7 @@ object DedupQueries {
               (col("a.sz") + col("b.sz")) * 4)
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .distinct()
-        selfContained(
+        Layouts.materialize((
           cand
             .join(sh.toDF("doc_a", "sa"), "doc_a")
             .join(sh.toDF("doc_b", "sb"), "doc_b")
@@ -497,7 +471,7 @@ object DedupQueries {
               round(jaccard(col("sa"), col("sb")), 6).as("jaccard"))
             .filter(col("jaccard") >= JaccardTau)
             .orderBy(col("doc_a"), col("doc_b")),
-          sh, prefix)
+          Seq(sh, prefix)))
       },
       Some(s"""WITH $shingledDuck
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -551,16 +525,16 @@ object DedupQueries {
           // (tiny) signature table so the interpreted aggregate runs once,
           // and spread the all-pairs stream side to the size-derived
           // width (1 for the fixtures, up to defaultParallelism).
-          .transform(graft.operators.Layouts.spread)
+          .transform(Layouts.spread)
           .persist()
-        selfContained(
+        Layouts.materialize((
           docs.as("a").join(docs.as("b"), col("a.doc_id") < col("b.doc_id"))
             .select(
               col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
               expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
             .filter(col("hamming") <= SimhashMaxHamming)
             .orderBy(col("doc_a"), col("doc_b")),
-          docs)
+          Seq(docs)))
       },
       Some(simhashPairsDuckSql),
       doc = "All-pairs reference form; the scale path is dedup_simhash_banded " +
@@ -578,7 +552,7 @@ object DedupQueries {
       "dedup_simhash_banded",
       (s, dir) => {
         val (pairs, docs) = simhashBandedPairs(s, dir)
-        selfContained(pairs, docs)
+        Layouts.materialize((pairs, Seq(docs)))
       },
       // identical declared semantics ⇒ identical oracle: banding is
       // provably lossless, so the all-pairs SQL IS the banded oracle.
@@ -599,7 +573,7 @@ object DedupQueries {
       "dedup_simhash_banded_tight",
       (s, dir) => {
         val (pairs, docs) = simhashBandedPairs(s, dir, SimhashTightMaxHamming)
-        selfContained(pairs, docs)
+        Layouts.materialize((pairs, Seq(docs)))
       },
       // lossless at radius 3 by the same pigeonhole (4 bands > 3 bits),
       // so the all-pairs SQL at the tight threshold IS the oracle
@@ -622,7 +596,7 @@ object DedupQueries {
       "dedup_simhash_banded_guarded",
       (s, dir) => {
         val (pairs, docs) = simhashBandedPairsGuarded(s, dir)
-        selfContained(pairs, docs)
+        Layouts.materialize((pairs, Seq(docs)))
       },
       // the guard preserves the pair set exactly ⇒ the tight-radius
       // all-pairs SQL is the oracle, same as the unguarded tight form
@@ -639,9 +613,9 @@ object DedupQueries {
       (s, dir) => {
         val v = Corpus.nvecs(s, dir)
           // single-file scan = one partition; spread the O(n²) stream side
-          .transform(graft.operators.Layouts.spread)
+          .transform(Layouts.spread)
           .persist()
-        selfContained(
+        Layouts.materialize((
           v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
             .select(
               col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
@@ -649,7 +623,7 @@ object DedupQueries {
                 .as("cosine"))
             .filter(col("cosine") >= CosineTau)
             .orderBy(col("vec_a"), col("vec_b")),
-          v)
+          Seq(v)))
       },
       Some(s"""WITH v AS (
           SELECT vec_id, ${VectorOps.duckToDouble("embedding")} AS v FROM embeddings),
@@ -679,7 +653,7 @@ object DedupQueries {
       "dedup_embedding_ann",
       (s, dir) => {
         val (pairs, v, sigs) = embeddingAnnPairs(s, dir)
-        selfContained(pairs, v, sigs)
+        Layouts.materialize((pairs, Seq(v, sigs)))
       },
       Some(annDuckSql(SimilarityQueries.NBits, AnnProbeRadius, AnnTables, CosineTau)),
       doc = "Sign-LSH bucketed cosine dedup: multi-probe Hamming-" +
@@ -700,7 +674,7 @@ object DedupQueries {
       (s, dir) => {
         val (pairs, v, sigs) =
           embeddingAnnPairs(s, dir, AnnScaledBits, AnnProbeRadius, AnnTables, CosineTau)
-        selfContained(pairs, v, sigs)
+        Layouts.materialize((pairs, Seq(v, sigs)))
       },
       Some(annDuckSql(AnnScaledBits, AnnProbeRadius, AnnTables, CosineTau)),
       doc = "Width-scaled sign-LSH dedup (bits ~ log2 n): the non-" +
@@ -774,7 +748,7 @@ object DedupQueries {
     require(bits >= 1 && bits <= 62,
       s"signature width $bits outside [1, 62]: Long bucket keys wrap past 62 bits")
     val v = Corpus.nvecs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     def sigCol(t: Int): Column = annSigCol(t, bits)
     // all tables' signatures in ONE corpus pass; persisted because the
@@ -826,7 +800,7 @@ object DedupQueries {
   def embeddingAnnScaled(s: SparkSession, dir: String, bits: Int,
       radius: Int = 1, tables: Int = 8, tau: Double = 0.9): DataFrame = {
     val (pairs, v, sigs) = embeddingAnnPairs(s, dir, bits, radius, tables, tau)
-    selfContained(pairs, v, sigs)
+    Layouts.materialize((pairs, Seq(v, sigs)))
   }
 
   /** DuckDB mirror of the sign-LSH bucketed cosine dedup, generalized

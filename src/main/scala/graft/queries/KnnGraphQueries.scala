@@ -665,10 +665,10 @@ object KnnGraphQueries {
     *  - the candidate dedup is repartition(query_id) + group-max:
     *    hash(query_id) satisfies the (query_id, neighbor_id) grouping
     *    AND the re-rank window's clustering.
-    * Returns (round result, persisted av stage).
+    * Returns (round result, Seq(persisted av stage)).
     */
   private[graft] def nndRoundStaged(corpus: DataFrame, edges: DataFrame)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, Seq[DataFrame]) = {
     val fwd = edges.select(col("vec_id").as("node"),
       col("neighbor_id").as("nb"))
     val wr = Window.partitionBy(col("neighbor_id"))
@@ -702,15 +702,12 @@ object KnnGraphQueries {
       .filter(col("rank") <= KnnNndWidth)
       .select(col("query_id").as("vec_id"), col("rank"),
         col("neighbor_id"), col("cosine"))
-    (res, av)
+    (res, Seq(av))
   }
 
   /** One NN-Descent round checkpointed, its av stage released. */
   private[graft] def nndRound(corpus: DataFrame, edges: DataFrame)
-      : DataFrame = {
-    val (res, av) = nndRoundStaged(corpus, edges)
-    try res.localCheckpoint(true) finally av.unpersist(false)
-  }
+      : DataFrame = Layouts.materialize(nndRoundStaged(corpus, edges))
 
   /** KnnNndRounds refinement rounds at K' over an ALREADY-MATERIALIZED
     * width-K' seed, each localCheckpoint'ed (the kmeansTrainFrom

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.operators.Layouts
 import graft.queries.Corpus.{h60Duck, h60Spark}
 
 /** Round-10 training-data pipeline operators: the published corpus-hygiene
@@ -260,7 +261,7 @@ object Round10Queries {
       (s, dir) => {
         import SimilarityQueries.{CentroidCap, CentroidEvery}
         val all = Corpus.nvecs(s, dir)
-          .transform(graft.operators.Layouts.spread)
+          .transform(Layouts.spread)
         val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
             col("vec_id") < CentroidEvery * CentroidCap)
           .select(col("vec_id").as("cent_id"), col("v").as("cv"))
@@ -319,7 +320,7 @@ object Round10Queries {
         import SimilarityQueries.CentroidEvery
         val CoarseEvery = CentroidEvery * CentroidEvery
         val all = Corpus.nvecs(s, dir)
-          .transform(graft.operators.Layouts.spread)
+          .transform(Layouts.spread)
         val coarse = all.filter(col("vec_id") % CoarseEvery === 0)
           .select(col("vec_id").as("c2"), col("v").as("c2v"))
         val fine = all.filter(col("vec_id") % CentroidEvery === 0)
@@ -735,7 +736,7 @@ object Round10Queries {
           .select(col("doc_id"), col("dup_of"), col("n_match"),
             when(col("dup_of").isNull, lit("new")).otherwise(lit("dup")).as("status"))
           .orderBy(col("doc_id"))
-        selfContainedDocs(out, b)
+        Layouts.materialize((out, Seq(b)))
       },
       Some {
         import DedupQueries.{A, B, BANDS, K, P, ROWS}
@@ -780,14 +781,6 @@ object Round10Queries {
         "≥16/32 matching minhash components; signatures only, the state " +
         "the online index actually holds.")
   )
-
-  /** Collect-then-unpersist wrapper (the DedupQueries.selfContained
-    * pattern): the banded-signature table is referenced by both join
-    * sides, so it persists for the query and must release after.
-    */
-  private def selfContainedDocs(result: DataFrame, cached: DataFrame): DataFrame =
-    try result.localCheckpoint(true)
-    finally cached.unpersist(false)
 
   /** SemDeDup's in-cell prune + per-vector verdict, shared by the fixed-k
     * and load-scaled variants: a vector is pruned when a smaller-id
@@ -870,9 +863,7 @@ object Round10Queries {
       .reduce(_.union(_))
       .orderBy(col("merge_rank"))
     if (!materialize) out
-    else
-      try out.localCheckpoint(true)
-      finally Seq(sym0, s1, s2).foreach(_.unpersist(false))
+    else Layouts.materialize((out, Seq(sym0, s1, s2)))
   }
 
   /** Containment candidate pairs BEFORE the τ threshold (Broder 1997):

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.operators.Layouts
 import graft.queries.Corpus.h60Spark
 
 /** Round-12 batch: curation-at-scale twins + schedule math —
@@ -64,8 +65,9 @@ object Round12Queries {
 
   /** Per-doc LM-surprisal scores (doc_id, lang, avg_surprisal) — the
     * CCNet scoring pass shared by pipe_ccnet_buckets_cutoff and the
-    * sketch twin (Round15Queries): one token-count shuffle, broadcast
-    * freq/total, one doc rollup over exact-DECIMAL surprisal terms.
+    * sketch twin (SketchQueries, over the `BottomK` law): one
+    * token-count shuffle, broadcast freq/total, one doc rollup over
+    * exact-DECIMAL surprisal terms.
     */
   private[graft] def ccnetScored(s: SparkSession, dir: String): DataFrame = {
     val tk = Corpus.tok(s, dir, "lang")
@@ -121,7 +123,7 @@ object Round12Queries {
     * exposed for Round12Spec's pruning/false-negative assertions.
     */
   /** Also returns the persisted shingle stage so callers can release it
-    * (the query below unpersists in `finally`; Round12Spec does too).
+    * (the query below through `Layouts.materialize`; Round12Spec too).
     */
   private[graft] def bloomParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -177,16 +179,13 @@ object Round12Queries {
       "pipe_decontaminate_bloom",
       (s, dir) => {
         val (survivors, evalSet, sh) = bloomParts(s, dir)
-        val res = survivors
+        // materialize the (tiny) per-doc rollup, then release the
+        // corpus-sized shingle cache
+        Layouts.materialize((survivors
           .join(broadcast(evalSet), "shingle")
           .groupBy(col("doc_id"))
           .agg(count_distinct(col("shingle")).as("n_eval_hits"))
-          .orderBy(col("doc_id"))
-        // materialize the (tiny) per-doc rollup, then release the
-        // corpus-sized shingle cache — the selfContained persist-scoping
-        // discipline (DedupQueries.scala)
-        try res.localCheckpoint(true)
-        finally sh.unpersist(false)
+          .orderBy(col("doc_id")), Seq(sh)))
       },
       Some(s"""WITH sh AS (
           SELECT doc_id,

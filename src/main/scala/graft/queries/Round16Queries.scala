@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Layouts
+
 /** Round-16 batch — the r15 verdict's remaining scale assumptions,
   * closed:
   *
@@ -85,7 +87,7 @@ object Round16Queries {
       .withColumn("mask", expr("shiftleft(CAST(1 AS BIGINT), bits) - 1"))
     val v = base
       .crossJoin(broadcast(width))
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     def sigCol(t: Int) = (0 until AnnAutoMaxBits).map { b =>
       when(VectorOps.dot(col("v"),
@@ -255,8 +257,7 @@ object Round16Queries {
       "dedup_embedding_ann_auto",
       (s, dir) => {
         val (pairs, v, sigs) = annAutoPairs(s, dir)
-        try pairs.localCheckpoint(true)
-        finally { sigs.unpersist(false); v.unpersist(false) }
+        Layouts.materialize((pairs, Seq(sigs, v)))
       },
       Some(annAutoDuckSql),
       doc = s"Auto-width sign-LSH dedup: bits = clamp(ceil(log2 n), " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Corpus.{idHash60Duck, idHash60Spark}
+import graft.operators.Layouts
 
 /** Round-17 batch rows:
   *
@@ -140,7 +141,7 @@ object Round17Queries {
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val corpus = Corpus.nvecs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     (ivfTopkAutoServe(corpus), corpus)
   }
@@ -170,11 +171,7 @@ object Round17Queries {
     // stream ≡ this query across multi-file replays and a restart.
     QueryDef(
       "st_incremental_ann",
-      (s, dir) => {
-        val (out, stages) = annIncrementalPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(_.unpersist(false))
-      },
+      (s, dir) => Layouts.materialize(annIncrementalPlan(s, dir)),
       Some(DedupQueries.annIncrementalDuckSql),
       doc = "ST27 batch twin: per vector the smallest earlier sign-LSH " +
         "ball-mate (scaled width, radius-2, 4 tables) with exact cosine " +
@@ -195,8 +192,7 @@ object Round17Queries {
       "sim_ivf_topk_auto",
       (s, dir) => {
         val (out, all) = ivfTopkAutoPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally all.unpersist(false)
+        Layouts.materialize((out, Seq(all)))
       },
       Some(ivfTopkAutoDuckSql),
       doc = "IVF top-k with K = clamp(ceil(sqrt(n)), 4, 4096) and " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
 import graft.Tables
+import graft.operators.Layouts
 
 /** Round-17b rows — the two capability gaps left after the round-17
   * close:
@@ -61,7 +62,7 @@ object Round17bQueries {
       eagerTruth: Boolean = true): (DataFrame, Seq[DataFrame]) = {
     import SimilarityQueries._
     val all = Corpus.nvecs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     val truthRaw = bruteTopk(all, IvfTopK)
       .select(col("query_id"), col("neighbor_id"))
@@ -110,11 +111,7 @@ object Round17bQueries {
     // intersection against the index output.
     QueryDef(
       "sim_index_recall",
-      (s, dir) => {
-        val (out, stages) = indexRecallPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(graft.operators.Layouts.releaseCheckpoint)
-      },
+      (s, dir) => Layouts.materialize(indexRecallPlan(s, dir)),
       Some {
         import SimilarityQueries.IvfTopK
         s"""WITH truth_full AS (${SimilarityQueries.bruteTopkDuckSql(IvfTopK)}),
@@ -311,8 +308,7 @@ object Round17bQueries {
       (s, dir) => {
         val (pairs, v, sigs) = Round16Queries.annAutoPairs(
           s, dir, gridHotLoad = graft.operators.Salting.DeriveHotLoad)
-        try pairs.localCheckpoint(true)
-        finally { sigs.unpersist(false); v.unpersist(false) }
+        Layouts.materialize((pairs, Seq(sigs, v)))
       },
       Some(Round16Queries.annAutoDuckSql),
       doc = "dedup_embedding_ann_auto with the two-sided hot-bucket " +

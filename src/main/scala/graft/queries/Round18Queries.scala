@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Layouts
+
 /** Round-18 rows — the round-17 verdict's asks, closed:
   *
   *  - ST27b `st_incremental_ann_auto`: the streaming sign-LSH ANN dedup
@@ -116,7 +118,7 @@ object Round18Queries {
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val corpus = Corpus.nvecs(s, dir)
-      .transform(graft.operators.Layouts.spread)
+      .transform(Layouts.spread)
       .persist()
     (lshTopkAutoServe(corpus), Seq(corpus))
   }
@@ -252,8 +254,8 @@ object Round18Queries {
       "st_incremental_ann_auto",
       (s, dir) => {
         val (pairs, v, sigs) = Round16Queries.annAutoPairs(s, dir)
-        try Round17Queries.annVerdict(pairs, v).localCheckpoint(true)
-        finally { sigs.unpersist(false); v.unpersist(false) }
+        Layouts.materialize(
+          (Round17Queries.annVerdict(pairs, v), Seq(sigs, v)))
       },
       Some(DedupQueries.annVerdictDuckSqlOver(Round16Queries.annAutoDuckSql)),
       doc = "ST27 batch twin at the scale-safe substrate: per vector " +
@@ -292,11 +294,7 @@ object Round18Queries {
     // audit keeps that trade-off measured rather than asserted.
     QueryDef(
       "sim_lsh_topk_auto",
-      (s, dir) => {
-        val (out, stages) = lshTopkAutoPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(_.unpersist(false))
-      },
+      (s, dir) => Layouts.materialize(lshTopkAutoPlan(s, dir)),
       Some(lshTopkAutoDuckSql),
       doc = s"Auto-width serving sign-LSH top-k: $LshAutoTables " +
         "independent tables at bits = clamp(ceil(log2 n), 8, 20) " +

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,11 +8,21 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 import graft.queries.Corpus.{h60Duck, h60Spark}
-import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
+import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg, Layouts,
+  QuantileSketchAgg}
 
-/** Round-15b batch: batch operators a corpus-scale pipeline leans on
-  * that the inventory still lacked —
+/** The sketch and sample rows: deterministic, mergeable summaries of
+  * a corpus-scale pipeline, each a pure function of the data, so every
+  * row replays hash-green in DuckDB. The sketch laws live once in
+  * `graft.operators` (`Kmv`, `CountMin`, `Ams`, `BottomK`, each a
+  * `MergeableSketch`); a row aggregates through the law's batch
+  * `Aggregator`, and the streaming twins in `graft.streaming` run the
+  * same law per key.
   *
+  *  - pipe_ccnet_buckets_sketch: CCNet bucketing through a MERGEABLE
+  *    QUANTILE SKETCH (`BottomK` — bottom-k-by-hash, merge-order
+  *    independent, so the row stays hash-green where a t-digest would
+  *    force bounds-only).
   *  - pipe_priority_sample: PRIORITY SAMPLING (Duffield, Lund & Thorup,
   *    JACM 2007) — per-stratum weighted sampling with unbiased
   *    subset-sum estimates from k items. The standard answer to "audit
@@ -24,9 +35,9 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   *    classic exponential-jump reservoir engine-dependent), so the
   *    sample AND the estimates replay exactly in DuckDB: hash-green.
   *  - pipe_distinct_kmv: distinct-user cardinality per event type
-  *    through the KMV sketch (operators/KmvDistinctAgg) — the
-  *    deterministic, hash-green counterpart of q15_approx_distinct's
-  *    HLL++ row, and the 100 TB shape: no (group, user)-distinct
+  *    through the KMV sketch (`Kmv`) — the deterministic, hash-green
+  *    counterpart of q15_approx_distinct's HLL++ row, and the 100 TB
+  *    shape: no (group, user)-distinct
   *    shuffle of the full user space ever happens; each partition
   *    ships ≤ k tags per group. The events table is the fixture whose
   *    per-group cardinality actually GROWS with SF (15 / 150 / 1500
@@ -45,17 +56,17 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   *    binds at both gate SFs.
   *  - pipe_count_min: COUNT-MIN sketch (Cormode & Muthukrishnan 2005)
   *    — per-language token-frequency estimation from a d×w integer
-  *    matrix (operators/CmSketchAgg): the frequency member of the
-  *    sketch family (KMV = cardinality, bottom-k = rank, SpaceSaving
-  *    = top-k). Deterministic cell sums ⇒ hash-green DuckDB replay;
+  *    matrix (`CountMin`): the frequency member of the sketch family
+  *    (KMV = cardinality, bottom-k = rank, SpaceSaving = top-k).
+  *    Deterministic cell sums ⇒ hash-green DuckDB replay;
   *    the declared row reports est vs exact per token, so the
   *    overestimate invariant (est ≥ exact always, > for colliding
   *    tokens at w=32) is visible in the output itself.
   *  - pipe_f2_ams: AMS tug-of-war sketch (Alon, Matias & Szegedy 1996)
   *    — the SECOND FREQUENCY MOMENT F₂ = Σ f² (self-join size) per
-  *    language from k=60 signed counters (operators/AmsSketchAgg): the
-  *    skew / shuffle-volume predictor. Signs are the 60 bits of the
-  *    h60 tag (one hash per occurrence); deterministic integer sums ⇒
+  *    language from k=60 signed counters (`Ams`): the skew /
+  *    shuffle-volume predictor. Signs are the 60 bits of the h60 tag
+  *    (one hash per occurrence); deterministic integer sums ⇒
   *    hash-green replay; exact F₂ reported alongside so the error is
   *    auditable.
   *
@@ -63,7 +74,15 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   * surface (src/parquet_demo/io.py:21-66 is type coercion + ETL
   * batching); this file is [EXT] like all of SURVEY §2.7.
   */
-object Round15bQueries {
+object SketchQueries {
+
+  /** Sketch size: rank error ~ 1/√64 ≈ 12 % — coarser than the exact
+    * terciles but deterministic, mergeable, and O(k) per language. 64
+    * binds at sf0.01 (every language holds ≥ 64 docs), so the
+    * subsample path — not just the n ≤ k identity path — is what the
+    * correctness gate checks.
+    */
+  val SketchK = 64
 
   /** Sample size per stratum (language). 32 binds on every fixture SF
     * (64–218 docs per language at sf0.001–0.01), so the threshold /
@@ -97,7 +116,83 @@ object Round15bQueries {
     */
   val KmvK = 64
 
+  /** `Kmv.estimate` as a column over a sorted tag array holding `m`
+    * tags: exact below k, else (k−1)·2⁶⁰ / t_k.
+    */
+  private def kmvEstimate(tags: Column, m: Column): Column =
+    when(m < KmvK, m.cast(DoubleType))
+      .otherwise(lit((KmvK - 1).toDouble * KmvDistinctAgg.TagSpace) /
+        element_at(tags, KmvK).cast(DoubleType))
+
   val defs: Seq[QueryDef] = Seq(
+
+    // ── CCNet bucketing through a mergeable quantile sketch ──────────
+    // The 100 TB form of P16/P16b: per-language tercile cutoffs from a
+    // BOUNDED mergeable summary (the `BottomK` law — bottom-k-by-hash,
+    // k=SketchK values per language, merged map-side so each partition
+    // ships ≤ k rows per language), broadcast back, buckets assigned
+    // in a narrow comparison pass. The corpus never sorts and no
+    // language ever lands on one task. Because the sketch is a
+    // deterministic function of the data (k smallest md5 tags), DuckDB
+    // replays it exactly — hash-green full-value compare, not the
+    // bounds-only check a t-digest/KLL would force. Cutoff rule: the
+    // ⌈p·m⌉-th smallest sampled value (QuantileSketchAgg.quantile).
+    QueryDef(
+      "pipe_ccnet_buckets_sketch",
+      (s, dir) => {
+        val sketch = udaf(QuantileSketchAgg(SketchK),
+          ExpressionEncoder[QuantileSketchAgg.In]())
+        // persisted: the token-explode + freq-join scoring pass feeds
+        // BOTH the cuts aggregation and the final join — without the
+        // persist it executes twice; released once the result is
+        // materialized
+        val scored = Round12Queries.ccnetScored(s, dir).persist()
+        val cuts = scored
+          .withColumn("tag",
+            expr(h60Spark("concat('qsk:', cast(doc_id as string))")))
+          .groupBy(col("lang"))
+          .agg(sketch(col("avg_surprisal"), col("tag")).as("samp"))
+          .select(col("lang"),
+            expr("element_at(samp, cast(ceil(size(samp) / 3.0) as int))").as("c1"),
+            expr("element_at(samp, cast(ceil(2 * size(samp) / 3.0) as int))").as("c2"))
+        Layouts.materialize((scored.join(broadcast(cuts), Seq("lang"))
+          .withColumn("ppl_bucket", expr(
+            """CASE WHEN avg_surprisal <= c1 THEN 'head'
+                    WHEN avg_surprisal <= c2 THEN 'middle'
+                    ELSE 'tail' END"""))
+          .select(col("doc_id"), col("lang"), col("avg_surprisal"),
+            col("ppl_bucket"))
+          .orderBy(col("doc_id")), Seq(scored)))
+      },
+      Some(s"""WITH ${Round12Queries.ccnetScoredDuck},
+        tagged AS (
+          SELECT lang, avg_surprisal,
+            row_number() OVER (PARTITION BY lang
+              ORDER BY ${h60Duck("'qsk:' || CAST(doc_id AS VARCHAR)")} ASC,
+                       avg_surprisal ASC) AS hrn
+          FROM scored),
+        samp AS (
+          SELECT lang, avg_surprisal,
+            row_number() OVER (PARTITION BY lang
+              ORDER BY avg_surprisal ASC) AS rn,
+            count(*) OVER (PARTITION BY lang) AS m
+          FROM tagged WHERE hrn <= $SketchK),
+        cuts AS (
+          SELECT lang,
+            max(avg_surprisal) FILTER (WHERE rn <= CAST(ceil(m / 3.0) AS INT)) AS c1,
+            max(avg_surprisal) FILTER (WHERE rn <= CAST(ceil(2 * m / 3.0) AS INT)) AS c2
+          FROM samp GROUP BY lang)
+        SELECT doc_id, scored.lang, avg_surprisal,
+          CASE WHEN avg_surprisal <= c1 THEN 'head'
+               WHEN avg_surprisal <= c2 THEN 'middle'
+               ELSE 'tail' END AS ppl_bucket
+        FROM scored JOIN cuts ON scored.lang = cuts.lang
+        ORDER BY doc_id"""),
+      doc = s"CCNet bucketing, quantile-sketch form (k=$SketchK " +
+        "bottom-k-by-hash per language): mergeable bounded summary " +
+        "rolled up map-side, cutoffs broadcast, buckets assigned in a " +
+        "narrow pass — corpus never sorts; deterministic sketch keeps " +
+        "the row hash-green against the DuckDB replay."),
 
     // ── priority sampling with subset-sum estimates ──────────────────
     // Shape: one narrow hash+divide pass, ONE per-language rank that
@@ -173,13 +268,8 @@ object Round15bQueries {
           .agg(kmv(col("tag")).as("tags"))
           .select(col("event_type"),
             size(col("tags")).as("n_retained"),
-            round(
-              when(size(col("tags")) < KmvK,
-                size(col("tags")).cast(DoubleType))
-                .otherwise(
-                  lit((KmvK - 1).toDouble * KmvDistinctAgg.TagSpace) /
-                    element_at(col("tags"), KmvK).cast(DoubleType)),
-              4).as("est_distinct"))
+            round(kmvEstimate(col("tags"), size(col("tags"))), 4)
+              .as("est_distinct"))
           .orderBy(col("event_type"))
       },
       Some(s"""WITH tags AS (
@@ -241,11 +331,7 @@ object Round15bQueries {
             array_intersect(col("uni"), col("ta")), col("tb"))))
           .withColumn("jacc",
             col("k_both").cast(DoubleType) / col("m").cast(DoubleType))
-          .withColumn("d_union",
-            when(col("m") < KmvK, col("m").cast(DoubleType))
-              .otherwise(
-                lit((KmvK - 1).toDouble * KmvDistinctAgg.TagSpace) /
-                  element_at(col("uni"), KmvK).cast(DoubleType)))
+          .withColumn("d_union", kmvEstimate(col("uni"), col("m")))
         uni.select(col("year_a"), col("year_b"),
             col("m").as("n_union_tags"), col("k_both"),
             round(col("jacc"), 4).as("jaccard_est"),

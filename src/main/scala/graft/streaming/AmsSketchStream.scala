@@ -1,83 +1,50 @@
 package graft.streaming
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+
+import graft.operators.Ams
 
 /** One arrival for the streaming AMS sketch: (group, tag, seq) — tag =
   * the h60 hash of the counted key (bit j is sign function j, the
-  * batch AmsSketchAgg recipe), seq kept for interface parity with the
+  * batch `pipe_f2_ams` recipe), seq kept for interface parity with the
   * other streams (the update is commutative — asserted by the spec,
   * not assumed).
   */
 case class AmsRow(group: String, tag: Long, seq: Long)
 
-/** A group's current signed counters. "Last emission per group"
-  * reconstructs the full sketch at any cut — the ST20–ST24
-  * tombstone-free reconstruct-from-emissions contract — and
-  * `AmsSketchAgg.estimate(counters, k)` turns any snapshot into the
-  * live F₂ (self-join size) estimate.
+/** A group's current signed counters; `AmsSketchAgg.estimate(counters,
+  * k)` turns any snapshot into the live F₂ (self-join size) estimate.
   */
 case class AmsSnap(group: String, counters: Seq[Long])
 
-/** ST25 — streaming AMS tug-of-war sketch (round 15b): the online
-  * counterpart of `AmsSketchAgg` / `pipe_f2_ams` — a live self-join-
-  * size signal per key stream ("is this partition's key distribution
-  * collapsing into a hot key?") from k longs of state per group.
-  *
-  * Counter updates are ±1 additions — commutative and associative — so
-  * like ST24 the FINAL state equals the batch Aggregator over the same
-  * multiset by construction. AmsStreamSpec pins: final reconstruction
-  * ≡ the batch counters per group, estimates ≡ `AmsSketchAgg.estimate`,
-  * and multi-batch RocksDB replay ≡ single-batch (partial counter sums
+/** ST25 — streaming AMS tug-of-war sketch: the online form of the `Ams`
+  * law behind `AmsSketchAgg` / `pipe_f2_ams` — a live self-join-size
+  * signal per key stream ("is this partition's key distribution
+  * collapsing into a hot key?") from k longs of state per group. Every
+  * arrival adds ±1 into k counters, so a group emits on every non-empty
+  * batch. StreamingAmsSketchSpec pins: final reconstruction ≡ the batch
+  * counters per group, estimates ≡ `AmsSketchAgg.estimate`, and
+  * multi-batch RocksDB replay ≡ single-batch (partial counter sums
   * carried across batches).
   */
 object AmsSketchStream {
 
   class AmsProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, AmsRow, AmsSnap] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-    require(k >= 1 && k <= 60, s"need 1 <= k <= 60 (h60 sign bits); got $k")
-
-    @transient private var counters: ValueState[Seq[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counters = getHandle.getValueState[Seq[Long]]("ams_counters",
-        ExpressionEncoder[Seq[Long]](), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[AmsRow],
-        timerValues: TimerValues): Iterator[AmsSnap] = {
-      val s = (if (counters.exists()) counters.get() else Seq.fill(k)(0L))
-        .toArray
-      var changed = false
-      rows.foreach { r =>
-        var j = 0
-        while (j < k) {
-          s(j) += (((r.tag >>> j) & 1L) << 1) - 1L // bit → {-1, +1}
-          j += 1
-        }
-        changed = true
-      }
-      if (changed) {
-        val snap = s.toSeq
-        counters.update(snap)
-        // one snapshot per (group, batch): last-emission reconstruction
-        Iterator.single(AmsSnap(key, snap))
-      } else Iterator.empty
-    }
+      extends SketchProcessor[AmsRow, Long, Array[Long], AmsSnap](Ams(k), "ams_counters") {
+    override protected def input(r: AmsRow): Long = r.tag
+    override protected def snapshot(key: String, s: Array[Long]): AmsSnap =
+      AmsSnap(key, ArraySeq.unsafeWrapArray(s))
   }
 
   /** tagged stream (group, tag, seq) → AMS counter snapshots. */
   def f2Sketch(rows: DataFrame, k: Int): Dataset[AmsSnap] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    rows
-      .select(col("group"), col("tag"), col("seq"))
-      .as[AmsRow]
-      .groupByKey(_.group)
-      .transformWithState(new AmsProcessor(k), TimeMode.None(),
-        OutputMode.Append())
+    SketchProcessor.run(
+      rows.select(col("group"), col("tag"), col("seq")).as[AmsRow],
+      (r: AmsRow) => r.group, new AmsProcessor(k))
   }
 }

@@ -1,88 +1,52 @@
 package graft.streaming
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+
+import graft.operators.CountMin
 
 /** One arrival for the streaming Count-Min sketch: (group, packed, seq)
   * — packed = the d bucket positions in base w from ONE md5 of the
-  * counted key (the batch CmSketchAgg recipe), seq = a monotonically-
-  * orderable tag kept for interface parity with the other streams (the
-  * update is commutative, so ordering cannot matter here — asserted by
-  * the spec, not assumed).
+  * counted key (the batch `pipe_count_min` recipe), seq = a
+  * monotonically-orderable tag kept for interface parity with the other
+  * streams (the update is commutative, so ordering cannot matter here —
+  * asserted by the spec, not assumed).
   */
 case class CmRow(group: String, packed: Long, seq: Long)
 
-/** A group's current Count-Min matrix (d×w cells, row-major). "Last
-  * emission per group" reconstructs the full sketch at any cut — the
-  * ST20–ST23 tombstone-free reconstruct-from-emissions contract — and
+/** A group's current Count-Min matrix (d×w cells, row-major);
   * `CmSketchAgg.estimate(cells, d, w, packed)` turns any snapshot into
   * a live frequency estimate.
   */
 case class CmSnap(group: String, cells: Seq[Long])
 
-/** ST24 — streaming Count-Min sketch (round 15b): the online
-  * counterpart of `CmSketchAgg` / `pipe_count_min` — live per-key
-  * frequency estimates (the "how hot is this token right now" signal)
-  * from d·w longs of state per group whatever the stream volume.
-  *
-  * Cell increments are commutative and associative, so the FINAL state
-  * is arrival-order independent and equal by construction to the batch
-  * Aggregator over the same multiset — the strongest convergence of
-  * the streaming sketch family (KMV/bottom-k need their insert/evict
-  * rule argued; addition needs nothing). StreamingCmSketchSpec pins:
-  * final reconstruction ≡ the batch matrix per group, estimates ≡
-  * `CmSketchAgg.estimate`, and multi-batch RocksDB replay ≡
+/** ST24 — streaming Count-Min sketch: the online form of the
+  * `CountMin` law behind `CmSketchAgg` / `pipe_count_min` — live
+  * per-key frequency estimates (the "how hot is this token right now"
+  * signal) from d·w longs of state per group, checked against the same
+  * geometry bound as the batch form. Every arrival increments d cells,
+  * so a group emits on every non-empty batch. StreamingCmSketchSpec
+  * pins: final reconstruction ≡ the batch matrix per group, estimates
+  * ≡ `CmSketchAgg.estimate`, and multi-batch RocksDB replay ≡
   * single-batch (state carries partial sums across batches).
   */
 object CmSketchStream {
 
   class CmProcessor(d: Int, w: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, CmRow, CmSnap] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d, w=$w")
-
-    @transient private var cells: ValueState[Seq[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cells = getHandle.getValueState[Seq[Long]]("cm_cells",
-        ExpressionEncoder[Seq[Long]](), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[CmRow],
-        timerValues: TimerValues): Iterator[CmSnap] = {
-      val s = (if (cells.exists()) cells.get() else Seq.fill(d * w)(0L))
-        .toArray
-      var changed = false
-      rows.foreach { r =>
-        var rest = r.packed
-        var j = 0
-        while (j < d) {
-          s(j * w + (rest % w).toInt) += 1L
-          rest /= w
-          j += 1
-        }
-        changed = true
-      }
-      if (changed) {
-        val snap = s.toSeq
-        cells.update(snap)
-        // one snapshot per (group, batch): last-emission reconstruction
-        Iterator.single(CmSnap(key, snap))
-      } else Iterator.empty
-    }
+      extends SketchProcessor[CmRow, Long, Array[Long], CmSnap](CountMin(d, w), "cm_cells") {
+    override protected def input(r: CmRow): Long = r.packed
+    override protected def snapshot(key: String, s: Array[Long]): CmSnap =
+      CmSnap(key, ArraySeq.unsafeWrapArray(s))
   }
 
   /** packed stream (group, packed, seq) → Count-Min snapshots. */
   def frequencySketch(rows: DataFrame, d: Int, w: Int): Dataset[CmSnap] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    rows
-      .select(col("group"), col("packed"), col("seq"))
-      .as[CmRow]
-      .groupByKey(_.group)
-      .transformWithState(new CmProcessor(d, w), TimeMode.None(),
-        OutputMode.Append())
+    SketchProcessor.run(
+      rows.select(col("group"), col("packed"), col("seq")).as[CmRow],
+      (r: CmRow) => r.group, new CmProcessor(d, w))
   }
 }

@@ -1,97 +1,49 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+
+import graft.operators.Kmv
 
 /** One arrival for the streaming KMV sketch: (group, tag, seq) — tag =
   * the deterministic h60 hash of the counted VALUE (user id), seq = a
   * monotonically-orderable tag the SPECS use to cut the fixture into
-  * micro-batches (the insert rule itself is arrival-order independent,
-  * so in-batch processing never consults it).
+  * micro-batches (the insert law is arrival-order independent, so
+  * in-batch processing never consults it).
   */
 case class KmvRow(group: String, tag: Long, seq: Long)
 
 /** A group's current KMV sketch: the k smallest DISTINCT tags seen so
-  * far, sorted ascending. "Last emission per group" reconstructs the
-  * full sketch at any cut — the ST20/ST21/ST22 tombstone-free
-  * reconstruct-from-emissions contract — and
-  * `KmvDistinctAgg.estimate(tags, k)` turns any snapshot into the live
-  * cardinality estimate.
+  * far, sorted ascending; `KmvDistinctAgg.estimate(tags, k)` turns any
+  * snapshot into the live cardinality estimate.
   */
 case class KmvSnap(group: String, tags: Seq[Long])
 
-/** ST23 — streaming KMV distinct-count sketch (round 15b): the online
-  * counterpart of `KmvDistinctAgg` / `pipe_distinct_kmv` — live
+/** ST23 — streaming KMV distinct-count sketch: the online form of the
+  * `Kmv` law behind `KmvDistinctAgg` / `pipe_distinct_kmv` — live
   * distinct-user cardinality per key (the DAU-counter shape) from O(k)
-  * state per group whatever the stream volume or the true cardinality.
-  *
-  * The insert rule (skip if already present, insert if room, else
-  * replace the max when the arrival is smaller) maintains "the k
-  * smallest DISTINCT tags of the input set" — a pure function of the
-  * input SET, so the FINAL state is arrival-order independent and equal
-  * by construction to the batch Aggregator's merge law
-  * (bottomKDistinct(A ∪ B) = bottomKDistinct(bottomKDistinct(A) ∪
-  * bottomKDistinct(B))). StreamingKmvSpec pins: final reconstruction ≡
-  * the batch `KmvDistinctAgg` sketch per group, estimates ≡
-  * `KmvDistinctAgg.estimate`, and multi-batch RocksDB replay ≡
-  * single-batch with cross-batch evictions proven exercised. Emitting
-  * incremental ESTIMATE deltas instead of snapshots would need
-  * retractions whenever an eviction moves t_k — the same at-least-once
-  * trap ST21/ST22 document.
+  * state per group. A tag already in the sketch changes nothing, so a
+  * group emits only when an arrival enters its k smallest distinct
+  * tags. StreamingKmvSpec pins: final reconstruction ≡ the batch
+  * sketch per group, estimates ≡ `KmvDistinctAgg.estimate`, and
+  * multi-batch RocksDB replay ≡ single-batch with cross-batch evictions
+  * proven exercised.
   */
 object KmvStream {
 
   class KmvProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, KmvRow, KmvSnap] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    @transient private var sketch: ValueState[Seq[Long]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sketch = getHandle.getValueState[Seq[Long]]("kmv_sketch",
-        ExpressionEncoder[Seq[Long]](), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KmvRow],
-        timerValues: TimerValues): Iterator[KmvSnap] = {
-      var s = if (sketch.exists()) sketch.get() else Seq.empty[Long]
-      var changed = false
-      // DISTINCT semantics, exactly like KmvDistinctAgg.reduce: a tag
-      // already in the sketch contributes nothing — the stream counts
-      // values, not arrivals (the buffer is ≤ k longs, so the linear
-      // contains scan is O(k) per row). Iterated lazily: the insert
-      // rule is arrival-order independent (final state = k smallest
-      // distinct tags of the input SET), so materializing/sorting the
-      // micro-batch would buy nothing and cost memory on hot keys.
-      rows.foreach { r =>
-        if (!s.contains(r.tag)) {
-          if (s.size < k) { s = (s :+ r.tag).sorted; changed = true }
-          else if (r.tag < s.last) {
-            s = (s.init :+ r.tag).sorted; changed = true
-          }
-        }
-      }
-      if (changed) {
-        sketch.update(s)
-        // one snapshot per (group, batch): the contract is
-        // last-emission reconstruction, not per-arrival deltas
-        Iterator.single(KmvSnap(key, s))
-      } else Iterator.empty
-    }
+      extends SketchProcessor[KmvRow, Long, Seq[Long], KmvSnap](Kmv(k), "kmv_sketch") {
+    override protected def input(r: KmvRow): Long = r.tag
+    override protected def snapshot(key: String, s: Seq[Long]): KmvSnap =
+      KmvSnap(key, s)
   }
 
   /** tagged stream (group, tag, seq) → KMV sketch snapshots. */
   def distinctSketch(tagged: DataFrame, k: Int): Dataset[KmvSnap] = {
     val spark = tagged.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    tagged
-      .select(col("group"), col("tag"), col("seq"))
-      .as[KmvRow]
-      .groupByKey(_.group)
-      .transformWithState(new KmvProcessor(k), TimeMode.None(),
-        OutputMode.Append())
+    SketchProcessor.run(
+      tagged.select(col("group"), col("tag"), col("seq")).as[KmvRow],
+      (r: KmvRow) => r.group, new KmvProcessor(k))
   }
 }

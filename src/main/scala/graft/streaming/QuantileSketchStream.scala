@@ -1,99 +1,53 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+
+import graft.operators.BottomK
+import graft.operators.QuantileSketchAgg.In
 
 /** One scored arrival for the streaming sketch: (stratum, value, tag),
   * tag = the deterministic h60 hash that drives the uniform sample, seq
   * = a monotonically-orderable tag the SPECS use to cut the fixture
-  * into micro-batches (the insert rule itself is arrival-order
-  * independent, so in-batch processing never consults it).
+  * into micro-batches (the insert law is arrival-order independent, so
+  * in-batch processing never consults it).
   */
 case class SketchRow(lang: String, value: Double, tag: Long, seq: Long)
 
-/** A stratum's current bottom-k sample. "Last emission per lang"
-  * reconstructs the full per-stratum sketch at any cut — the ST20/ST21
-  * tombstone-free reconstruct-from-emissions contract. `tags` and
-  * `values` are parallel, sorted by (tag, value) ascending — exactly
-  * the retained multiset of the batch `QuantileSketchAgg`.
+/** A stratum's current bottom-k sample. `tags` and `values` are
+  * parallel, sorted by (tag, value) ascending — exactly the retained
+  * multiset of the batch `QuantileSketchAgg`.
   */
 case class SketchSnap(lang: String, tags: Seq[Long], values: Seq[Double])
 
-private[streaming] case class SketchEntry(tag: Long, value: Double)
-
-/** ST22 — streaming mergeable quantile sketch (round 15b): the online
-  * counterpart of `QuantileSketchAgg` / `pipe_ccnet_buckets_sketch`.
-  * State per stratum is the k smallest (tag, value) pairs seen so far —
-  * O(k) per stratum whatever the document mass, so live per-language
-  * cutoffs (the CCNet bucketing signal) come from bounded state.
-  *
-  * The insert rule (insert if room, else replace the max when the
-  * arrival is smaller) maintains "the k smallest (tag, value) pairs of
-  * the input multiset" — a pure function of the input SET, so the FINAL
-  * state is arrival-order independent and equal by construction to the
-  * batch Aggregator's merge law (bottomK(A ∪ B) = bottomK(bottomK(A) ∪
-  * bottomK(B))). StreamingQuantileSketchSpec pins: final reconstruction
-  * ≡ the batch bottom-k per stratum, the tercile cutoffs read off the
+/** ST22 — streaming mergeable quantile sketch: the online form of the
+  * `BottomK` law behind `QuantileSketchAgg` /
+  * `pipe_ccnet_buckets_sketch`. State per stratum is the k smallest
+  * (tag, value) pairs seen so far — O(k) whatever the document mass, so
+  * live per-language cutoffs (the CCNet bucketing signal) come from
+  * bounded state. A stratum emits only when an arrival enters its
+  * sample. StreamingQuantileSketchSpec pins: final reconstruction ≡ the
+  * batch bottom-k per stratum, the tercile cutoffs read off the
   * reconstruction ≡ `QuantileSketchAgg.quantile` on the batch sample,
   * and multi-batch RocksDB replay ≡ single-batch with cross-batch
-  * evictions proven exercised. Emitting incremental CUTOFF deltas
-  * instead of snapshots would need retractions whenever an eviction
-  * moves a tercile — the same at-least-once trap ST21 documents.
+  * evictions proven exercised.
   */
 object QuantileSketchStream {
 
   class BottomKProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, SketchRow, SketchSnap] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    private val ord: Ordering[SketchEntry] =
-      Ordering.by[SketchEntry, (Long, Double)](e => (e.tag, e.value))
-
-    @transient private var sample: ValueState[Seq[SketchEntry]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sample = getHandle.getValueState[Seq[SketchEntry]]("bottom_k",
-        ExpressionEncoder[Seq[SketchEntry]](), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SketchRow],
-        timerValues: TimerValues): Iterator[SketchSnap] = {
-      var s = if (sample.exists()) sample.get() else Seq.empty[SketchEntry]
-      var changed = false
-      // multiset semantics, exactly like QuantileSketchAgg.reduce: every
-      // row is an observation (no distinct-ing) — duplicates carry mass.
-      // Iterated lazily: bottom-k-by-tag is arrival-order independent
-      // (final state = k ord-smallest entries of the input multiset),
-      // so materializing/sorting the micro-batch would buy nothing and
-      // cost memory on hot keys.
-      rows.foreach { r =>
-        val e = SketchEntry(r.tag, r.value)
-        if (s.size < k) { s = (s :+ e).sorted(ord); changed = true }
-        else if (ord.compare(e, s.last) < 0) {
-          s = (s.init :+ e).sorted(ord); changed = true
-        }
-      }
-      if (changed) {
-        sample.update(s)
-        // one snapshot per (stratum, batch): the contract is
-        // last-emission reconstruction, not per-arrival deltas
-        Iterator.single(SketchSnap(key, s.map(_.tag), s.map(_.value)))
-      } else Iterator.empty
-    }
+      extends SketchProcessor[SketchRow, In, Seq[In], SketchSnap](BottomK(k), "bottom_k") {
+    override protected def input(r: SketchRow): In = In(r.value, r.tag)
+    override protected def snapshot(key: String, s: Seq[In]): SketchSnap =
+      SketchSnap(key, s.map(_.tag), s.map(_.value))
   }
 
   /** scored stream (lang, value, tag, seq) → bottom-k snapshots. */
   def bottomK(scored: DataFrame, k: Int): Dataset[SketchSnap] = {
     val spark = scored.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    scored
-      .select(col("lang"), col("value"), col("tag"), col("seq"))
-      .as[SketchRow]
-      .groupByKey(_.lang)
-      .transformWithState(new BottomKProcessor(k), TimeMode.None(),
-        OutputMode.Append())
+    SketchProcessor.run(
+      scored.select(col("lang"), col("value"), col("tag"), col("seq"))
+        .as[SketchRow],
+      (r: SketchRow) => r.lang, new BottomKProcessor(k))
   }
 }

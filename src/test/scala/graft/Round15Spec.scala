@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.QuantileSketchAgg
-import graft.queries.{GraphQueries, Round12Queries, Round15Queries}
+import graft.queries.{GraphQueries, Round12Queries, SketchQueries}
 
 /** Round-15 operator invariants:
   *
@@ -115,11 +115,11 @@ class Round15Spec extends SparkSpec {
 
     val byLang = scored.groupBy(_._2)
     // the fixture must exercise the SUBSAMPLE path, not just n <= k
-    assert(byLang.values.exists(_.length > Round15Queries.SketchK),
+    assert(byLang.values.exists(_.length > SketchQueries.SketchK),
       "no language exceeds k — the sketch path is untested")
     val cuts = byLang.map { case (lang, ds) =>
       val samp = ds.map(d => (H60(s"qsk:${d._1}"), d._3)).sorted
-        .take(Round15Queries.SketchK).map(_._2).toIndexedSeq.sorted
+        .take(SketchQueries.SketchK).map(_._2).toIndexedSeq.sorted
       lang -> (QuantileSketchAgg.quantile(samp, 1.0 / 3),
         QuantileSketchAgg.quantile(samp, 2.0 / 3))
     }

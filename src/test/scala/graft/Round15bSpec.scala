@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{GraphQueries, Round15bQueries}
+import graft.queries.{GraphQueries, SketchQueries}
 
 /** Round-15b operator invariants:
   *
@@ -46,7 +46,7 @@ class Round15bSpec extends SparkSpec {
     val docs = Tables.load(spark, sf(), "documents")
       .select(col("doc_id"), col("lang"), col("n_chars")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val k = Round15bQueries.PrioK
+    val k = SketchQueries.PrioK
     val byLang = docs.groupBy(_._2)
     // every language must exceed k, or the τ/estimator path is untested
     assert(byLang.values.forall(_.length > k),
@@ -136,7 +136,7 @@ class Round15bSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
     assert(out.nonEmpty)
 
-    val k = Round15bQueries.KmvK
+    val k = SketchQueries.KmvK
     val users = Tables.load(spark, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -175,7 +175,7 @@ class Round15bSpec extends SparkSpec {
   }
 
   test("pipe_kmv_overlap: set-algebra replay, accuracy vs exact overlaps") {
-    val k = Round15bQueries.KmvK
+    val k = SketchQueries.KmvK
     val out = run("pipe_kmv_overlap").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6)))
@@ -228,7 +228,7 @@ class Round15bSpec extends SparkSpec {
 
   test("pipe_count_min: sketch/estimate replay, overestimate invariant, real collisions") {
     import graft.operators.CmSketchAgg
-    val (d, w) = (Round15bQueries.CmD, Round15bQueries.CmW)
+    val (d, w) = (SketchQueries.CmD, SketchQueries.CmW)
     val out = run("pipe_count_min").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
@@ -298,7 +298,7 @@ class Round15bSpec extends SparkSpec {
 
   test("pipe_f2_ams: counter/estimate replay, accuracy vs exact F2") {
     import graft.operators.AmsSketchAgg
-    val k = Round15bQueries.AmsK
+    val k = SketchQueries.AmsK
     val out = run("pipe_f2_ams").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.nonEmpty)

@@ -20,7 +20,12 @@ class CacheHygieneSpec extends SparkSpec {
     // graph rows that persist internal stages and release them through
     // Layouts.materialize
     "graph_triangles", "graph_triangles_partitioned", "graph_clustering_coeff",
-    "graph_triangles_capped", "graph_butterflies_capped")
+    "graph_triangles_capped", "graph_butterflies_capped",
+    // rows that release their stages through Layouts.materialize
+    "st_incremental_minhash", "pipe_bpe_merges", "pipe_decontaminate_bloom",
+    "st_incremental_ann_auto", "sim_lsh_topk_auto", "pipe_ccnet_buckets_sketch",
+    "dedup_embedding_ann_auto", "dedup_embedding_ann_auto_guarded",
+    "st_incremental_ann", "sim_ivf_topk_auto", "sim_index_recall")
 
   persistingQueries.foreach { name =>
     test(s"$name leaves no cached plans behind") {

@@ -130,5 +130,7 @@ class StreamingCmSketchSpec extends SparkSpec {
 
   test("geometry must be sane") {
     intercept[IllegalArgumentException](new CmSketchStream.CmProcessor(0, 32))
+    // 32^32 overflows the packed positions: the batch bound holds here too
+    intercept[IllegalArgumentException](new CmSketchStream.CmProcessor(32, 32))
   }
 }
