@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{DocumentSource, Generators, Ingest, InMemorySink, TableIO}
+import graft.sources.{DocumentSource, DocumentSourceRegistry, Generators, Ingest, InMemorySink, TableIO}
 
 /** User-facing CLI mirroring the reference's runnable examples
   * (examples/run_example.py:146-176 modes; the ingest flags come from
@@ -139,41 +139,26 @@ object Demo {
       case "export" =>
         // store → DataFrame (capability fallback chain) → parquet →
         // read-back preview: run_example.py:168-199's composed demo.
+        // The in-memory sink is range-addressable, so the DSv2 rung
+        // serves it ("ranged-local"): each task converts its own range.
         // --limit caps fetched docs (run_example.py:152).
         val limit = args.int("limit", DocumentSource.NoLimit)
         require(limit >= 0, s"--limit must be >= 0\n$usage")
-        val fetched = DocumentSource.toDFResilient(
-          spark, DocumentSource.inMemory(args.str("sink")), limit = limit)
-        val path = s"${args.str("out")}/exported.parquet"
-        TableIO.write(fetched.df, path)
-        val back = TableIO.read(spark, path)
-        back.show(5, truncate = false)
-        Map("rows" -> back.count().toString, "path" -> path,
-          "fetch_path" -> fetched.path,
-          "schema" -> back.schema.map(f => s"${f.name}:${f.dataType.simpleString}")
-            .mkString(","))
+        exportTo(spark, DocumentSource.inMemory(args.str("sink")), args.str("out"),
+          DocumentSource.DefaultBatchSize, limit)
 
       case "export-jsonl" =>
         // Store-on-shared-storage → DSv2 descriptor read → parquet: the
         // cluster-real half of the export surface. Unlike `export` (an
-        // in-process sink, served by the plain rung), every Spark task
-        // here re-opens the JSONL store from the serializable descriptor
-        // riding in its own input partition — fetch_path reports
-        // "ranged", and the partition count is the planned range count.
+        // in-process sink, reached through the per-JVM registry), every
+        // Spark task here re-opens the JSONL store from the serializable
+        // descriptor riding in its own input partition — fetch_path
+        // reports "ranged", and the partition count is the planned range
+        // count.
         val limit = args.int("limit", DocumentSource.NoLimit)
         require(limit >= 0, s"--limit must be >= 0\n$usage")
-        val fetched = DocumentSource.toDFResilient(spark,
-          new graft.sources.JsonlDocumentStore(args.str("store")),
-          batchSize = args.int("batch-size", 10000), limit = limit)
-        val jpath = s"${args.str("out")}/exported.parquet"
-        TableIO.write(fetched.df, jpath)
-        val jback = TableIO.read(spark, jpath)
-        jback.show(5, truncate = false)
-        Map("rows" -> jback.count().toString, "path" -> jpath,
-          "fetch_path" -> fetched.path,
-          "partitions" -> fetched.df.rdd.getNumPartitions.toString,
-          "schema" -> jback.schema.map(f => s"${f.name}:${f.dataType.simpleString}")
-            .mkString(","))
+        exportTo(spark, new graft.sources.JsonlDocumentStore(args.str("store")),
+          args.str("out"), args.int("batch-size", DocumentSource.DefaultBatchSize), limit)
 
       case "roundtrip" =>
         val n = args.long("rows", 10000L)
@@ -194,6 +179,27 @@ object Demo {
         throw new IllegalArgumentException(s"unknown mode '$other'\n$usage")
     }
     out + ("elapsed_sec" -> f"${(System.nanoTime() - t0) / 1e9}%.2f")
+  }
+
+  /** `source` → DataFrame → `out/exported.parquet` → read-back preview.
+    * A `ranged-local` fetch's registration (which pins the store's
+    * snapshot) is released once the write is done.
+    */
+  private def exportTo(spark: SparkSession, source: DocumentSource, out: String,
+      batchSize: Int, limit: Int): Map[String, String] = {
+    val fetched = DocumentSource.toDFResilient(spark, source, batchSize, limit)
+    val path = s"$out/exported.parquet"
+    val partitions =
+      try {
+        TableIO.write(fetched.df, path)
+        fetched.df.rdd.getNumPartitions
+      } finally fetched.registryName.foreach(DocumentSourceRegistry.remove)
+    val back = TableIO.read(spark, path)
+    back.show(5, truncate = false)
+    Map("rows" -> back.count().toString, "path" -> path,
+      "fetch_path" -> fetched.path, "partitions" -> partitions.toString,
+      "schema" -> back.schema.map(f => s"${f.name}:${f.dataType.simpleString}")
+        .mkString(","))
   }
 
   def main(argv: Array[String]): Unit = {

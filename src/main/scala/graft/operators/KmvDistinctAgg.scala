@@ -24,17 +24,19 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 final case class Kmv(k: Int) extends MergeableSketch[Long, Seq[Long]] {
   require(k > 0, s"k must be positive, got $k")
 
-  override def zero: Seq[Long] = Nil
+  /** An indexed state: its size and its largest tag are O(1) reads. */
+  override def zero: Seq[Long] = Vector.empty
 
-  /** A tag already present contributes nothing — the distinct-ness that
-    * makes this count values, not rows (the state is ≤ k longs, so the
-    * linear `contains` scan is O(k)).
+  /** A full state rejects a tag at or above its largest one before
+    * anything else, so the many tags a full sketch turns away skip the
+    * linear `contains` scan. A tag already present contributes nothing
+    * — the distinct-ness that makes this count values, not rows.
     */
   override def insert(s: Seq[Long], tag: Long): (Seq[Long], Boolean) =
-    if (s.contains(tag)) (s, false)
-    else if (s.size < k) ((s :+ tag).sorted, true)
-    else if (tag < s.last) ((s.init :+ tag).sorted, true)
-    else (s, false)
+    if (s.lengthCompare(k) >= 0 && tag >= s.last) (s, false)
+    else if (s.contains(tag)) (s, false)
+    else if (s.lengthCompare(k) < 0) ((s :+ tag).sorted, true)
+    else ((s.init :+ tag).sorted, true)
 
   override def merge(a: Seq[Long], b: Seq[Long]): Seq[Long] =
     (a ++ b).distinct.sorted.take(k)

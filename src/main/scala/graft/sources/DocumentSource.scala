@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -43,10 +45,24 @@ trait BatchedFetch { self: DocumentSource =>
 
 object DocumentSource {
 
-  /** A source view over a named in-memory sink store (tests + demos). */
-  def inMemory(name: String): DocumentSource = new DocumentSource {
-    def fetch(): Seq[Map[String, Any]] = InMemorySink(name).drain()
-  }
+  /** A source view over a named in-memory sink store (tests + demos).
+    * Every read goes to one snapshot of the store, taken at the first
+    * read: an array of references to the stored documents in insertion
+    * order, so a DataFrame loaded from the view keeps its rows however
+    * the store changes later. The view is range-addressable, so
+    * [[toDFResilient]] serves it from the `ranged-local` rung: each task
+    * converts its own range, and no row copy stays on the driver. The
+    * registration that rung returns pins the snapshot until the caller
+    * removes it.
+    */
+  def inMemory(name: String): DocumentSource with RangedFetch =
+    new DocumentSource with RangedFetch {
+      private lazy val docs = ArraySeq.unsafeWrapArray(InMemorySink.snapshot(name))
+      def fetch(): Seq[Map[String, Any]] = docs
+      def total(): Int = docs.length
+      def fetchRange(start: Int, count: Int): Seq[Map[String, Any]] =
+        docs.slice(start, start + count)
+    }
 
   /** Fetch → rename `_id`→`id` (string) → infer schema from the FIRST
     * document (run_example.py:78-106 semantics) → DataFrame.
@@ -56,6 +72,11 @@ object DocumentSource {
 
   /** No-limit sentinel: fetch everything (the default). */
   val NoLimit: Int = Int.MaxValue
+
+  /** Documents per cursor batch or per ranged input partition when the
+    * caller names no size.
+    */
+  val DefaultBatchSize: Int = 10000
 
   /** Which fetch path `toDFResilient` ended up on, for the caller's run
     * report (the reference logs its chosen path the same way).
@@ -90,7 +111,7 @@ object DocumentSource {
     *              the store query server-side.
     */
   def toDFResilient(spark: SparkSession, source: DocumentSource,
-      batchSize: Int = 10000, limit: Int = NoLimit): Fetched = {
+      batchSize: Int = DefaultBatchSize, limit: Int = NoLimit): Fetched = {
     require(limit >= 0, s"limit $limit must be >= 0")
     val degraded = scala.collection.mutable.ArrayBuffer.empty[String]
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.InMemorySink
+import graft.sources.{DocumentSourceRegistry, InMemorySink}
 
 /** End-to-end CLI modes (reference: examples/run_example.py:146-199 and
   * the ingest CLIs' flag surface). Each mode runs hermetically through
@@ -50,10 +50,14 @@ class DemoSpec extends SparkSpec {
     InMemorySink("demo_exp").insertMany(
       (1 to 25).map(i => Map[String, Any]("_id" -> i.toLong, "v" -> i * 3L)))
     val dir = tmpDir("demo-exp")
+    val before = DocumentSourceRegistry.names
     val r = run("export", "--sink", "demo_exp", "--out", dir)
     assert(r("rows") == "25")
     assert(r("schema").contains("id:string")) // _id→string id rename held
-    assert(r("fetch_path") == "plain")        // in-memory store: plain rung
+    assert(r("fetch_path") == "ranged-local") // in-memory store: ranged rung
+    assert(r("partitions") == "1")            // 25 docs in one 10 000-doc range
+    // the export releases the registration that pins the store's snapshot
+    assert(DocumentSourceRegistry.names == before)
     InMemorySink.clear("demo_exp")
   }
 

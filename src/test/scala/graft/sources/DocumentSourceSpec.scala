@@ -97,12 +97,84 @@ class DocumentSourceSpec extends SparkSpec {
     assert(got.df.collect().map(_.getLong(1)).sorted.toSeq == Seq(10L, 20L, 30L))
   }
 
+  /** A fetch-only view of sink `name`: a store with none of the upper
+    * rungs' capabilities.
+    */
+  private def fetchOnly(name: String): DocumentSource = new DocumentSource {
+    def fetch(): Seq[Map[String, Any]] = InMemorySink(name).drain()
+  }
+
   test("plain-only store takes the plain path with no degradation noise") {
     InMemorySink.clear("t_plain_only")
     InMemorySink("t_plain_only").insertMany(Seq(Map("_id" -> 1L, "v" -> 2L)))
-    val got = DocumentSource.toDFResilient(spark, DocumentSource.inMemory("t_plain_only"))
+    val got = DocumentSource.toDFResilient(spark, fetchOnly("t_plain_only"))
     assert(got.path == "plain" && got.degraded.isEmpty)
     assert(got.df.count() == 1)
+  }
+
+  // ── the in-memory sink on the ranged rung ──
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+
+  /** The in-memory view of `name` takes the ranged rung, matches the
+    * plain rung over the same store row for row and column for column,
+    * and leaves the registry as it found it once released.
+    */
+  private def assertRangedMatchesPlain(name: String, batchSize: Int): Unit = {
+    val before = DocumentSourceRegistry.names
+    val ranged = DocumentSource.toDFResilient(spark, DocumentSource.inMemory(name),
+      batchSize = batchSize)
+    try {
+      assert(ranged.path == "ranged-local" && ranged.degraded.isEmpty)
+      val plain = DocumentSource.toDFResilient(spark, fetchOnly(name))
+      assert(plain.path == "plain")
+      assert(ranged.df.columns.toSeq == plain.df.columns.toSeq)
+      assert(ranged.df.schema == plain.df.schema)
+      assert(rows(ranged.df) == rows(plain.df))
+    } finally ranged.registryName.foreach(DocumentSourceRegistry.remove)
+    assert(DocumentSourceRegistry.names == before)
+  }
+
+  test("in-memory store of plain maps with _id: ranged rung, same rows as plain") {
+    InMemorySink.clear("t_ranged_maps")
+    InMemorySink("t_ranged_maps").insertMany((1 to 45).map(i => Map[String, Any](
+      "_id" -> i.toLong, "name" -> s"d$i", "score" -> i * 0.5)))
+    assertRangedMatchesPlain("t_ranged_maps", batchSize = 10)
+    InMemorySink.clear("t_ranged_maps")
+  }
+
+  test("in-memory store of RowDocs: ranged rung, same rows and column order as plain") {
+    InMemorySink.clear("t_ranged_rowdocs")
+    val df = Generators.big50(spark, 300, numPartitions = 3)
+    Ingest.bulkUpsert(df, "t_ranged_rowdocs", pk = Seq("i_0"), batchSize = 70)
+    assert(InMemorySink("t_ranged_rowdocs").drain().forall(_.isInstanceOf[RowDoc]))
+    assertRangedMatchesPlain("t_ranged_rowdocs", batchSize = 64)
+    InMemorySink.clear("t_ranged_rowdocs")
+  }
+
+  test("in-memory export plans a DSv2 scan over a snapshot, with no LocalRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    InMemorySink.clear("t_ranged_snap")
+    val sink = InMemorySink("t_ranged_snap")
+    sink.insertMany((1 to 30).map(i => Map[String, Any]("_id" -> i.toLong, "v" -> i.toLong)))
+    val before = DocumentSourceRegistry.names
+    val got = DocumentSource.toDFResilient(spark, DocumentSource.inMemory("t_ranged_snap"),
+      batchSize = 8)
+    try {
+      val plan = got.df.queryExecution.optimizedPlan
+      assert(plan.collect { case s: DataSourceV2ScanRelation => s }.size == 1, plan)
+      assert(plan.collect { case l: LocalRelation => l }.isEmpty, plan)
+      // the snapshot is taken at load(): growing or clearing
+      // the store before the action changes neither count nor values
+      sink.insertMany((31 to 50).map(i => Map[String, Any]("_id" -> i.toLong, "v" -> i.toLong)))
+      assert(got.df.count() == 30)
+      assert(got.df.rdd.getNumPartitions == 4) // 8+8+8+6
+      InMemorySink.clear("t_ranged_snap")
+      assert(got.df.selectExpr("sum(v)").head().getLong(0) == (1 to 30).sum.toLong)
+    } finally got.registryName.foreach(DocumentSourceRegistry.remove)
+    assert(DocumentSourceRegistry.names == before)
   }
 
   test("fetch limit caps every rung at the same row count (run_example.py:152)") {

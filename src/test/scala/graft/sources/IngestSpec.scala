@@ -106,6 +106,7 @@ class IngestSpec extends SparkSpec {
     // the export's columns follow the documents' field order
     val back = DocumentSource.toDFResilient(spark, DocumentSource.inMemory("t_rowdoc"))
     assert(back.df.columns.toSeq == names.toSeq)
+    back.registryName.foreach(DocumentSourceRegistry.remove)
     InMemorySink.clear("t_rowdoc")
   }
 }
