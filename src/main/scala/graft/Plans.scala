@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Corpus, GraphQueries, KnnGraphQueries}
+import graft.queries.{AnnQueries, Corpus, DedupQueries, GraphQueries, KnnGraphQueries}
 
 /** Regenerates PLANS.md content: prints the AQE-final physical plan of
   * each named query (args, or the default flagship set) at sf0.001.
@@ -102,6 +102,10 @@ object Plans {
     val names = if (rest.nonEmpty) rest else flagships
     val dir = "/root/testdata/sf0.001"
     names.foreach { name =>
+      val staged = AnnQueries.Indexes.collectFirst {
+        case AnnQueries.AnnIndex(_, `name`, _, _, AnnQueries.Served(serve, true), _, _) =>
+          serve
+      }
       val (df, pinned) = name match {
         // the kNN-graph rows materialize via localCheckpoint (their
         // executed plan is a bare RDD scan) — dump the registry build's
@@ -125,23 +129,11 @@ object Plans {
         case "graph_label_prop_partitioned_round" =>
           GraphQueries.lpaOneRound(spark, dir)
         case "graph_kcore_partitioned_peel" => GraphQueries.kcoreOnePeel(spark, dir)
-        case "st_incremental_ann" =>
-          graft.queries.Round17Queries.annIncrementalPlan(spark, dir)
-        case "sim_ivf_topk_auto" =>
-          val (res, all) =
-            graft.queries.Round17Queries.ivfTopkAutoPlan(spark, dir)
-          (res, Seq(all))
-        // the declared row checkpoints; dump with the truth pipeline
-        // left un-materialized so the whole shape prints
-        case "sim_index_recall" =>
-          graft.queries.Round17bQueries.indexRecallPlan(spark, dir, eagerTruth = false)
-        // the declared rows checkpoint; dump the un-materialized forms
-        case "st_incremental_ann_auto" =>
-          val (pairs, v, sigs) =
-            graft.queries.Round16Queries.annAutoPairs(spark, dir)
-          (graft.queries.Round17Queries.annVerdict(pairs, v), Seq(v, sigs))
-        case "sim_lsh_topk_auto" =>
-          graft.queries.Round18Queries.lshTopkAutoPlan(spark, dir)
+        case "st_incremental_ann" => DedupQueries.annIncrementalPlan(spark, dir)
+        case "st_incremental_ann_auto" => DedupQueries.annAutoIncrementalPlan(spark, dir)
+        // the served ANN indexes checkpoint; dump the un-materialized
+        // pipeline over their persisted corpus
+        case _ if staged.isDefined => AnnQueries.servedPlan(staged.get, spark, dir)
         // the declared row checkpoints; dump the un-materialized twin
         case "st_incremental_ann_ivf" =>
           KnnGraphQueries.annIvfTrained(Corpus.nvecs(spark, dir))

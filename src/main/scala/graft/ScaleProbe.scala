@@ -149,7 +149,7 @@ object ScaleProbe {
   private def replicateVecsRotated(spark: SparkSession, src: String,
       out: String, m: Int): Unit = {
     val vecs = Tables.load(spark, src, "embeddings")
-    val d = queries.SimilarityQueries.Dim
+    val d = queries.AnnQueries.Dim
     (0 until m).map { i =>
       val p = hashPerm(i, d)
       // literal per-coordinate terms: sign from the same hash family as

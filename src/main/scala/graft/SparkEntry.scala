@@ -16,15 +16,14 @@ object SparkEntry {
   def allDefs: Seq[QueryDef] =
     RelationalQueries.defs ++ AnalyticQueries.defs ++ ExtendedQueries.defs ++
       EventQueries.defs ++ TextQueries.defs ++ DedupQueries.defs ++
-      SimilarityQueries.defs ++ MultimodalQueries.defs ++ CurationQueries.defs ++
+      AnnQueries.defs ++ MultimodalQueries.defs ++ CurationQueries.defs ++
       Round4Queries.defs ++ Round6Queries.defs ++ Round10Queries.defs ++
       RetrievalQueries.defs ++ Round11Queries.defs ++ Round11bQueries.defs ++
       Round11cQueries.defs ++ Round11dQueries.defs ++ Round11eQueries.defs ++
       Round12Queries.defs ++ Round12bQueries.defs ++ Round13Queries.defs ++
       Round13bQueries.defs ++ Round13cQueries.defs ++ Round15Queries.defs ++
-      SketchQueries.defs ++ Round16Queries.defs ++ Round17Queries.defs ++
-      Round17bQueries.defs ++ Round18Queries.defs ++ KnnGraphQueries.defs ++
-      GraphQueries.defs
+      SketchQueries.defs ++ Round16Queries.defs ++ Round17bQueries.defs ++
+      KnnGraphQueries.defs ++ GraphQueries.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * TPC-H Q1 shape: scan → filter → project → hash agg → sort.

@@ -80,7 +80,7 @@ object DedupQueries {
       (if (radius >= 2) r2 else Seq.empty)
   }
   val AnnProbeMasks: Seq[Long] =
-    probeMasks(SimilarityQueries.NBits, AnnProbeRadius)
+    probeMasks(AnnQueries.NBits, AnnProbeRadius)
 
   /** Bands for the lossless simhash bucket join. Pigeonhole: two
     * signatures within Hamming distance d agree EXACTLY on ≥1 band iff
@@ -655,7 +655,7 @@ object DedupQueries {
         val (pairs, v, sigs) = embeddingAnnPairs(s, dir)
         Layouts.materialize((pairs, Seq(v, sigs)))
       },
-      Some(annDuckSql(SimilarityQueries.NBits, AnnProbeRadius, AnnTables, CosineTau)),
+      Some(annDuckSql(AnnQueries.NBits, AnnProbeRadius, AnnTables, CosineTau)),
       doc = "Sign-LSH bucketed cosine dedup: multi-probe Hamming-" +
         AnnProbeRadius + " candidates from " + AnnTables + " tables, exact " +
         "verify in-bucket; dedup_embedding_cosine is the recall oracle."),
@@ -680,17 +680,82 @@ object DedupQueries {
       doc = "Width-scaled sign-LSH dedup (bits ~ log2 n): the non-" +
         "saturating production form of dedup_embedding_ann; wider " +
         "signatures trade per-pair recall for linear candidate volume, " +
-        "recovered by tables/probes (AnnWideRecallSpec).")
+        "recovered by tables/probes (AnnWideRecallSpec)."),
+
+    // ── ST27 batch twin: incremental ANN dedup vs arrival order ──────
+    // Reuses the scaled-width pair pipeline VERBATIM (same signatures,
+    // ball, τ-verify as dedup_embedding_ann_scaled) and reduces the
+    // canonical pair set to the arrival-order verdict the online index
+    // emits: dup_of = min earlier τ-passing ball-mate. The state the
+    // stream holds is (bucket → vectors), so this twin compares exactly
+    // what the online index can compute; StreamingAnnDedupSpec pins
+    // stream ≡ this query across multi-file replays and a restart.
+    QueryDef(
+      "st_incremental_ann",
+      (s, dir) => Layouts.materialize(annIncrementalPlan(s, dir)),
+      Some(annIncrementalDuckSql),
+      doc = "ST27 batch twin: per vector the smallest earlier sign-LSH " +
+        "ball-mate (scaled width, radius-2, 4 tables) with exact cosine " +
+        ">= tau — arrival order := vec_id order; the streaming index's " +
+        "declared semantics (AnnDedupStream), spec-pinned bit-for-bit."),
+
+    // ── ST27b: incremental ANN dedup at the auto-width substrate ─────
+    // st_incremental_ann is the TEACHING config — its fixed 12-bit pair
+    // substrate hits the n²/2¹² candidate wall past ~64k vectors
+    // (probe-measured: ×10 10.4 s → ×26 369 s). This row is the config
+    // the online index would deploy: the same verdict reduction over
+    // the AUTO-width pair pipeline (Round16Queries.annAutoPairs, bits =
+    // clamp(⌈log2 n⌉, 8, 20) derived in-plan — probe-measured
+    // near-linear through ×52); StreamingAnnDedupSpec's auto arm pins
+    // the parameterized stream ≡ this row bit-for-bit.
+    QueryDef(
+      "st_incremental_ann_auto",
+      (s, dir) => Layouts.materialize(annAutoIncrementalPlan(s, dir)),
+      Some(annVerdictDuckSqlOver(Round16Queries.annAutoDuckSql)),
+      doc = "ST27 batch twin at the scale-safe substrate: per vector " +
+        "the smallest earlier sign-LSH ball-mate (AUTO width — bits = " +
+        "clamp(ceil(log2 n), 8, 20) derived in-plan, radius-2, 4 " +
+        "tables) with exact cosine >= tau, arrival order := vec_id " +
+        "order; the production config of the streaming ANN index " +
+        "(AnnDedupStream parameterized to the auto signatures), " +
+        "spec-pinned bit-for-bit.")
   )
 
-  /** The sign-LSH candidate+verify pipeline, pre-checkpoint — returned
-    * with its two persisted stages; package-private for PlanSpec (see
-    * [[simhashBandedPairs]]).
+  /** Arrival-order verdict reduction over a canonical pair set — the
+    * ST27 semantics (dup_of = min earlier τ-passing ball-mate) as a
+    * pure function of (pairs, corpus): one definition for every declared
+    * batch twin (the fixed-width, auto-width and trained-IVF pair rules).
     */
-  private[graft] def embeddingAnnPairs(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    embeddingAnnPairs(s, dir, SimilarityQueries.NBits, AnnProbeRadius,
-      AnnTables, CosineTau)
+  private[graft] def annVerdict(pairs: DataFrame, v: DataFrame): DataFrame = {
+    val verdict = pairs
+      .groupBy(col("vec_b"))
+      .agg(min(struct(col("vec_a"), col("cosine"))).as("m"))
+      .select(col("vec_b").as("vec_id"), col("m.vec_a").as("dup_of"),
+        col("m.cosine").as("cosine"))
+    v.select(col("vec_id"))
+      .join(verdict, Seq("vec_id"), "left")
+      .withColumn("status",
+        when(col("dup_of").isNull, "uniq").otherwise("dup"))
+      .orderBy(col("vec_id"))
+  }
+
+  /** Un-materialized ST27 batch-twin pipeline plus its persisted
+    * stages — the declared row checkpoints and releases; Plans dumps
+    * this form (a checkpointed row's own plan is a bare RDD scan).
+    */
+  private[graft] def annIncrementalPlan(s: SparkSession, dir: String)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (pairs, v, sigs) = embeddingAnnPairs(
+      s, dir, AnnScaledBits, AnnProbeRadius, AnnTables, CosineTau)
+    (annVerdict(pairs, v), Seq(v, sigs))
+  }
+
+  /** The same at the auto-width substrate (st_incremental_ann_auto). */
+  private[graft] def annAutoIncrementalPlan(s: SparkSession, dir: String)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (pairs, v, sigs) = Round16Queries.annAutoPairs(s, dir)
+    (annVerdict(pairs, v), Seq(sigs, v))
+  }
 
   /** Table-`t` sign-LSH signature of the `v` column at the given width —
     * ONE definition shared by the batch ANN dedup pipelines and the
@@ -700,7 +765,7 @@ object DedupQueries {
   private[graft] def annSigCol(t: Int, bits: Int): Column =
     (0 until bits).map { b =>
       when(VectorOps.dot(col("v"),
-        typedLit(SimilarityQueries.hyperplaneSet(t, bits)(b))) >= 0.0,
+        typedLit(AnnQueries.hyperplaneSet(t, bits)(b))) >= 0.0,
         lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -739,9 +804,13 @@ object DedupQueries {
     * e.g. (16, 1, 8, 0.9) ⇒ per-pair per-table catch ≈ p^16 + 16p^15(1-p)
     * ≈ 0.31 at p = 1 − acos(0.9)/π ≈ 0.856, so 8 tables ⇒ recall ≈ 0.95
     * (AnnWideRecallSpec measures it on planted near-dups).
+    *
+    * Returns the pipeline pre-checkpoint with its two persisted stages;
+    * package-private for PlanSpec (see [[simhashBandedPairs]]).
     */
   private[graft] def embeddingAnnPairs(s: SparkSession, dir: String,
-      bits: Int, radius: Int, tables: Int, tau: Double)
+      bits: Int = AnnQueries.NBits, radius: Int = AnnProbeRadius,
+      tables: Int = AnnTables, tau: Double = CosineTau)
       : (DataFrame, DataFrame, DataFrame) = {
     // same wrap guard as probeMasks: sigCol builds the key with
     // `1L << b`, so an over-wide width must fail here, before any job runs
@@ -812,10 +881,7 @@ object DedupQueries {
     */
   private def annDuckSql(bits: Int, radius: Int, tables: Int, tau: Double): String = {
     val masks = probeMasks(bits, radius)
-    def sigSql(t: Int): String = (0 until bits).map { b =>
-      val lits = SimilarityQueries.hyperplaneSet(t, bits)(b).mkString("[", ", ", "]")
-      s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1L << b} ELSE 0 END)"
-    }.mkString(" + ")
+    def sigSql(t: Int): String = AnnQueries.signBucketSql(AnnQueries.hyperplaneSet(t, bits))
     val perTable = (0 until tables).map { t =>
       val probes = masks.map {
         case 0L => s"sig_$t"

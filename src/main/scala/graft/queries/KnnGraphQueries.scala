@@ -32,7 +32,7 @@ import graft.operators.Layouts
   */
 object KnnGraphQueries {
 
-  import SimilarityQueries.{NBits, hyperplaneSet}
+  import AnnQueries.{NBits, hyperplaneSet}
 
   /** kNN graph degree. */
   val KnnK = 5
@@ -151,16 +151,19 @@ object KnnGraphQueries {
       : (SparkSession, String) => DataFrame =
     (s, dir) => Layouts.materialize(build(Corpus.nvecs(s, dir)))
 
+  /** Every vector's top-k scored neighbors, (vec_id, rank,
+    * neighbor_id, cosine): the serving tail with the query as vec_id. */
+  private def knnRanked(cand: DataFrame, k: Int): DataFrame =
+    AnnQueries.ranked(cand, "cosine", k, desc = true)
+      .withColumnRenamed("query_id", "vec_id")
+
   /** The two-table multiprobe sign-LSH kNN graph at signature width
     * `bits`. Stage: the persisted bucketed corpus.
     */
   private[graft] def lshGraph(bits: Int)(base: DataFrame)
       : (DataFrame, Seq[DataFrame]) = {
     val tables = knnTables(bits)
-    def bucketCol(t: Int) = (0 until bits).map { b =>
-      when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
-        lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
+    def bucketCol(t: Int) = AnnQueries.signBucket(tables(t))
     val all = base
       .withColumn("b0", bucketCol(0)).withColumn("b1", bucketCol(1))
       .transform(Layouts.spread)
@@ -183,23 +186,12 @@ object KnnGraphQueries {
         (col(bc) + lit(t << bits)).as("bucket"))
       val q = all.select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), explode(probeCol(bc, t)).as("bucket"))
-      corpus.join(q.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(VectorOps.cosine(col("v"), col("qv"), col("nrm"), col("qn")), 6)
-            .as("cosine"))
+      AnnQueries.scored(corpus.join(q.hint("shuffle_hash"), Seq("bucket")),
+        AnnQueries.Cos)
     }.reduce(_ unionByName _)
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
-      .orderBy(col("vec_id"), col("rank"))
-    (res, Seq(all))
+    (knnRanked(cand, KnnK).orderBy(col("vec_id"), col("rank")), Seq(all))
   }
 
   /** The auto-width sign-LSH kNN graph: bits = clamp(bitlen(n−1),
@@ -212,10 +204,7 @@ object KnnGraphQueries {
       : (DataFrame, Seq[DataFrame]) = {
     import Round16Queries.{KnnAutoMaxBits, KnnAutoMinBits}
     val tables = knnTables(KnnAutoMaxBits)
-    def sigCol(t: Int) = (0 until KnnAutoMaxBits).map { b =>
-      when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
-        lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
+    def sigCol(t: Int) = AnnQueries.signBucket(tables(t))
     val width = base.agg(count(lit(1)).as("n"))
       .select(
         greatest(lit(KnnAutoMinBits), least(lit(KnnAutoMaxBits),
@@ -246,21 +235,12 @@ object KnnGraphQueries {
         explode(probes).as("bucket"))
       // score in-bucket BEFORE the pair dedup (the lshGraph
       // shuffle-payload lesson: 8 bytes of cosine, never vectors)
-      corpus.join(q.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(VectorOps.cosine(col("v"), col("qv"),
-            col("nrm"), col("qn")), 6).as("cosine"))
+      AnnQueries.scored(corpus.join(q.hint("shuffle_hash"), Seq("bucket")),
+        AnnQueries.Cos)
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = cand(0).unionByName(cand(1))
+    val res = knnRanked(cand(0).unionByName(cand(1))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cosine")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
+      .agg(max(col("cosine")).as("cosine")), KnnK)
       .orderBy(col("vec_id"), col("rank"))
     (res, Seq(all))
   }
@@ -326,7 +306,7 @@ object KnnGraphQueries {
     graft.functions.GraftFunctions.register(s)
     val corpus = base
       .transform(Layouts.spread)
-    val width = Round17Queries.ivfAutoWidth(corpus, Round17Queries.IvfAutoMaxK)
+    val width = AnnQueries.ivfAutoWidth(corpus, AnnQueries.IvfAutoMaxK)
     val all = corpus.crossJoin(broadcast(width))
     // hash-residue centroid sample (~K cells whatever the id layout —
     // the round-19 cell-collapse fix, see ivfTopkAutoServe): cells are
@@ -343,7 +323,7 @@ object KnnGraphQueries {
     // probe for the same O(n·K·dim) flops (per-element lambda dispatch
     // + n·K struct allocations); materialized once (both join sides of
     // the serving tail read this stage)
-    val cells = corpus.crossJoin(broadcast(Round11bQueries.centArray(cents)))
+    val cells = corpus.crossJoin(broadcast(AnnQueries.centArray(cents)))
       .withColumn("cells", expr(s"pq_argmin_k(v, cents, $KnnIvfNprobe)"))
       .select(col("vec_id"), col("v"), col("nrm"), col("cells"))
       .persist()
@@ -366,17 +346,8 @@ object KnnGraphQueries {
     val probes = cells.select(col("vec_id").as("query_id"),
       col("v").as("qv"), col("nrm").as("qn"),
       explode(col("cells")).as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = homes.join(probes.hint("shuffle_hash"), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorOps.cosine(col("v"), col("qv"), col("nrm"), col("qn")), 6)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
+    val res = knnRanked(AnnQueries.scored(
+      homes.join(probes.hint("shuffle_hash"), Seq("cell")), AnnQueries.Cos), k)
     // sorted=false: internal consumers (the NN-Descent SEED — its next
     // stage immediately repartitions) skip the presentation sort's
     // global range exchange; declared rows keep the total ORDER BY
@@ -396,21 +367,15 @@ object KnnGraphQueries {
   private[graft] def trainedCentArray(base: DataFrame): DataFrame = {
     val s = base.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val width = Round17Queries.ivfAutoWidth(
-      base, Round17Queries.IvfKmeansAutoMaxK)
+    val width = AnnQueries.ivfAutoWidth(
+      base, AnnQueries.IvfKmeansAutoMaxK)
     val vecs = base
       .crossJoin(broadcast(width))
       .transform(Layouts.spread)
       .persist()
     try {
       vecs.count()
-      val c0 = vecs
-        .filter(expr(Corpus.idHash60Spark("vec_id")) %
-          col("stride") === 0)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val cents = Round11bQueries.kmeansTrainFrom(
-        vecs.select(col("vec_id"), col("v")), c0, Round11bQueries.KmIters)
-      Round11bQueries.centArray(cents).localCheckpoint(true)
+      AnnQueries.centArray(AnnQueries.kmeansTrainAuto(vecs)).localCheckpoint(true)
     } finally vecs.unpersist(false)
   }
 
@@ -529,7 +494,7 @@ object KnnGraphQueries {
   /** One grouped fine-Lloyd round over the coarse-routed corpus:
     * assignment = every vector to the nearest fine centroid OF ITS
     * HOME COARSE CELL (one broadcast join + compiled pq_argmin pass),
-    * update = `Round11bQueries.lloydMeans` grouped by (c2, f) instead
+    * update = `AnnQueries.lloydMeans` grouped by (c2, f) instead
     * of cluster (one hash aggregate, ONE shuffle of partial sums —
     * linear in n), positions re-indexed dense per coarse so empty fine
     * cells compact identically on both engines.
@@ -541,7 +506,7 @@ object KnnGraphQueries {
       .join(broadcast(fineArr(fc)), Seq("c2"))
       .withColumn("f", expr("pq_argmin(v, fcvs)"))
     val wRe = Window.partitionBy(col("c2")).orderBy(col("f"))
-    Round11bQueries.lloydMeans(assigned, col("c2"), col("f"))
+    AnnQueries.lloydMeans(assigned, col("c2"), col("f"))
       .select(col("c2"),
         ((row_number().over(wRe)) - 1).cast("int").as("fnew"),
         col("cv"))
@@ -696,13 +661,7 @@ object KnnGraphQueries {
       .repartition(col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnNndWidth)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
-    (res, Seq(av))
+    (knnRanked(cand, KnnNndWidth), Seq(av))
   }
 
   /** One NN-Descent round checkpointed, its av stage released. */
@@ -750,37 +709,20 @@ object KnnGraphQueries {
         round(VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")), 6)
           .as("cosine"))
       .filter(col("cosine") >= DedupQueries.CosineTau)
-    (Round17Queries.annVerdict(pairs, cells.select(col("vec_id"))),
+    (DedupQueries.annVerdict(pairs, cells.select(col("vec_id"))),
       Seq(cells))
   }
 
   // ════ recall audit ══════════════════════════════════════════════════
 
-  /** Exact cosine top-KnnK truth for the graph-recall panel — broadcast
-    * panel, one corpus scan, same rounding and (cosine desc, id asc)
-    * tiebreak as every build. (query_id, neighbor_id) projection: the
-    * recall joins need sets, not scores. The panel is the
-    * KnnRecallPanel SMALLEST vec_ids via a rank, NOT `vec_id <
-    * KnnRecallPanel`: on an offset/sparse-id corpus with no ids below
-    * the constant the truth panel would be empty and the audit would
-    * vacuously pass.
+  /** The graph-recall panel: the KnnRecallPanel SMALLEST vec_ids via a
+    * rank, NOT `vec_id < KnnRecallPanel` — on an offset/sparse-id
+    * corpus with no ids below the constant the truth panel would be
+    * empty and the audit would vacuously pass.
     */
-  private def bruteKnnPanel(all: DataFrame): DataFrame = {
-    val panel = all.select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(KnnRecallPanel)
-    val q = all.join(broadcast(panel), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    all.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorOps.cosine(col("v"), col("qv"), col("nrm"), col("qn")), 6)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
-      .select(col("query_id"), col("neighbor_id"))
-  }
+  private def smallestIds(all: DataFrame): DataFrame =
+    all.join(broadcast(all.select(col("vec_id"))
+      .orderBy(col("vec_id")).limit(KnnRecallPanel)), Seq("vec_id"))
 
   /** The cell stages the audit's trained builds share, each built at
     * most once over the audit's ONE prepared corpus and released by
@@ -837,44 +779,28 @@ object KnnGraphQueries {
     def release(): Unit = releases.foreach(_())
   }
 
-  /** Edge recall of every registry build against the panel truth, per
-    * panel query. ONE prepared corpus is threaded through the truth and
-    * every build; safe to release in the finally: every graph is
-    * materialized before its recall is composed, and the truth is a
-    * bounded driver-side collect.
+  /** Edge recall of every registry build against the exact cosine
+    * top-KnnK panel truth (`AnnQueries.exactTopk`, same rounding and
+    * tiebreak as every build), per panel query. ONE prepared corpus is
+    * threaded through the truth and every build; safe to release in
+    * the finally: every graph is materialized before its recall is
+    * composed, and the truth is a bounded driver-side collect.
     */
   private def graphRecall(s: SparkSession, dir: String): DataFrame = {
     val base = Corpus.nvecs(s, dir).persist()
     val stages = new AuditStages(base)
     try {
       base.count()
-      // The panel truth is ≤ KnnRecallPanel·KnnK rows BY CONSTRUCTION —
-      // collect it to the driver and rebuild it as a local relation (a
-      // bounded collect is the documented scalar pattern; a
-      // localCheckpoint would pin blocks for the session's lifetime).
-      // The panel id set rides along for each build's filter.
-      val truthRows = bruteKnnPanel(base).collect().toSeq
-      val panelIds = truthRows.map(_.getLong(0)).distinct.sorted
-      import s.implicits._
-      val truth = broadcast(
-        truthRows.map(r => (r.getLong(0), r.getLong(1)))
-          .toDF("query_id", "neighbor_id"))
-      val tn = truth.groupBy(col("query_id"))
-        .agg(count(lit(1)).as("t_n"))
-      Builds.map { b =>
-        val approx = stages.graph(b, base)
+      val truth = AnnQueries.collected(
+        AnnQueries.exactTopk(base, smallestIds, AnnQueries.Cos, KnnK))
+      // the panel id set rides along for each build's filter (a local
+      // relation collects without a job)
+      val panelIds = truth.collect().map(_.getLong(0)).distinct.sorted.toSeq
+      AnnQueries.recallOf("build", Builds.map { b =>
+        (b.label, truth, stages.graph(b, base)
           .filter(col("vec_id").isin(panelIds: _*))
-          .select(col("vec_id").as("query_id"), col("neighbor_id"))
-        val hit = truth
-          .join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy(col("query_id")).agg(count(lit(1)).as("h"))
-        tn.join(hit, Seq("query_id"), "left")
-          .select(lit(b.label).as("build"), col("query_id"),
-            coalesce(col("h"), lit(0L)).as("hits"),
-            (coalesce(col("h"), lit(0L)).cast("double") /
-              col("t_n").cast("double")).as("recall"))
-      }.reduce(_ unionByName _)
-        .orderBy(col("build"), col("query_id"))
+          .select(col("vec_id").as("query_id"), col("neighbor_id")))
+      })
     } finally { stages.release(); base.unpersist(false) }
   }
 
@@ -893,10 +819,7 @@ object KnnGraphQueries {
     */
   private[graft] def knnDuckCtes(bits: Int): String = {
     val tables = knnTables(bits)
-    def bucketSql(t: Int) = (0 until bits).map { b =>
-      val lits = tables(t)(b).mkString("[", ", ", "]")
-      s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
-    }.mkString(" + ")
+    def bucketSql(t: Int) = AnnQueries.signBucketSql(tables(t))
     def probes(t: Int) = (0 to bits).map {
       case 0 => s"b$t + ${t << bits}"
       case b => s"xor(b$t, ${1 << (b - 1)}) + ${t << bits}"
@@ -939,10 +862,7 @@ object KnnGraphQueries {
   private[graft] lazy val knnAutoDuckCtes: String = {
     import Round16Queries.{KnnAutoMaxBits, KnnAutoMinBits}
     val tables = knnTables(KnnAutoMaxBits)
-    def sigSql(t: Int) = (0 until KnnAutoMaxBits).map { b =>
-      val lits = tables(t)(b).mkString("[", ", ", "]")
-      s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
-    }.mkString(" + ")
+    def sigSql(t: Int) = AnnQueries.signBucketSql(tables(t))
     val bitsSql =
       s"greatest($KnnAutoMinBits, least($KnnAutoMaxBits, length(bin(count(*) - 1))))"
     def probesSql(st: String, t: Int) =
@@ -990,8 +910,8 @@ object KnnGraphQueries {
   private lazy val knnGraphIvfDuckSql: String = {
     val ad = VectorOps.duckDist2("a.v", "c.cv")
     s"""WITH ${Corpus.nvecsDuck},
-      width AS (${Round17Queries.ivfAutoWidthSql("nvecs",
-        Round17Queries.IvfAutoMaxK)}),
+      width AS (${AnnQueries.ivfAutoWidthSql("nvecs",
+        AnnQueries.IvfAutoMaxK)}),
       cents AS (
         SELECT vec_id AS pos, v AS cv
         FROM nvecs CROSS JOIN width
@@ -1031,10 +951,10 @@ object KnnGraphQueries {
     * dedup-twin oracle.
     */
   private def trainedCellDuckCtes: String = {
-    val it = Round11bQueries.KmIters
+    val it = AnnQueries.KmIters
     val ad = VectorOps.duckDist2("a.v", "c.cv")
-    s"""${Round11bQueries.kmDuckPrefixFrom(
-        Round17Queries.kmeansAutoC0Sql, it)},
+    s"""${AnnQueries.kmDuckPrefixFrom(
+        AnnQueries.kmeansAutoC0Sql, it)},
       cellranks AS (
         SELECT a.vec_id, a.v, ${VectorOps.duckNorm("a.v")} AS nrm, c.pos,
           row_number() OVER (PARTITION BY a.vec_id
@@ -1101,13 +1021,13 @@ object KnnGraphQueries {
     * rn 1 on both engines.
     */
   private def knnGraphIvfScaledDuckCtes: String = {
-    val it = Round11bQueries.KmIters
+    val it = AnnQueries.KmIters
     val h60 = Corpus.idHash60Duck("vec_id")
     val cd = VectorOps.duckDist2("a.v", "c.cv")
     val fcd = VectorOps.duckDist2("f.cv", "c.cv")
     val fd = VectorOps.duckDist2("p.v", "f.cv")
-    s"""${Round11bQueries.kmDuckPrefixFrom(
-        Round17Queries.kmeansAutoC0Sql, it)},
+    s"""${AnnQueries.kmDuckPrefixFrom(
+        AnnQueries.kmeansAutoC0Sql, it)},
       width AS (${cellLoadWidthSql("vecs")}),
       coarseranks AS (
         SELECT a.vec_id, a.v, c.pos,
@@ -1168,13 +1088,13 @@ object KnnGraphQueries {
     * table with cell = c2·2³² + f.
     */
   private def knnGraphIvfHierDuckCtes: String = {
-    val it = Round11bQueries.KmIters
+    val it = AnnQueries.KmIters
     val h60 = Corpus.idHash60Duck("vec_id")
     val cd = VectorOps.duckDist2("a.v", "c.cv")
     val scd = VectorOps.duckDist2("f.cv", "c.cv")
     val fad = VectorOps.duckDist2("a.v", "c.cv")
     val fd = VectorOps.duckDist2("p.v", "c.cv")
-    val dim = Round11bQueries.Dim
+    val dim = AnnQueries.Dim
     val fineRounds = (1 to KnnFineIters).map { i =>
       s"""fa$i AS (
           SELECT vec_id, v, c2, f FROM (
@@ -1195,8 +1115,8 @@ object KnnGraphQueries {
             SELECT c2, f, list(mn ORDER BY idx) AS cv FROM fu$i
             GROUP BY c2, f))"""
     }.mkString(",\n      ")
-    s"""${Round11bQueries.kmDuckPrefixFrom(
-        Round17Queries.kmeansAutoC0Sql, it)},
+    s"""${AnnQueries.kmDuckPrefixFrom(
+        AnnQueries.kmeansAutoC0Sql, it)},
       width AS (${cellLoadWidthSql("vecs")}),
       coarseranks AS (
         SELECT a.vec_id, a.v, c.pos,

@@ -259,27 +259,17 @@ object Round10Queries {
     QueryDef(
       "pipe_semdedup",
       (s, dir) => {
-        import SimilarityQueries.{CentroidCap, CentroidEvery}
         val all = Corpus.nvecs(s, dir)
           .transform(Layouts.spread)
-        val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
-            col("vec_id") < CentroidEvery * CentroidCap)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-        val wAssign = Window.partitionBy(col("vec_id"))
-          .orderBy(col("d2").asc, col("cent_id").asc)
-        val assign = all.join(broadcast(cents), lit(true))
-          .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
-            VectorOps.dist2(col("v"), col("cv")).as("d2"))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("v"), col("nrm"), col("cent_id").as("cell"))
-        semdedupPrune(assign)
+        semdedupPrune(AnnQueries.rankedCells(all, Seq("vec_id", "v", "nrm"),
+          "v", AnnQueries.sampledCents(all), _ === 1)
+          .withColumnRenamed("cent_id", "cell"))
       },
       Some(s"""WITH ${Corpus.nvecsDuck},
           cents AS (
             SELECT vec_id AS cent_id, v AS cv FROM nvecs
-            WHERE vec_id % ${SimilarityQueries.CentroidEvery} = 0
-              AND vec_id < ${SimilarityQueries.CentroidEvery * SimilarityQueries.CentroidCap}),
+            WHERE vec_id % ${AnnQueries.CentroidEvery} = 0
+              AND vec_id < ${AnnQueries.CentroidEvery * AnnQueries.CentroidCap}),
           assign AS (
             SELECT vec_id, v, nrm, cent_id AS cell FROM (
               SELECT a.vec_id, a.v, a.nrm, c.cent_id,
@@ -317,7 +307,7 @@ object Round10Queries {
     QueryDef(
       "pipe_semdedup_scaled",
       (s, dir) => {
-        import SimilarityQueries.CentroidEvery
+        import AnnQueries.CentroidEvery
         val CoarseEvery = CentroidEvery * CentroidEvery
         val all = Corpus.nvecs(s, dir)
           .transform(Layouts.spread)
@@ -351,7 +341,7 @@ object Round10Queries {
         semdedupPrune(assign)
       },
       Some {
-        import SimilarityQueries.CentroidEvery
+        import AnnQueries.CentroidEvery
         val coarseEvery = CentroidEvery * CentroidEvery
         s"""WITH ${Corpus.nvecsDuck},
           coarse AS (SELECT vec_id AS c2, v AS c2v FROM nvecs

@@ -22,9 +22,6 @@ import graft.queries.Corpus.{h60Duck, h60Spark}
   *  - C4 line-level cleaning (Raffel et al. 2020, §2.2 of the T5
   *    paper) — terminal-punctuation / min-words / blocklist rules per
   *    LINE, document survives with ≥3 kept lines,
-  *  - product-quantization ANN (Jégou et al. 2011, "Product
-  *    Quantization for Nearest Neighbor Search") — the compressed-index
-  *    + asymmetric-distance form that serves billion-vector search,
   *  - blocked entity resolution (the Fellegi-Sunter/blocking shape,
   *    Christen 2012) — block key → in-block candidate pairs →
   *    edit-distance verify,
@@ -39,8 +36,7 @@ import graft.queries.Corpus.{h60Duck, h60Spark}
   * Determinism: the established recipes — md5-derived 60-bit ints for
   * synthesized bits, every float ratio written as ONE division of exact
   * integers with identical expression text in both engines, ln rounded
-  * to 9 dp then summed as exact DECIMAL, DECIMAL distance sums for the
-  * PQ lookup table (4 addends, order-free by exactness).
+  * to 9 dp then summed as exact DECIMAL.
   */
 object Round11Queries {
 
@@ -55,27 +51,6 @@ object Round11Queries {
   val C4MinWords = 5
   /** C4 keeps only documents with ≥ 3 surviving lines. */
   val C4MinLines = 3
-
-  // ── product-quantization constants (Jégou et al. 2011) ─────────────
-  /** Subspaces: 64-dim embeddings split into M=8 blocks of 8 dims —
-    * the paper's canonical m=8 / k*=256 config (8 bytes per vector,
-    * a 32× compression of the 64-float embedding).
-    */
-  val PqM = 8
-  val PqSubDim = 8
-  /** Codewords per subspace codebook (k* = 2^8 in the paper). */
-  val PqK = 256
-  /** Deterministic codeword source: subvectors of the first PqK vectors
-    * (the sim_ivf_topk "k-means trained on a fixed sample" stance).
-    */
-  val PqCentEvery = 1
-  /** ADC retrieves a shortlist, exact re-rank returns the top-k — the
-    * IVFADC+R refinement of the paper (recall@5 = 0.92 on the fixture
-    * vs 0.0 for raw 2-byte ADC on near-random 64-dim data).
-    */
-  val PqShortlist = 50
-  val PqTopK = 5
-  val PqNQueries = 5
 
   // ── entity-resolution constants ────────────────────────────────────
   /** Every ErTwinMod-th customer gets a dirty duplicate record. */
@@ -100,62 +75,6 @@ object Round11Queries {
          CAST(CASE WHEN cb IS NOT NULL THEN greatest(4 * cb - 3, 0) ELSE 0 END AS DOUBLE) / (4 * c1)
          + CAST(3 * fw * (COALESCE(bw, 0) + 1) AS DOUBLE) / (CAST(4 * c1 AS DOUBLE) * (bb + vv))
        ELSE CAST(COALESCE(bw, 0) + 1 AS DOUBLE) / (bb + vv) END"""
-
-  /** The PQ/ADC oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
-  private[queries] lazy val pqTopkDuckSql: String =
-    s"""WITH ${Corpus.vecsDuck},
-          cents AS (
-            SELECT CAST(vec_id / $PqCentEvery AS INT) AS code_id, v AS cv FROM vecs
-            WHERE vec_id % $PqCentEvery = 0 AND vec_id < ${PqCentEvery * PqK}),
-          cb AS (
-            SELECT u.m AS m, code_id,
-              cv[u.m * $PqSubDim + 1 : u.m * $PqSubDim + $PqSubDim] AS cw
-            FROM cents, unnest(range(0, $PqM)) u(m)),
-          enc AS (
-            SELECT a.vec_id, c.m, c.code_id,
-              ${VectorOps.duckDist2(
-                s"a.v[c.m * $PqSubDim + 1 : c.m * $PqSubDim + $PqSubDim]", "c.cw")} AS d2
-            FROM vecs a CROSS JOIN cb c),
-          codes AS (
-            SELECT vec_id, m, code_id FROM (
-              SELECT vec_id, m, code_id,
-                row_number() OVER (PARTITION BY vec_id, m
-                  ORDER BY d2 ASC, code_id ASC) AS rn
-              FROM enc)
-            WHERE rn = 1),
-          lut AS (
-            SELECT q.vec_id AS query_id, c.m, c.code_id,
-              CAST(round(${VectorOps.duckDist2(
-                s"q.v[c.m * $PqSubDim + 1 : c.m * $PqSubDim + $PqSubDim]", "c.cw")}, 6)
-                AS DECIMAL(18,6)) AS lutd
-            FROM vecs q CROSS JOIN cb c
-            WHERE q.vec_id < $PqNQueries),
-          adc AS (
-            SELECT l.query_id, co.vec_id AS neighbor_id,
-              CAST(sum(l.lutd) AS DOUBLE) AS adc
-            FROM codes co JOIN lut l ON co.m = l.m AND co.code_id = l.code_id
-            WHERE co.vec_id <> l.query_id
-            GROUP BY l.query_id, co.vec_id),
-          shortlist AS (
-            SELECT query_id, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY adc ASC, neighbor_id ASC) AS srank
-              FROM adc)
-            WHERE srank <= $PqShortlist),
-          rer AS (
-            SELECT s.query_id, s.neighbor_id,
-              round(${VectorOps.duckDist2("a.v", "q.v")}, 6) AS d2
-            FROM shortlist s
-            JOIN vecs a ON a.vec_id = s.neighbor_id
-            JOIN vecs q ON q.vec_id = s.query_id),
-          ranked AS (
-            SELECT query_id, neighbor_id, d2,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY d2 ASC, neighbor_id ASC) AS rank
-            FROM rer)
-        SELECT query_id, rank, neighbor_id, d2 FROM ranked
-        WHERE rank <= $PqTopK ORDER BY query_id, rank"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -376,98 +295,6 @@ object Round11Queries {
       doc = "C4 §2.2 line rules (terminal punct, ≥5 words, blocklist) over " +
         "deterministic synthesized lines; doc survives with ≥3 kept lines; " +
         "zero-shuffle array-HOF pass."),
-
-    // ── product-quantization ANN with asymmetric distance (Jégou'11) ─
-    // The billion-vector serving form: vectors are stored as M=4
-    // nibble codes (argmin codeword per 16-dim subspace — 2 bytes per
-    // vector, a 128× compression of the 64-float embedding), queries
-    // compute one M×K lookup table of exact subspace distances, and
-    // the approximate distance of every vector is FOUR TABLE LOOKUPS.
-    // Spark shape: the codebook (M·K = 64 subvectors) aggregates to
-    // FOUR rows (one sorted codeword array per subspace) and broadcasts;
-    // the corpus encodes in one ZERO-SHUFFLE narrow pass — the argmin
-    // over 16 codewords is an in-row array fold (native vec_dist2 inside
-    // the lambda, ties impossible to misorder because the codeword list
-    // is sorted and the fold keeps the strictly-smaller candidate).
-    // That's the one-off INDEX BUILD. The per-query LUT (M·K·|q| rows)
-    // broadcasts onto the code table and the scan aggregates
-    // nibble-joined lookups with ONE rollup shuffle. The corpus' full
-    // vectors never move after encoding — the entire point of PQ at
-    // scale. Determinism: per-subspace LUT distances round to 6 dp into
-    // DECIMAL(18,6); the ADC sum of 4 exact decimals is order-free; the
-    // encode-side d2 compares raw doubles, bit-identical in both
-    // engines because both are strict sequential folds.
-    QueryDef(
-      "sim_pq_topk",
-      (s, dir) => {
-        graft.functions.GraftFunctions.register(s) // vec_dist2 on the SQL surface
-        val all = Corpus.vecs(s, dir)
-        val cents = all
-          .filter(col("vec_id") % PqCentEvery === 0 &&
-            col("vec_id") < PqCentEvery * PqK)
-          .select((col("vec_id") / PqCentEvery).cast("int").as("code_id"), col("v").as("cv"))
-        val cb = cents
-          .select(col("code_id"), col("cv"), explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-          .select(col("m"), col("code_id"),
-            expr(s"slice(cv, m * $PqSubDim + 1, $PqSubDim)").as("cw"))
-        // M-row broadcast codebook: per subspace, codewords sorted by id
-        // (code_id = source vec_id is contiguous 0..K-1, so the sorted
-        // position IS the code and the argmin can return a plain index)
-        val cbArr = cb.groupBy(col("m"))
-          .agg(sort_array(collect_list(struct(col("code_id"), col("cw")))).as("cws0"))
-          .select(col("m"), expr("transform(cws0, c -> c.cw)").as("cws"))
-        // index build: zero-shuffle narrow encode; the argmin is the
-        // native codegen'd pq_argmin (the interpreted aggregate/transform
-        // HOF route measured ~1.2 ms/vector at ×10 — per-element lambda
-        // dispatch over M·K·subdim terms; the compiled loop removes it)
-        val codes = all
-          .select(col("vec_id"), col("v"), explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-          .join(broadcast(cbArr), Seq("m"))
-          .withColumn("sub", expr(s"slice(v, m * $PqSubDim + 1, $PqSubDim)"))
-          .withColumn("code_id", expr("pq_argmin(sub, cws)"))
-          .select(col("vec_id"), col("m"), col("code_id"))
-        // query-side lookup table: exact subspace distances to every codeword
-        val lut = all.filter(col("vec_id") < PqNQueries)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-          .crossJoin(broadcast(cb))
-          .select(col("query_id"), col("m"), col("code_id"),
-            round(VectorOps.dist2(
-              expr(s"slice(qv, m * $PqSubDim + 1, $PqSubDim)"), col("cw")), 6)
-              .cast(DecimalType(18, 6)).as("lutd"))
-        // ADC shortlist: approximate distance = M table lookups
-        val wShort = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("neighbor_id").asc)
-        val shortlist = codes.join(broadcast(lut), Seq("m", "code_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("lutd")).cast(DoubleType).as("adc"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc"))
-          .withColumn("srank", row_number().over(wShort))
-          .filter(col("srank") <= PqShortlist)
-          .select(col("query_id"), col("neighbor_id"))
-        // exact re-rank of the (bounded) shortlist — the "+R" stage:
-        // shortlist is |q|·PqShortlist rows, so it broadcasts onto the
-        // vector store as a point-lookup semi-join; full vectors are
-        // touched ONLY for shortlisted ids
-        val qv = all.filter(col("vec_id") < PqNQueries)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val wTop = Window.partitionBy(col("query_id"))
-          .orderBy(col("d2").asc, col("neighbor_id").asc)
-        all.select(col("vec_id").as("neighbor_id"), col("v"))
-          .join(broadcast(shortlist), Seq("neighbor_id"))
-          .join(broadcast(qv), Seq("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            round(VectorOps.dist2(col("v"), col("qv")), 6).as("d2"))
-          .withColumn("rank", row_number().over(wTop))
-          .filter(col("rank") <= PqTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("d2"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(pqTopkDuckSql),
-      doc = "PQ/ADC ANN (Jégou 2011, m=8/k*=256 + re-rank): 8-byte codes, " +
-        "zero-shuffle codebook encode, per-query distance LUT broadcast " +
-        "onto the code table, ONE rollup shuffle, exact re-rank of the " +
-        "bounded shortlist; full vectors touched only for shortlisted ids."),
 
     // ── blocked entity resolution (Christen 2012 / Fellegi-Sunter) ───
     // Record linkage at corpus scale: never compare all pairs — derive

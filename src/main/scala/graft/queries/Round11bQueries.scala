@@ -2,56 +2,33 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.Corpus.{h60Duck, h60Spark}
-
-/** Round-11 batch 2: the classic distributed-ML primitives a
-  * training-data pipeline runs AFTER curation —
+/** Round-11 batch 2: a classic distributed-ML primitive a
+  * training-data pipeline runs AFTER curation (Lloyd's k-means and the
+  * random projection live in `AnnQueries`) —
   *
-  *  - Lloyd's k-means over the embedding corpus (MacQueen 1967 /
-  *    Lloyd 1982) — THE canonical iterative distributed algorithm:
-  *    broadcast the K centroids, assign in a zero-shuffle narrow pass
-  *    (the codegen'd `pq_argmin` is exactly the argmin-over-codewords
-  *    loop k-means needs), update with one partial-aggregated groupBy;
   *  - batch-gradient-descent logistic regression TRAINING
   *    (`pipe_quality_classifier` is the inference half; this closes the
   *    loop the way fastText-style quality classifiers are actually
   *    produced for corpus filtering, cf. the GPT-3/CCNet quality-filter
   *    recipe) — each iteration is ONE map-side-combined aggregate that
   *    ships 5 numbers, the textbook "broadcast weights, tree-aggregate
-  *    gradient" shape;
-  *  - Achlioptas/Johnson-Lindenstrauss random projection (Achlioptas
-  *    2003, "Database-friendly random projections") — ±1 sign matrix
-  *    from seeded hashes, projecting 64-dim embeddings to 16 dims in a
-  *    ZERO-SHUFFLE narrow pass; the dimensionality-reduction step that
-  *    fronts clustering/ANN at billion-vector scale.
+  *    gradient" shape.
   *
   * Reference scope note: alxmancilla/parquet-demo has no analytics
   * surface (its compute is type coercion + ETL batching,
   * src/parquet_demo/io.py:21-66); this file is [EXT] like all of
   * SURVEY §2.7.
   *
-  * Determinism: the established recipes. Centroid means and gradient
-  * sums go through round(·,9) → DECIMAL(28,9) exact sums (order-free
-  * across partitions), converted back to DOUBLE by ONE division with
-  * identical expression text in both engines. Distance folds are the
-  * native sequential-fold expressions (`pq_argmin`, `vec_dist2`,
-  * `vec_dot`), bit-identical to DuckDB's `list_reduce` with the same
-  * operand order. Weight updates round to 9 dp each iteration, so an
-  * ulp of libm `exp()` disagreement cannot propagate.
+  * Determinism: the established recipes. Gradient sums go through
+  * round(·,9) → DECIMAL(28,9) exact sums (order-free across
+  * partitions), converted back to DOUBLE by ONE division with
+  * identical expression text in both engines. Weight updates round to
+  * 9 dp each iteration, so an ulp of libm `exp()` disagreement cannot
+  * propagate.
   */
 object Round11bQueries {
-
-  // ── k-means constants ──────────────────────────────────────────────
-  /** Clusters; init = the first K corpus vectors (deterministic seed,
-    * the sim_ivf_topk "trained on a fixed sample" stance). */
-  val KmK = 8
-  /** Unrolled Lloyd iterations (the convergence-driven loop is
-    * `kmeansUntil` below, same builder). */
-  val KmIters = 3
-  /** Embedding dimensionality (FIXTURES.md). */
-  val Dim = 64
 
   // ── logistic-regression constants ──────────────────────────────────
   val LrIters = 3
@@ -68,201 +45,6 @@ object Round11bQueries {
     * every step dragging the bias (uncentered measured 0.51 at the same
     * budget). */
   val LrCenterTok = 50
-
-  // ── random-projection constants ────────────────────────────────────
-  /** Target dimensionality. 16 = 4² keeps the 1/√R scale EXACT (÷4),
-    * so no irrational constant enters the oracle compare. */
-  val RpDim = 16
-
-  // ════ k-means builder (shared by sim_kmeans and kmeansUntil) ═══════
-
-  /** One row holding the K centroid vectors sorted by cluster id, so
-    * position = cluster label (compacted when a cluster empties — the
-    * oracle re-indexes identically). */
-  private[queries] def centArray(cents: DataFrame): DataFrame =
-    cents
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cs0"))
-      .select(expr("transform(cs0, x -> x.cv)").as("cents"))
-
-  /** Zero-shuffle assignment pass: broadcast the one-row centroid array,
-    * argmin with the codegen'd pq_argmin (strict <, ties to the lowest
-    * cluster id — the oracle's ORDER BY d2, pos tiebreak). */
-  private[queries] def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(centArray(cents)))
-      .withColumn("cluster", expr("pq_argmin(v, cents)"))
-
-  /** Lloyd update: element-wise mean per cluster (`lloydMeans` grouped
-    * by cluster), as (cid, cv). */
-  private[queries] def update(assigned: DataFrame): DataFrame =
-    lloydMeans(assigned, col("cluster"))
-      .select(col("cluster").as("cid"), col("cv"))
-
-  /** The Lloyd mean update shared by the flat and the grouped-fine
-    * rounds: element-wise mean of `v` per `keys` group, as ONE
-    * aggregation — Dim decimal sum columns plus a count (round 21,
-    * guide §2.4: the previous posexplode form fanned every vector to
-    * Dim (group, idx, val) rows and paid TWO exchanges — the
-    * (group, idx) partial-mean rollup and the per-group collect_list —
-    * where one hash aggregate with a Dim-wide buffer ships the
-    * identical partial sums through ONE exchange and rebuilds the
-    * centroid array with a no-shuffle projection). Means stay exact
-    * and order-free: round(val,9) → DECIMAL(28,9) sums per element,
-    * ONE double division at the end — element order = array position
-    * by construction. Output: keys…, cv.
-    *
-    * Input invariant: every `v` holds exactly Dim non-null elements. A
-    * short vector or a null element would drop out of an element's sum
-    * while still counting in `cnt`, a silently wrong mean; the input
-    * projection raises instead (in the plan, so no extra job runs).
-    */
-  private[graft] def lloydMeans(assigned: DataFrame, keys: Column*): DataFrame = {
-    val checked = when(size(col("v")) === Dim && forall(col("v"), _.isNotNull), col("v"))
-      .otherwise(raise_error(
-        lit(s"Lloyd input: every vector needs exactly $Dim non-null elements")))
-    val sums = (0 until Dim).map { i =>
-      sum(expr(s"cast(round(v[$i], 9) as decimal(28,9))")).as(s"s$i")
-    } :+ count(lit(1)).as("cnt")
-    val means = (0 until Dim).map { i =>
-      round(col(s"s$i").cast(DoubleType) / col("cnt"), 9)
-    }
-    assigned
-      .select(keys :+ checked.as("v"): _*)
-      .groupBy(keys: _*)
-      .agg(sums.head, sums.tail: _*)
-      .select(keys :+ array(means: _*).as("cv"): _*)
-  }
-
-  /** Final labeled output: (vec_id, cluster, d2). */
-  private def kmeansFinish(vecs: DataFrame, cents: DataFrame): DataFrame =
-    assign(vecs, cents)
-      .withColumn("d2",
-        round(VectorOps.dist2(col("v"), element_at(col("cents"), col("cluster") + 1)), 6))
-      .select(col("vec_id"), col("cluster"), col("d2"))
-      .orderBy(col("vec_id"))
-
-  private[queries] def kmeansInit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
-    val vecs = Corpus.vecs(s, dir)
-    val c0 = vecs.filter(col("vec_id") < KmK)
-      .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
-    (vecs, c0)
-  }
-
-  /** Fixed-iteration Lloyd loop. The K-row centroid table is
-    * localCheckpoint'ed each round (the graph-twin recipe): the plan
-    * stays flat instead of nesting every prior iteration's aggregation
-    * into the next broadcast subtree. */
-  def kmeans(s: SparkSession, dir: String, iters: Int): DataFrame = {
-    val (vecs, cents) = kmeansTrain(s, dir, iters)
-    kmeansFinish(vecs, cents)
-  }
-
-  /** The training half alone: (corpus vectors, trained centroid table) —
-    * reused by the IVF serving index (sim_ivf_kmeans_topk). */
-  private[queries] def kmeansTrain(
-      s: SparkSession, dir: String, iters: Int): (DataFrame, DataFrame) = {
-    val (vecs, c0) = kmeansInit(s, dir)
-    (vecs, kmeansTrainFrom(vecs, c0, iters))
-  }
-
-  /** The Lloyd loop from an ARBITRARY init centroid table — the rounds
-    * themselves are k-agnostic (the centroid set is data, not a
-    * literal), which is what lets sim_ivf_kmeans_topk_auto derive K
-    * from the runtime corpus count (round 17).
-    *
-    * Round 21 A/B note: a no-per-iteration-checkpoint variant (the
-    * whole chain as one action's nested-broadcast job tree) was
-    * measured SLOWER same-window on every training consumer
-    * (sim_kmeans 3.07 vs 2.22 s, st_incremental_ann_ivf 4.84 vs
-    * 2.60 s, sim_knn_graph_ivf_scaled 4.87 vs 2.97 s at sf0.1) — AQE
-    * re-plans the deep chain per materialization and the nested
-    * broadcast builds serialize, costing more than the K-row
-    * checkpoint writes save. The per-iteration checkpoint stays; the
-    * win this round is inside `update` (one exchange per round instead
-    * of two). */
-  private[queries] def kmeansTrainFrom(
-      vecs: DataFrame, c0: DataFrame, iters: Int): DataFrame = {
-    var cents = c0
-    for (_ <- 1 to iters)
-      cents = update(assign(vecs, cents)).localCheckpoint()
-    cents
-  }
-
-  /** Oracle WITH-fragment: vecs + c0..c{iters} (the trained centroid
-    * CTE chain) — shared between the k-means oracle and downstream
-    * consumers of the trained quantizer. */
-  private[queries] def kmDuckPrefix(iters: Int): String =
-    kmDuckPrefixFrom(
-      s"""SELECT CAST(vec_id AS INT) AS pos, v AS cv FROM vecs
-          WHERE vec_id < $KmK""", iters)
-
-  /** Same oracle chain over an ARBITRARY c0 SELECT (must yield (pos,
-    * cv) rows over `vecs`) — the auto-K consumer passes a
-    * count-derived threshold as a scalar subquery. */
-  private[queries] def kmDuckPrefixFrom(c0Sql: String, iters: Int): String =
-    s"""${Corpus.vecsDuck},
-        c0 AS ($c0Sql),
-        ${(1 to iters).map(kmDuckIter).mkString(",\n")}"""
-
-  /** Convergence-driven Lloyd loop (the pagerankUntil posture): stop
-    * when the max centroid movement (squared L2) falls below eps or at
-    * maxIters. The per-round movement check is a 1-row scalar collect —
-    * the ConnectedComponents.scala convergence recipe. Returns the
-    * labeled corpus plus the number of rounds run. */
-  def kmeansUntil(s: SparkSession, dir: String, eps: Double, maxIters: Int): (DataFrame, Int) = {
-    val (vecs, c0) = kmeansInit(s, dir)
-    var cents = c0.localCheckpoint()
-    var rounds = 0
-    var moved = Double.MaxValue
-    while (moved > eps && rounds < maxIters) {
-      val next = update(assign(vecs, cents)).localCheckpoint()
-      // K-row join: movement of every surviving centroid. Position
-      // re-indexing means a dropped cluster shows up as a missing cid;
-      // treat that (never on the fixture) as full movement.
-      val mv = cents.select(col("cid"), col("cv").as("prev"))
-        .join(next, Seq("cid"), "full")
-        .select(max(when(col("cv").isNull || col("prev").isNull, Double.MaxValue)
-          .otherwise(VectorOps.dist2(col("cv"), col("prev")))).as("mv"))
-        .collect()(0)
-      moved = if (mv.isNullAt(0)) 0.0 else mv.getDouble(0)
-      cents = next
-      rounds += 1
-    }
-    (kmeansFinish(vecs, cents), rounds)
-  }
-
-  // ── k-means oracle (unrolled, re-indexed identically) ──────────────
-
-  private[queries] def kmDuckIter(i: Int): String = {
-    val d2 = VectorOps.duckDist2("a.v", "c.cv")
-    s"""a$i AS (
-          SELECT vec_id, v, pos FROM (
-            SELECT a.vec_id, a.v, c.pos,
-              row_number() OVER (PARTITION BY a.vec_id
-                ORDER BY $d2 ASC, c.pos ASC) AS rn
-            FROM vecs a CROSS JOIN c${i - 1} c) WHERE rn = 1),
-        u$i AS (
-          SELECT pos, u.j AS idx,
-            round(CAST(sum(CAST(round(v[u.j + 1], 9) AS DECIMAL(28,9))) AS DOUBLE)
-                  / count(*), 9) AS mn
-          FROM a$i, unnest(range(0, $Dim)) u(j)
-          GROUP BY pos, u.j),
-        c$i AS (
-          SELECT row_number() OVER (ORDER BY pos) - 1 AS pos, cv FROM (
-            SELECT pos, list(mn ORDER BY idx) AS cv FROM u$i GROUP BY pos))"""
-  }
-
-  private def kmeansOracle: String = {
-    val fin = VectorOps.duckDist2("a.v", "c.cv")
-    s"""WITH ${kmDuckPrefix(KmIters)},
-        fin AS (
-          SELECT vec_id, pos AS cluster, d2 FROM (
-            SELECT a.vec_id, c.pos, $fin AS d2,
-              row_number() OVER (PARTITION BY a.vec_id
-                ORDER BY $fin ASC, c.pos ASC) AS rn
-            FROM vecs a CROSS JOIN c$KmIters c) WHERE rn = 1)
-        SELECT vec_id, cluster, round(d2, 6) AS d2 FROM fin ORDER BY vec_id"""
-  }
 
   // ════ logistic-regression builder ══════════════════════════════════
 
@@ -376,27 +158,6 @@ object Round11bQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // ── Lloyd's k-means over the embedding corpus ────────────────────
-    // Init = first K vectors, 3 Lloyd rounds, then the labeled corpus.
-    // Per round: ONE zero-shuffle assignment scan (broadcast K-row
-    // centroid array; argmin = codegen'd pq_argmin) + ONE groupBy whose
-    // K·Dim-group partial aggregate ships ≤512 rows per task — the
-    // treeAggregate shape, derived by Catalyst from a declarative plan.
-    // Cluster labels are positions in the cid-sorted centroid array;
-    // a cluster that loses all members compacts out (standard Lloyd
-    // degeneracy; the oracle re-indexes with the same rule, and the
-    // spec pins all 8 alive on the fixture). At 100 TB: the corpus scan
-    // dominates, centroids stay K·Dim doubles regardless of n — the
-    // broadcast never grows with the data.
-    QueryDef(
-      "sim_kmeans",
-      (s, dir) => kmeans(s, dir, KmIters),
-      Some(kmeansOracle),
-      doc = "Lloyd k-means (K=8, 3 rounds, first-K init): zero-shuffle " +
-        "broadcast-centroid assignment via codegen'd pq_argmin, exact " +
-        "DECIMAL centroid means, one partial-agg exchange per round; " +
-        "kmeansUntil(eps) is the convergence-driven twin."),
-
     // ── batch-GD logistic-regression training ────────────────────────
     // The training half of the corpus quality-classifier loop
     // (pipe_quality_classifier is inference). Label is planted
@@ -430,48 +191,6 @@ object Round11bQueries {
       doc = "Batch-GD logistic regression training (3 iters, lr=8) on " +
         "planted-separable doc-length labels: per-iteration gradient is " +
         "one exact-DECIMAL aggregate (5 numbers per task), weights live " +
-        "on the driver, per-doc probability trajectory p1..p3 returned."),
-
-    // ── Achlioptas ±1 random projection (Johnson-Lindenstrauss) ──────
-    // Sign matrix s(k,j) ∈ {±1} from md5 parity of "rp:k:j" — seeded,
-    // engine-independent, and generated INSIDE the plan as one
-    // broadcast row (16×64 doubles), so there is no driver-side model
-    // state at all. Projection = native vec_dot(v, sgn[k]) / 4
-    // (1/√16 exact), a ZERO-SHUFFLE narrow pass over the corpus —
-    // the only exchange in the plan is the output ORDER BY. The
-    // sequential-fold dot is bit-identical to the oracle's
-    // list_reduce, no decimal scaffolding needed.
-    QueryDef(
-      "sim_rp_project",
-      (s, dir) => {
-        val sgnExpr =
-          s"""transform(sequence(0, ${RpDim - 1}), kk ->
-                transform(sequence(0, ${Dim - 1}), j ->
-                  CASE WHEN ${h60Spark("concat('rp:', cast(kk as string), ':', cast(j as string))")} % 2 = 0
-                       THEN cast(1.0 as double) ELSE cast(-1.0 as double) END))"""
-        val sgn = Corpus.vecs(s, dir).sparkSession.range(1)
-          .select(expr(sgnExpr).as("sgn"))
-        Corpus.vecs(s, dir)
-          .crossJoin(broadcast(sgn))
-          .select(col("vec_id"), col("v"), col("sgn"),
-            explode(sequence(lit(0), lit(RpDim - 1))).as("k"))
-          .select(col("vec_id"), col("k"),
-            round(VectorOps.dot(col("v"), element_at(col("sgn"), col("k") + 1)) / 4, 6)
-              .as("proj"))
-          .orderBy(col("vec_id"), col("k"))
-      },
-      Some(s"""WITH ${Corpus.vecsDuck},
-          sgn AS (
-            SELECT list_transform(range(0, $RpDim), kk ->
-              list_transform(range(0, $Dim), j ->
-                CASE WHEN ${h60Duck("'rp:' || CAST(kk AS VARCHAR) || ':' || CAST(j AS VARCHAR)")} % 2 = 0
-                     THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)) AS sgn)
-          SELECT vec_id, u.kk AS k,
-            round(${VectorOps.duckDot("v", "sgn[u.kk + 1]")} / 4, 6) AS proj
-          FROM vecs, sgn, unnest(range(0, $RpDim)) u(kk)
-          ORDER BY vec_id, k"""),
-      doc = "Achlioptas ±1 JL projection 64→16 dims: hash-seeded sign " +
-        "matrix built in-plan as one broadcast row, native vec_dot fold, " +
-        "exact ÷4 scale, zero-shuffle narrow corpus pass.")
+        "on the driver, per-doc probability trajectory p1..p3 returned.")
   )
 }

@@ -6,15 +6,8 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 
-/** Round-11 batch 3: composed serving + corpus-hygiene passes built ON
-  * TOP of the batch-2 ML primitives —
+/** Round-11 batch 3: corpus-hygiene passes —
   *
-  *  - IVF ANN with a LLOYD-TRAINED coarse quantizer (the actual
-  *    IVF recipe of Jégou et al. 2011 §5 / FAISS `IndexIVFFlat`:
-  *    k-means trains the cell centroids, vectors post to their nearest
-  *    cell, queries probe the nprobe nearest cells) — the existing
-  *    `sim_ivf_topk` uses sampled-point centroids; this composes the
-  *    real training step from `Round11bQueries.kmeansTrain`;
   *  - embedding-space eval-set decontamination (the semantic
   *    complement of `pipe_decontaminate`'s shingle overlap — the
   *    cosine-vs-benchmark screen production pretraining pipelines run
@@ -29,19 +22,11 @@ import graft.Tables
   * batching); this file is [EXT] like all of SURVEY §2.7.
   *
   * Determinism: cosines are ONE division of native sequential-fold
-  * dots, round(·,6), identical expression text in DuckDB; the IVF
-  * oracle replays the full unrolled Lloyd chain through
-  * `Round11bQueries.kmDuckPrefix`; TF-IDF weights are ONE
-  * multiplication of an exact BIGINT count by ln of ONE division.
+  * dots, round(·,6), identical expression text in DuckDB; TF-IDF
+  * weights are ONE multiplication of an exact BIGINT count by ln of
+  * ONE division.
   */
 object Round11cQueries {
-
-  // ── IVF-with-trained-quantizer constants ───────────────────────────
-  /** Cells probed per query (nprobe). With K=8 cells, nprobe=2 scans
-    * ~1/4 of the corpus per query — the recall/cost dial. */
-  val IvfNProbe = 2
-  val IvfTopK = 10
-  val IvfNQueries = 5
 
   // ── semantic-decontamination constants ─────────────────────────────
   /** Eval-benchmark set: the first SemEvalN embeddings. */
@@ -55,92 +40,7 @@ object Round11cQueries {
   // ── TF-IDF constants ───────────────────────────────────────────────
   val TfidfTopK = 5
 
-  /** The Lloyd-IVF oracle as a named val — the round-18 contract recall
-    * row nests this IDENTICAL statement (one definition, no drift).
-    */
-  private[queries] lazy val ivfKmeansTopkDuckSql: String = {
-    val enc = VectorOps.duckDist2("a.v", "c.cv")
-    val qd = VectorOps.duckDist2("q.v", "c.cv")
-    val cos = s"round(${VectorOps.duckDot("co.v", "p.qv")} / (co.nrm * p.qn), 6)"
-    s"""WITH ${Round11bQueries.kmDuckPrefix(Round11bQueries.KmIters)},
-      codes AS (
-        SELECT vec_id, v, nrm, cluster FROM (
-          SELECT a.vec_id, a.v, ${VectorOps.duckNorm("a.v")} AS nrm, c.pos AS cluster,
-            row_number() OVER (PARTITION BY a.vec_id
-              ORDER BY $enc ASC, c.pos ASC) AS rn
-          FROM vecs a CROSS JOIN c${Round11bQueries.KmIters} c) WHERE rn = 1),
-      qp AS (
-        SELECT query_id, qv, qn, probe FROM (
-          SELECT q.vec_id AS query_id, q.v AS qv, ${VectorOps.duckNorm("q.v")} AS qn,
-            c.pos AS probe,
-            row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY $qd ASC, c.pos ASC) AS rn
-          FROM vecs q CROSS JOIN c${Round11bQueries.KmIters} c
-          WHERE q.vec_id < $IvfNQueries) WHERE rn <= $IvfNProbe),
-      cand AS (
-        SELECT p.query_id, co.vec_id AS neighbor_id, $cos AS cosine
-        FROM codes co JOIN qp p ON co.cluster = p.probe
-        WHERE co.vec_id <> p.query_id),
-      ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-          row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        FROM cand)
-    SELECT query_id, rank, neighbor_id, cosine FROM ranked
-    WHERE rank <= $IvfTopK ORDER BY query_id, rank"""
-  }
-
   val defs: Seq[QueryDef] = Seq(
-
-    // ── IVF ANN, Lloyd-trained coarse quantizer ──────────────────────
-    // train (3 Lloyd rounds, Round11bQueries.kmeansTrain) → index (one
-    // zero-shuffle assignment pass posts every vector to its cell) →
-    // serve (each query ranks the 8 cell centroids IN-ROW off the same
-    // broadcast centroid array, probes its nprobe=2 nearest cells, and
-    // the candidate restriction is a plain EQUI-JOIN of the corpus cell
-    // column against the 10-row broadcast (query, cell) probe list).
-    // ONE shuffle total in the serving path: the per-query top-k rollup
-    // (WindowGroupLimit keeps it partial-then-final). At 100 TB: K
-    // grows as √n (the FAISS sizing rule), the centroid array stays a
-    // broadcast, the probed fraction nprobe/K is the recall dial, and
-    // the full vectors are scanned ONLY for probed cells.
-    QueryDef(
-      "sim_ivf_kmeans_topk",
-      (s, dir) => {
-        val (vecs, cents) = Round11bQueries.kmeansTrain(s, dir, Round11bQueries.KmIters)
-        val ca = Round11bQueries.centArray(cents) // one row: cents array
-        val codes = Round11bQueries.assign(vecs, cents)
-          .withColumn("nrm", sqrt(VectorOps.dot(col("v"), col("v"))))
-          .select(col("vec_id"), col("v"), col("nrm"), col("cluster"))
-        val qprobes = vecs.filter(col("vec_id") < IvfNQueries)
-          .crossJoin(broadcast(ca))
-          .select(
-            col("vec_id").as("query_id"),
-            col("v").as("qv"),
-            sqrt(VectorOps.dot(col("v"), col("v"))).as("qn"),
-            explode(expr(
-              s"""transform(
-                    slice(array_sort(transform(cents,
-                      (c, i) -> struct(vec_dist2(v, c) AS d2, i AS pos))), 1, $IvfNProbe),
-                    x -> x.pos)""")).as("probe"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        codes
-          .join(broadcast(qprobes), col("cluster") === col("probe"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(VectorOps.dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6)
-              .as("cosine"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= IvfTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(ivfKmeansTopkDuckSql),
-      doc = "IVF ANN with a Lloyd-TRAINED coarse quantizer (FAISS " +
-        "IndexIVFFlat recipe): kmeansTrain centroids broadcast, " +
-        "zero-shuffle cell posting, in-row nprobe=2 cell ranking, " +
-        "equi-join candidate restriction, one top-k rollup shuffle."),
 
     // ── embedding-space eval-set decontamination ─────────────────────
     // The semantic screen next to pipe_decontaminate's shingle overlap:

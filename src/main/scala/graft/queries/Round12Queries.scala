@@ -438,63 +438,6 @@ object Round12Queries {
         "pipe_soft_dedup's 1/|cluster|; rank window on the " +
         "high-cardinality cluster key."),
 
-    // ── reciprocal-rank fusion of two ANN indexes ────────────────────
-    // RRF (Cormack, Clarke & Buettcher SIGIR 2009): score(d) =
-    // Σ_systems 1/(60 + rank_s(d)) — the rank-only ensembling rule that
-    // needs no score calibration between systems. Here it fuses the two
-    // data-independent-vs-clustered ANN serving paths (sign-LSH
-    // multi-probe and IVF centroid-probe) over their shared query set:
-    // the standard cheap recall lift when two indexes miss DIFFERENT
-    // neighbors. Both inputs arrive query-bounded (top-k per query), so
-    // the fusion join + re-rank window touch k·|q| rows — negligible
-    // next to the index scans at any corpus size.
-    QueryDef(
-      "sim_rrf_fusion",
-      (s, dir) => {
-        val byName = SimilarityQueries.defs.map(d => d.name -> d).toMap
-        val l = byName("sim_lsh_topk").fn(s, dir)
-          .select(col("query_id"), col("neighbor_id"), col("rank").as("lr"))
-        val i = byName("sim_ivf_topk").fn(s, dir)
-          .select(col("query_id"), col("neighbor_id"), col("rank").as("ir"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf").desc, col("neighbor_id").asc)
-        l.join(i, Seq("query_id", "neighbor_id"), "full_outer")
-          .withColumn("rrf", round(
-            coalesce(lit(1.0) / (lit(60) + col("lr")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("ir")), lit(0.0)), 9))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= SimilarityQueries.IvfTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("rrf"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some {
-        val byName = SimilarityQueries.defs.map(d => d.name -> d).toMap
-        s"""WITH lsh AS (${byName("sim_lsh_topk").oracle.get}),
-          ivf AS (${byName("sim_ivf_topk").oracle.get}),
-          uni AS (
-            SELECT coalesce(l.query_id, i.query_id) AS query_id,
-              coalesce(l.neighbor_id, i.neighbor_id) AS neighbor_id,
-              l.rank AS lr, i.rank AS ir
-            FROM lsh l FULL OUTER JOIN ivf i
-              ON l.query_id = i.query_id AND l.neighbor_id = i.neighbor_id),
-          sc AS (
-            SELECT query_id, neighbor_id,
-              round(coalesce(1.0 / (60 + lr), 0.0)
-                + coalesce(1.0 / (60 + ir), 0.0), 9) AS rrf
-            FROM uni),
-          rk AS (
-            SELECT *, row_number() OVER (
-              PARTITION BY query_id ORDER BY rrf DESC, neighbor_id ASC) AS rank
-            FROM sc)
-        SELECT query_id, rank, neighbor_id, rrf FROM rk
-        WHERE rank <= ${SimilarityQueries.IvfTopK}
-        ORDER BY query_id, rank"""
-      },
-      doc = "Reciprocal-rank fusion (k=60) of the sign-LSH and IVF ANN " +
-        "rankings over the shared query set: rank-only ensembling, no " +
-        "score calibration; fusion runs on k·|q| rows regardless of " +
-        "corpus size."),
-
     // ── corpus drift: KL / JS divergence between snapshot halves ─────
     // The distribution-shift monitor a refreshed-crawl pipeline runs
     // before retraining: per-language unigram distributions of two

@@ -7,14 +7,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
 
-
-/** Round-12 batch 2: inner-product retrieval, tokenizer/corpus audits,
-  * and composed quality gates —
+/** Round-12 batch 2: tokenizer/corpus audits and composed quality
+  * gates —
   *
-  *  - MIPS (maximum inner-product search) top-k, exact and simple-LSH
-  *    norm-augmented (Neyshabur & Srebro 2015; Bachrach RecSys 2014):
-  *    raw-dot ranking cosine ANN cannot serve — x' = [x/M ; √(1−‖x/M‖²)]
-  *    reduces it to cosine for sign-LSH bucketing;
   *  - per-document TOKEN ENTROPY (Shannon unigram diversity, the
   *    repetitiveness signal next to text_repetition);
   *  - per-language TOKENIZER FERTILITY off the learned P11 BPE merges;
@@ -30,25 +25,6 @@ import graft.Tables
   * batching); this file is [EXT] like all of SURVEY §2.7.
   */
 object Round12bQueries {
-
-  import SimilarityQueries.{IvfTopK, NQueries, NBits, Dim}
-
-  /** 65-dim hyperplanes for the AUGMENTED space (64 vector dims + the
-    * norm-completion dim), same engine-independent arithmetic sequence
-    * as SimilarityQueries.hyperplaneSet, table offset 7 so the planes
-    * are independent of every existing LSH table.
-    */
-  val MipsHyperplanes: Seq[Seq[Double]] =
-    (0 until NBits).map { b =>
-      (0 to Dim).map { d =>
-        // same mixed-hash family as SimilarityQueries.hyperplaneSet
-        // (round 18 — the shared-progression recipe this copied had
-        // pairwise-correlated planes; see the hyperplaneSet scaladoc)
-        java.lang.Long.remainderUnsigned(SimilarityQueries.mix64(
-          ((7 * NBits + b) * (Dim + 1) + d + 1).toLong), 1009L)
-          .toDouble / 1009.0 - 0.5
-      }
-    }
 
   /** Standalone so pipe_quality_ensemble can reference it without a
     * self-referential `defs` initialization (the ensemble's oracle is
@@ -99,152 +75,7 @@ object Round12bQueries {
           "diversity in [0,1]: one (doc,tok) rollup, doc totals via a " +
           "high-cardinality window, order-free DECIMAL term sums.")
 
-  /** The exact-MIPS oracle as a named val — it is BOTH a declared row and the round-18 contract recall row's inner-product truth (one definition, no drift). */
-  private[queries] lazy val mipsTopkDuckSql: String =
-    s"""WITH ${Corpus.vecsDuck},
-          q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
-                WHERE vec_id < $NQueries),
-          ips AS (
-            SELECT q.query_id, a.vec_id AS neighbor_id,
-              round(${VectorOps.duckDot("a.v", "q.qv")}, 6) AS ip
-            FROM vecs a JOIN q ON a.vec_id <> q.query_id),
-          ranked AS (
-            SELECT query_id, neighbor_id, ip,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY ip DESC, neighbor_id ASC) AS rank
-            FROM ips)
-        SELECT query_id, rank, neighbor_id, ip FROM ranked
-        WHERE rank <= $IvfTopK ORDER BY query_id, rank"""
-
-  /** The simple-LSH MIPS oracle as a named val — the round-18
-    * contract recall row nests this IDENTICAL statement.
-    */
-  private[queries] lazy val mipsLshTopkDuckSql: String = {
-        def headSql(b: Int) =
-          VectorOps.duckDot("v", MipsHyperplanes(b).take(Dim).mkString("[", ", ", "]"))
-        val bucketSql = (0 until NBits).map { b =>
-          s"""(CASE WHEN ${headSql(b)} / mm
-                + sqrt(greatest(1.0 - (nrm / mm) * (nrm / mm), 0.0))
-                  * (${MipsHyperplanes(b)(Dim)}) >= 0.0
-              THEN ${1 << b} ELSE 0 END)"""
-        }.mkString(" + ")
-        val qBucketSql = (0 until NBits).map { b =>
-          s"(CASE WHEN ${headSql(b)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""WITH ${Corpus.vecsDuck},
-          nv AS (SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM vecs),
-          mx AS (SELECT max(nrm) AS mm FROM nv),
-          bucketed AS (
-            SELECT vec_id, v, $bucketSql AS bucket FROM nv CROSS JOIN mx),
-          q AS (
-            SELECT vec_id AS query_id, v AS qv,
-              unnest(${(0 to NBits).map {
-                case 0 => "qb"
-                case b => s"xor(qb, ${1 << (b - 1)})"
-              }.mkString("[", ", ", "]")}) AS bucket
-            FROM (SELECT vec_id, v, $qBucketSql AS qb FROM vecs
-                  WHERE vec_id < $NQueries)),
-          ips AS (
-            SELECT q.query_id, a.vec_id AS neighbor_id,
-              round(${VectorOps.duckDot("a.v", "q.qv")}, 6) AS ip
-            FROM bucketed a JOIN q ON a.bucket = q.bucket
-              AND a.vec_id <> q.query_id),
-          ranked AS (
-            SELECT query_id, neighbor_id, ip,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY ip DESC, neighbor_id ASC) AS rank
-            FROM ips)
-        SELECT query_id, rank, neighbor_id, ip FROM ranked
-        WHERE rank <= $IvfTopK ORDER BY query_id, rank"""
-  }
-
   val defs: Seq[QueryDef] = Seq(
-
-    // ── brute-force MIPS top-k (exact baseline) ──────────────────────
-    // Query side broadcast, ONE corpus scan, per-query top-k through
-    // the WindowGroupLimit-pruned rank window — the sim_brute_topk plan
-    // with the score swapped from cosine to the raw inner product.
-    QueryDef(
-      "sim_mips_topk",
-      (s, dir) => {
-        val all = Corpus.vecs(s, dir)
-        val q = all.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("ip").desc, col("neighbor_id").asc)
-        all.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(VectorOps.dot(col("v"), col("qv")), 6).as("ip"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= IvfTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("ip"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(mipsTopkDuckSql),
-      doc = "Exact MIPS top-k: raw inner product (not cosine — length " +
-        "matters), query side broadcast, one corpus scan, " +
-        "WindowGroupLimit-pruned per-query top-k."),
-
-    // ── simple-LSH bucketed MIPS (the scale path) ────────────────────
-    // Norm augmentation reduces MIPS to cosine: with M = max ‖x‖ over
-    // the corpus (a 1-row broadcast scalar), x' = [x/M ; √(1−‖x/M‖²)]
-    // has unit norm and cos(q', x') ∝ dot(q, x) for the query's
-    // q' = [q ; 0]. Sign-LSH buckets on x' (65-dim hyperplane literals
-    // identical in both engines) with Hamming-1 multi-probe; survivors
-    // score by the EXACT raw dot, so the bucketing only affects recall
-    // never correctness of returned scores. The corpus pays one narrow
-    // bucket pass + the probe equi-join — the sim_lsh_topk shape with
-    // the augmentation folded into the bucket expression.
-    QueryDef(
-      "sim_mips_lsh_topk",
-      (s, dir) => {
-        val all = Corpus.vecs(s, dir)
-          .withColumn("nrm", VectorOps.norm(col("v")))
-        val mx = all.agg(max(col("nrm")).as("mm"))
-        // corpus bucket: sign bits of dot([v/M; ext], h) =
-        // dot(v, h[0..63])/M + ext·h[64] — the division by M folds out
-        // of the comparison only for the first 64 terms, so keep it.
-        val bucketCol = (0 until NBits).map { b =>
-          val h = MipsHyperplanes(b)
-          val head = VectorOps.dot(col("v"), typedLit(h.take(Dim))) / col("mm")
-          val ext = sqrt(greatest(
-            lit(1.0) - (col("nrm") / col("mm")) * (col("nrm") / col("mm")), lit(0.0)))
-          when(head + ext * lit(h(Dim)) >= 0.0, lit(1 << b)).otherwise(lit(0))
-        }.reduce(_ + _)
-        val bucketed = all.crossJoin(broadcast(mx))
-          .withColumn("bucket", bucketCol)
-          .transform(graft.operators.Layouts.spread)
-          .persist()
-        // query bucket: q' = [q; 0] ⇒ sign(dot(q, h[0..63])) — M > 0
-        // scales, never flips
-        val qBucketCol = (0 until NBits).map { b =>
-          when(VectorOps.dot(col("v"),
-              typedLit(MipsHyperplanes(b).take(Dim))) >= 0.0,
-            lit(1 << b)).otherwise(lit(0))
-        }.reduce(_ + _)
-        val probeCol = array(
-          (col("qb") +: (0 until NBits).map(b =>
-            col("qb").bitwiseXOR(lit(1 << b)))): _*)
-        val q = Corpus.vecs(s, dir).filter(col("vec_id") < NQueries)
-          .withColumn("qb", qBucketCol)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"),
-            explode(probeCol).as("bucket"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("ip").desc, col("neighbor_id").asc)
-        bucketed.join(broadcast(q), Seq("bucket"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(VectorOps.dot(col("v"), col("qv")), 6).as("ip"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= IvfTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("ip"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(mipsLshTopkDuckSql),
-      doc = "Simple-LSH MIPS (Neyshabur & Srebro 2015): norm-augmented " +
-        "x' = [x/M; sqrt(1-|x/M|^2)] reduces inner product to cosine; " +
-        "sign-LSH buckets on the 65-dim space, Hamming-1 multi-probe, " +
-        "exact raw-dot scoring on survivors."),
 
     // ── per-document token entropy ───────────────────────────────────
     // H(doc) = −Σ_t (c_t/n)·ln(c_t/n) over the doc's own unigram

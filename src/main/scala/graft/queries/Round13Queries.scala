@@ -32,7 +32,7 @@ import graft.Tables
   */
 object Round13Queries {
 
-  import SimilarityQueries.NBits
+  import AnnQueries.NBits
   import KnnGraphQueries.{KnnK, declared, knnDuckCtes, lshGraph}
 
   /** CUSUM reference value k (in σ units) and decision threshold h. */

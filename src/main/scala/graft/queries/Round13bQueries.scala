@@ -2,19 +2,13 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 import graft.queries.Corpus.{h60Duck, h60Spark}
 
-/** Round-13 batch 2: the IVFPQ serving composition, event-transition
-  * statistics, and a DP quantile —
+/** Round-13 batch 2: event-transition statistics and a DP quantile —
   *
-  *  - sim_ivfpq_topk: FAISS `IndexIVFPQ`'s shape (Jégou et al. 2011
-  *    §III — coarse inverted-file restriction × PQ/ADC scoring × exact
-  *    re-rank), composed from the declared V2 cell assignment and the
-  *    P-family PQ codebook; the no-residual variant (codes quantize raw
-  *    vectors, not cell residuals) — stated, not hidden;
   *  - ev_transition_matrix: per-user event-type Markov transition
   *    counts/probabilities (the session-model statistic);
   *  - pipe_dp_quantile: ε-DP median via the exponential mechanism
@@ -26,196 +20,13 @@ import graft.queries.Corpus.{h60Duck, h60Spark}
   */
 object Round13bQueries {
 
-  import SimilarityQueries.{CentroidEvery, CentroidCap, NProbe}
-  import Round11Queries.{PqM, PqSubDim, PqK, PqCentEvery, PqShortlist, PqTopK, PqNQueries}
-
   /** Exponential-mechanism privacy budget. */
   val DpqEpsilon = 1.0
 
   /** Bootstrap replicate count. */
   val BootB = 100
 
-  /** The IVFPQ oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
-  private[queries] lazy val ivfpqTopkDuckSql: String =
-    s"""WITH ${Corpus.vecsDuck},
-          cents AS (
-            SELECT vec_id AS cent_id, v AS cv FROM vecs
-            WHERE vec_id % $CentroidEvery = 0
-              AND vec_id < ${CentroidEvery * CentroidCap}),
-          cells AS (
-            SELECT vec_id, cent_id FROM (
-              SELECT a.vec_id, c.cent_id,
-                row_number() OVER (PARTITION BY a.vec_id
-                  ORDER BY ${VectorOps.duckDist2("a.v", "c.cv")} ASC, c.cent_id ASC) AS rn
-              FROM vecs a CROSS JOIN cents c)
-            WHERE rn = 1),
-          pqc AS (
-            SELECT CAST(vec_id / $PqCentEvery AS INT) AS code_id, v AS cw0 FROM vecs
-            WHERE vec_id % $PqCentEvery = 0 AND vec_id < ${PqCentEvery * PqK}),
-          cb AS (
-            SELECT u.m AS m, code_id,
-              cw0[u.m * $PqSubDim + 1 : u.m * $PqSubDim + $PqSubDim] AS cw
-            FROM pqc, unnest(range(0, $PqM)) u(m)),
-          enc AS (
-            SELECT a.vec_id, c.m, c.code_id,
-              ${VectorOps.duckDist2(
-                s"a.v[c.m * $PqSubDim + 1 : c.m * $PqSubDim + $PqSubDim]", "c.cw")} AS d2
-            FROM vecs a CROSS JOIN cb c),
-          codes AS (
-            SELECT vec_id, m, code_id FROM (
-              SELECT vec_id, m, code_id,
-                row_number() OVER (PARTITION BY vec_id, m
-                  ORDER BY d2 ASC, code_id ASC) AS rn
-              FROM enc)
-            WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
-                WHERE vec_id < $PqNQueries),
-          probes AS (
-            SELECT query_id, cent_id FROM (
-              SELECT q.query_id, c.cent_id,
-                row_number() OVER (PARTITION BY q.query_id
-                  ORDER BY ${VectorOps.duckDist2("q.qv", "c.cv")} ASC, c.cent_id ASC) AS rn
-              FROM q CROSS JOIN cents c)
-            WHERE rn <= $NProbe),
-          lut AS (
-            SELECT q.query_id, c.m, c.code_id,
-              CAST(round(${VectorOps.duckDist2(
-                s"q.qv[c.m * $PqSubDim + 1 : c.m * $PqSubDim + $PqSubDim]", "c.cw")}, 6)
-                AS DECIMAL(18,6)) AS lutd
-            FROM q CROSS JOIN cb c),
-          adc AS (
-            SELECT l.query_id, co.vec_id AS neighbor_id,
-              CAST(sum(l.lutd) AS DOUBLE) AS adc
-            FROM codes co
-            JOIN cells ce ON co.vec_id = ce.vec_id
-            JOIN probes p ON ce.cent_id = p.cent_id
-            JOIN lut l ON co.m = l.m AND co.code_id = l.code_id
-              AND l.query_id = p.query_id
-            WHERE co.vec_id <> l.query_id
-            GROUP BY l.query_id, co.vec_id),
-          shortlist AS (
-            SELECT query_id, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY adc ASC, neighbor_id ASC) AS srank
-              FROM adc)
-            WHERE srank <= $PqShortlist),
-          rerank AS (
-            SELECT s.query_id, s.neighbor_id,
-              round(${VectorOps.duckDist2("a.v", "q.qv")}, 6) AS d2
-            FROM shortlist s
-            JOIN vecs a ON a.vec_id = s.neighbor_id
-            JOIN q ON q.query_id = s.query_id),
-          ranked AS (
-            SELECT query_id, neighbor_id, d2,
-              row_number() OVER (PARTITION BY query_id
-                ORDER BY d2 ASC, neighbor_id ASC) AS rank
-            FROM rerank)
-        SELECT query_id, rank, neighbor_id, d2 FROM ranked
-        WHERE rank <= $PqTopK ORDER BY query_id, rank"""
-
   val defs: Seq[QueryDef] = Seq(
-
-    // ── IVFPQ: inverted file × product quantization × re-rank ────────
-    // The billion-scale serving composition: the coarse quantizer
-    // restricts ADC scoring to the query's NProbe cells (nprobe/K of
-    // the corpus), the PQ codes keep the scanned payload at 8 bytes per
-    // vector, and the exact re-rank touches full vectors only for the
-    // bounded shortlist. Both component recipes are declared rows
-    // (sim_ivf_topk's sampled-centroid cells, sim_pq_topk's codebook /
-    // LUT / ADC / +R refinement) — this row pins their composition:
-    // ONE rollup shuffle in the serving path (the ADC sum), everything
-    // else broadcast or narrow. No-residual variant: codes quantize the
-    // raw vectors (classic IVFADC quantizes cell residuals for tighter
-    // codes; same plan shape, different codebook input — stated).
-    QueryDef(
-      "sim_ivfpq_topk",
-      (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        val all = Corpus.vecs(s, dir)
-        // coarse cells (sim_ivf_topk recipe, assignment only)
-        val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
-            col("vec_id") < CentroidEvery * CentroidCap)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-        val wAssign = Window.partitionBy(col("vec_id"))
-          .orderBy(col("d2").asc, col("cent_id").asc)
-        val cells = all.join(broadcast(cents), lit(true))
-          .select(col("vec_id"), col("cent_id"),
-            VectorOps.dist2(col("v"), col("cv")).as("d2"))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("cent_id"))
-        // PQ codebook + zero-shuffle encode (sim_pq_topk recipe)
-        val pqc = all
-          .filter(col("vec_id") % PqCentEvery === 0 &&
-            col("vec_id") < PqCentEvery * PqK)
-          .select((col("vec_id") / PqCentEvery).cast("int").as("code_id"),
-            col("v").as("cw0"))
-        val cb = pqc
-          .select(col("code_id"), col("cw0"),
-            explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-          .select(col("m"), col("code_id"),
-            expr(s"slice(cw0, m * $PqSubDim + 1, $PqSubDim)").as("cw"))
-        val cbArr = cb.groupBy(col("m"))
-          .agg(sort_array(collect_list(struct(col("code_id"), col("cw")))).as("cws0"))
-          .select(col("m"), expr("transform(cws0, c -> c.cw)").as("cws"))
-        val codes = all
-          .select(col("vec_id"), col("v"),
-            explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-          .join(broadcast(cbArr), Seq("m"))
-          .withColumn("sub", expr(s"slice(v, m * $PqSubDim + 1, $PqSubDim)"))
-          .withColumn("code_id", expr("pq_argmin(sub, cws)"))
-          .select(col("vec_id"), col("m"), col("code_id"))
-        // probe list: each query's NProbe nearest cells
-        val q = all.filter(col("vec_id") < PqNQueries)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        val wProbe = Window.partitionBy(col("query_id"))
-          .orderBy(col("d2").asc, col("cent_id").asc)
-        val probes = q.join(broadcast(cents), lit(true))
-          .select(col("query_id"), col("cent_id"),
-            VectorOps.dist2(col("qv"), col("cv")).as("d2"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") <= NProbe)
-          .select(col("query_id"), col("cent_id"))
-        // query LUT of exact subspace distances
-        val lut = q.crossJoin(broadcast(cb))
-          .select(col("query_id"), col("m"), col("code_id"),
-            round(VectorOps.dist2(
-              expr(s"slice(qv, m * $PqSubDim + 1, $PqSubDim)"), col("cw")), 6)
-              .cast(DecimalType(18, 6)).as("lutd"))
-        // ADC restricted to probed cells: codes ⋈ cells ⋈ probes ⋈ lut
-        val wShort = Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("neighbor_id").asc)
-        val shortlist = codes
-          .join(broadcast(cells), Seq("vec_id"))
-          .join(broadcast(probes), Seq("cent_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .join(broadcast(lut), Seq("query_id", "m", "code_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("lutd")).cast(DoubleType).as("adc"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc"))
-          .withColumn("srank", row_number().over(wShort))
-          .filter(col("srank") <= PqShortlist)
-          .select(col("query_id"), col("neighbor_id"))
-        // exact re-rank of the bounded shortlist
-        val wTop = Window.partitionBy(col("query_id"))
-          .orderBy(col("d2").asc, col("neighbor_id").asc)
-        all.select(col("vec_id").as("neighbor_id"), col("v"))
-          .join(broadcast(shortlist), Seq("neighbor_id"))
-          .join(broadcast(q), Seq("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            round(VectorOps.dist2(col("v"), col("qv")), 6).as("d2"))
-          .withColumn("rank", row_number().over(wTop))
-          .filter(col("rank") <= PqTopK)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("d2"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(ivfpqTopkDuckSql),
-      doc = "IVFPQ serving composition (FAISS IndexIVFPQ shape, " +
-        "no-residual variant): coarse cells restrict ADC to nprobe/K of " +
-        "the corpus, PQ codes keep the scanned payload at 8 B/vector, " +
-        "exact re-rank touches full vectors only for the shortlist; ONE " +
-        "rollup shuffle in the serving path."),
 
     // ── per-user event-type transition matrix ────────────────────────
     // The Markov session model: P(next event type | current), counted

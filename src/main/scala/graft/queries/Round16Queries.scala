@@ -48,6 +48,20 @@ object Round16Queries {
     */
   val AnnGridWays = 8
 
+  /** The 1-row auto signature width of `corpus`: bits =
+    * clamp(bitlen(n−1), KnnAutoMinBits, AnnAutoMaxBits) and its Long
+    * mask. */
+  private[queries] def annAutoWidth(corpus: DataFrame): DataFrame =
+    corpus.agg(count(lit(1)).as("n"))
+      .select(
+        greatest(lit(KnnAutoMinBits), least(lit(AnnAutoMaxBits),
+          length(bin(col("n") - 1)))).cast("int").as("bits"))
+      .withColumn("mask", expr("shiftleft(CAST(1 AS BIGINT), bits) - 1"))
+
+  /** `annAutoWidth`'s bits, DuckDB dialect, over `vecs`. */
+  private[queries] def annAutoBitsSql: String =
+    s"greatest($KnnAutoMinBits, least($AnnAutoMaxBits, length(bin(count(*) - 1))))"
+
   /** Un-materialized auto-width sign-LSH dedup pipeline plus its two
     * persisted stages — (pairs, vectors, signatures). Same knobs as the
     * declared dedup_embedding_ann_scaled row (radius 2, 4 tables,
@@ -80,20 +94,11 @@ object Round16Queries {
       s"gridHotLoad must be 0 (guard off), a positive threshold, or " +
         s"Salting.DeriveHotLoad, got $gridHotLoad")
     val base = Corpus.nvecs(s, dir)
-    val width = base.agg(count(lit(1)).as("n"))
-      .select(
-        greatest(lit(KnnAutoMinBits), least(lit(AnnAutoMaxBits),
-          length(bin(col("n") - 1)))).cast("int").as("bits"))
-      .withColumn("mask", expr("shiftleft(CAST(1 AS BIGINT), bits) - 1"))
     val v = base
-      .crossJoin(broadcast(width))
+      .crossJoin(broadcast(annAutoWidth(base)))
       .transform(Layouts.spread)
       .persist()
-    def sigCol(t: Int) = (0 until AnnAutoMaxBits).map { b =>
-      when(VectorOps.dot(col("v"),
-        typedLit(SimilarityQueries.hyperplaneSet(t, AnnAutoMaxBits)(b))) >= 0.0,
-        lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    def sigCol(t: Int) = DedupQueries.annSigCol(t, AnnAutoMaxBits)
     // all tables' MASKED signatures in one corpus pass (the
     // embeddingAnnPairs discipline); persisted because every table's
     // candidate join reads it twice (probe + build side)
@@ -196,13 +201,9 @@ object Round16Queries {
   private[graft] val annAutoDuckSql: String = {
 
         val tables = DedupQueries.AnnTables
-        def sigSql(t: Int) = (0 until AnnAutoMaxBits).map { b =>
-          val lits = SimilarityQueries.hyperplaneSet(t, AnnAutoMaxBits)(b)
-            .mkString("[", ", ", "]")
-          s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1L << b} ELSE 0 END)"
-        }.mkString(" + ")
-        val bitsSql =
-          s"greatest($KnnAutoMinBits, least($AnnAutoMaxBits, length(bin(count(*) - 1))))"
+        def sigSql(t: Int) =
+          AnnQueries.signBucketSql(AnnQueries.hyperplaneSet(t, AnnAutoMaxBits))
+        val bitsSql = annAutoBitsSql
         def probesSql(t: Int) =
           s"""list_concat(list_concat(
               [sig_$t],

@@ -1,25 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
 import graft.Tables
 import graft.operators.Layouts
 
-/** Round-17b rows — the two capability gaps left after the round-17
-  * close:
+/** Round-17b rows:
   *
-  *  - V18 `sim_index_recall`: measured recall@k of the cosine top-k
-  *    ANN serving indexes sharing the IvfTopK=5 contract (fixed-knob
-  *    IVF, count-derived IVF, sign-LSH — and since round 18 the
-  *    auto-width multi-table sign-LSH) against the exact brute-force
-  *    truth — the index-quality metric an ANN deployment watches. (The Lloyd-IVF/PQ rows carry their own spec-pinned
-  *    recall floors at their k=10 contract; MIPS truth is
-  *    inner-product, a different metric.) The whole auto-width program (rounds 16–17) argues
-  *    widths from corpus size; this row closes the loop by MEASURING
-  *    what the derived index gives up vs exact search, per query, as a
-  *    declared oracle-checked number instead of a code comment.
   *  - M5 `mm_resize_plan`: the resize stage of the multimodal decode
   *    pipeline (decode → RESIZE → feature-extract) — aspect-preserving
   *    letterbox math to a 224×224 canvas over the stub-decoded
@@ -28,9 +16,9 @@ import graft.operators.Layouts
   *    vision preprocessor computes (scale, output dims, centering
   *    pads) is real, deterministic, and oracle-checked.
   *
-  * Reference scope note: alxmancilla/parquet-demo has no similarity or
-  * image machinery (its compute surface is schema-driven Parquet I/O,
-  * src/parquet_demo/io.py:7-80); both rows are [EXT] per SURVEY §2.7.
+  * Reference scope note: alxmancilla/parquet-demo has no image
+  * machinery (its compute surface is schema-driven Parquet I/O,
+  * src/parquet_demo/io.py:7-80); these rows are [EXT] per SURVEY §2.7.
   */
 object Round17bQueries {
 
@@ -41,119 +29,7 @@ object Round17bQueries {
     */
   val TCloseness = 0.2
 
-  /** Un-materialized recall pipeline plus its pinned stages. Truth is
-    * the SHARED brute-force builder cut at IvfTopK (one definition
-    * with sim_brute_topk, both engines) — a 25-row localCheckpoint
-    * consumed by all four hit joins AND as the query scaffold/
-    * denominator. The recall denominator is the per-query TRUTH COUNT
-    * computed in-plan, not the IvfTopK constant (round-17 advice: on a
-    * corpus with ≤ IvfTopK non-query vectors a constant denominator
-    * silently understates recall and can never read 1.0; on every
-    * normal corpus the two coincide). ONE persisted corpus is threaded
-    * through all four index builders (the serve-over-prepared-corpus
-    * forms — round-17 advice: three private persisted corpus copies
-    * were redundant cache pressure). The declared row checkpoints the
-    * output and releases the stages; Plans dumps this form with
-    * `eagerTruth = false` so the truth pipeline stays visible in the
-    * printed plan.
-    */
-  private[graft] def indexRecallPlan(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      eagerTruth: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    import SimilarityQueries._
-    val all = Corpus.nvecs(s, dir)
-      .transform(Layouts.spread)
-      .persist()
-    val truthRaw = bruteTopk(all, IvfTopK)
-      .select(col("query_id"), col("neighbor_id"))
-    val truth = if (eagerTruth) truthRaw.localCheckpoint(true) else truthRaw
-    // one row per query with its true-neighbor count: scaffold AND
-    // recall denominator
-    val qs = truth.groupBy(col("query_id")).agg(count(lit(1)).as("t_n"))
-    val fixedCents = all
-      .filter(col("vec_id") % CentroidEvery === 0 &&
-        col("vec_id") < CentroidEvery * CentroidCap)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val fixed = ivfServe(all, fixedCents, lit(NProbe))
-    val auto = Round17Queries.ivfTopkAutoServe(all)
-    val lsh = lshServe(all)
-    val lshAuto = Round18Queries.lshTopkAutoServe(all)
-    def recallOf(idx: String, approx: DataFrame): DataFrame = {
-      val hit = truth
-        .join(approx.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("h"))
-      qs.join(hit, Seq("query_id"), "left")
-        .select(lit(idx).as("idx"), col("query_id"),
-          coalesce(col("h"), lit(0L)).as("hits"),
-          (coalesce(col("h"), lit(0L)).cast("double") /
-            col("t_n").cast("double")).as("recall"))
-    }
-    val out = recallOf("ivf_fixed", fixed)
-      .unionByName(recallOf("ivf_auto", auto))
-      .unionByName(recallOf("lsh", lsh))
-      .unionByName(recallOf("lsh_auto", lshAuto))
-      .orderBy(col("idx"), col("query_id"))
-    (out, Seq(all) ++ (if (eagerTruth) Seq(truth) else Nil))
-  }
-
   val defs: Seq[QueryDef] = Seq(
-
-    // ── V18: recall@k of the IVF indexes vs brute-force truth ────────
-    // Truth is one broadcast-query corpus scan (the sim_brute_topk
-    // shape, cut at IvfTopK); each index's hit count is a left-semi
-    // join of the 25-row truth set against the index's own top-k — the
-    // expensive parts are the serving pipelines themselves, both of
-    // which reuse the SHARED builders (ivfServe / ivfTopkAutoPlan), so
-    // this row can never drift from the rows it measures. At 100 TB
-    // recall evaluation runs exactly this way: a fixed query panel,
-    // exact scores for the panel only (never all-pairs), set
-    // intersection against the index output.
-    QueryDef(
-      "sim_index_recall",
-      (s, dir) => Layouts.materialize(indexRecallPlan(s, dir)),
-      Some {
-        import SimilarityQueries.IvfTopK
-        s"""WITH truth_full AS (${SimilarityQueries.bruteTopkDuckSql(IvfTopK)}),
-          truth AS (SELECT query_id, neighbor_id FROM truth_full),
-          ivf_fixed AS (${SimilarityQueries.ivfTopkDuckSql}),
-          ivf_auto AS (${Round17Queries.ivfTopkAutoDuckSql}),
-          lsh AS (${SimilarityQueries.lshTopkDuckSql}),
-          lsh_auto AS (${Round18Queries.lshTopkAutoDuckSql}),
-          approx AS (
-            SELECT 'ivf_fixed' AS idx, query_id, neighbor_id FROM ivf_fixed
-            UNION ALL
-            SELECT 'ivf_auto' AS idx, query_id, neighbor_id FROM ivf_auto
-            UNION ALL
-            SELECT 'lsh' AS idx, query_id, neighbor_id FROM lsh
-            UNION ALL
-            SELECT 'lsh_auto' AS idx, query_id, neighbor_id FROM lsh_auto),
-          hit AS (
-            SELECT x.idx, x.query_id, CAST(count(*) AS BIGINT) AS h
-            FROM approx x JOIN truth t
-              ON x.query_id = t.query_id AND x.neighbor_id = t.neighbor_id
-            GROUP BY x.idx, x.query_id),
-          scaffold AS (
-            SELECT i.idx, q.query_id, q.t_n
-            FROM (SELECT 'ivf_fixed' AS idx UNION ALL SELECT 'ivf_auto'
-                  UNION ALL SELECT 'lsh' UNION ALL SELECT 'lsh_auto') i
-            CROSS JOIN (SELECT query_id, CAST(count(*) AS BIGINT) AS t_n
-                        FROM truth GROUP BY query_id) q)
-        SELECT s.idx, s.query_id,
-          CAST(coalesce(h.h, 0) AS BIGINT) AS hits,
-          CAST(coalesce(h.h, 0) AS DOUBLE) / CAST(s.t_n AS DOUBLE) AS recall
-        FROM scaffold s LEFT JOIN hit h
-          ON s.idx = h.idx AND s.query_id = h.query_id
-        ORDER BY s.idx, s.query_id"""
-      },
-      doc = "Recall@k of the four IvfTopK-contract ANN indexes " +
-        "(fixed-knob IVF, count-derived IVF, fixed sign-LSH, " +
-        "auto-width multi-table sign-LSH) vs exact truth (same " +
-        "tiebreak), denominator = the per-query truth count computed " +
-        "in-plan: the measured index-quality number the auto-width " +
-        "rules are accountable to — fixed query panel, exact scores " +
-        "for the panel only, set intersection against each index's " +
-        "top-k."),
 
     // ── M5: aspect-preserving letterbox resize plan (stub decode) ────
     // The geometry stage every vision preprocessor runs before the

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -163,7 +164,10 @@ object TableIO {
         java.time.Instant.ofEpochSecond(x / 1000000L, (x % 1000000L) * 1000L),
         java.time.ZoneOffset.UTC)
     case (x: java.time.LocalDate, _: DateType) => x
-    case (x: java.sql.Date, _: DateType) => x.toLocalDate
+    // from the epoch millis, as Spark's own conversion does: `toLocalDate`
+    // would cache calendar fields inside the stored Date
+    case (x: java.sql.Date, _: DateType) =>
+      java.time.LocalDate.ofEpochDay(DateTimeUtils.fromJavaDate(x).toLong)
     case (x: Int, _: DateType) => // already epoch days (io.py:54-63)
       java.time.LocalDate.ofEpochDay(x.toLong)
     case (x: Int, _: LongType) => x.toLong

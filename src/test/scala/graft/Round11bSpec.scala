@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.Round11bQueries
+import graft.queries.{AnnQueries, Round11bQueries}
 
 /** Round-11b operator invariants:
   *
@@ -34,12 +34,12 @@ class Round11bSpec extends SparkSpec {
 
   test("sim_kmeans: Lloyd SSE is non-increasing and all 8 clusters live") {
     val sses = (1 to 3).map { it =>
-      val out = Round11bQueries.kmeans(spark, sf(), it)
+      val out = AnnQueries.kmeans(spark, sf(), it)
         .agg(sum(col("d2")), countDistinct(col("cluster"))).collect()(0)
       (out.getDouble(0), out.getLong(1))
     }
-    assert(sses.last._2 == Round11bQueries.KmK.toLong,
-      s"expected ${Round11bQueries.KmK} live clusters, got ${sses.last._2}")
+    assert(sses.last._2 == AnnQueries.KmK.toLong,
+      s"expected ${AnnQueries.KmK} live clusters, got ${sses.last._2}")
     sses.sliding(2).foreach { case Seq((a, _), (b, _)) =>
       assert(b <= a + 1e-6, s"Lloyd SSE increased: $a -> $b")
     }
@@ -48,18 +48,18 @@ class Round11bSpec extends SparkSpec {
   }
 
   test("sim_kmeans: kmeansUntil matches the unrolled form round-for-round") {
-    val (untilDf, rounds) = Round11bQueries.kmeansUntil(spark, sf(), 0.0, 3)
+    val (untilDf, rounds) = AnnQueries.kmeansUntil(spark, sf(), 0.0, 3)
     assert(rounds == 3) // eps=0 ⇒ runs to maxIters
-    val unrolled = Round11bQueries.kmeans(spark, sf(), 3).collect().toSeq
+    val unrolled = AnnQueries.kmeans(spark, sf(), 3).collect().toSeq
     assert(untilDf.collect().toSeq == unrolled)
     // a loose eps converges before the cap
-    val (_, few) = Round11bQueries.kmeansUntil(spark, sf(), 1e3, 10)
+    val (_, few) = AnnQueries.kmeansUntil(spark, sf(), 1e3, 10)
     assert(few < 10, s"eps=1e3 should converge early, ran $few rounds")
   }
 
   test("sim_kmeans: the Lloyd mean update rejects a short vector and a null element") {
-    val dim = Round11bQueries.Dim
-    def means(bad: String) = Round11bQueries.lloydMeans(
+    val dim = AnnQueries.Dim
+    def means(bad: String) = AnnQueries.lloydMeans(
       spark.range(3).selectExpr("cast(id % 2 as int) AS cluster",
         s"if(id = 2, $bad, array_repeat(1d, $dim)) AS v"),
       col("cluster")).orderBy(col("cluster"))
@@ -81,7 +81,7 @@ class Round11bSpec extends SparkSpec {
   }
 
   test("sim_kmeans: assignment plan never hash-shuffles the corpus") {
-    val p = Round11bQueries.kmeans(spark, sf(), Round11bQueries.KmIters)
+    val p = AnnQueries.kmeans(spark, sf(), AnnQueries.KmIters)
       .queryExecution.executedPlan.toString
     assert(p.contains("pq_argmin"), "assignment must use the codegen'd argmin")
     assert(!p.contains("hashpartitioning"),
@@ -92,8 +92,7 @@ class Round11bSpec extends SparkSpec {
   // ── logistic regression ────────────────────────────────────────────
 
   test("pipe_lr_train: loss decreases and accuracy lands >= 0.9") {
-    val rows = queries.QueryDef.toQueriesMap(Round11bQueries.defs)(
-      "pipe_lr_train")(spark, sf())
+    val rows = SparkEntry.queries("pipe_lr_train")(spark, sf())
       .select(col("y"), col("p1"), col("p2"), col("p3"), col("correct"))
       .collect()
     val y = rows.map(_.getInt(0))
@@ -124,8 +123,7 @@ class Round11bSpec extends SparkSpec {
   // ── random projection ──────────────────────────────────────────────
 
   test("sim_rp_project: JL distortion at R=16 stays in the theory band") {
-    val proj = queries.QueryDef.toQueriesMap(Round11bQueries.defs)(
-      "sim_rp_project")(spark, sf())
+    val proj = SparkEntry.queries("sim_rp_project")(spark, sf())
       .groupBy(col("vec_id"))
       .agg(expr("transform(sort_array(collect_list(struct(k, proj))), x -> x.proj)").as("pv"))
     val orig = Tables.load(spark, sf(), "embeddings")
@@ -142,7 +140,7 @@ class Round11bSpec extends SparkSpec {
   }
 
   test("sim_rp_project: deterministic and corpus never hash-shuffles") {
-    val q = queries.QueryDef.toQueriesMap(Round11bQueries.defs)("sim_rp_project")
+    val q = SparkEntry.queries("sim_rp_project")
     val a = q(spark, sf()).collect().toSeq
     val b = q(spark, sf()).collect().toSeq
     assert(a == b, "projection must be bit-deterministic across runs")

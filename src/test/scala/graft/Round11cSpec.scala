@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round11cQueries}
+import graft.queries.Round11cQueries
 
 /** Round-11c operator invariants:
   *
@@ -19,15 +19,13 @@ import graft.queries.{QueryDef, Round11cQueries}
   */
 class Round11cSpec extends SparkSpec {
 
-  private def q(name: String) =
-    QueryDef.toQueriesMap(Round11cQueries.defs)(name)
+  private def q(name: String) = SparkEntry.queries(name)
 
   test("sim_ivf_kmeans_topk: recall@10 vs brute force >= 0.7") {
     val ivf = q("sim_ivf_kmeans_topk")(spark, sf())
       .select("query_id", "neighbor_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val brute = queries.SimilarityQueries.defs
-      .find(_.name == "sim_brute_topk").get.fn(spark, sf())
+    val brute = q("sim_brute_topk")(spark, sf())
       .select("query_id", "neighbor_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val recalls = brute.map { case (qid, truth) =>

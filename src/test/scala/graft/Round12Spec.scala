@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round12Queries}
+import graft.queries.Round12Queries
 
 /** Round-12 operator invariants:
   *
@@ -25,8 +25,7 @@ import graft.queries.{QueryDef, Round12Queries}
   */
 class Round12Spec extends SparkSpec {
 
-  private def q(name: String) =
-    QueryDef.toQueriesMap(Round12Queries.defs)(name)
+  private def q(name: String) = SparkEntry.queries(name)
 
   private def writeDocs(prefix: String, rows: Seq[(Long, String, String, String, Long)]): String = {
     val d = tmpDir(prefix)

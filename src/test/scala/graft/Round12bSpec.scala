@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{QueryDef, Round12bQueries}
 
 /** Round-12b operator invariants:
   *
@@ -19,8 +18,7 @@ import graft.queries.{QueryDef, Round12bQueries}
   */
 class Round12bSpec extends SparkSpec {
 
-  private def q(name: String) =
-    QueryDef.toQueriesMap(Round12bQueries.defs)(name)
+  private def q(name: String) = SparkEntry.queries(name)
 
   test("MIPS ranks by inner product: planted long vector beats aligned short one") {
     val dim = 64
@@ -58,7 +56,7 @@ class Round12bSpec extends SparkSpec {
     val ips = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS v")
     val pairs = ips.selectExpr("vec_id AS query_id", "v AS qv")
-      .filter(col("query_id") < queries.SimilarityQueries.NQueries)
+      .filter(col("query_id") < queries.AnnQueries.NQueries)
       .crossJoin(ips.selectExpr("vec_id AS neighbor_id", "v AS nv"))
       .selectExpr("query_id", "neighbor_id",
         "round(aggregate(zip_with(qv, nv, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x), 6) AS ip")
@@ -75,7 +73,7 @@ class Round12bSpec extends SparkSpec {
     // measured 0.32 on the near-random fixture under the round-2
     // hyperplane family, 0.12 under the round-18 decorrelated family
     // (the old correlated planes traded unpriced candidate volume for
-    // recall — see SimilarityQueries.hyperplaneSet); floor at 0.1
+    // recall — see AnnQueries.hyperplaneSet); floor at 0.1
     val bSet = brute.groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(2)).toSet).toMap
     val lSet = lsh.groupBy(_.getLong(0)).view

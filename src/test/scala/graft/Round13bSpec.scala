@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{GraphQueries, QueryDef, Round13bQueries, SimilarityQueries}
+import graft.queries.{AnnQueries, GraphQueries, Round13bQueries}
 
 /** Round-13b operator invariants:
   *
@@ -20,8 +20,7 @@ import graft.queries.{GraphQueries, QueryDef, Round13bQueries, SimilarityQueries
   */
 class Round13bSpec extends SparkSpec {
 
-  private def q(name: String) =
-    QueryDef.toQueriesMap(Round13bQueries.defs ++ GraphQueries.defs)(name)
+  private def q(name: String) = SparkEntry.queries(name)
 
   private def r6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
@@ -44,14 +43,14 @@ class Round13bSpec extends SparkSpec {
       s
     }
     val cents = vecs.keys.filter(v =>
-        v % SimilarityQueries.CentroidEvery == 0 &&
-        v < SimilarityQueries.CentroidEvery * SimilarityQueries.CentroidCap)
+        v % AnnQueries.CentroidEvery == 0 &&
+        v < AnnQueries.CentroidEvery * AnnQueries.CentroidCap)
       .toSeq.sorted
     def cellOf(v: Long): Long =
       cents.minBy(c => (d2(vecs(v), vecs(c)), c))
     def probesOf(qid: Long): Set[Long] =
       cents.sortBy(c => (d2(vecs(qid), vecs(c)), c))
-        .take(SimilarityQueries.NProbe).toSet
+        .take(AnnQueries.NProbe).toSet
 
     rows.groupBy(_._1).foreach { case (qid, ns) =>
       val sorted = ns.sortBy(_._2)
@@ -79,7 +78,7 @@ class Round13bSpec extends SparkSpec {
       val exact = candIds.toSeq
         .map(v => (v, d2(vecs(qid), vecs(v))))
         .sortBy { case (v, dd) => (dd, v) }
-        .take(graft.queries.Round11Queries.PqTopK).map(_._1).toSet
+        .take(graft.queries.AnnQueries.PqTopK).map(_._1).toSet
       hit += exact.intersect(ns.map(_._3).toSet).size
       tot += exact.size
     }

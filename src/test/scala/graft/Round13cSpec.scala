@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{GraphQueries, QueryDef, Round13cQueries}
+import graft.queries.AnnQueries
 
 /** Round-13c operator invariants:
   *
@@ -17,8 +17,7 @@ import graft.queries.{GraphQueries, QueryDef, Round13cQueries}
   */
 class Round13cSpec extends SparkSpec {
 
-  private def q(name: String) =
-    QueryDef.toQueriesMap(Round13cQueries.defs ++ GraphQueries.defs)(name)
+  private def q(name: String) = SparkEntry.queries(name)
 
   private def r6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
@@ -96,7 +95,7 @@ class Round13cSpec extends SparkSpec {
         .filter(v => v._1 != qid && v._3 != qlabel)
         .map(v => (v._1, r6(cos(qv, v._2))))
         .sortBy { case (id, c) => (-c, id) }
-        .take(Round13cQueries.HnK)
+        .take(AnnQueries.HnK)
       val got = ns.sortBy(_._2).map(t => (t._3, t._6)).toSeq
       assert(got == brute.toSeq, s"query $qid hard-negative set")
     }

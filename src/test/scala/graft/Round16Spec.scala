@@ -205,7 +205,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("dedup_embedding_ann_auto: width rule + radius-2 ball replay") {
-    import graft.queries.{DedupQueries, Round16Queries, SimilarityQueries}
+    import graft.queries.{AnnQueries, DedupQueries, Round16Queries}
     val out = run("dedup_embedding_ann_auto").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(out.nonEmpty, "no ANN pairs on the fixture")
@@ -226,7 +226,7 @@ class Round16Spec extends SparkSpec {
     def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val hp = (0 until DedupQueries.AnnTables).map(t =>
-      SimilarityQueries.hyperplaneSet(t, Round16Queries.AnnAutoMaxBits))
+      AnnQueries.hyperplaneSet(t, Round16Queries.AnnAutoMaxBits))
     val sigs = vecs.map { case (id, v) =>
       (id, v, math.sqrt(dot(v, v)),
         hp.map(planes => (0 until Round16Queries.AnnAutoMaxBits)

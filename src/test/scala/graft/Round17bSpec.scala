@@ -17,7 +17,7 @@ class Round17bSpec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf())
 
   test("sim_index_recall: hits/recall replay from the declared truth and index rows") {
-    val k = queries.SimilarityQueries.IvfTopK
+    val k = queries.AnnQueries.IvfTopK
     // truth: the brute-force row (TopK=10, same tiebreak) cut at k
     val truth = run("sim_brute_topk").collect()
       .filter(_.getAs[Int]("rank") <= k)
@@ -38,7 +38,7 @@ class Round17bSpec extends SparkSpec {
     val truthN = truth.groupBy(_._1).view.mapValues(_.size).toMap
 
     val got = run("sim_index_recall").collect()
-    assert(got.length == 4 * queries.SimilarityQueries.NQueries,
+    assert(got.length == 4 * queries.AnnQueries.NQueries,
       "scaffold must cover every (index, query) pair")
     got.foreach { r =>
       val idx = r.getAs[String]("idx")

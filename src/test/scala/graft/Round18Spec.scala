@@ -23,7 +23,7 @@ class Round18Spec extends SparkSpec {
       .toSet
 
   test("sim_index_recall_contract: hits/recall replay from the declared rows") {
-    import queries.Round11Queries.{PqNQueries, PqTopK}
+    import queries.AnnQueries.{NQueries => PqNQueries, PqTopK}
     val truthCos = pairs("sim_brute_topk")
     val truthIp = pairs("sim_mips_topk")
     // L2 truth replayed independently in Scala from the raw vectors

@@ -42,8 +42,8 @@ class Round19Spec extends SparkSpec {
   /** Scala replay of the IVF-cell kNN build's semantics. */
   private lazy val ivfReplay: Map[Long, Seq[(Int, Long, Double)]] = {
     val n = vecs.length.toLong
-    val kk = math.max(graft.queries.Round17Queries.IvfAutoMinK,
-      math.min(graft.queries.Round17Queries.IvfAutoMaxK,
+    val kk = math.max(graft.queries.AnnQueries.IvfAutoMinK,
+      math.min(graft.queries.AnnQueries.IvfAutoMaxK,
         math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
     val stride = math.max(1L, n / kk)
     // the round-19 hash-residue sample: ~K cells whatever the id

@@ -25,7 +25,10 @@ class CacheHygieneSpec extends SparkSpec {
     "st_incremental_minhash", "pipe_bpe_merges", "pipe_decontaminate_bloom",
     "st_incremental_ann_auto", "sim_lsh_topk_auto", "pipe_ccnet_buckets_sketch",
     "dedup_embedding_ann_auto", "dedup_embedding_ann_auto_guarded",
-    "st_incremental_ann", "sim_ivf_topk_auto", "sim_index_recall")
+    "st_incremental_ann", "sim_ivf_topk_auto", "sim_index_recall",
+    // ANN rows that persisted a stage and dropped the handle
+    "sim_lsh_topk", "sim_mips_lsh_topk", "sim_rrf_fusion",
+    "sim_index_recall_contract")
 
   persistingQueries.foreach { name =>
     test(s"$name leaves no cached plans behind") {

@@ -3,7 +3,7 @@ package graft.operators
 import scala.util.Random
 
 import graft.SparkSpec
-import graft.queries.{DedupQueries, SimilarityQueries}
+import graft.queries.{AnnQueries, DedupQueries}
 
 /** Quality properties of the approximate (LSH/IVF) paths.
   *
@@ -82,7 +82,7 @@ class LshRecallSpec extends SparkSpec {
     // within-cluster distance ~0.23 vs ~sqrt(2) across clusters.
     val rnd = new scala.util.Random(7)
     val nClusters = 8
-    val dim = SimilarityQueries.Dim
+    val dim = AnnQueries.Dim
     val centers = Array.fill(nClusters) {
       val v = Array.fill(dim)(rnd.nextGaussian())
       val n = math.sqrt(v.map(x => x * x).sum)
@@ -105,7 +105,7 @@ class LshRecallSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .groupBy(_._1)
         .map { case (q, rows) =>
-          q -> rows.sortBy(_._2).take(SimilarityQueries.IvfTopK).map(_._3).toSet
+          q -> rows.sortBy(_._2).take(AnnQueries.IvfTopK).map(_._3).toSet
         }
     val brute = topk("sim_brute_topk")
     val ivf = topk("sim_ivf_topk")
@@ -113,7 +113,7 @@ class LshRecallSpec extends SparkSpec {
       ivf.get(q).map(a => a.intersect(brute(q)).size.toDouble / brute(q).size).getOrElse(0.0)
     }
     val mean = recalls.sum / recalls.size
-    info(f"sim_ivf_topk clustered recall@${SimilarityQueries.IvfTopK} = $mean%.2f")
+    info(f"sim_ivf_topk clustered recall@${AnnQueries.IvfTopK} = $mean%.2f")
     assert(mean >= 0.9, f"IVF recall $mean%.2f < 0.9 on clustered vectors")
   }
 
@@ -124,7 +124,7 @@ class LshRecallSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .groupBy(_._1)
         .map { case (q, rows) =>
-          q -> rows.sortBy(_._2).take(SimilarityQueries.IvfTopK).map(_._3).toSet
+          q -> rows.sortBy(_._2).take(AnnQueries.IvfTopK).map(_._3).toSet
         }
     val brute = topk("sim_brute_topk")
     // Floors are honest regression pins for THIS fixture: the driver's
@@ -144,8 +144,8 @@ class LshRecallSpec extends SparkSpec {
         approx.get(q).map(a => a.intersect(b).size.toDouble / b.size).getOrElse(0.0)
       }
       val mean = recalls.sum / recalls.size
-      assert(mean >= floor, f"$name mean recall@${SimilarityQueries.IvfTopK} = $mean%.2f")
-      info(f"$name mean recall@${SimilarityQueries.IvfTopK} = $mean%.2f over ${recalls.size} queries")
+      assert(mean >= floor, f"$name mean recall@${AnnQueries.IvfTopK} = $mean%.2f")
+      info(f"$name mean recall@${AnnQueries.IvfTopK} = $mean%.2f over ${recalls.size} queries")
     }
   }
 }

@@ -130,6 +130,20 @@ class TableIOSpec extends SparkSpec {
     assert(sortedRows(TableIO.read(spark, path)) == sortedRows(parentPath(schema, docs)))
   }
 
+  test("coerce converts a stored java.sql.Date from its epoch millis, writing nothing into it") {
+    // `toLocalDate` reads the calendar fields, which caches a calendar
+    // date inside every stored Date; the millis path never calls them
+    val millis = java.sql.Date.valueOf("2024-02-29").getTime
+    val stored = new java.sql.Date(millis) {
+      override def getYear: Int = throw new AssertionError("getYear")
+      override def getMonth: Int = throw new AssertionError("getMonth")
+      override def getDate: Int = throw new AssertionError("getDate")
+    }
+    assert(TableIO.coerce(stored, DateType) == LocalDate.of(2024, 2, 29))
+    assert(TableIO.coerce(java.sql.Date.valueOf("1500-03-01"), DateType) ==
+      java.sql.Date.valueOf("1500-03-01").toLocalDate)
+  }
+
   test("empty input gives an empty local relation") {
     val schema = StructType(Seq(StructField("id", LongType)))
     val df = TableIO.fromRows(spark, Iterator.empty, schema)
